@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.index.{Corpus, IndexBuilder, InvertedIndex, SourceDoc}
+import graft.index.{IndexBuilder, InvertedIndex, SourceDoc}
 import graft.ops.{Dedup, Multimodal, Similarity, TextOps}
 import graft.ops.{Centrality => CentralityOps}
 
@@ -32,11 +32,7 @@ object SparkEntry {
 
   private def toks(c: Column): Column = TextOps.tokens(c)
 
-  // shared relational token views (word-level, SQL-replicable)
-  private def tokensDF(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .select(col("doc_id"), explode(toks(col("text"))).as("term"))
-
+  // shared relational token view (word-level, SQL-replicable)
   private val TokCte =
     """WITH toks AS (
       |  SELECT doc_id, unnest(regexp_split_to_array(lower(text), '\s+')) AS term

@@ -1,6 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core._
@@ -9,10 +9,17 @@ import graft.core._
   *
   * A query is served as: broadcast query-term stats -> parquet scan of
   * the posting rows for the query terms only (term filter pushed to
-  * parquet row groups) -> cogroup with the segment fieldnorm blobs ->
-  * per-segment block-max WAND top-k inside mapGroups -> tiny driver-side
-  * merge ordered by (score desc, segment asc, docId asc), matching the
-  * reference's DocAddress tie-break (top_collector.rs:59-65).
+  * parquet row groups) -> rows grouped by segment, each group meeting
+  * its segment's fieldnorms -> per-segment block-max WAND top-k ->
+  * tiny driver-side merge ordered by (score desc, segment asc, docId
+  * asc), matching the reference's DocAddress tie-break
+  * (top_collector.rs:59-65). By default the fieldnorms are resident: one
+  * driver collect, broadcast to every task. An index whose fieldnorms
+  * exceed the session conf `spark.graft.residentFnormBytes` (bytes,
+  * 64 MB default, read when the instance is built) instead cogroups the
+  * fnorm blobs with the posting groups, which scales to any corpus and
+  * pays a shuffle. `perSegment` holds that choice for every scoring
+  * path; SegmentScoring holds the per-segment scoring and the merge.
   *
   * Collection statistics (N, total tokens -> avg fieldnorm, per-term df)
   * are Catalyst aggregates over the stat/posting tables, per the north
@@ -33,11 +40,6 @@ final class InvertedIndex(spark: SparkSession, dir: String,
   // in the detected query language; doc-side stemming dispatched per
   // doc at build time)
   private val queryStem: String => String = Stemmers.forLanguage(queryLang)
-
-  /** The index's query-language stemmer — the serving tier must expand
-    * with the SAME stemmer as the distributed path or stem-field terms
-    * look up under the wrong keys. */
-  private[index] def queryStemmer: String => String = queryStem
 
   // one DataFrame handle per row kind: every spark.read.parquet call
   // pays a footer/schema-listing job (~25 ms), and a single search
@@ -82,12 +84,14 @@ final class InvertedIndex(spark: SparkSession, dir: String,
     Tokenizers.default(query).distinct.take(32)
 
   /** Fieldnorms resident on the driver + broadcast when the corpus is
-    * small enough (1 byte/doc — 64 MB default cap). The reference keeps
-    * fieldnorm files memory-mapped per shard for serving; this is the
-    * Spark analog. Above the cap, queries fall back to cogrouping the
-    * fnorm blobs per segment (scales to any corpus, pays a shuffle). */
+    * small enough (1 byte/doc — 64 MB default cap, session conf
+    * `spark.graft.residentFnormBytes`, read once here). The reference
+    * keeps fieldnorm files memory-mapped per shard for serving; this is
+    * the Spark analog. Above the cap, queries fall back to cogrouping
+    * the fnorm blobs per segment (scales to any corpus, pays a
+    * shuffle). */
   private val maxResidentFnormBytes: Long =
-    sys.env.getOrElse("GRAFT_RESIDENT_FNORM_BYTES", (64L << 20).toString).toLong
+    spark.conf.get(InvertedIndex.ResidentFnormBytesConf, (64L << 20).toString).toLong
 
   @transient private lazy val residentFnorms
       : Option[org.apache.spark.broadcast.Broadcast[Map[Int, Map[Int, Array[Byte]]]]] = {
@@ -99,19 +103,39 @@ final class InvertedIndex(spark: SparkSession, dir: String,
     val residentBytes = fnorms.agg(coalesce(sum($"numDocs"), lit(0L)))
       .head().getLong(0)
     if (residentBytes == 0L || residentBytes > maxResidentFnormBytes) None
-    else {
-      val all = fnorms.collect().groupBy(_.segment).map { case (seg, chunks) =>
-        seg -> assembleFnorms(chunks.iterator)
-      }
-      Some(spark.sparkContext.broadcast(all))
-    }
+    else Some(spark.sparkContext.broadcast(residentFnormsLocal))
   }
+
+  /** Whether queries read resident (broadcast) fieldnorms rather than
+    * cogrouping the fnorm blobs. */
+  private[graft] def fnormsResident: Boolean = residentFnorms.isDefined
 
   /** All fieldnorm arrays collected to the driver (serving tier). */
   def residentFnormsLocal: Map[Int, Map[Int, Array[Byte]]] =
     fnorms.collect().groupBy(_.segment).map { case (seg, chunks) =>
       seg -> assembleFnorms(chunks.iterator)
     }
+
+  /** The one place a posting scan is grouped by segment and collected:
+    * the rows of `terms` in each segment meet that segment's fieldnorms
+    * (resident broadcast, or cogrouped blobs above the cap) and `score`
+    * runs once per segment holding any of the terms. */
+  private def perSegment[T: Encoder](terms: Seq[String])(
+      score: (Int, Array[PostingRow], Map[Int, Array[Byte]]) => Iterator[T]): Array[T] = {
+    val bySeg = postings.filter($"term".isin(terms: _*)).groupByKey(_.segment)
+    (residentFnorms match {
+      case Some(bc) =>
+        bySeg.flatMapGroups { (seg, ps) =>
+          val plist = ps.toArray
+          if (plist.isEmpty) Iterator.empty else score(seg, plist, bc.value(seg))
+        }
+      case None =>
+        bySeg.cogroup(fnorms.groupByKey(_.segment)) { (seg, ps, fs) =>
+          val plist = ps.toArray
+          if (plist.isEmpty) Iterator.empty else score(seg, plist, assembleFnorms(fs))
+        }
+    }).collect()
+  }
 
   /** Posting rows for `terms` via one pushed-down scan, grouped by
     * term (serving tier fetch). */
@@ -146,30 +170,39 @@ final class InvertedIndex(spark: SparkSession, dir: String,
   /** Batch query execution: one distributed pass for many queries —
     * queries x segments fan-out, per-segment top-k, driver merge. */
   def searchBatchRaw(queries: Seq[(String, String, Int, String, Seq[String])])
-      : Map[String, Array[(Int, Int, Float)]] = {
-    val plans = queries.map { case (qid, q, k, mode0, minus) =>
-      // "<mode>+" = field-expanded: each term ORs with its stemmed form,
-      // adjacent pairs add compound bigram terms (the reference's field
-      // expansion + compound augmentation, plan/node.rs:104-127 +
-      // plan/mod.rs:235-300)
-      val expanded = mode0.endsWith("+")
-      val mode = if (expanded) mode0.dropRight(1) else mode0
-      val terms: Seq[String] =
-        if (mode.startsWith("phrase")) Tokenizers.default(q).take(32).toSeq
-        else if (expanded)
-          Fields.expand(Tokenizers.default(q).take(16).toSeq,
-            stemmed = true, bigrams = true, stem = queryStem)
-        else queryTerms(q).toSeq
-      // a minus entry containing a NUL is already a field-prefixed
-      // INDEX term (e.g. a lowered site:/repo: must-not from optics
-      // blocklists) and passes through untokenized — the tokenizer
-      // would destroy the prefix; user text can never contain NUL
-      (qid, terms, k, mode,
-        minus.flatMap(m =>
-          if (m.indexOf('\u0000') >= 0) Seq(m) else queryTerms(m).toSeq).distinct)
-    }
-    searchBatchRawTerms(plans)
+      : Map[String, Array[(Int, Int, Float)]] =
+    searchBatchRawTerms(queries.map { case (qid, q, k, mode0, minus) =>
+      val (terms, mode, minusTerms) = lower(q, mode0, minus)
+      (qid, terms, k, mode, minusTerms)
+    })
+
+  /** Lower one query string to (index terms, base mode, minus terms) —
+    * shared by searchBatchRaw and the serving tier. "<mode>+" =
+    * field-expanded: each term ORs with its stemmed form, adjacent
+    * pairs add compound bigram terms (the reference's field expansion +
+    * compound augmentation, plan/node.rs:104-127 + plan/mod.rs:235-300).
+    * Phrase modes keep every token occurrence, in order. */
+  private[index] def lower(q: String, mode0: String, minus: Seq[String])
+      : (Seq[String], String, Seq[String]) = {
+    val expanded = mode0.endsWith("+")
+    val mode = if (expanded) mode0.dropRight(1) else mode0
+    val terms: Seq[String] =
+      if (mode.startsWith("phrase")) Tokenizers.default(q).take(32).toSeq
+      else if (expanded)
+        Fields.expand(Tokenizers.default(q).take(16).toSeq,
+          stemmed = true, bigrams = true, stem = queryStem)
+      else queryTerms(q).toSeq
+    (terms, mode, lowerMinus(minus))
   }
+
+  /** Must-not entries as index terms. A minus entry containing a NUL is
+    * already a field-prefixed INDEX term (e.g. a lowered site:/repo:
+    * must-not from optics blocklists, a negated operator, safe:on's
+    * quality marker) and passes through untokenized — the tokenizer
+    * would destroy the prefix; user text can never contain NUL. */
+  private[index] def lowerMinus(minus: Seq[String]): Seq[String] =
+    minus.flatMap(m =>
+      if (m.indexOf('\u0000') >= 0) Seq(m) else queryTerms(m).toSeq).distinct
 
   /** Pre-lowered batch execution: plans carry INDEX terms directly —
     * the entry for term-set queries (prefix/regex/fuzzy/set expansions
@@ -179,124 +212,19 @@ final class InvertedIndex(spark: SparkSession, dir: String,
       : Map[String, Array[(Int, Int, Float)]] = {
     val allTerms = plans.flatMap(p => p._2 ++ p._5).distinct
     if (allTerms.isEmpty || stats.numDocs == 0) return plans.map(p => p._1 -> Array.empty[(Int, Int, Float)]).toMap
-    val dfs = dfOf(allTerms)
-    val N = stats.numDocs
-    val avgFn = stats.avgFieldNorm
-    val weights: Map[String, Float] = // idf*(1+k1) per term; cache built per task
-      dfs.map { case (t, df) => t -> (Bm25.idf(df, N) * (1.0f + Bm25.K1)) }
+    val st = stats
     val bPlans = spark.sparkContext.broadcast(plans)
-    val bWeights = spark.sparkContext.broadcast(weights)
-
-    val post = postings.filter($"term".isin(allTerms: _*))
-    val postBySeg = post.groupByKey(_.segment)
-
-    val bigramAvg = if (stats.numDocs > 0)
-      math.max(stats.numTokens - stats.numDocs, 1L).toFloat / stats.numDocs.toFloat
-    else 1.0f
-    val trigramAvg = if (stats.numDocs > 0)
-      math.max(stats.numTokens - 2L * stats.numDocs, 1L).toFloat / stats.numDocs.toFloat
-    else 1.0f
-
-    def scoreSegment(seg: Int, plist: Array[PostingRow],
-                     fnArrs: Map[Int, Array[Byte]])
-        : Iterator[(String, Int, Int, Float)] = {
-        {
-          val byTerm: Map[String, Array[PostingRow]] =
-            plist.groupBy(_.term).map { case (t, rows) =>
-              t -> rows.sortBy(_.shard)
-            }
-          def cursor(term: String): Option[TermCursor] =
-            byTerm.get(term).map { rows =>
-              val field = Fields.fieldOf(term)
-              val av = if (field == Fields.Bigram) bigramAvg
-                       else if (field == Fields.Trigram) trigramAvg
-                       else avgFn
-              val fnA = fnArrs(Fields.fnormFieldOf(field))
-              val wt = new Bm25Weight(bWeights.value(term), av)
-              if (rows.length == 1)
-                new PostingsCursor(rows(0).toData, fnA, wt)
-              else
-                new ChainedCursor(rows.map(r => new PostingsCursor(r.toData, fnA, wt)))
-            }
-          bPlans.value.iterator.flatMap { case (qid, terms, k, mode, minus) =>
-            val cs = terms.flatMap(t => cursor(t))
-            if (cs.isEmpty) Iterator.empty
-            else {
-              val negs = minus.flatMap(t => cursor(t)).toArray
-              @inline def excluded(doc: Int): Boolean = {
-                var i = 0
-                while (i < negs.length) {
-                  val n = negs(i)
-                  if (n.doc == doc || (n.doc < doc && n.seek(doc) == doc)) return true
-                  i += 1
-                }
-                false
-              }
-              val topk = new TopK(k)
-              mode match {
-                case pm if pm.startsWith("phrase") =>
-                  // every occurrence needs its own cursor; a term absent
-                  // from this segment means no phrase match here.
-                  // "phrase~N" = sloppy phrase with slop budget N
-                  if (cs.length == terms.length) {
-                    var wsum = 0.0f
-                    terms.foreach(t => wsum += bWeights.value(t))
-                    val pw = new Bm25Weight(wsum, avgFn)
-                    Phrase.run(cs, pw, fnArrs(Fields.Content),
-                      (d, _, s) => if (!excluded(d)) topk.push(d, s),
-                      slop = Phrase.slopOfMode(pm))
-                  }
-                case "and" =>
-                  // a query term absent from this segment means NO doc
-                  // here contains all terms — intersecting only the
-                  // present cursors would return partial matches (the
-                  // phrase branch has the same guard)
-                  if (cs.length == terms.length)
-                    BlockWand.intersect(cs, (d, s) => if (!excluded(d)) topk.push(d, s))
-                case "dismax" =>
-                  BlockWand.exhaustiveCombine(cs, 0.0f,
-                    (d, s) => if (!excluded(d)) topk.push(d, s))
-                case "exhaustive" =>
-                  BlockWand.exhaustiveUnion(cs, (d, s) => if (!excluded(d)) topk.push(d, s))
-                case "bitset" => // horizon-buffered union (bit-identical)
-                  BlockWand.bitsetUnion(cs, (d, s) => if (!excluded(d)) topk.push(d, s))
-                case _ =>
-                  if (negs.isEmpty)
-                    BlockWand.run(cs, Float.MinValue, (d, s) => topk.push(d, s))
-                  else
-                    BlockWand.run(cs, Float.MinValue,
-                      (d, s) => if (excluded(d)) topk.threshold else topk.push(d, s))
-              }
-              topk.sorted.iterator.map(h => (qid, seg, h.doc, h.score))
-            }
-          }
-        }
+    val bWeights = spark.sparkContext.broadcast(SegmentScoring.weights(dfOf(allTerms), st.numDocs))
+    val byQid = perSegment(allTerms) { (seg, plist, fnArrs) =>
+      val byTerm = plist.groupBy(_.term)
+      bPlans.value.iterator.flatMap { case (qid, terms, k, mode, minus) =>
+        SegmentScoring.scoreQuery(terms, k, mode, minus, byTerm, fnArrs, bWeights.value, st)
+          .iterator.map(h => (qid, seg, h.doc, h.score))
       }
-
-    val perSeg: Dataset[(String, Int, Int, Float)] = residentFnorms match {
-      case Some(bc) =>
-        postBySeg.flatMapGroups { (seg, ps) =>
-          val plist = ps.toArray
-          if (plist.isEmpty) Iterator.empty
-          else scoreSegment(seg, plist, bc.value(seg))
-        }
-      case None =>
-        postBySeg.cogroup(fnorms.groupByKey(_.segment)) { (seg, ps, fs) =>
-          val plist = ps.toArray
-          if (plist.isEmpty) Iterator.empty
-          else scoreSegment(seg, plist, assembleFnorms(fs))
-        }
-    }
-
-    val collected = perSeg.collect()
-    val byQid = collected.groupBy(_._1)
+    }.groupBy(_._1)
     plans.map { case (qid, _, k, _, _) =>
-      val merged = byQid.getOrElse(qid, Array.empty)
-        .sortBy(t => (-t._4, t._2, t._3))(
-          Ordering.Tuple3(Ordering.Float.TotalOrdering, Ordering.Int, Ordering.Int))
-        .take(k)
-        .map(t => (t._2, t._3, t._4))
-      qid -> merged
+      qid -> SegmentScoring.cut(
+        byQid.getOrElse(qid, Array.empty).map(t => (t._2, t._3, t._4)), k)
     }.toMap
   }
 
@@ -397,11 +325,8 @@ final class InvertedIndex(spark: SparkSession, dir: String,
       val byTerm = plist.groupBy(_.term)
       val dummy = new Bm25Weight(1.0f, 1.0f)
       val fnA = new Array[Byte](docLens.length) // matching never scores
-      def cursor(t: String): Option[TermCursor] = byTerm.get(t).map { rows =>
-        val sorted = rows.sortBy(_.shard)
-        if (sorted.length == 1) new PostingsCursor(sorted(0).toData, fnA, dummy)
-        else new ChainedCursor(sorted.map(r => new PostingsCursor(r.toData, fnA, dummy)))
-      }
+      def cursor(t: String): Option[TermCursor] =
+        byTerm.get(t).map(SegmentScoring.cursor(_, fnA, dummy))
       // one cursor per token OCCURRENCE (a term may repeat across runs)
       val runCursors: List[Seq[TermCursor]] = runs.map(_.flatMap(t => cursor(t)))
       if (runCursors.zip(runs).exists { case (cs, r) => cs.length != r.length })
@@ -629,14 +554,10 @@ final class InvertedIndex(spark: SparkSession, dir: String,
       val tree = BooleanQuery.Bool(
         must = ops.map(BooleanQuery.Term.apply),
         should = queryTerms(body).toSeq.map(BooleanQuery.Term.apply),
-        // a NUL-carrying minus is an already-lowered field term (a
-        // negated operator, or safe:on's quality must-not) and passes
-        // through untokenized — queryTerms would split it into plain
-        // text and silently drop the must-not (same rule as the
-        // searchBatchRaw minus path)
-        mustNot = minus.flatMap(m =>
-            if (m.indexOf('\u0000') >= 0) Seq(m) else queryTerms(m).toSeq)
-          .distinct.map(BooleanQuery.Term.apply))
+        // a NUL-carrying minus (a negated operator, or safe:on's
+        // quality must-not) passes through untokenized, as on the
+        // searchBatchRaw minus path
+        mustNot = lowerMinus(minus).map(BooleanQuery.Term.apply))
       resolve(searchBool(tree, k), k)
     }
   }
@@ -753,58 +674,20 @@ final class InvertedIndex(spark: SparkSession, dir: String,
     val terms = clauses.map(_._1).distinct
     if (terms.isEmpty || stats.numDocs == 0) return Array.empty
     val boosts = clauses.toMap
-    val dfs = dfOf(terms)
-    val N = stats.numDocs
-    val avgFn = stats.avgFieldNorm
-    val weights = dfs.map { case (t, df) =>
-      t -> (Bm25.idf(df, N) * (1.0f + Bm25.K1) * boosts.getOrElse(t, 1.0f))
-    }
-    val bW = spark.sparkContext.broadcast(weights)
-    val bgAvg = if (N > 0)
-      math.max(stats.numTokens - N, 1L).toFloat / N.toFloat else 1.0f
-    val tgAvg = if (N > 0)
-      math.max(stats.numTokens - 2L * N, 1L).toFloat / N.toFloat else 1.0f
-    val post = postings.filter($"term".isin(terms: _*))
-    val perSeg = (residentFnorms match {
-      case Some(bc) =>
-        post.groupByKey(_.segment).flatMapGroups { (seg, ps) =>
-          boostedSegment(seg, ps.toArray, bc.value(seg), bW.value, avgFn, k,
-            bgAvg, tgAvg)
-        }
-      case None =>
-        post.groupByKey(_.segment).cogroup(fnorms.groupByKey(_.segment)) { (seg, ps, fs) =>
-          val plist = ps.toArray
-          if (plist.isEmpty) Iterator.empty
-          else boostedSegment(seg, plist, assembleFnorms(fs), bW.value, avgFn, k,
-            bgAvg, tgAvg)
-        }
-    }).collect()
-    perSeg.sortBy(t => (-t._3, t._1, t._2))(
-        Ordering.Tuple3(Ordering.Float.TotalOrdering, Ordering.Int, Ordering.Int))
-      .take(k)
-  }
-
-  private def boostedSegment(seg: Int, plist: Array[PostingRow],
-                             fnArrs: Map[Int, Array[Byte]],
-                             weights: Map[String, Float], avgFn: Float, k: Int,
-                             bigramAvg: Float = 1.0f, trigramAvg: Float = 1.0f)
-      : Iterator[(Int, Int, Float)] = {
-    val cursors = plist.groupBy(_.term).toSeq.sortBy(_._1).map { case (t, rows) =>
-      // per-field norms like scoreSegment: an n-gram shadow term in a
-      // boosted clause scores with ITS field's average and fnorm bytes
-      val field = Fields.fieldOf(t)
-      val av = if (field == Fields.Bigram) bigramAvg
-               else if (field == Fields.Trigram) trigramAvg
-               else avgFn
-      val wt = new Bm25Weight(weights(t), av)
-      val fnA = fnArrs(Fields.fnormFieldOf(field))
-      val sorted = rows.sortBy(_.shard)
-      if (sorted.length == 1) new PostingsCursor(sorted(0).toData, fnA, wt)
-      else new ChainedCursor(sorted.map(r => new PostingsCursor(r.toData, fnA, wt)))
-    }
-    val topk = new TopK(k)
-    BlockWand.run(cursors, Float.MinValue, (d, s) => topk.push(d, s))
-    topk.sorted.iterator.map(h => (seg, h.doc, h.score))
+    val st = stats
+    val bW = spark.sparkContext.broadcast(
+      SegmentScoring.weights(dfOf(terms), st.numDocs).map { case (t, w) =>
+        t -> w * boosts.getOrElse(t, 1.0f) })
+    SegmentScoring.cut(perSegment(terms) { (seg, plist, fnArrs) =>
+      // term-sorted cursors; an n-gram shadow term in a boosted clause
+      // scores with ITS field's average and fnorm bytes
+      val cursors = plist.groupBy(_.term).toSeq.sortBy(_._1).map { case (t, rows) =>
+        SegmentScoring.bm25Cursor(t, rows, fnArrs, bW.value(t), st)
+      }
+      val topk = new TopK(k)
+      BlockWand.run(cursors, Float.MinValue, (d, s) => topk.push(d, s))
+      topk.sorted.iterator.map(h => (seg, h.doc, h.score))
+    }, k)
   }
 
   /** Signal-framework ranking: recall via expanded WAND, then score
@@ -847,10 +730,8 @@ final class InvertedIndex(spark: SparkSession, dir: String,
     // the empty-candidate check comes BEFORE the dfOf aggregate below —
     // no point launching a cluster job to rank nothing
     if (base.isEmpty || cands.isEmpty || stats.numDocs == 0) return Array.empty
-    val N = stats.numDocs
-    val avgFn = stats.avgFieldNorm
-    val bigramAvg = if (N > 0)
-      math.max(stats.numTokens - N, 1L).toFloat / N.toFloat else 1.0f
+    val st = stats
+    val N = st.numDocs
     val stems = base.map(t => Fields.StemPrefix + queryStem(t))
     val bigrams = if (base.length >= 2)
       base.sliding(2).map(p => Fields.bigramTerm(p(0), p(1))).toSeq else Nil
@@ -878,7 +759,7 @@ final class InvertedIndex(spark: SparkSession, dir: String,
       val dfsV = bDfs.value
       def cursor(term: String, field: Int): Option[(TermCursor, Bm25Weight, Bm25FWeight, Float)] =
         byTerm.get(term).map { rows =>
-          val av = if (field == Fields.Bigram) bigramAvg else avgFn
+          val av = st.avgNorm(field)
           val df = dfsV.getOrElse(term, 0L)
           val idf = Bm25.idf(df, N)
           val bw = new Bm25Weight(idf * (1.0f + Bm25.K1), av)
@@ -886,12 +767,7 @@ final class InvertedIndex(spark: SparkSession, dir: String,
             else term.substring(2) // strip the 2-char field prefix
           val sharedIdf = Bm25.idf(dfsV.getOrElse(text, 0L), N)
           val bf = new Bm25FWeight(sharedIdf, av, fCoeffs.getOrElse(field, 0.0f))
-          val fnA = fnArrs(Fields.fnormFieldOf(field))
-          val sorted = rows.sortBy(_.shard)
-          val c: TermCursor =
-            if (sorted.length == 1) new PostingsCursor(sorted(0).toData, fnA, bw)
-            else new ChainedCursor(sorted.map(r => new PostingsCursor(r.toData, fnA, bw)))
-          (c, bw, bf, idf)
+          (SegmentScoring.cursor(rows, fnArrs(Fields.fnormFieldOf(field)), bw), bw, bf, idf)
         }
       val contentCs = base.flatMap(cursor(_, Fields.Content))
       val stemCs = stems.flatMap(cursor(_, Fields.Stemmed))
@@ -935,19 +811,7 @@ final class InvertedIndex(spark: SparkSession, dir: String,
       }
     }
 
-    val post = postings.filter($"term".isin(allTerms: _*))
-    val perCand: Array[(Int, Int, Double, Double, Double, Double, Double, Double, Double)] = (residentFnorms match {
-      case Some(bc) =>
-        post.groupByKey(_.segment).flatMapGroups { (seg, ps) =>
-          val plist = ps.toArray
-          if (plist.isEmpty) Iterator.empty else sigSeg(seg, plist, bc.value(seg))
-        }
-      case None =>
-        post.groupByKey(_.segment).cogroup(fnorms.groupByKey(_.segment)) { (seg, ps, fs) =>
-          val plist = ps.toArray
-          if (plist.isEmpty) Iterator.empty else sigSeg(seg, plist, assembleFnorms(fs))
-        }
-    }).collect()
+    val perCand = perSegment(allTerms)(sigSeg)
 
     // query-independent signals from the doc table (broadcast the small
     // candidate set into the join)
@@ -1048,33 +912,18 @@ final class InvertedIndex(spark: SparkSession, dir: String,
     val terms = BooleanQuery.allTerms(node)
     val posTerms = BooleanQuery.positiveTerms(node).toSet
     if (posTerms.isEmpty || stats.numDocs == 0) return Array.empty
-    val dfs = dfOf(terms)
-    val N = stats.numDocs
-    val avgFn = stats.avgFieldNorm
-    val weights = dfs.map { case (t, df) => t -> (Bm25.idf(df, N) * (1.0f + Bm25.K1)) }
-    val bW = spark.sparkContext.broadcast(weights)
+    val st = stats
+    val bW = spark.sparkContext.broadcast(SegmentScoring.weights(dfOf(terms), st.numDocs))
     val bNode = spark.sparkContext.broadcast(node)
     val bPos = spark.sparkContext.broadcast(posTerms)
-    val bgAvg = if (N > 0)
-      math.max(stats.numTokens - N, 1L).toFloat / N.toFloat else 1.0f
-    val tgAvg = if (N > 0)
-      math.max(stats.numTokens - 2L * N, 1L).toFloat / N.toFloat else 1.0f
 
     def boolSegment(seg: Int, plist: Array[PostingRow], fnArrs: Map[Int, Array[Byte]])
         : Iterator[(Int, Int, Float)] = {
+      // an n-gram shadow term in a boolean tree scores with ITS field's
+      // average and bytes
       val cursors: Map[String, TermCursor] =
         plist.groupBy(_.term).map { case (t, rows) =>
-          // per-field norms like scoreSegment: an n-gram shadow term in
-          // a boolean tree scores with ITS field's average and bytes
-          val field = Fields.fieldOf(t)
-          val av = if (field == Fields.Bigram) bgAvg
-                   else if (field == Fields.Trigram) tgAvg
-                   else avgFn
-          val fnA = fnArrs(Fields.fnormFieldOf(field))
-          val wt = new Bm25Weight(bW.value(t), av)
-          val sorted = rows.sortBy(_.shard)
-          t -> (if (sorted.length == 1) new PostingsCursor(sorted(0).toData, fnA, wt)
-                else new ChainedCursor(sorted.map(r => new PostingsCursor(r.toData, fnA, wt))))
+          t -> SegmentScoring.bm25Cursor(t, rows, fnArrs, bW.value(t), st)
         }
       val drivers = cursors.filter(c => bPos.value.contains(c._1)).values.toArray
       if (drivers.isEmpty) return Iterator.empty
@@ -1100,23 +949,7 @@ final class InvertedIndex(spark: SparkSession, dir: String,
       topk.sorted.iterator.map(h => (seg, h.doc, h.score))
     }
 
-    val post = postings.filter($"term".isin(terms: _*))
-    val perSeg = (residentFnorms match {
-      case Some(bc) =>
-        post.groupByKey(_.segment).flatMapGroups { (seg, ps) =>
-          val plist = ps.toArray
-          if (plist.isEmpty) Iterator.empty else boolSegment(seg, plist, bc.value(seg))
-        }
-      case None =>
-        post.groupByKey(_.segment).cogroup(fnorms.groupByKey(_.segment)) { (seg, ps, fs) =>
-          val plist = ps.toArray
-          if (plist.isEmpty) Iterator.empty
-          else boolSegment(seg, plist, assembleFnorms(fs))
-        }
-    }).collect()
-    perSeg.sortBy(t => (-t._3, t._1, t._2))(
-        Ordering.Tuple3(Ordering.Float.TotalOrdering, Ordering.Int, Ordering.Int))
-      .take(k)
+    SegmentScoring.cut(perSegment(terms)(boolSegment), k)
   }
 
   /** BM25F ranked search (re-derivation of the reference's two-stage
@@ -1152,12 +985,9 @@ final class InvertedIndex(spark: SparkSession, dir: String,
       cands.groupBy(_._1).map { case (s, rs) => s -> rs.map(_._2).sorted }
     // shared idf from the content field
     val dfs = dfOf(fieldTerms.map(_._3).distinct)
-    val N = stats.numDocs
-    val avgFn = stats.avgFieldNorm
-    val bigramAvg = if (N > 0)
-      math.max(stats.numTokens - N, 1L).toFloat / N.toFloat else 1.0f
+    val st = stats
     val plan: Seq[(String, Int, Float)] = fieldTerms.map { case (term, field, idfText) =>
-      (term, field, Bm25.idf(dfs.getOrElse(idfText, 0L), N))
+      (term, field, Bm25.idf(dfs.getOrElse(idfText, 0L), st.numDocs))
     }
     val bPlan = spark.sparkContext.broadcast(plan)
     val bCands = spark.sparkContext.broadcast(candBySeg)
@@ -1169,23 +999,15 @@ final class InvertedIndex(spark: SparkSession, dir: String,
       if (candDocs.isEmpty) return Iterator.empty
       val byTerm = plist.groupBy(_.term)
       // cursors in plan order => deterministic f32 summation order
-      val cs: Array[(TermCursor, Int)] = bPlan.value.flatMap { case (term, field, idf) =>
-        byTerm.get(term).map { rows =>
-          val av = if (field == Fields.Bigram) bigramAvg else avgFn
-          val w = new Bm25FWeight(idf, av, bCoeffs.value(field))
-          val fnA = fnArrs(Fields.fnormFieldOf(field))
-          val sorted = rows.sortBy(_.shard)
-          val c: TermCursor =
-            if (sorted.length == 1) new PostingsCursor(sorted(0).toData, fnA, w)
-            else new ChainedCursor(sorted.map(r => new PostingsCursor(r.toData, fnA, w)))
-          (c, field)
-        }
+      val cs: Array[TermCursor] = bPlan.value.flatMap { case (term, field, idf) =>
+        byTerm.get(term).map(SegmentScoring.cursor(_, fnArrs(Fields.fnormFieldOf(field)),
+          new Bm25FWeight(idf, st.avgNorm(field), bCoeffs.value(field))))
       }.toArray
       candDocs.iterator.map { doc =>
         var score = 0.0f
         var i = 0
         while (i < cs.length) {
-          val c = cs(i)._1
+          val c = cs(i)
           // posting_contains: ascending re-walk (computer/mod.rs:154-160)
           if (c.doc == doc || (c.doc < doc && c.seek(doc) == doc)) score += c.score
           i += 1
@@ -1194,24 +1016,7 @@ final class InvertedIndex(spark: SparkSession, dir: String,
       }
     }
 
-    val post = postings.filter($"term".isin(plan.map(_._1): _*))
-    val perSeg = (residentFnorms match {
-      case Some(bc) =>
-        post.groupByKey(_.segment).flatMapGroups { (seg, ps) =>
-          val plist = ps.toArray
-          if (plist.isEmpty) Iterator.empty else scoreSeg(seg, plist, bc.value(seg))
-        }
-      case None =>
-        post.groupByKey(_.segment).cogroup(fnorms.groupByKey(_.segment)) { (seg, ps, fs) =>
-          val plist = ps.toArray
-          if (plist.isEmpty) Iterator.empty
-          else scoreSeg(seg, plist, assembleFnorms(fs))
-        }
-    }).collect()
-    perSeg.filter(_._3 > 0.0f)
-      .sortBy(t => (-t._3, t._1, t._2))(
-        Ordering.Tuple3(Ordering.Float.TotalOrdering, Ordering.Int, Ordering.Int))
-      .take(k)
+    SegmentScoring.cut(perSegment(plan.map(_._1))(scoreSeg).filter(_._3 > 0.0f), k)
   }
 
   /** Bucket-deduped search (reference BucketCollector,
@@ -1419,24 +1224,12 @@ final class InvertedIndex(spark: SparkSession, dir: String,
     if (terms.isEmpty || stats.numDocs == 0) return (Array.empty, 0L, false)
     val dfs = dfOf(terms.toSeq)
     val N = stats.numDocs
-    val avgFn = stats.avgFieldNorm
-    val weights = dfs.map { case (t, df) => t -> (Bm25.idf(df, N) * (1.0f + Bm25.K1)) }
-    val bW = spark.sparkContext.broadcast(weights)
-    val post = postings.filter($"term".isin(terms.toSeq: _*))
+    val st = stats
+    val bW = spark.sparkContext.broadcast(SegmentScoring.weights(dfs, N))
     val budget = maxDocsPerSegment
-    val fnormsBc = residentFnorms
-    val perSeg: Array[(Int, Int, Float, Int, Boolean)] = (fnormsBc match {
-      case Some(bc) =>
-        post.groupByKey(_.segment).flatMapGroups { (seg, ps) =>
-          approxSegment(seg, ps.toArray, bc.value(seg), bW.value, avgFn, k, budget)
-        }
-      case None =>
-        post.groupByKey(_.segment).cogroup(fnorms.groupByKey(_.segment)) { (seg, ps, fs) =>
-          val plist = ps.toArray
-          if (plist.isEmpty) Iterator.empty
-          else approxSegment(seg, plist, assembleFnorms(fs), bW.value, avgFn, k, budget)
-        }
-    }).collect()
+    val perSeg = perSegment(terms.toSeq) { (seg, plist, fnArrs) =>
+      approxSegment(seg, plist, fnArrs, bW.value, st, k, budget)
+    }
     val saturated = perSeg.exists(_._5)
     val exactCount = perSeg.groupBy(_._1).map { case (_, rows) => rows.head._4.toLong }.sum
     val count = if (!saturated) exactCount
@@ -1446,25 +1239,19 @@ final class InvertedIndex(spark: SparkSession, dir: String,
       terms.foreach(t => est *= dfs.getOrElse(t, 0L).toDouble / N.toDouble)
       math.round(est)
     }
-    val hits = perSeg.filter(_._2 >= 0).map(r => (r._1, r._2, r._3))
-      .sortBy(t => (-t._3, t._1, t._2))(
-        Ordering.Tuple3(Ordering.Float.TotalOrdering, Ordering.Int, Ordering.Int))
-      .take(k)
+    val hits = SegmentScoring.cut(perSeg.filter(_._2 >= 0).map(r => (r._1, r._2, r._3)), k)
     (hits, count, saturated)
   }
 
   private def approxSegment(seg: Int, plist: Array[PostingRow],
                             fnArrs: Map[Int, Array[Byte]],
-                            weights: Map[String, Float], avgFn: Float,
+                            weights: Map[String, Float], stats: CollectionStats,
                             k: Int, budget: Int)
       : Iterator[(Int, Int, Float, Int, Boolean)] = {
     val byTerm = plist.groupBy(_.term)
+    // query terms are content terms: content norms and average
     def cursors(): Seq[TermCursor] = byTerm.toSeq.sortBy(_._1).map { case (t, rows) =>
-      val wt = new Bm25Weight(weights(t), avgFn)
-      val fnA = fnArrs(Fields.Content)
-      val sorted = rows.sortBy(_.shard)
-      if (sorted.length == 1) new PostingsCursor(sorted(0).toData, fnA, wt)
-      else new ChainedCursor(sorted.map(r => new PostingsCursor(r.toData, fnA, wt)))
+      SegmentScoring.bm25Cursor(t, rows, fnArrs, weights(t), stats)
     }
     val nDocs = fnArrs(Fields.Content).length
     val saturated = nDocs > budget
@@ -1484,6 +1271,11 @@ final class InvertedIndex(spark: SparkSession, dir: String,
 }
 
 object InvertedIndex {
+  /** Session conf key: the largest total fieldnorm size (bytes, summed
+    * over segments and fnorm fields) queries keep resident and
+    * broadcast; a larger index cogroups the fnorm blobs instead. */
+  val ResidentFnormBytesConf = "spark.graft.residentFnormBytes"
+
   /** Candidate budget of the two-stage rerank paths (rankSignals,
     * searchBm25F, searchDeduped): how many recall candidates feed the
     * rerank/collect stage. Deliberately a function of k ONLY — the

@@ -66,6 +66,18 @@ final case class SegStatRow(segment: Int, numDocs: Long, numTokens: Long,
 /** Collection-level statistics (Catalyst aggregates over SegStatRow). */
 final case class CollectionStats(numDocs: Long, numTokens: Long, numSegments: Int) {
   def avgFieldNorm: Float = numTokens.toFloat / numDocs.toFloat
+
+  /** Average fieldnorm of an index field for BM25: a doc holds one
+    * bigram fewer than tokens and two trigrams fewer; every other field
+    * scores with the content average. */
+  def avgNorm(field: Int): Float =
+    if (field == Fields.Bigram) shadowAvg(1L)
+    else if (field == Fields.Trigram) shadowAvg(2L)
+    else avgFieldNorm
+
+  private def shadowAvg(lost: Long): Float =
+    if (numDocs > 0) math.max(numTokens - lost * numDocs, 1L).toFloat / numDocs.toFloat
+    else 1.0f
 }
 
 /** Final query hit. */

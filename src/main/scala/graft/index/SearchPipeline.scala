@@ -95,9 +95,7 @@ object SearchPipeline {
           // NUL-carrying minus entries are already-lowered field terms
           // (negated operators, safe:on) and pass through untokenized,
           // like the searchBatchRaw and searchParsed minus paths
-          mustNot = (minus.flatMap(m =>
-              if (m.indexOf('\u0000') >= 0) Seq(m) else idx.queryTerms(m).toSeq)
-            ++ blockedTerms)
+          mustNot = (idx.lowerMinus(minus) ++ blockedTerms)
             .distinct.map(BooleanQuery.Term.apply))
         // score the ORIGINAL tree: factoring preserves the match set
         // but deduplicates shared clauses, so a factored tree scores a

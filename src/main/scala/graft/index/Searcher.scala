@@ -1,7 +1,5 @@
 package graft.index
 
-import graft.core._
-
 /** Driver-side serving searcher — the Spark analog of the reference's
   * search shard, which serves queries from mmap'd segment files without
   * spinning up jobs (crates/core/src/inverted_index + the distributed
@@ -9,8 +7,10 @@ import graft.core._
   * posting rows are fetched through the pushed-down parquet scan on
   * first use and LRU-cached per term, so a repeated-vocabulary query
   * stream runs entirely on the driver: no job, no shuffle, sub-ms
-  * latency. Results are IDENTICAL to InvertedIndex.searchRaw (same
-  * cursors, same WAND, same merge — property tested).
+  * latency. Results are IDENTICAL to InvertedIndex.searchRaw because
+  * both run the same code: InvertedIndex.lower lowers the query,
+  * SegmentScoring.scoreQuery scores each segment's rows (same cursors,
+  * same WAND) and SegmentScoring.cut merges (property tested).
   *
   * Scale note: this is the SERVING tier. At web scale each serving node
   * holds a shard's segments; the cache cap bounds driver memory
@@ -20,12 +20,6 @@ import graft.core._
 final class Searcher(idx: InvertedIndex, maxCachedTerms: Int = 4096) {
 
   private val stats = idx.stats
-  private val N = stats.numDocs
-  private val avgFn = stats.avgFieldNorm
-  private val bigramAvg =
-    if (N > 0) math.max(stats.numTokens - N, 1L).toFloat / N.toFloat else 1.0f
-  private val trigramAvg =
-    if (N > 0) math.max(stats.numTokens - 2L * N, 1L).toFloat / N.toFloat else 1.0f
 
   // fieldnorms resident: segment -> field -> bytes
   private val fnorms: Map[Int, Map[Int, Array[Byte]]] = idx.residentFnormsLocal
@@ -62,95 +56,21 @@ final class Searcher(idx: InvertedIndex, maxCachedTerms: Int = 4096) {
     terms.map(t => t -> local(t)).toMap
   }
 
-  /** Same contract as InvertedIndex.searchRaw, served from the driver. */
+  /** Same contract as InvertedIndex.searchRaw, served from the driver:
+    * the cached rows grouped by segment go through the distributed
+    * path's per-segment scoring and merge. */
   def searchRaw(query: String, k: Int, mode: String = "or",
                 minusTerms: Seq[String] = Nil): Array[(Int, Int, Float)] = {
-    val expanded = mode.endsWith("+")
-    val m = if (expanded) mode.dropRight(1) else mode
-    val terms: Seq[String] =
-      if (m.startsWith("phrase")) Tokenizers.default(query).take(32).toSeq
-      else if (expanded) Fields.expand(Tokenizers.default(query).take(16).toSeq,
-        stemmed = true, bigrams = true, stem = idx.queryStemmer)
-      else idx.queryTerms(query).toSeq
-    // NUL-prefixed minus entries are pre-lowered INDEX terms (optic
-    // blocklists) and pass through untokenized — the searchBatchRaw rule
-    val minus = minusTerms.flatMap(t =>
-      if (t.indexOf('\u0000') >= 0) Seq(t) else idx.queryTerms(t).toSeq).distinct
-    if (terms.isEmpty || N == 0) return Array.empty
-    val all = (terms ++ minus).distinct
-    val rows = rowsFor(all)
-    val dfs: Map[String, Long] =
-      rows.map { case (t, rs) => t -> rs.map(_.docFreq.toLong).sum }
-    val weights = dfs.map { case (t, df) =>
-      t -> (Bm25.idf(df, N) * (1.0f + Bm25.K1))
+    val (terms, m, minus) = idx.lower(query, mode, minusTerms)
+    if (terms.isEmpty || stats.numDocs == 0) return Array.empty
+    val rows = rowsFor((terms ++ minus).distinct)
+    val weights = SegmentScoring.weights(
+      rows.map { case (t, rs) => t -> rs.map(_.docFreq.toLong).sum }, stats.numDocs)
+    val perSeg = rows.valuesIterator.flatten.toArray.groupBy(_.segment).toArray.flatMap {
+      case (seg, plist) =>
+        SegmentScoring.scoreQuery(terms, k, m, minus, plist.groupBy(_.term),
+          fnorms(seg), weights, stats).map(h => (seg, h.doc, h.score))
     }
-
-    val segments = rows.values.flatten.map(_.segment).toSeq.distinct.sorted
-    val perSeg = segments.iterator.flatMap { seg =>
-      val fnArrs = fnorms(seg)
-      def cursor(term: String): Option[TermCursor] = {
-        val rs = rows(term).filter(_.segment == seg)
-        if (rs.isEmpty) None
-        else {
-          val field = Fields.fieldOf(term)
-          val av = if (field == Fields.Bigram) bigramAvg
-                   else if (field == Fields.Trigram) trigramAvg
-                   else avgFn
-          val fnA = fnArrs(Fields.fnormFieldOf(field))
-          val wt = new Bm25Weight(weights(term), av)
-          val sorted = rs.sortBy(_.shard)
-          Some(if (sorted.length == 1) new PostingsCursor(sorted(0).toData, fnA, wt)
-               else new ChainedCursor(sorted.map(r => new PostingsCursor(r.toData, fnA, wt))))
-        }
-      }
-      val cs = terms.flatMap(cursor)
-      if (cs.isEmpty) Iterator.empty
-      else {
-        val negs = minus.flatMap(cursor).toArray
-        @inline def excluded(doc: Int): Boolean = {
-          var i = 0
-          while (i < negs.length) {
-            val n = negs(i)
-            if (n.doc == doc || (n.doc < doc && n.seek(doc) == doc)) return true
-            i += 1
-          }
-          false
-        }
-        val topk = new TopK(k)
-        m match {
-          case pm if pm.startsWith("phrase") =>
-            if (cs.length == terms.length) {
-              var wsum = 0.0f
-              terms.foreach(t => wsum += weights(t))
-              val pw = new Bm25Weight(wsum, avgFn)
-              Phrase.run(cs, pw, fnArrs(Fields.Content),
-                (d, _, s) => if (!excluded(d)) topk.push(d, s),
-                slop = Phrase.slopOfMode(pm))
-            }
-          case "and" =>
-            // same guard as the distributed path: a term absent from
-            // this segment rules out every doc here
-            if (cs.length == terms.length)
-              BlockWand.intersect(cs, (d, s) => if (!excluded(d)) topk.push(d, s))
-          case "dismax" =>
-            BlockWand.exhaustiveCombine(cs, 0.0f,
-              (d, s) => if (!excluded(d)) topk.push(d, s))
-          case "exhaustive" =>
-            BlockWand.exhaustiveUnion(cs, (d, s) => if (!excluded(d)) topk.push(d, s))
-          case "bitset" =>
-            BlockWand.bitsetUnion(cs, (d, s) => if (!excluded(d)) topk.push(d, s))
-          case _ =>
-            if (negs.isEmpty)
-              BlockWand.run(cs, Float.MinValue, (d, s) => topk.push(d, s))
-            else
-              BlockWand.run(cs, Float.MinValue,
-                (d, s) => if (excluded(d)) topk.threshold else topk.push(d, s))
-        }
-        topk.sorted.iterator.map(h => (seg, h.doc, h.score))
-      }
-    }.toArray
-    perSeg.sortBy(t => (-t._3, t._1, t._2))(
-        Ordering.Tuple3(Ordering.Float.TotalOrdering, Ordering.Int, Ordering.Int))
-      .take(k)
+    SegmentScoring.cut(perSeg, k)
   }
 }

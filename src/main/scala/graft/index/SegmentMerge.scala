@@ -3,7 +3,7 @@ package graft.index
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 
-import graft.core.{BlockCodec, Bm25Weight, PostingListData, PostingsCursor}
+import graft.core.{BlockCodec, Bm25Weight, PostingListData}
 
 /** Record-level segment merge: K input segments -> K/fanIn output
   * segments, the Spark re-derivation of the reference's TermMerger

@@ -576,7 +576,6 @@ object Centrality {
     * at 0. */
   def harmonicHyperBall(spark: SparkSession, edges: DataFrame,
                         maxDepth: Int): Dataset[BallState] = {
-    import spark.implicits._
     val e0 = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .where(col("src") =!= col("dst")).distinct()
       .localCheckpoint()

@@ -50,12 +50,13 @@ class MultiFieldSpec extends AnyFunSuite {
 
   private lazy val corpus = Corpus.generate(spark, 500, seed = 11L).cache()
 
-  private lazy val index = {
+  private lazy val dir = {
     val d = tmpDir()
     IndexBuilder.build(spark, corpus, d, IndexBuilder.Config(
       numSegments = 3, indexStemmed = true, indexBigrams = true, indexTrigrams = true))
-    new InvertedIndex(spark, d)
+    d
   }
+  private lazy val index = new InvertedIndex(spark, dir)
 
   test("expanded WAND == expanded exhaustive") {
     Seq("spark session", "merge sort", "data tables merging", "the license")
@@ -156,6 +157,48 @@ class MultiFieldSpec extends AnyFunSuite {
     val gotTop = resolved.map(_.score).toSeq
     wantTop.zip(gotTop).foreach { case (a, b) =>
       assert(math.abs(a - b) < 1e-5f, s"top-k score drift: $a vs $b")
+    }
+  }
+
+  test("cogrouped fieldnorms score bit-identically to resident fieldnorms") {
+    // a 0-byte resident cap sends every perSegment caller down the
+    // cogroup fallback; the cap is read when the index is built
+    val cap = InvertedIndex.ResidentFnormBytesConf
+    spark.conf.set(cap, "0")
+    val cogrouped = try new InvertedIndex(spark, dir) finally spark.conf.unset(cap)
+    assert(index.fnormsResident && !cogrouped.fnormsResident)
+
+    val queries = Seq("spark session", "merge sort", "data tables merging", "the license")
+    val plans = for {
+      q <- queries
+      mode <- Seq("or", "and", "phrase", "dismax", "exhaustive", "bitset", "or+")
+      minus <- Seq(Nil, Seq("batch"))
+    } yield (s"$q|$mode|$minus", q, 15, mode, minus)
+    val want = index.searchBatchRaw(plans)
+    val got = cogrouped.searchBatchRaw(plans)
+    assert(want.values.exists(_.nonEmpty))
+    plans.foreach(p => assert(got(p._1).toSeq == want(p._1).toSeq, p._1))
+
+    val clauses = Seq(("spark", 2.0f), ("data", 1.0f),
+      (Fields.bigramTerm("data", "tables"), 0.5f), (Fields.trigramTerm("merge", "sort", "data"), 1.5f))
+    assert(cogrouped.searchBoosted(clauses, 15).toSeq == index.searchBoosted(clauses, 15).toSeq)
+
+    import graft.core.BooleanQuery.{Bool, Term}
+    val tree = Bool(must = Seq(Term("data")),
+      should = Seq(Term("spark"), Term(Fields.bigramTerm("data", "tables"))),
+      mustNot = Seq(Term("batch")))
+    assert(cogrouped.searchBool(tree, 15).toSeq == index.searchBool(tree, 15).toSeq)
+
+    queries.foreach { q =>
+      assert(cogrouped.searchBm25F(q, 15).toSeq == index.searchBm25F(q, 15).toSeq, q)
+      Seq(50, 10000).foreach { budget =>
+        val (wh, wc, ws) = index.searchApprox(q, 10, budget)
+        val (gh, gc, gs) = cogrouped.searchApprox(q, 10, budget)
+        assert((gh.toSeq, gc, gs) == ((wh.toSeq, wc, ws)), s"$q budget=$budget")
+      }
+      val cands = index.searchRaw(q, InvertedIndex.candidateBudget(15), "or+")
+      assert(cogrouped.rankSignalsOver(q, cands, 15).toSeq ==
+        index.rankSignalsOver(q, cands, 15).toSeq, q)
     }
   }
 
