@@ -176,8 +176,8 @@ object Dedup {
     * the optimizer's size estimate is the unfiltered scan size, so the
     * fanOut bypass guard cannot see the filter and would shuffle a
     * handful of rows). Partitioning cannot change any emitted value —
-    * every output column is an integer count or an exact integer
-    * division. */
+    * the ids pass through and jaccard is a deterministic rounded double
+    * division of exact integer counts. */
   def ngramJaccard(df: DataFrame, idCol: String, textCol: String,
                    shingleN: Int = 3, minJaccard: Double = 0.1,
                    maxShingleDf: Int = 1000, spread: Boolean = true): DataFrame = {

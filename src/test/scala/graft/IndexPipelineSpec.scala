@@ -4,17 +4,23 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.index._
 
+/** The shared test session. A suite that stops it (SessionMemoSpec)
+  * leaves the next caller a fresh session on a new context. */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
+  private var live: SparkSession = _
+
+  def spark: SparkSession = synchronized {
+    if (live == null || live.sparkContext.isStopped) {
+      live = SparkSession.builder()
+        .master("local[4]")
+        .appName("graft-test")
+        .config("spark.sql.shuffle.partitions", "4")
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+      live.sparkContext.setLogLevel("ERROR")
+    }
+    live
   }
 }
 

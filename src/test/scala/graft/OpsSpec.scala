@@ -343,15 +343,21 @@ class OpsSpec extends AnyFunSuite {
 
   test("ngramJaccard spread=false emits the same pairs and scores as spread=true") {
     import spark.implicits._
-    val df = (
-      Seq((1L, "alpha beta gamma delta epsilon zeta"),
-          (2L, "alpha beta gamma delta epsilon eta"),
-          (3L, "one two three four five six seven")) ++
-      (4L to 30L).map(i => (i, s"shared prefix words here tail$i end$i"))
-    ).toDF("id", "text")
+    // estimated over FanOutMinBytes and in one partition (fewer than
+    // defaultParallelism): spread=true really fans out, spread=false not
+    val df = (1L to 1200L).map { i =>
+      val group = (1 to 8).map(j => s"g${i / 4}w$j").mkString(" ")
+      val own = (1 to 6).map(j => s"u${i}w$j").mkString(" ")
+      (i, s"$group $own")
+    }.toDF("id", "text").coalesce(1)
+    assert(df.queryExecution.optimizedPlan.stats.sizeInBytes > TextOps.FanOutMinBytes)
+    def run(spread: Boolean) = Dedup.ngramJaccard(df, "id", "text", 3, 0.05, spread = spread)
+    def roundRobin(spread: Boolean) =
+      run(spread).queryExecution.executedPlan.toString.contains("RoundRobinPartitioning")
+    assert(roundRobin(spread = true))
+    assert(!roundRobin(spread = false))
     def rows(spread: Boolean) =
-      Dedup.ngramJaccard(df, "id", "text", 3, 0.05, spread = spread)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      run(spread).collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .sortBy(p => (p._1, p._2)).toSeq
     val wide = rows(spread = true)
     assert(wide.nonEmpty)
