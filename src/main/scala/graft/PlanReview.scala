@@ -34,15 +34,16 @@ object PlanReview {
     show("posting scan (term pushdown)",
       idx.postings.filter($"term".isin("spark", "session")).toDF())
 
-    // 2. collection stats: partial aggregation over the stat table
-    show("collection stats agg",
-      idx.segStats.agg(sum($"numDocs"), sum($"numTokens")).toDF())
+    // 2. collection stats: the stat rows, summed on the driver
+    show("collection stats scan", idx.segStats.toDF())
 
-    // 3. doc resolution join: hit side must broadcast
+    // 3. doc resolution: the hits' segment and docId IN-lists must reach
+    //    the parquet source (PushedFilters), with no join or exchange
+    show("doc resolve (segment/docId pushdown)",
+      idx.docs.filter($"segment".isin(0, 1) && $"docId".isin(1, 2))
+        .select($"segment", $"docId", $"repo", $"path", $"simhash"))
     val hits = spark.createDataset(Seq((0, 1, 1.0f), (1, 2, 0.5f)))
       .toDF("segment", "docId", "score")
-    show("doc resolve (broadcast join)",
-      idx.docs.join(broadcast(hits), Seq("segment", "docId")))
 
     // 3b. stored global-rank lookup: candidate keys broadcast against
     //     the ordinal table (the serving path that replaces the O(N·k)

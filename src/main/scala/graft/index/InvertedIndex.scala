@@ -1,29 +1,37 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import scala.reflect.ClassTag
+
+import org.apache.spark.Partitioner
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core._
 
 /** Query-side view of an index directory.
   *
-  * A query is served as: broadcast query-term stats -> parquet scan of
-  * the posting rows for the query terms only (term filter pushed to
-  * parquet row groups) -> rows grouped by segment, each group meeting
-  * its segment's fieldnorms -> per-segment block-max WAND top-k ->
-  * tiny driver-side merge ordered by (score desc, segment asc, docId
-  * asc), matching the reference's DocAddress tie-break
+  * A query is served as ONE Spark job: a parquet scan of the posting
+  * rows for the query terms only (term filter pushed to parquet row
+  * groups) -> one shuffle keyed by segment, which also carries each scan
+  * task's per-term docFreq partial sums to every reduce task -> per
+  * reduce task, the partials summed into the collection df, then
+  * per-segment block-max WAND top-k with weights from that df -> tiny
+  * driver-side merge ordered by (score desc, segment asc, docId asc),
+  * matching the reference's DocAddress tie-break
   * (top_collector.rs:59-65). By default the fieldnorms are resident: one
   * driver collect, broadcast to every task. An index whose fieldnorms
   * exceed the session conf `spark.graft.residentFnormBytes` (bytes,
-  * 64 MB default, read when the instance is built) instead cogroups the
-  * fnorm blobs with the posting groups, which scales to any corpus and
-  * pays a shuffle. `perSegment` holds that choice for every scoring
+  * 64 MB default, read when the instance is built) instead sends its
+  * fnorm rows through the same shuffle, keyed by segment, which scales
+  * to any corpus. `perSegment` holds that shuffle for every scoring
   * path; SegmentScoring holds the per-segment scoring and the merge.
+  * `resolve` is one more job: a pushed-down doc-table scan.
   *
-  * Collection statistics (N, total tokens -> avg fieldnorm, per-term df)
-  * are Catalyst aggregates over the stat/posting tables, per the north
-  * rule. BM25 weights use collection-level stats while per-block max
+  * Collection statistics (N, total tokens -> avg fieldnorm) are summed
+  * on the driver from the per-segment stat rows; per-term df is summed
+  * from the posting rows' docFreq, per the north rule. BM25 weights use
+  * collection-level stats while per-block max
   * metadata was computed with segment-level stats — the same deliberate
   * approximation as the reference (term_scorer.rs:63-70, which documents
   * that the stored (fieldnorm, tf) argmax under the segment average "may
@@ -64,19 +72,18 @@ final class InvertedIndex(spark: SparkSession, dir: String,
     * a table left stale by a live-index append or a merge is ignored
     * and rankSignals falls back to its per-query counting pass. */
   @transient private lazy val grankTable: Option[Dataset[GrankRow]] =
-    GlobalRank.load(spark, dir, segStats.collect().toSeq)
+    GlobalRank.load(spark, dir, segStatRows)
 
   /** The validated stored ordinal table, if this index has one. */
   def storedGlobalRanks: Option[Dataset[GrankRow]] = grankTable
 
-  lazy val stats: CollectionStats = {
-    // coalesce: sum over ZERO stat rows is null, and the empty-index
-    // guards downstream ask `stats.numDocs == 0` — the graceful path
-    // must not NPE computing the very value it guards on
-    val r = segStats.agg(coalesce(sum($"numDocs"), lit(0L)),
-      coalesce(sum($"numTokens"), lit(0L)), count(lit(1))).head()
-    CollectionStats(r.getLong(0), r.getLong(1), r.getLong(2).toInt)
-  }
+  /** The per-segment stat rows, collected once for `stats` and
+    * `grankTable`. */
+  @transient private lazy val segStatRows: Seq[SegStatRow] = segStats.collect().toSeq
+
+  lazy val stats: CollectionStats =
+    CollectionStats(segStatRows.map(_.numDocs).sum, segStatRows.map(_.numTokens).sum,
+      segStatRows.length)
 
   /** Tokenize + dedup (the reference's clause deduplication,
     * plan/node.rs:276-305) + 32-term cap (parser/mod.rs:17). */
@@ -87,54 +94,64 @@ final class InvertedIndex(spark: SparkSession, dir: String,
     * small enough (1 byte/doc — 64 MB default cap, session conf
     * `spark.graft.residentFnormBytes`, read once here). The reference
     * keeps fieldnorm files memory-mapped per shard for serving; this is
-    * the Spark analog. Above the cap, queries fall back to cogrouping
-    * the fnorm blobs per segment (scales to any corpus, pays a
-    * shuffle). */
+    * the Spark analog. Above the cap, queries send the fnorm rows
+    * through the per-segment shuffle instead (scales to any corpus). */
   private val maxResidentFnormBytes: Long =
     spark.conf.get(InvertedIndex.ResidentFnormBytesConf, (64L << 20).toString).toLong
 
   @transient private lazy val residentFnorms
-      : Option[org.apache.spark.broadcast.Broadcast[Map[Int, Map[Int, Array[Byte]]]]] = {
+      : Option[Broadcast[Map[Int, Map[Int, Array[Byte]]]]] = {
     // gate on the TRUE resident byte count — one byte per doc PER
     // FNORM FIELD (content + optional bigram/trigram shadows), summed
     // from the chunk metadata; numDocs alone undercounts ~3x for a
     // shadow-field index and the whole point of the cap is the
     // driver's memory
-    val residentBytes = fnorms.agg(coalesce(sum($"numDocs"), lit(0L)))
-      .head().getLong(0)
+    val residentBytes = fnorms.select($"numDocs").as[Int].collect().map(_.toLong).sum
     if (residentBytes == 0L || residentBytes > maxResidentFnormBytes) None
     else Some(spark.sparkContext.broadcast(residentFnormsLocal))
   }
 
   /** Whether queries read resident (broadcast) fieldnorms rather than
-    * cogrouping the fnorm blobs. */
+    * shuffling the fnorm rows. */
   private[graft] def fnormsResident: Boolean = residentFnorms.isDefined
 
   /** All fieldnorm arrays collected to the driver (serving tier). */
   def residentFnormsLocal: Map[Int, Map[Int, Array[Byte]]] =
     fnorms.collect().groupBy(_.segment).map { case (seg, chunks) =>
-      seg -> assembleFnorms(chunks.iterator)
+      seg -> InvertedIndex.assembleFnorms(chunks)
     }
 
-  /** The one place a posting scan is grouped by segment and collected:
-    * the rows of `terms` in each segment meet that segment's fieldnorms
-    * (resident broadcast, or cogrouped blobs above the cap) and `score`
-    * runs once per segment holding any of the terms. */
-  private def perSegment[T: Encoder](terms: Seq[String])(
-      score: (Int, Array[PostingRow], Map[Int, Array[Byte]]) => Iterator[T]): Array[T] = {
-    val bySeg = postings.filter($"term".isin(terms: _*)).groupByKey(_.segment)
-    (residentFnorms match {
-      case Some(bc) =>
-        bySeg.flatMapGroups { (seg, ps) =>
-          val plist = ps.toArray
-          if (plist.isEmpty) Iterator.empty else score(seg, plist, bc.value(seg))
-        }
-      case None =>
-        bySeg.cogroup(fnorms.groupByKey(_.segment)) { (seg, ps, fs) =>
-          val plist = ps.toArray
-          if (plist.isEmpty) Iterator.empty else score(seg, plist, assembleFnorms(fs))
-        }
-    }).collect()
+  /** The one place a posting scan is grouped by segment and scored, and
+    * the one place the df of the scanned terms is computed. One Spark
+    * job: the term-filtered posting scan is one shuffle keyed by
+    * segment. Each scan task also sums its rows' docFreq per term and
+    * sends those partial sums once to every reduce partition, where
+    * they sort ahead of the segments; a reduce task adds them up (the
+    * same Long sums as `dfOf`) before it scores its first segment.
+    * Above the residency cap the fnorm rows ride the same shuffle, keyed
+    * by segment. `score` runs once per segment holding any of the terms,
+    * with the segment's rows, its fieldnorms and the collection df. */
+  private def perSegment[T: ClassTag](terms: Seq[String])(
+      score: (Int, Array[PostingRow], Map[Int, Array[Byte]], Map[String, Long]) => Iterator[T])
+      : Array[T] = {
+    val n = math.max(1, math.min(
+      spark.conf.get("spark.sql.shuffle.partitions").toInt, stats.numSegments))
+    val scan = postings.filter($"term".isin(terms: _*)).rdd.mapPartitions { rows =>
+      val part = scala.collection.mutable.HashMap[String, Long]()
+      rows.map { r =>
+        part(r.term) = part.getOrElse(r.term, 0L) + r.docFreq
+        (r.segment, r: Any)
+      } ++ { // by-name: evaluated once the rows are drained
+        val d = InvertedIndex.DfPartial(part.toMap)
+        if (part.isEmpty) Iterator.empty else Iterator.tabulate(n)(p => (-1 - p, d))
+      }
+    }
+    val resident = residentFnorms
+    val input = if (resident.isDefined) scan
+      else scan.union(fnorms.rdd.map(f => (f.segment, f: Any)))
+    input.repartitionAndSortWithinPartitions(new InvertedIndex.SegmentPartitioner(n))
+      .mapPartitions(in => InvertedIndex.scoreSegments(in.buffered, resident, score))
+      .collect()
   }
 
   /** Posting rows for `terms` via one pushed-down scan, grouped by
@@ -144,12 +161,14 @@ final class InvertedIndex(spark: SparkSession, dir: String,
     postings.filter($"term".isin(terms: _*)).collect().groupBy(_.term)
   }
 
-  /** Per-term collection document frequency (Catalyst aggregate). */
+  /** Per-term collection document frequency: one pushed-down
+    * (term, docFreq) projection, summed on the driver. For dfs needed
+    * outside a scan's per-term weights; `perSegment` hands its callback
+    * the df of the terms it scans. */
   def dfOf(terms: Seq[String]): Map[String, Long] = {
     if (terms.isEmpty) return Map.empty
-    postings.filter($"term".isin(terms: _*))
-      .groupBy($"term").agg(sum($"docFreq").as("df"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    postings.filter($"term".isin(terms: _*)).select($"term", $"docFreq").as[(String, Int)]
+      .collect().groupMapReduce(_._1)(_._2.toLong)(_ + _)
   }
 
   /** One query, exact BM25 top-k. mode: "or" (WAND), "and" (leapfrog
@@ -214,11 +233,11 @@ final class InvertedIndex(spark: SparkSession, dir: String,
     if (allTerms.isEmpty || stats.numDocs == 0) return plans.map(p => p._1 -> Array.empty[(Int, Int, Float)]).toMap
     val st = stats
     val bPlans = spark.sparkContext.broadcast(plans)
-    val bWeights = spark.sparkContext.broadcast(SegmentScoring.weights(dfOf(allTerms), st.numDocs))
-    val byQid = perSegment(allTerms) { (seg, plist, fnArrs) =>
+    val byQid = perSegment(allTerms) { (seg, plist, fnArrs, dfs) =>
       val byTerm = plist.groupBy(_.term)
+      val weights = SegmentScoring.weights(dfs, st.numDocs)
       bPlans.value.iterator.flatMap { case (qid, terms, k, mode, minus) =>
-        SegmentScoring.scoreQuery(terms, k, mode, minus, byTerm, fnArrs, bWeights.value, st)
+        SegmentScoring.scoreQuery(terms, k, mode, minus, byTerm, fnArrs, weights, st)
           .iterator.map(h => (qid, seg, h.doc, h.score))
       }
     }.groupBy(_._1)
@@ -228,43 +247,28 @@ final class InvertedIndex(spark: SparkSession, dir: String,
     }.toMap
   }
 
-  /** Per-field fnorm arrays of one segment (chunk encodes the field in
-    * its high bits; see Fields). */
-  private def assembleFnorms(fs: Iterator[FnormRow]): Map[Int, Array[Byte]] = {
-    fs.toArray.groupBy(_.chunk >> Fields.FnormFieldShift).map { case (field, rows) =>
-      val chunks = rows.sortBy(_.chunk)
-      val total = chunks.map(_.numDocs).sum
-      val out = new Array[Byte](total)
-      var off = 0
-      chunks.foreach { c =>
-        System.arraycopy(c.fnorms, 0, out, off, c.numDocs)
-        off += c.numDocs
-      }
-      field -> out
+  /** Hits resolved against the doc table (see `docsOf`). */
+  def resolve(hits: Array[(Int, Int, Float)], k: Int): Array[Hit] = {
+    if (hits.isEmpty) return Array.empty
+    val info = docsOf(hits)
+    hits.zipWithIndex.map { case ((seg, d, sc), i) =>
+      val (repo, path, _) = info((seg, d))
+      Hit(i + 1, seg, d, sc, repo, path)
     }
   }
 
-  /** Resolve raw hits against the doc table (broadcast hash join on the
-    * tiny hit side). */
-  def resolve(hits: Array[(Int, Int, Float)], k: Int): Array[Hit] = {
-    if (hits.isEmpty) return Array.empty
-    val hitDS = spark.createDataset(hits.toSeq).toDF("segment", "docId", "score")
+  /** (repo, path, simhash) of the hits' docs: one doc-table scan with
+    * `segment IN` and `docId IN` (≤ tieSlack values) pushed to parquet,
+    * so row-group min/max stats skip non-hit doc ranges. The two lists
+    * admit a few non-hit rows; lookups by (segment, docId) ignore them. */
+  private def docsOf(hits: Array[(Int, Int, Float)]): Map[(Int, Int), (String, String, Long)] = {
     val segs = hits.map(_._1).distinct.toSeq
-    // the docId IN-list (≤ tieSlack values) pushes to the parquet scan
-    // so row-group min/max stats skip non-hit doc ranges; the join on
-    // (segment, docId) already restricted the result — the filter only
-    // prunes I/O
     val ids = hits.map(_._2).distinct.toSeq
-    val joined = docs.filter($"segment".isin(segs: _*) && $"docId".isin(ids: _*))
-      .join(broadcast(hitDS), Seq("segment", "docId"))
-      .select($"segment", $"docId", $"score", $"repo", $"path")
+    docs.filter($"segment".isin(segs: _*) && $"docId".isin(ids: _*))
+      .select($"segment", $"docId", $"repo", $"path", $"simhash")
       .collect()
-    val key = joined.map(r => (r.getInt(0), r.getInt(1)) ->
-      (r.getString(3), r.getString(4))).toMap
-    hits.zipWithIndex.map { case ((seg, d, sc), i) =>
-      val (repo, path) = key((seg, d))
-      Hit(i + 1, seg, d, sc, repo, path)
-    }
+      .map(r => (r.getInt(0), r.getInt(1)) -> ((r.getString(2), r.getString(3), r.getLong(4))))
+      .toMap
   }
 
   /** Token-level pattern match (the reference's PatternQuery,
@@ -388,7 +392,7 @@ final class InvertedIndex(spark: SparkSession, dir: String,
   }
 
   /** Simhashes of a small candidate set, keyed by (repo, path) —
-    * broadcast hash join on the tiny key side (the `resolve` pattern).
+    * broadcast hash join on the tiny key side.
     * Only the candidate rows — join keys + simhash — ever reach the
     * driver, regardless of how many files the candidates' repos hold. */
   def simhashOf(keys: Seq[(String, String)]): Map[(String, String), Long] = {
@@ -675,14 +679,12 @@ final class InvertedIndex(spark: SparkSession, dir: String,
     if (terms.isEmpty || stats.numDocs == 0) return Array.empty
     val boosts = clauses.toMap
     val st = stats
-    val bW = spark.sparkContext.broadcast(
-      SegmentScoring.weights(dfOf(terms), st.numDocs).map { case (t, w) =>
-        t -> w * boosts.getOrElse(t, 1.0f) })
-    SegmentScoring.cut(perSegment(terms) { (seg, plist, fnArrs) =>
+    SegmentScoring.cut(perSegment(terms) { (seg, plist, fnArrs, dfs) =>
+      val w = SegmentScoring.weights(dfs, st.numDocs)
       // term-sorted cursors; an n-gram shadow term in a boosted clause
       // scores with ITS field's average and fnorm bytes
       val cursors = plist.groupBy(_.term).toSeq.sortBy(_._1).map { case (t, rows) =>
-        SegmentScoring.bm25Cursor(t, rows, fnArrs, bW.value(t), st)
+        SegmentScoring.bm25Cursor(t, rows, fnArrs, w(t) * boosts.getOrElse(t, 1.0f), st)
       }
       val topk = new TopK(k)
       BlockWand.run(cursors, Float.MinValue, (d, s) => topk.push(d, s))
@@ -727,8 +729,8 @@ final class InvertedIndex(spark: SparkSession, dir: String,
                       coeffs: Map[String, Double] = Signals.DefaultCoefficients)
       : Array[(Hit, Map[String, Double])] = {
     val base = Tokenizers.default(query).distinct.take(16).toSeq
-    // the empty-candidate check comes BEFORE the dfOf aggregate below —
-    // no point launching a cluster job to rank nothing
+    // the empty-candidate check comes BEFORE the dfOf scan below — no
+    // point launching a cluster job to rank nothing
     if (base.isEmpty || cands.isEmpty || stats.numDocs == 0) return Array.empty
     val st = stats
     val N = st.numDocs
@@ -738,34 +740,35 @@ final class InvertedIndex(spark: SparkSession, dir: String,
     val urlTerms = base.map(Fields.urlTerm)
     val repoTerms = base.map(t => Fields.RepoPrefix + t)
     val allTerms = (base ++ stems ++ bigrams ++ urlTerms ++ repoTerms).distinct
-    // per-field dfs for the per-field bm25/idf signals; content dfs of
-    // the stripped texts feed the BM25F shared idf
+    // per-field dfs for the per-field bm25/idf signals come from the
+    // segment pass; content dfs of the stripped texts feed the BM25F
+    // shared idf
     val idfTexts = (base ++ stems.map(_.substring(Fields.StemPrefix.length)) ++
       bigrams.map(_.substring(Fields.BigramPrefix.length))).distinct
-    val dfs = dfOf((allTerms ++ idfTexts).distinct)
+    val textDfs = dfOf(idfTexts)
 
     val candBySeg = cands.groupBy(_._1).map { case (s, rs) => s -> rs.map(_._2).sorted }
     val bCands = spark.sparkContext.broadcast(candBySeg)
-    val bDfs = spark.sparkContext.broadcast(dfs)
+    val bTextDfs = spark.sparkContext.broadcast(textDfs)
     val fCoeffs = Fields.DefaultBm25fCoeffs
 
     // (seg, doc, bm25f, bm25Content, coverage, bm25Bigrams, bm25Stemmed,
     //  idfSumUrl, idfSumRepo)
-    def sigSeg(seg: Int, plist: Array[PostingRow], fnArrs: Map[Int, Array[Byte]])
+    def sigSeg(seg: Int, plist: Array[PostingRow], fnArrs: Map[Int, Array[Byte]],
+               dfs: Map[String, Long])
         : Iterator[(Int, Int, Double, Double, Double, Double, Double, Double, Double)] = {
       val candDocs = bCands.value.getOrElse(seg, Array.empty)
       if (candDocs.isEmpty) return Iterator.empty
       val byTerm = plist.groupBy(_.term)
-      val dfsV = bDfs.value
       def cursor(term: String, field: Int): Option[(TermCursor, Bm25Weight, Bm25FWeight, Float)] =
         byTerm.get(term).map { rows =>
           val av = st.avgNorm(field)
-          val df = dfsV.getOrElse(term, 0L)
+          val df = dfs.getOrElse(term, 0L)
           val idf = Bm25.idf(df, N)
           val bw = new Bm25Weight(idf * (1.0f + Bm25.K1), av)
           val text = if (field == Fields.Content) term
             else term.substring(2) // strip the 2-char field prefix
-          val sharedIdf = Bm25.idf(dfsV.getOrElse(text, 0L), N)
+          val sharedIdf = Bm25.idf(bTextDfs.value.getOrElse(text, 0L), N)
           val bf = new Bm25FWeight(sharedIdf, av, fCoeffs.getOrElse(field, 0.0f))
           (SegmentScoring.cursor(rows, fnArrs(Fields.fnormFieldOf(field)), bw), bw, bf, idf)
         }
@@ -913,17 +916,17 @@ final class InvertedIndex(spark: SparkSession, dir: String,
     val posTerms = BooleanQuery.positiveTerms(node).toSet
     if (posTerms.isEmpty || stats.numDocs == 0) return Array.empty
     val st = stats
-    val bW = spark.sparkContext.broadcast(SegmentScoring.weights(dfOf(terms), st.numDocs))
     val bNode = spark.sparkContext.broadcast(node)
     val bPos = spark.sparkContext.broadcast(posTerms)
 
-    def boolSegment(seg: Int, plist: Array[PostingRow], fnArrs: Map[Int, Array[Byte]])
-        : Iterator[(Int, Int, Float)] = {
+    def boolSegment(seg: Int, plist: Array[PostingRow], fnArrs: Map[Int, Array[Byte]],
+                    dfs: Map[String, Long]): Iterator[(Int, Int, Float)] = {
+      val w = SegmentScoring.weights(dfs, st.numDocs)
       // an n-gram shadow term in a boolean tree scores with ITS field's
       // average and bytes
       val cursors: Map[String, TermCursor] =
         plist.groupBy(_.term).map { case (t, rows) =>
-          t -> SegmentScoring.bm25Cursor(t, rows, fnArrs, bW.value(t), st)
+          t -> SegmentScoring.bm25Cursor(t, rows, fnArrs, w(t), st)
         }
       val drivers = cursors.filter(c => bPos.value.contains(c._1)).values.toArray
       if (drivers.isEmpty) return Iterator.empty
@@ -993,8 +996,8 @@ final class InvertedIndex(spark: SparkSession, dir: String,
     val bCands = spark.sparkContext.broadcast(candBySeg)
     val bCoeffs = spark.sparkContext.broadcast(coeffs)
 
-    def scoreSeg(seg: Int, plist: Array[PostingRow], fnArrs: Map[Int, Array[Byte]])
-        : Iterator[(Int, Int, Float)] = {
+    def scoreSeg(seg: Int, plist: Array[PostingRow], fnArrs: Map[Int, Array[Byte]],
+                 dfs: Map[String, Long]): Iterator[(Int, Int, Float)] = {
       val candDocs = bCands.value.getOrElse(seg, Array.empty)
       if (candDocs.isEmpty) return Iterator.empty
       val byTerm = plist.groupBy(_.term)
@@ -1031,14 +1034,7 @@ final class InvertedIndex(spark: SparkSession, dir: String,
     val fetchK = InvertedIndex.candidateBudget(k)
     val raw = searchBatchRaw(Seq(("q", query, fetchK, mode, Nil)))("q")
     if (raw.isEmpty) return Array.empty
-    val hitDS = spark.createDataset(raw.toSeq).toDF("segment", "docId", "score")
-    val segs = raw.map(_._1).distinct.toSeq
-    val joined = docs.filter($"segment".isin(segs: _*))
-      .join(broadcast(hitDS), Seq("segment", "docId"))
-      .select($"segment", $"docId", $"repo", $"path", $"simhash")
-      .collect()
-    val info = joined.map(r => (r.getInt(0), r.getInt(1)) ->
-      (r.getString(2), r.getString(3), r.getLong(4))).toMap
+    val info = docsOf(raw)
     val cands = raw.map { case (seg, d, sc) =>
       val (repo, path, sh) = info((seg, d))
       (seg, d, sc, repo, path, sh)
@@ -1222,19 +1218,19 @@ final class InvertedIndex(spark: SparkSession, dir: String,
       : (Array[(Int, Int, Float)], Long, Boolean) = {
     val terms = queryTerms(query)
     if (terms.isEmpty || stats.numDocs == 0) return (Array.empty, 0L, false)
-    val dfs = dfOf(terms.toSeq)
     val N = stats.numDocs
     val st = stats
-    val bW = spark.sparkContext.broadcast(SegmentScoring.weights(dfs, N))
     val budget = maxDocsPerSegment
-    val perSeg = perSegment(terms.toSeq) { (seg, plist, fnArrs) =>
-      approxSegment(seg, plist, fnArrs, bW.value, st, k, budget)
+    val perSeg = perSegment(terms.toSeq) { (seg, plist, fnArrs, dfs) =>
+      approxSegment(seg, plist, fnArrs, SegmentScoring.weights(dfs, N), st, k, budget)
     }
     val saturated = perSeg.exists(_._5)
     val exactCount = perSeg.groupBy(_._1).map { case (_, rows) => rows.head._4.toLong }.sum
     val count = if (!saturated) exactCount
     else {
-      // term-independence estimate over the whole collection
+      // term-independence estimate over the whole collection; only a
+      // saturated query needs the dfs on the driver
+      val dfs = dfOf(terms.toSeq)
       var est = N.toDouble
       terms.foreach(t => est *= dfs.getOrElse(t, 0L).toDouble / N.toDouble)
       math.round(est)
@@ -1273,8 +1269,63 @@ final class InvertedIndex(spark: SparkSession, dir: String,
 object InvertedIndex {
   /** Session conf key: the largest total fieldnorm size (bytes, summed
     * over segments and fnorm fields) queries keep resident and
-    * broadcast; a larger index cogroups the fnorm blobs instead. */
+    * broadcast; a larger index shuffles the fnorm rows with the
+    * postings instead. */
   val ResidentFnormBytesConf = "spark.graft.residentFnormBytes"
+
+  /** One scan task's per-term docFreq sums, sent to every reduce
+    * partition of `perSegment`'s shuffle. */
+  private final case class DfPartial(dfs: Map[String, Long])
+
+  /** `perSegment`'s shuffle routing: segment s (key >= 0) goes to
+    * partition s mod n; key -1 - r carries a df partial to partition r,
+    * ahead of every segment in the key sort. */
+  private final class SegmentPartitioner(val numPartitions: Int) extends Partitioner {
+    def getPartition(key: Any): Int = {
+      val k = key.asInstanceOf[Int]
+      if (k >= 0) k % numPartitions else -1 - k
+    }
+  }
+
+  /** One reduce partition of `perSegment`, sorted by key: sum the df
+    * partials, then score each segment's run of rows. */
+  private def scoreSegments[T](
+      in: scala.collection.BufferedIterator[(Int, Any)],
+      resident: Option[Broadcast[Map[Int, Map[Int, Array[Byte]]]]],
+      score: (Int, Array[PostingRow], Map[Int, Array[Byte]], Map[String, Long]) => Iterator[T])
+      : Iterator[T] = {
+    val sums = scala.collection.mutable.HashMap[String, Long]()
+    while (in.hasNext && in.head._1 < 0) in.next()._2 match {
+      case DfPartial(part) => part.foreach { case (t, c) => sums(t) = sums.getOrElse(t, 0L) + c }
+    }
+    val dfs = sums.toMap
+    Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+      val seg = in.head._1
+      val ps = Array.newBuilder[PostingRow]
+      val fs = Array.newBuilder[FnormRow]
+      while (in.hasNext && in.head._1 == seg) in.next()._2 match {
+        case p: PostingRow => ps += p
+        case f: FnormRow => fs += f
+      }
+      val plist = ps.result()
+      if (plist.isEmpty) Iterator.empty
+      else score(seg, plist, resident.fold(assembleFnorms(fs.result()))(_.value(seg)), dfs)
+    }
+  }
+
+  /** Per-field fnorm arrays of one segment (chunk encodes the field in
+    * its high bits; see Fields). */
+  private def assembleFnorms(fs: Array[FnormRow]): Map[Int, Array[Byte]] =
+    fs.groupBy(_.chunk >> Fields.FnormFieldShift).map { case (field, rows) =>
+      val chunks = rows.sortBy(_.chunk)
+      val out = new Array[Byte](chunks.map(_.numDocs).sum)
+      var off = 0
+      chunks.foreach { c =>
+        System.arraycopy(c.fnorms, 0, out, off, c.numDocs)
+        off += c.numDocs
+      }
+      field -> out
+    }
 
   /** Candidate budget of the two-stage rerank paths (rankSignals,
     * searchBm25F, searchDeduped): how many recall candidates feed the

@@ -161,8 +161,9 @@ class MultiFieldSpec extends AnyFunSuite {
   }
 
   test("cogrouped fieldnorms score bit-identically to resident fieldnorms") {
-    // a 0-byte resident cap sends every perSegment caller down the
-    // cogroup fallback; the cap is read when the index is built
+    // a 0-byte resident cap sends every perSegment caller's fnorm rows
+    // through the posting shuffle; the cap is read when the index is
+    // built
     val cap = InvertedIndex.ResidentFnormBytesConf
     spark.conf.set(cap, "0")
     val cogrouped = try new InvertedIndex(spark, dir) finally spark.conf.unset(cap)

@@ -1,0 +1,134 @@
+package graft
+
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.core.Tokenizers
+import graft.index._
+
+/** InvertedIndex.perSegment folds the df pass into its per-segment
+  * shuffle: a query is one posting scan and one Spark job, and the df
+  * it scores with equals the df computed independently from the rows. */
+class PerSegmentSpec extends AnyFunSuite {
+  lazy val spark: SparkSession = SparkTestSession.spark
+
+  private val seed = 17L
+  // a small shard cap splits every hot term into docId-range shards
+  private lazy val dir = {
+    val d = java.nio.file.Files.createTempDirectory("graftperseg").toString
+    IndexBuilder.build(spark, Corpus.generate(spark, 600, seed = seed), d,
+      IndexBuilder.Config(numSegments = 5, maxPostingsPerShard = 32))
+    d
+  }
+  private lazy val index = new InvertedIndex(spark, dir)
+
+  /** An instance whose resident-fieldnorm cap is below the index's
+    * fieldnorm bytes, so the fnorm rows ride the posting shuffle. */
+  private def shuffledFnorms(): InvertedIndex = {
+    val cap = InvertedIndex.ResidentFnormBytesConf
+    spark.conf.set(cap, "1")
+    val idx = try new InvertedIndex(spark, dir) finally spark.conf.unset(cap)
+    assert(!idx.fnormsResident)
+    idx
+  }
+
+  /** Job start/end events by job group. */
+  private final class GroupListener extends SparkListener {
+    val started = new ConcurrentLinkedQueue[String]()
+    val ended = new ConcurrentLinkedQueue[String]()
+    private val groups = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    private def group(p: java.util.Properties): String =
+      Option(p).flatMap(x => Option(x.getProperty("spark.jobGroup.id"))).getOrElse("")
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      val g = group(e.properties)
+      groups.put(e.jobId, g)
+      started.add(g)
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      ended.add(groups.getOrDefault(e.jobId, ""))
+  }
+
+  private var calls = 0
+
+  /** Spark jobs `f` starts. Counted by job group, so jobs of suites
+    * running beside this one do not count; a marker job in its own
+    * group drains the listener bus, which delivers events in order. */
+  private def jobsOf[T](f: => T): Int = {
+    val sc = spark.sparkContext
+    val listener = new GroupListener
+    calls += 1
+    val (g, marker) = (s"perseg-$calls", s"perseg-drain-$calls")
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(g, g, interruptOnCancel = false)
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup(marker, marker, interruptOnCancel = false)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 60000
+      while (!listener.ended.contains(marker) && System.currentTimeMillis() < deadline)
+        Thread.sleep(5)
+      assert(listener.ended.contains(marker), "listener bus did not drain")
+      listener.started.asScala.count(_ == g)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("searchRaw, resolve and searchBatchRaw each start exactly one Spark job") {
+    assert(index.stats.numSegments == 5)
+    Seq(index, shuffledFnorms()).foreach { idx =>
+      val tag = if (idx.fnormsResident) "resident" else "shuffled fnorms"
+      // warm: stats, the fieldnorm residency gate, the doc table's reader
+      val raw = idx.searchRaw("query engine table", 10)
+      assert(raw.nonEmpty)
+      idx.resolve(raw, 10)
+      assert(jobsOf(idx.searchRaw("query engine table", 10)) == 1, tag)
+      assert(jobsOf(idx.searchRaw("spark", 10, "or", Seq("data"))) == 1, tag)
+      assert(jobsOf(idx.resolve(raw, 10)) == 1, tag)
+      val batch = Seq("spark session", "merge sort", "data table", "the license")
+        .zipWithIndex.map { case (q, i) => (s"q$i", q, 10, if (i % 2 == 0) "or" else "and", Nil) }
+      assert(jobsOf(idx.searchBatchRaw(batch)) == 1, tag)
+    }
+  }
+
+  test("folded df: searchRaw == Searcher (df from its own rows) == exhaustive, on sharded postings") {
+    val sp = spark
+    import sp.implicits._
+    assert(index.postings.filter($"shard" > 0).count() > 0, "no hot term was sharded")
+    // doc 42's salt terms live in one segment only; its last vocabulary
+    // token precedes them, so the phrase / and queries below match it
+    val toks = Tokenizers.default(Corpus.mkDoc(42, seed, skew = false).content)
+    val last = toks(toks.indexOf("zzsalt42a") - 1)
+    val salt = "zzsalt42a"
+    val cases = Seq(
+      ("spark data", "or", Nil),
+      ("spark data query", "or", Seq("session")),
+      (s"data $salt", "or", Nil),
+      (s"table $salt", "or", Seq("zzsalt7b")),
+      (s"$last $salt", "or", Seq(last)),
+      ("spark nosuchtok", "or", Nil),
+      (s"$last $salt", "and", Nil),
+      (s"spark $salt", "and", Nil),
+      ("spark data", "and", Seq("table")),
+      (s"$last $salt", "phrase", Nil),
+      (s"$salt zzsalt42b", "phrase", Nil),
+      (s"data $salt", "phrase", Nil))
+    val searcher = new Searcher(index)
+    val capped = shuffledFnorms()
+    cases.foreach { case (q, mode, minus) =>
+      val got = index.searchRaw(q, 15, mode, minus).toSeq
+      val tag = s"'$q' mode=$mode minus=$minus"
+      assert(got == searcher.searchRaw(q, 15, mode, minus).toSeq, tag)
+      assert(got == capped.searchRaw(q, 15, mode, minus).toSeq, tag)
+      if (mode == "or")
+        assert(got == index.searchRaw(q, 15, "exhaustive", minus).toSeq, tag)
+    }
+    // the cases reach the paths they name
+    assert(index.searchRaw(s"$last $salt", 15, "and").length == 1)
+    assert(index.searchRaw(s"$last $salt", 15, "phrase").length == 1)
+    assert(index.searchRaw("spark data query", 15, "or", Seq("session")).nonEmpty)
+  }
+}
