@@ -3,7 +3,7 @@ package graft.index
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 
 /** Build-time materialization of the index-wide static-rank ordinal.
   *
@@ -46,8 +46,7 @@ object GlobalRank {
     * recompute is idempotent). */
   def write(spark: SparkSession, indexDir: String, partitions: Int = 0): Unit = {
     import spark.implicits._
-    val docs = spark.read
-      .parquet(s"${IndexBuilder.dataDir(indexDir)}/kind=doc")
+    val docs = IndexBuilder.readKind(spark, IndexBuilder.dataDir(indexDir), "doc")
       .select("doc.*").as[DocRow]
     val keyed = docs
       .select($"segment", $"docId", $"sortKey", $"repo", $"path", $"commit")
@@ -110,6 +109,7 @@ object GlobalRank {
     val liveSegs = segStats.filter(_.numDocs > 0).map(_.segment).toSet
     val liveDocs = segStats.map(_.numDocs).sum
     if (storedSegs != liveSegs || storedDocs != liveDocs) None
-    else Some(spark.read.parquet(dataPath(indexDir)).as[GrankRow])
+    else Some(IndexBuilder.readTable(spark, dataPath(indexDir), Encoders.product[GrankRow].schema)
+      .as[GrankRow])
   }
 }

@@ -1,7 +1,8 @@
 package graft.index
 
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
 import graft.core.{Bm25Weight, FieldNorm, PostingListData, Tokenizers}
 
@@ -346,6 +347,21 @@ object IndexBuilder {
   def dataDir(outDir: String) = s"$outDir/data"
   def stagingDir(outDir: String) = s"$outDir/staging"
 
+  private lazy val buildRowSchema: StructType = Encoders.product[BuildRow].schema
+
+  /** The table of one row kind under `root` (a data dir, or a staging
+    * dir before adoption): one column, the kind's struct, read with the
+    * schema the writer's BuildRow encoder gave it. */
+  def readKind(spark: SparkSession, root: String, kind: String): DataFrame =
+    readTable(spark, s"$root/kind=$kind", StructType(Seq(buildRowSchema(kind))))
+
+  /** The one reader of index tables. A declared schema leaves Spark
+    * only the file listing; `spark.read.parquet` without one starts a
+    * footer-merge job on every call to infer the schema the writer
+    * already fixed. */
+  def readTable(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(path)
+
   /** Batch commit marker: written last, checked first — the unit of
     * exactly-once. A batch whose marker exists is fully committed (data
     * adopted + manifests written); one without is re-staged from
@@ -511,11 +527,10 @@ object IndexBuilder {
     * build is a valid BuildReport(0, 0, ...), and its batch markers
     * commit like any other (the resume contract assumes a stable input
     * across retries). */
-  private def readStats(spark: SparkSession, outDir: String): Array[SegStatRow] = {
+  private[index] def readStats(spark: SparkSession, outDir: String): Array[SegStatRow] = {
     import spark.implicits._
-    val p = s"${dataDir(outDir)}/kind=stat"
-    if (!new java.io.File(p).exists()) Array.empty
-    else spark.read.parquet(p).select("stat.*").as[SegStatRow].collect()
+    if (!new java.io.File(s"${dataDir(outDir)}/kind=stat").exists()) Array.empty
+    else readKind(spark, dataDir(outDir), "stat").select("stat.*").as[SegStatRow].collect()
   }
 
   /** Shared segment-build stage: shuffle to segments, sort, accumulate,

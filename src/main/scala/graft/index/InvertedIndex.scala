@@ -28,6 +28,14 @@ import graft.core._
   * path; SegmentScoring holds the per-segment scoring and the merge.
   * `resolve` is one more job: a pushed-down doc-table scan.
   *
+  * Opening starts no job: every table is read through
+  * IndexBuilder.readKind with the schema its writer declared, so a
+  * reader costs a file listing and never a schema-inference job. The
+  * first calls on a fresh instance add one job each for what they
+  * collect once: the stat rows (`stats`) and, when resident, the
+  * fieldnorms. The residency gate is free unless numDocs x 3 fnorm
+  * fields exceeds the cap.
+  *
   * Collection statistics (N, total tokens -> avg fieldnorm) are summed
   * on the driver from the per-segment stat rows; per-term df is summed
   * from the posting rows' docFreq, per the north rule. BM25 weights use
@@ -49,18 +57,21 @@ final class InvertedIndex(spark: SparkSession, dir: String,
   // doc at build time)
   private val queryStem: String => String = Stemmers.forLanguage(queryLang)
 
-  // one DataFrame handle per row kind: every spark.read.parquet call
-  // pays a footer/schema-listing job (~25 ms), and a single search
-  // touches the posting/fnorm/doc tables several times. The instance
-  // already snapshots the directory via its lazy stats/fieldnorm
-  // caches (consumers build a fresh InvertedIndex after an append), so
-  // caching the readers adds no new staleness class.
+  // one DataFrame handle per row kind, made on first use. The declared
+  // schema (IndexBuilder.readKind) starts no Spark job (inferring it
+  // took 70-150 ms per table on a 28-segment live index, local[4]), but
+  // opening a reader still lists the files and resolves its plan
+  // (10-30 ms there), and a single search touches the
+  // posting/fnorm/doc tables several times. The
+  // instance already snapshots the directory via its lazy
+  // stats/fieldnorm caches (consumers build a fresh InvertedIndex after
+  // an append), so caching the readers adds no new staleness class.
   @transient private lazy val dataFrames =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
   private def data(kind: String): DataFrame =
     dataFrames.computeIfAbsent(kind, k =>
-      spark.read.parquet(s"${IndexBuilder.dataDir(dir)}/kind=$k"))
+      IndexBuilder.readKind(spark, IndexBuilder.dataDir(dir), k))
 
   def docs: Dataset[DocRow] = data("doc").select("doc.*").as[DocRow]
   def postings: Dataset[PostingRow] = data("posting").select("posting.*").as[PostingRow]
@@ -91,32 +102,38 @@ final class InvertedIndex(spark: SparkSession, dir: String,
     Tokenizers.default(query).distinct.take(32)
 
   /** Fieldnorms resident on the driver + broadcast when the corpus is
-    * small enough (1 byte/doc — 64 MB default cap, session conf
-    * `spark.graft.residentFnormBytes`, read once here). The reference
-    * keeps fieldnorm files memory-mapped per shard for serving; this is
-    * the Spark analog. Above the cap, queries send the fnorm rows
-    * through the per-segment shuffle instead (scales to any corpus). */
+    * small enough (1 byte/doc per fnorm field — 64 MB default cap,
+    * session conf `spark.graft.residentFnormBytes`, read once here). The
+    * reference keeps fieldnorm files memory-mapped per shard for
+    * serving; this is the Spark analog. Above the cap, queries send the
+    * fnorm rows through the per-segment shuffle instead (scales to any
+    * corpus). */
   private val maxResidentFnormBytes: Long =
     spark.conf.get(InvertedIndex.ResidentFnormBytesConf, (64L << 20).toString).toLong
 
   @transient private lazy val residentFnorms
       : Option[Broadcast[Map[Int, Map[Int, Array[Byte]]]]] = {
-    // gate on the TRUE resident byte count — one byte per doc PER
-    // FNORM FIELD (content + optional bigram/trigram shadows), summed
-    // from the chunk metadata; numDocs alone undercounts ~3x for a
-    // shadow-field index and the whole point of the cap is the
-    // driver's memory
-    val residentBytes = fnorms.select($"numDocs").as[Int].collect().map(_.toLong).sum
-    if (residentBytes == 0L || residentBytes > maxResidentFnormBytes) None
-    else Some(spark.sparkContext.broadcast(residentFnormsLocal))
+    // the cap bounds the driver's memory, so the gate compares the TRUE
+    // resident bytes: one per doc PER FNORM FIELD (content + optional
+    // bigram/trigram shadows). numDocs x the field count bounds them
+    // from the stat rows already collected, so only an index whose
+    // bound exceeds the cap pays a job to sum the chunk metadata. A
+    // non-empty index always holds content fieldnorms, so a zero bound
+    // is exactly the empty index.
+    val bound = stats.numDocs * InvertedIndex.FnormFields
+    def residentBytes = fnorms.select($"numDocs").as[Int].collect().map(_.toLong).sum
+    val fits = bound > 0L &&
+      (bound <= maxResidentFnormBytes || residentBytes <= maxResidentFnormBytes)
+    if (fits) Some(spark.sparkContext.broadcast(residentFnormsLocal)) else None
   }
 
   /** Whether queries read resident (broadcast) fieldnorms rather than
     * shuffling the fnorm rows. */
   private[graft] def fnormsResident: Boolean = residentFnorms.isDefined
 
-  /** All fieldnorm arrays collected to the driver (serving tier). */
-  def residentFnormsLocal: Map[Int, Map[Int, Array[Byte]]] =
+  /** All fieldnorm arrays collected to the driver, once per instance:
+    * the broadcast above and the serving tier (Searcher) share them. */
+  @transient lazy val residentFnormsLocal: Map[Int, Map[Int, Array[Byte]]] =
     fnorms.collect().groupBy(_.segment).map { case (seg, chunks) =>
       seg -> InvertedIndex.assembleFnorms(chunks)
     }
@@ -1272,6 +1289,10 @@ object InvertedIndex {
     * broadcast; a larger index shuffles the fnorm rows with the
     * postings instead. */
   val ResidentFnormBytesConf = "spark.graft.residentFnormBytes"
+
+  /** Fieldnorm fields an index can store, one byte per doc each:
+    * content and the bigram/trigram shadows. */
+  private val FnormFields = 3L
 
   /** One scan task's per-term docFreq sums, sent to every reduce
     * partition of `perSegment`'s shuffle. */

@@ -21,7 +21,8 @@ final class Searcher(idx: InvertedIndex, maxCachedTerms: Int = 4096) {
 
   private val stats = idx.stats
 
-  // fieldnorms resident: segment -> field -> bytes
+  // fieldnorms resident: segment -> field -> bytes; the instance's one
+  // collect, shared with its query broadcast
   private val fnorms: Map[Int, Map[Int, Array[Byte]]] = idx.residentFnormsLocal
 
   // LRU posting cache: term -> rows across segments (compressed)

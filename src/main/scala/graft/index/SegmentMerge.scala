@@ -212,7 +212,7 @@ object SegmentMerge {
   private def refreshGlobalRank(spark: SparkSession, outDir: String,
                                 cfg: IndexBuilder.Config): Unit =
     if (cfg.storeGlobalRank) {
-      val stats = new InvertedIndex(spark, outDir).segStats.collect().toSeq
+      val stats = IndexBuilder.readStats(spark, outDir).toSeq
       if (stats.nonEmpty && GlobalRank.load(spark, outDir, stats).isEmpty)
         GlobalRank.write(spark, outDir)
     }

@@ -54,7 +54,7 @@ object LiveIndex {
     // this batch's stats come from the STAGED output before adoption —
     // re-reading the live dir's whole stat table here grows O(total
     // batches) per batch over a long-running stream
-    val stats = spark.read.parquet(s"$staged/kind=stat")
+    val stats = IndexBuilder.readKind(spark, staged, "stat")
       .select("stat.*").as[SegStatRow]
       .filter(s => s.segment >= base && s.segment < base + SegsPerBatch)
       .collect()

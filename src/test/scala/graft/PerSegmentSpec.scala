@@ -27,12 +27,17 @@ class PerSegmentSpec extends AnyFunSuite {
   }
   private lazy val index = new InvertedIndex(spark, dir)
 
-  /** An instance whose resident-fieldnorm cap is below the index's
-    * fieldnorm bytes, so the fnorm rows ride the posting shuffle. */
-  private def shuffledFnorms(): InvertedIndex = {
+  /** A fresh instance whose resident-fieldnorm cap (1 byte) is below
+    * the index's fieldnorm bytes. */
+  private def capped(): InvertedIndex = {
     val cap = InvertedIndex.ResidentFnormBytesConf
     spark.conf.set(cap, "1")
-    val idx = try new InvertedIndex(spark, dir) finally spark.conf.unset(cap)
+    try new InvertedIndex(spark, dir) finally spark.conf.unset(cap)
+  }
+
+  /** An instance whose fnorm rows ride the posting shuffle. */
+  private def shuffledFnorms(): InvertedIndex = {
+    val idx = capped()
     assert(!idx.fnormsResident)
     idx
   }
@@ -92,6 +97,23 @@ class PerSegmentSpec extends AnyFunSuite {
         .zipWithIndex.map { case (q, i) => (s"q$i", q, 10, if (i % 2 == 0) "or" else "and", Nil) }
       assert(jobsOf(idx.searchBatchRaw(batch)) == 1, tag)
     }
+  }
+
+  test("a fresh instance reads its tables with no schema job: stats 1, first searchRaw 2, first resolve 1, Searcher open 2") {
+    Seq(new InvertedIndex(spark, dir), capped()).zip(Seq(true, false)).foreach { case (idx, resident) =>
+      val tag = if (resident) "resident" else "capped at 1 byte"
+      assert(jobsOf(idx.stats) == 1, tag) // the stat-row collect
+      var raw = Array.empty[(Int, Int, Float)]
+      // resident: the fieldnorm collect + the query; capped: the exact
+      // residency count (numDocs x 3 exceeds the cap) + the query
+      assert(jobsOf { raw = idx.searchRaw("query engine table", 10) } == 2, tag)
+      assert(raw.nonEmpty && idx.fnormsResident == resident, tag)
+      assert(jobsOf(idx.resolve(raw, 10)) == 1, tag)
+    }
+    val fresh = new InvertedIndex(spark, dir)
+    assert(jobsOf(new Searcher(fresh)) == 2) // stats + the fieldnorm collect
+    // the broadcast reuses the fieldnorms the Searcher collected
+    assert(jobsOf(fresh.searchRaw("query engine table", 10)) == 1)
   }
 
   test("folded df: searchRaw == Searcher (df from its own rows) == exhaustive, on sharded postings") {
