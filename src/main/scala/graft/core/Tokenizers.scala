@@ -228,11 +228,6 @@ object Tokenizers {
     pos
   }
 
-  /** Default tokens with a stopword filter (reference:
-    * default.rs:32-38 with_stopwords). */
-  def defaultWithStopwords(text: String, stopwords: Set[String]): Array[String] =
-    default(text).filterNot(stopwords.contains)
-
   /** N-gram shadow-field tokenizer: concatenation of n consecutive default
     * tokens ("this is a" -> [thisis, isa] for n=2). Empty stopword list,
     * matching the reference (bigram.rs:26-32). */

@@ -450,12 +450,6 @@ final class InvertedIndex(spark: SparkSession, dir: String,
     new java.util.concurrent.ConcurrentHashMap[
       (List[String], List[String], Int), Seq[String]]()
 
-  /** DataFrame face of `search` for the driver contract. */
-  def searchDF(query: String, k: Int, mode: String = "or"): DataFrame = {
-    val hits = search(query, k, mode)
-    spark.createDataFrame(hits.toSeq)
-  }
-
   /** Minimal query grammar (the core of the reference's nom parser,
     * query/parser/mod.rs:33-120): whole-query "quoted phrase" (incl.
     * smart quotes), `-term` negation, plain terms -> OR. Returns

@@ -9,46 +9,46 @@ import graft.core.{BlockCodec, Bm25Weight, PostingListData}
   * segments, the Spark re-derivation of the reference's TermMerger
   * k-way sort-merge (crates/tantivy/src/indexer/merger.rs:394-430).
   *
-  * Plan shape:
-  *  - doc-id remap is pure arithmetic: newDocId = base(oldSeg) + docId,
-  *    bases from the (tiny, broadcast) per-segment stats; doc and fnorm
-  *    rows rewrite narrowly.
-  *  - posting rows shuffle ONCE, keyed by new segment, secondary-sorted
-  *    by (kindOrder, term, oldSeg, shard) — the sort-merge on term keys.
-  *    A task streams: first the group's fieldnorm chunks (kindOrder 0),
-  *    then posting sublists grouped by term, decoding each term's
-  *    sublists in old-segment order (their new doc-id ranges are
-  *    disjoint and ascending, so concatenation IS the merge), and
-  *    re-encodes blocks with the merged segment's stats — the reference
-  *    recomputes block-max metadata the same way at merge time.
-  *  - skew: the shuffled unit is a *compressed posting-list row*, never
-  *    individual postings, so a hot term contributes at most
-  *    fanIn x shardsPerSegment rows to one group (the salted two-phase
-  *    structure the north rule asks for: shard = salt, re-sharding on
-  *    output bounds row size again).
+  * Plan shape: ONE shuffle and ONE write. Doc, fieldnorm and posting
+  * rows shuffle together, keyed by merged segment, and sort within the
+  * partition by (kindOrder, term, doc order, oldSeg, shard); doc rows
+  * carry an empty term and the other rows no doc. A task streams each
+  * merged segment in three phases:
+  *  - doc rows (kindOrder -1) in precomputed-score order, (sortKey desc,
+  *    repo, path, commit) — the exact order IndexBuilder assigns fresh
+  *    ids in — with (oldSeg, docId) as the final tie-break, so docs
+  *    sharing that key still get a fixed order. Each doc's merged id is
+  *    its running ordinal (the reference's doc_id_mapping,
+  *    indexer/doc_id_mapping.rs:120-141): the task fills the
+  *    concatenated-id -> merged-id `remap` and sums the clamped
+  *    bigram/trigram token totals as the rows stream out. No window
+  *    partition and no second pass over the doc table.
+  *  - fieldnorm chunks (kindOrder 0) by (field, oldSeg, chunk): per field
+  *    they concatenate in concatenated-id order (base(oldSeg) + docId,
+  *    bases from the tiny per-segment stats), then permute through
+  *    `remap` into score order.
+  *  - posting sublists (kindOrder 1) grouped by term, in old-segment
+  *    order: each term's sublists decode, shift by their base, remap and
+  *    re-sort (positions ride with their doc), and re-encode blocks with
+  *    the merged segment's stats — the reference recomputes block-max
+  *    metadata the same way at merge time. Merged ids keep the
+  *    index-wide docid-order invariant (inverted_index/mod.rs:195-204),
+  *    so ShortCircuit/searchApprox truncation keeps its "top static-rank
+  *    prefix" meaning on merged segments.
   *
-  *  - global score re-sort (reference indexer/doc_id_mapping.rs:120-141):
-  *    merged doc ids are re-assigned in precomputed-score order across
-  *    the whole merged segment — one window pass over the doc table
-  *    computes the permutation (row_number over (sortKey desc, repo,
-  *    path, commit), the exact order IndexBuilder assigns fresh ids in),
-  *    permutation rows ride the same shuffle as the posting rows
-  *    (kindOrder -1, so they sort first), and each term's merged list
-  *    remaps + re-sorts before re-encoding. This preserves the
-  *    index-wide docid-order invariant (inverted_index/mod.rs:195-204)
-  *    on merged segments, so ShortCircuit/searchApprox truncation keeps
-  *    its "top static-rank prefix" meaning — the reference pays the
-  *    same re-encode cost at merge time. A window partition holds one
-  *    merged segment's doc rows, the same memory class the merge task
-  *    itself needs.
+  * Task memory per merged segment is `remap` plus the fieldnorm arrays;
+  * doc rows stream through. Skew: the shuffled unit is a *compressed
+  * posting-list row*, never individual postings, so a hot term
+  * contributes at most fanIn x shardsPerSegment rows to one group, and
+  * re-sharding on output bounds row size again.
   */
 object SegmentMerge {
 
   final case class MergeRow(segment: Int, kindOrder: Int, term: String,
                             oldSeg: Int, shard: Int,
+                            doc: Option[DocRow],
                             posting: Option[PostingRow],
-                            fnorm: Option[FnormRow],
-                            newId: Int = -1)
+                            fnorm: Option[FnormRow])
 
   def merge(spark: SparkSession, inDir: String, outDir: String,
             fanIn: Int, cfg: IndexBuilder.Config = IndexBuilder.Config(),
@@ -93,18 +93,6 @@ object SegmentMerge {
         b
       }
     }.toMap
-    // clamped shadow-field token totals per merged segment (the mean of
-    // the stored per-doc norms — same rule as the builder; the
-    // unclamped numTokens-nDocs form diverges for empty/1-token docs)
-    val shadowTotals: Map[Int, (Long, Long)] = {
-      import org.apache.spark.sql.functions.{greatest, lit => flit, sum => fsum}
-      in.docs.filter(d => segFilter(d.segment)).toDF()
-        .withColumn("newSeg", (col("segment") / flit(fanIn)).cast("int"))
-        .groupBy(col("newSeg"))
-        .agg(fsum(greatest(col("numTokens") - 1, flit(0))).as("bg"),
-          fsum(greatest(col("numTokens") - 2, flit(0))).as("tg"))
-        .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
-    }
     // lineage carried into the merged stat rows: posting-entry counts
     // sum; sha256 aggregates XOR (associative over the doc union) —
     // legacy inputs with an empty sha propagate "" explicitly
@@ -118,9 +106,8 @@ object SegmentMerge {
         }
       ns -> (g.map(_.numPostings).sum, sha)
     }
-    val mergedStats: Map[Int, (Long, Long, Long, Long)] = grouped.map { case (ns, g) =>
-      val (bg, tg) = shadowTotals.getOrElse(ns, (0L, 0L))
-      ns -> (g.map(_.numDocs).sum, g.map(_.numTokens).sum, bg, tg)
+    val mergedStats: Map[Int, (Long, Long)] = grouped.map { case (ns, g) =>
+      ns -> (g.map(_.numDocs).sum, g.map(_.numTokens).sum)
     }
     val bBase = spark.sparkContext.broadcast(baseOf)
     val bStats = spark.sparkContext.broadcast(mergedStats)
@@ -128,62 +115,33 @@ object SegmentMerge {
     val maxShard = cfg.maxPostingsPerShard
     val fnChunk = cfg.fnormChunkSize
 
-    // 1) docs: one window pass assigns each merged segment's ids in
-    // precomputed-score order — row_number over (sortKey desc, repo,
-    // path, commit), the exact order IndexBuilder streams fresh ids in
-    // (the reference's doc_id_mapping). Doc rows rewrite narrowly from
-    // it; the same rows feed the posting shuffle as the permutation.
-    val win = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("newSeg"))
-      .orderBy(col("sortKey").desc, col("repo"), col("path"), col("commit"))
-    // localCheckpoint: the doc write AND the permutation rows below
-    // both consume this window — ONE materialization keeps their tie
-    // order identical (an at-least-once duplicate with equal
-    // (sortKey, repo, path, commit) is not totally ordered, and two
-    // independent executions could break the doc-vs-permutation
-    // agreement) and skips re-running the corpus-wide sort
-    val mappedDF = in.docs.filter(d => segFilter(d.segment)).toDF()
-      .withColumn("newSeg", (col("segment") / org.apache.spark.sql.functions.lit(fanIn)).cast("int"))
-      .withColumn("newId", (org.apache.spark.sql.functions.row_number().over(win) - 1).cast("int"))
-      .localCheckpoint()
-    mappedDF.select(
-        col("newSeg").as("segment"), col("newId").as("docId"),
-        col("repo"), col("path"), col("commit"), col("lang"), col("sha256"),
-        col("numTokens"), col("fieldNormId"), col("sortKey"), col("simhash"))
-      .as[DocRow]
-      .map(d => IndexBuilder.BuildRow("doc", d.segment, Some(d), None, None, None))
-      .write.mode(SaveMode.Overwrite).partitionBy("kind")
-      .parquet(staged) // Overwrite clears a crashed prior staging
-
-    // 2) fnorms + postings: one term-sorted shuffle per merged segment.
-    // Permutation rows (kindOrder -1) sort first, then fnorm rows by
-    // (field, oldSeg, chunk) via the term slot so per-field arrays
-    // concatenate correctly, then posting rows by term.
-    val mapRows = mappedDF
-      .select(col("newSeg"), col("segment"), col("docId"), col("newId"))
-      .as[(Int, Int, Int, Int)]
-      .map { case (ns, os, od, nid) =>
-        MergeRow(ns, -1, "", os, od, None, None, nid) }
+    // one shuffle per merged segment: doc rows (kindOrder -1) sort first
+    // in score order, ties by (oldSeg, docId) in the shard slot, then
+    // fnorm rows by (field, oldSeg, chunk) via the term slot so per-field
+    // arrays concatenate correctly, then posting rows by term
+    val docRows = in.docs.filter(d => segFilter(d.segment)).map(d =>
+      MergeRow(newSegOf(d.segment), -1, "", d.segment, d.docId, Some(d), None, None))
     val fnRows = in.fnorms.filter(f => segFilter(f.segment)).map(f =>
       MergeRow(newSegOf(f.segment), 0,
         f"${f.chunk >> Fields.FnormFieldShift}%03d", f.segment, f.chunk,
-        None, Some(f)))
+        None, None, Some(f)))
     val postRows = in.postings.filter(p => segFilter(p.segment)).map(p =>
-      MergeRow(newSegOf(p.segment), 1, p.term, p.segment, p.shard, Some(p), None))
+      MergeRow(newSegOf(p.segment), 1, p.term, p.segment, p.shard, None, Some(p), None))
     val parts = math.max(spark.sparkContext.defaultParallelism,
       mergedStats.size)
-    val merged = mapRows.union(fnRows).union(postRows)
+    docRows.union(fnRows).union(postRows)
       .repartition(parts, col("segment"))
       .sortWithinPartitions(col("segment"), col("kindOrder"), col("term"),
-        col("oldSeg"), col("shard"))
+        col("doc.sortKey").desc, col("doc.repo"), col("doc.path"),
+        col("doc.commit"), col("oldSeg"), col("shard"))
       .mapPartitions { it =>
         new MergeEmitter(it, bBase.value, bStats.value, bMeta.value,
           maxShard, fnChunk)
       }
-    merged.write.mode(SaveMode.Append).partitionBy("kind")
-      .parquet(staged)
+      .write.mode(SaveMode.Overwrite).partitionBy("kind")
+      .parquet(staged) // Overwrite clears a crashed prior staging
 
-    // 3) adopt the staged files, then manifests, then the commit marker
+    // adopt the staged files, then manifests, then the commit marker
     // LAST (the exactly-once order)
     IndexBuilder.adoptStaged(staged, outDir, tag)
 
@@ -218,10 +176,10 @@ object SegmentMerge {
     }
 
   /** Streams one sorted partition of MergeRows; per merged segment:
-    * fieldnorm chunks first, then terms in sorted order. */
+    * doc rows first, then fieldnorm chunks, then terms in sorted order. */
   private final class MergeEmitter(it: Iterator[MergeRow],
                                    bases: Map[Int, Int],
-                                   stats: Map[Int, (Long, Long, Long, Long)],
+                                   stats: Map[Int, (Long, Long)],
                                    meta: Map[Int, (Long, String)],
                                    maxShard: Int, fnChunk: Int)
       extends Iterator[IndexBuilder.BuildRow] {
@@ -239,20 +197,45 @@ object SegmentMerge {
     }
 
     /** Consumes all rows of one merged segment (rows arrive contiguous
-      * and sorted) and emits fnorm/posting/stat rows lazily per term. */
+      * and sorted) and emits doc/fnorm/posting/stat rows lazily. */
     private def emitSegment(): Iterator[IndexBuilder.BuildRow] = {
       val seg = buf.head.segment
-      val (nDocs64, nTokens, bgTok, tgTok) = stats(seg)
+      val (nDocs64, nTokens) = stats(seg)
       val nDocs = nDocs64.toInt
-      val avgFn = if (nDocs == 0) 1.0f else nTokens.toFloat / nDocs.toFloat
-
-      // permutation rows first (kindOrder -1): concatenated id
-      // (base(oldSeg) + oldDocId) -> score-ordered merged id
       val remap = new Array[Int](nDocs)
-      while (buf.hasNext && buf.head.segment == seg && buf.head.kindOrder == -1) {
-        val r = buf.next()
-        remap(bases(r.oldSeg) + r.shard) = r.newId
+      // clamped per-doc shadow-field token sums (IndexBuilder's rule)
+      var bgTok = 0L
+      var tgTok = 0L
+
+      // doc rows (kindOrder -1) arrive in merged-id order: a doc's
+      // merged id is its ordinal, and remap takes its concatenated id
+      // (base(oldSeg) + oldDocId) to it
+      val docRows: Iterator[IndexBuilder.BuildRow] = new Iterator[IndexBuilder.BuildRow] {
+        private var newId = 0
+        def hasNext: Boolean =
+          buf.hasNext && buf.head.segment == seg && buf.head.kindOrder == -1
+        def next(): IndexBuilder.BuildRow = {
+          val r = buf.next()
+          val d = r.doc.get
+          remap(bases(r.oldSeg) + r.shard) = newId
+          bgTok += math.max(d.numTokens - 1, 0)
+          tgTok += math.max(d.numTokens - 2, 0)
+          val row = IndexBuilder.BuildRow("doc", seg,
+            Some(d.copy(segment = seg, docId = newId)), None, None, None)
+          newId += 1
+          row
+        }
       }
+      // `++` takes its operand by name: the rest runs once the last doc
+      // row has streamed out, with remap and the totals complete
+      docRows ++ indexRows(seg, nDocs, nTokens, remap, bgTok, tgTok)
+    }
+
+    /** The fnorm, posting and stat rows of merged segment `seg`, after
+      * its doc rows filled `remap` and the shadow-field totals. */
+    private def indexRows(seg: Int, nDocs: Int, nTokens: Long, remap: Array[Int],
+                          bgTok: Long, tgTok: Long): Iterator[IndexBuilder.BuildRow] = {
+      val avgFn = if (nDocs == 0) 1.0f else nTokens.toFloat / nDocs.toFloat
 
       // fieldnorms: kindOrder 0 rows, sorted by (field, oldSeg, chunk);
       // bases are ascending with oldSeg so per-field concatenation
@@ -286,9 +269,8 @@ object SegmentMerge {
         b.result()
       }
       val fnArr = fnArrs(Fields.Content)
-      // clamped per-doc sums (the builder's rule): the merged average
-      // must equal the mean of the permuted fnorm bytes even when the
-      // segment holds empty/1-token docs
+      // the merged average must equal the mean of the permuted fnorm
+      // bytes even when the segment holds empty/1-token docs
       val bigramAvg = if (nDocs > 0)
         math.max(bgTok, 1L).toFloat / nDocs.toFloat else 1.0f
       val trigramAvg = if (nDocs > 0)

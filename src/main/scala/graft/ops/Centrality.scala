@@ -444,13 +444,16 @@ object Centrality {
         .join(dn, Seq("s", "w"), "left_outer")
         .select(col("s"), col("w"), col("sigma_w"),
           coalesce(col("delta_w"), lit(0.0)).as("delta_w"))
-      val contribs = cur.join(e, cur("v") === e("from"))
-        .join(hinted(succ, sh.counts(lvl + 1)),
-          cur("s") === succ("s") && e("to") === succ("w"))
-        .select(cur("s"), cur("v"),
-          struct(succ("w"),
-            ((cur("sigma").cast("double") / col("sigma_w").cast("double")) *
-              (lit(1.0) + col("delta_w"))).as("c")).as("wc"))
+      // cur and succ both descend from the shells' lineage: aliased
+      // sides keep the join keys explicit instead of leaving Spark to
+      // rewrite a `s = s` self-join condition
+      val contribs = cur.as("cur").join(e.as("e"), col("cur.v") === col("e.from"))
+        .join(hinted(succ.as("succ"), sh.counts(lvl + 1)),
+          col("cur.s") === col("succ.s") && col("e.to") === col("succ.w"))
+        .select(col("cur.s").as("s"), col("cur.v").as("v"),
+          struct(col("succ.w").as("w"),
+            ((col("cur.sigma").cast("double") / col("succ.sigma_w").cast("double")) *
+              (lit(1.0) + col("succ.delta_w"))).as("c")).as("wc"))
         .groupBy(col("s"), col("v"))
         .agg(aggregate(array_sort(collect_list(col("wc"))), lit(0.0),
           (a, x) => a + x.getField("c")).as("delta"))

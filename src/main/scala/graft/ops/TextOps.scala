@@ -124,11 +124,6 @@ object TextOps {
       s"${lang}_hits" -> size(filter(toks, t => t.isin(words: _*)))
     } ++ Seq("cjk_chars" -> cjkCount(text), "n_tokens" -> size(toks))
 
-  /** Convenience form — inlines the tokenizer per filter; prefer
-    * [[langHitsOn]] over a materialized token column at scale. */
-  def langHits(text: Column): Seq[(String, Column)] =
-    langHitsOn(tokens(text), text)
-
   /** Predicted language: "zh" when CJK chars clear cjkNum/cjkDen of
     * the text length (integer cross-multiplication, no division);
     * "und" (BCP-47 undetermined) when NO language has any stopword

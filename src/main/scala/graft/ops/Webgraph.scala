@@ -19,11 +19,6 @@ import graft.index.SourceDoc
   */
 object Webgraph {
 
-  /** Doc-level edge list (repo, path, dst): one row per outgoing link
-    * occurrence — the page-level graph analog. */
-  def docEdges(docs: Dataset[SourceDoc]): DataFrame =
-    docs.select(col("repo"), col("path"), explode(col("links")).as("dst"))
-
   /** Repo(host)-level weighted graph (src, dst, weight): self-loops
     * dropped, weight = number of doc-level link occurrences — the
     * host-graph aggregation the reference's centrality ranks over. */

@@ -41,7 +41,6 @@ object LiveIndex {
     val tag = s"live$batchId"
     new java.io.File(IndexBuilder.manifestDir(dir)).mkdirs()
     if (IndexBuilder.batchCommitted(dir, tag)) return
-    if (batch.isEmpty) return
     val base = LiveBase + (batchId * SegsPerBatch).toInt
     val tagged = batch.map { d =>
       IndexBuilder.Tagged(
@@ -51,6 +50,14 @@ object LiveIndex {
     }
     val staged = s"${IndexBuilder.stagingDir(dir)}/$tag"
     IndexBuilder.writeSegments(tagged, SegsPerBatch * 2, staged, cfg)
+    // every non-empty segment writes a stat row, so no stat dir means
+    // an empty batch: it leaves no data and no marker. Emptiness is read
+    // off the write because a probe before it would be one more job
+    // evaluating the micro-batch a second time.
+    if (!new java.io.File(s"$staged/kind=stat").exists()) {
+      IndexBuilder.deleteRecursively(new java.io.File(staged))
+      return
+    }
     // this batch's stats come from the STAGED output before adoption —
     // re-reading the live dir's whole stat table here grows O(total
     // batches) per batch over a long-running stream

@@ -33,6 +33,33 @@ class LiveIndexSpec extends AnyFunSuite {
     assert(new InvertedIndex(spark, dir).stats.numDocs == 50)
   }
 
+  test("an empty batch leaves no marker, staging dir or data; its id commits later") {
+    import spark.implicits._
+    val dir = tmpDir("graftempty")
+    LiveIndex.appendBatch(spark.emptyDataset[SourceDoc], 3L, dir)
+    assert(!IndexBuilder.batchCommitted(dir, "live3"))
+    assert(!new java.io.File(s"${IndexBuilder.stagingDir(dir)}/live3").exists())
+    assert(!new java.io.File(IndexBuilder.dataDir(dir)).exists())
+    assert(new java.io.File(IndexBuilder.manifestDir(dir)).list().isEmpty)
+    val docs = (0L until 40L).map(i => Corpus.mkDoc(i, 3L, skew = false))
+    LiveIndex.appendBatch(spark.createDataset(docs), 3L, dir)
+    assert(IndexBuilder.batchCommitted(dir, "live3"))
+    assert(new InvertedIndex(spark, dir).stats.numDocs == 40)
+  }
+
+  test("appendBatch starts 3 Spark jobs: shuffle-map stage, write, staged stat collect") {
+    import spark.implicits._
+    val dir = tmpDir("graftappendjobs")
+    // a computed batch, like a streaming micro-batch, so that any extra
+    // pass over it shows as a job (a local relation answers some
+    // actions without one)
+    def batch(b: Long) = spark.range(b * 50L, b * 50L + 50L)
+      .map(i => Corpus.mkDoc(i, 4L, skew = false))
+    LiveIndex.appendBatch(batch(0L), 0L, dir)
+    assert(SparkJobs.count(spark)(LiveIndex.appendBatch(batch(1L), 1L, dir)) == 3)
+    assert(new InvertedIndex(spark, dir).stats.numDocs == 100)
+  }
+
   test("grank refresh policy: every-N appends rewrite the table, others leave a refused stale one") {
     import spark.implicits._
     val dir = tmpDir("graftlivegrank")

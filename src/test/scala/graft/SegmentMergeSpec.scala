@@ -227,4 +227,139 @@ class SegmentMergeSpec extends AnyFunSuite {
     }
     skew.unpersist()
   }
+
+  private def hex(a: Array[Byte]): String = a.map(b => f"$b%02x").mkString
+
+  /** Every doc, posting, fnorm and stat row of an index, rendered with
+    * its byte arrays in hex and sorted; stat rows drop buildMs. */
+  private def rowsOf(dir: String): Seq[Seq[String]] = {
+    val idx = new InvertedIndex(spark, dir)
+    Seq(
+      idx.docs.collect().map(_.toString).toSeq,
+      idx.postings.collect().map { p =>
+        Seq(p.segment, p.term, p.shard, p.docFreq, p.docIdBase,
+          p.lastDocs.mkString(","), hex(p.docBits), hex(p.tfBits),
+          hex(p.bwFnormIds), hex(p.bwTfs), hex(p.packedDocs), hex(p.packedTfs),
+          hex(p.tailBytes), hex(p.posBytes), p.posBlockOffsets.mkString(","))
+          .mkString("|")
+      }.toSeq,
+      idx.fnorms.collect().map(f => s"${f.segment}|${f.chunk}|${f.numDocs}|${hex(f.fnorms)}").toSeq,
+      idx.segStats.collect().map(_.copy(buildMs = 0L).toString).toSeq
+    ).map(_.sorted)
+  }
+
+  private def assertSameRows(a: String, b: String): Unit =
+    rowsOf(a).zip(rowsOf(b)).zip(Seq("doc", "posting", "fnorm", "stat")).foreach {
+      case ((x, y), kind) =>
+        assert(x.size == y.size, s"$kind row count")
+        x.zip(y).find { case (p, q) => p != q }
+          .foreach { case (p, q) => fail(s"$kind rows differ:\n$p\n$q") }
+    }
+
+  /** A live index of `batches` appended as batch ids 0, 1, ... */
+  private def liveIndexOf(batches: Seq[Seq[SourceDoc]], cfg: IndexBuilder.Config): String = {
+    import spark.implicits._
+    val dir = tmpDir()
+    new java.io.File(IndexBuilder.manifestDir(dir)).mkdirs()
+    batches.zipWithIndex.foreach { case (b, i) =>
+      graft.streaming.LiveIndex.appendBatch(spark.createDataset(b), i.toLong, dir, cfg)
+    }
+    dir
+  }
+
+  test("live compaction starts 3 Spark jobs: stat collect, shuffle-map stage, write") {
+    val live = liveIndexOf((0L until 3L).map(b =>
+      (b * 60L until b * 60L + 60L).map(i => Corpus.mkDoc(i, 11L, skew = false))),
+      IndexBuilder.Config())
+    val out = tmpDir()
+    assert(SparkJobs.count(spark)(graft.streaming.LiveIndex.compact(spark, live, out)) == 3)
+    assert(new InvertedIndex(spark, out).stats.numDocs == 180)
+  }
+
+  test("shadow-field compaction == fresh build, rows and queries (docs of 0, 1, 2 and more tokens)") {
+    // A full block stores the (fieldnorm, tf) pair that maximizes the
+    // BM25 tf factor under the field's average length, so the clamped
+    // shadow-field totals show in the posting bytes. The corpus puts the
+    // clamped averages on the far side of a flip from the unclamped
+    // ones (an empty doc would count -1 bigrams and -2 trigrams):
+    //  - bigram "spark merge": (len 1, tf 1) vs (len 3, tf 2) flips at
+    //    an average of 3; the bigram average is 3.5 clamped, 2.9 not;
+    //  - trigram "index query block": (len 2, tf 1) vs (len 5, tf 2)
+    //    flips at 3; the trigram average is 3.15 clamped, 1.9 not.
+    // 256 docs carry each term, two full blocks holding both pairs.
+    val kinds =
+      Seq.fill(128)("spark merge") ++ Seq.fill(128)("spark merge spark merge") ++
+      Seq.fill(128)("index query block table") ++
+      Seq.fill(128)("index query block spark index query block") ++
+      Seq.fill(384)(Seq.fill(7)("table data row").mkString(" ").split(' ').take(20).mkString(" ")) ++
+      Seq.fill(128)("table") ++ Seq.fill(1536)("")
+    assert(kinds.size == 2560)
+    val docs = kinds.zipWithIndex.map { case (text, i) =>
+      SourceDoc(s"org${i % 13}/repo${i % 5}", s"src/f$i.md", s"c$i", "en", text)
+    }
+    val cfg = IndexBuilder.Config(numSegments = 1, recordPositions = true,
+      indexStemmed = true, indexBigrams = true, indexTrigrams = true,
+      indexMeta = true, computeSimhash = true)
+    val live = liveIndexOf(docs.grouped(640).toSeq, cfg)
+    val compacted = tmpDir()
+    graft.streaming.LiveIndex.compact(spark, live, compacted, cfg)
+    val fresh = tmpDir()
+    import spark.implicits._
+    IndexBuilder.build(spark, spark.createDataset(docs), fresh, cfg)
+    assertSameRows(compacted, fresh)
+
+    val (c, f) = (new InvertedIndex(spark, compacted), new InvertedIndex(spark, fresh))
+    // the clamped averages pick the tf-2 pair in every block
+    Seq(Fields.bigramTerm("spark", "merge"), Fields.trigramTerm("index", "query", "block"))
+      .foreach { t =>
+        val rows = c.postings.filter(_.term == t).collect()
+        assert(rows.map(_.bwTfs.length).sum == 2 && rows.forall(_.bwTfs.forall(_ == 2)), t)
+      }
+    assert(c.stats == f.stats && c.stats.numDocs == 2560)
+    assert(c.segStats.collect().map(_.numTokens).toSeq == f.segStats.collect().map(_.numTokens).toSeq)
+    val batch = Seq(("spark merge", "or"), ("index query table", "or"),
+      ("spark merge", "and"), ("table block index", "and"),
+      ("merge spark", "phrase"), ("query block table", "phrase"),
+      ("spark merge index", "or+")).zipWithIndex.map { case ((q, m), i) =>
+      (s"q$i", q, 30, m, Nil) }
+    val (bc, bf) = (c.searchBatchRaw(batch), f.searchBatchRaw(batch))
+    batch.foreach { case (id, q, _, m, _) =>
+      assert(bc(id).nonEmpty, s"'$q' $m")
+      assert(bc(id).toSeq == bf(id).toSeq, s"'$q' $m")
+    }
+    Seq(
+      Seq(Fields.bigramTerm("spark", "merge") -> 1.0f, Fields.bigramTerm("data", "row") -> 2.0f),
+      Seq(Fields.trigramTerm("index", "query", "block") -> 1.0f,
+        Fields.trigramTerm("row", "table", "data") -> 1.5f, "spark" -> 0.5f)
+    ).foreach { clauses =>
+      val got = c.searchBoosted(clauses, 30)
+      assert(got.nonEmpty && got.toSeq == f.searchBoosted(clauses, 30).toSeq, clauses.toString)
+    }
+  }
+
+  test("docs sharing (repo, path, commit) merge in a fixed order, each keeping its own terms") {
+    // at-least-once delivery can bring the same key with different
+    // content in several batches: equal (sortKey, repo, path, commit),
+    // so only the (oldSeg, docId) tie-break orders them
+    val versions = Seq("alphaq", "bravoq", "charlieq", "deltaq")
+    def dup(v: String) = SourceDoc("dup/repo", "src/same.md", "c1", "en",
+      s"shared spark words $v $v")
+    val batches = versions.zipWithIndex.map { case (v, b) =>
+      dup(v) +: (b * 40L until b * 40L + 40L).map(i => Corpus.mkDoc(i, 5L, skew = false))
+    }
+    val live = liveIndexOf(batches, IndexBuilder.Config())
+    val (a, b) = (tmpDir(), tmpDir())
+    graft.streaming.LiveIndex.compact(spark, live, a)
+    graft.streaming.LiveIndex.compact(spark, live, b)
+    assertSameRows(a, b)
+    val idx = new InvertedIndex(spark, a)
+    val docAt = idx.docs.collect().map(d => (d.segment, d.docId) -> d).toMap
+    assert(docAt.values.count(_.repo == "dup/repo") == versions.size)
+    versions.foreach { v =>
+      val hits = idx.searchRaw(v, 5)
+      assert(hits.length == 1, v)
+      val d = docAt((hits.head._1, hits.head._2))
+      assert(d.repo == "dup/repo" && d.sha256 == IndexBuilder.sha256Hex(dup(v).content), v)
+    }
+  }
 }
