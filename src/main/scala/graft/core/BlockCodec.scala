@@ -30,6 +30,14 @@ object BlockCodec {
         arr = java.util.Arrays.copyOf(arr, math.max(n + bs.length, arr.length * 2))
       System.arraycopy(bs, 0, arr, n, bs.length); n += bs.length
     }
+    /** Append one vint: little-endian 7-bit groups, the high bit SET on
+      * a value's last byte (compression/vint.rs; the opposite of
+      * protobuf). Every vint of the index is written here. */
+    @inline def writeVint(value: Int): Unit = {
+      var v = value
+      while ((v >>> 7) != 0) { write(v & 0x7f); v >>>= 7 }
+      write(v | 0x80)
+    }
     def size(): Int = n
     def toByteArray: Array[Byte] = java.util.Arrays.copyOf(arr, n)
   }
@@ -138,52 +146,37 @@ object BlockCodec {
 
   @inline def packedSize(numBits: Int): Int = (BlockSize * numBits + 7) / 8
 
-  // ---- VInt tail (final partial block, < 128 entries) ----
+  // ---- VInt (the final partial block's docs and tfs; positions) ----
   // Reference layout (compression/vint.rs): little-endian 7-bit groups,
   // HIGH BIT SET terminates a value; sorted = plain deltas vs offset.
+  // Writing goes through ByteBuf.writeVint, reading through the
+  // unvint/skipVints loops below: nothing else in the code base touches
+  // vint bytes.
 
-  /** CONVENTION NOTE: every vint in this codebase uses the INVERTED
-    * terminator — high bit SET ends a value (the opposite of protobuf).
-    * The convention is load-bearing in several hand-inlined copies
-    * that must stay in lockstep with these helpers: Postings.build's
-    * position gap encode, PostingsCursor.positions decode +
-    * ensurePosOffsets skip-walk, PostingListData.buildEncoded's
-    * skip-walk, IndexBuilder's hot-term docByteOff walk, and
-    * SegmentMerge.decodeAll. Changing the convention anywhere without
-    * the others silently corrupts position data (gated by the phrase
-    * property tests + golden fixtures). */
   def vintSorted(values: Array[Int], n: Int, offset: Int): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(n * 2)
+    val out = new ByteBuf(n * 2)
     var prev = offset
     var i = 0
-    while (i < n) {
-      var v = values(i) - prev
-      prev = values(i)
-      var done = false
-      while (!done) {
-        val b = v & 0x7f
-        v >>>= 7
-        if (v == 0) { out.write(b | 0x80); done = true } else out.write(b)
-      }
-      i += 1
-    }
+    while (i < n) { out.writeVint(values(i) - prev); prev = values(i); i += 1 }
     out.toByteArray
   }
 
   def vintUnsorted(values: Array[Int], n: Int): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(n * 2)
+    val out = new ByteBuf(n * 2)
     var i = 0
-    while (i < n) {
-      var v = values(i)
-      var done = false
-      while (!done) {
-        val b = v & 0x7f
-        v >>>= 7
-        if (v == 0) { out.write(b | 0x80); done = true } else out.write(b)
-      }
-      i += 1
-    }
+    while (i < n) { out.writeVint(values(i)); i += 1 }
     out.toByteArray
+  }
+
+  /** Offset just past the `n` vints that start at `off`. */
+  def skipVints(bytes: Array[Byte], off: Int, n: Int): Int = {
+    var pos = off
+    var left = n
+    while (left > 0) {
+      if ((bytes(pos) & 0x80) != 0) left -= 1
+      pos += 1
+    }
+    pos
   }
 
   /** Decode `n` sorted vint values; returns bytes consumed. */

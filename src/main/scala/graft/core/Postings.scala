@@ -39,6 +39,57 @@ final case class PostingListData(
   def numFullBlocks: Int = lastDocs.length
   def tailCount: Int = docFreq - numFullBlocks * BlockCodec.BlockSize
   def hasPositions: Boolean = posBytes.length > 0
+
+  /** Decode block `b` (a full block, or the vint tail at
+    * b == numFullBlocks) into `docs`/`tfs`, doc ids shifted by
+    * docIdBase; returns the block's length. `docOff`/`tfOff` are a full
+    * block's byte offsets in packedDocs/packedTfs. */
+  private[core] def decodeBlock(b: Int, docOff: Int, tfOff: Int,
+                                docs: Array[Int], tfs: Array[Int]): Int = {
+    val n =
+      if (b < numFullBlocks) {
+        BlockCodec.decodeSortedBlock(packedDocs, docOff,
+          if (b == 0) -1 else lastDocs(b - 1), docBits(b) & 0xff, docs)
+        BlockCodec.decodeTfBlock(packedTfs, tfOff, tfBits(b) & 0xff, tfs)
+        BlockCodec.BlockSize
+      } else {
+        // the tail's vint base is the previous block's last doc, or 0
+        val used = BlockCodec.unvintSorted(tailBytes, 0, tailCount,
+          if (b == 0) 0 else lastDocs(b - 1), docs)
+        BlockCodec.unvintUnsorted(tailBytes, used, tailCount, tfs)
+        tailCount
+      }
+    if (docIdBase != 0) {
+      var i = 0
+      while (i < n) { docs(i) += docIdBase; i += 1 }
+    }
+    n
+  }
+
+  /** The whole list as (docs shifted by docIdBase, tfs). Positions need
+    * no decode: posBytes already holds them per doc, in doc order. */
+  def decode(): (Array[Int], Array[Int]) = {
+    val docs = new Array[Int](docFreq)
+    val tfs = new Array[Int](docFreq)
+    val blockDocs = new Array[Int](BlockCodec.BlockSize)
+    val blockTfs = new Array[Int](BlockCodec.BlockSize)
+    var docOff = 0
+    var tfOff = 0
+    var out = 0
+    var b = 0
+    while (out < docFreq) {
+      val n = decodeBlock(b, docOff, tfOff, blockDocs, blockTfs)
+      System.arraycopy(blockDocs, 0, docs, out, n)
+      System.arraycopy(blockTfs, 0, tfs, out, n)
+      if (b < numFullBlocks) {
+        docOff += BlockCodec.packedSize(docBits(b) & 0xff)
+        tfOff += BlockCodec.packedSize(tfBits(b) & 0xff)
+      }
+      out += n
+      b += 1
+    }
+    (docs, tfs)
+  }
 }
 
 object PostingListData {
@@ -53,45 +104,16 @@ object PostingListData {
     *                    (df of this term, segment docs, segment avg
     *                    fieldnorm) — used only for the per-block argmax.
     * @param fnorms      per-doc fieldnorm ids of the segment.
+    * @param posBytes    the docs' positions, already encoded (per doc,
+    *                    tf vint gaps, the first absolute; the build
+    *                    encodes them as tokens arrive, a merge moves
+    *                    them as bytes); null or empty for none.
     */
   def build(term: String, docs: Array[Int], tfs: Array[Int],
-            buildWeight: Bm25Weight, fnorms: Array[Byte]): PostingListData =
-    build(term, docs, tfs, buildWeight, fnorms, null)
-
-  /** @param positionsFlat concatenated in-doc token positions, doc
-    *                      order, length == sum(tfs); null to skip. */
-  def build(term: String, docs: Array[Int], tfs: Array[Int],
             buildWeight: Bm25Weight, fnorms: Array[Byte],
-            positionsFlat: Array[Int]): PostingListData = {
+            posBytes: Array[Byte] = null): PostingListData = {
     val n = docs.length
     val numFull = n / BlockCodec.BlockSize
-    // positions: vint gap streams per doc, block-offset directory
-    val posOut = new BlockCodec.ByteBuf(if (positionsFlat == null) 1 else positionsFlat.length + 16)
-    val numBlocksTotal = numFull + (if (n % BlockCodec.BlockSize > 0) 1 else 0)
-    val posOffs = if (positionsFlat == null) Array.emptyIntArray
-                  else new Array[Int](numBlocksTotal)
-    if (positionsFlat != null) {
-      var pIdx = 0
-      var d = 0
-      while (d < n) {
-        if (d % BlockCodec.BlockSize == 0) posOffs(d / BlockCodec.BlockSize) = posOut.size()
-        var prev = 0
-        var j = 0
-        while (j < tfs(d)) {
-          var v = positionsFlat(pIdx) - prev
-          prev = positionsFlat(pIdx)
-          pIdx += 1
-          var done = false
-          while (!done) {
-            val b = v & 0x7f
-            v >>>= 7
-            if (v == 0) { posOut.write(b | 0x80); done = true } else posOut.write(b)
-          }
-          j += 1
-        }
-        d += 1
-      }
-    }
     val lastDocs = new Array[Int](numFull)
     val docBits = new Array[Byte](numFull)
     val tfBits = new Array[Byte](numFull)
@@ -143,38 +165,30 @@ object PostingListData {
       tail.write(BlockCodec.vintSorted(td, tailN, if (base < 0) 0 else base))
       tail.write(BlockCodec.vintUnsorted(tt, tailN))
     }
+    // posBlockOffsets(b) = byte offset of block b's first doc, one entry
+    // per block including the tail
+    val (pos, posOffs) =
+      if (posBytes == null || posBytes.length == 0)
+        (Array.emptyByteArray, Array.emptyIntArray)
+      else {
+        val perDoc = positionOffsets(posBytes, tfs)
+        (posBytes, Array.tabulate((n + BlockCodec.BlockSize - 1) / BlockCodec.BlockSize)(
+          blk => perDoc(blk * BlockCodec.BlockSize)))
+      }
     PostingListData(term, n, 0, lastDocs, docBits, tfBits, bwFn, bwTf,
-      docsOut.toByteArray, tfsOut.toByteArray, tail.toByteArray,
-      posOut.toByteArray, posOffs)
+      docsOut.toByteArray, tfsOut.toByteArray, tail.toByteArray, pos, posOffs)
   }
 
-  /** Like `build`, but positions arrive ALREADY vint-gap-encoded (the
-    * hot build path encodes during accumulation — 1 byte/token instead
-    * of 4 — so the memory-bandwidth wall at high thread counts isn't
-    * hit twice). posBytes layout: per doc, tf vint gaps (first
-    * absolute); the per-block offset directory is recovered with one
-    * read-only walk. */
-  def buildEncoded(term: String, docs: Array[Int], tfs: Array[Int],
-                   buildWeight: Bm25Weight, fnorms: Array[Byte],
-                   posBytes: Array[Byte]): PostingListData = {
-    val base = build(term, docs, tfs, buildWeight, fnorms, null)
-    if (posBytes == null || posBytes.length == 0) return base
-    val n = docs.length
-    val numBlocksTotal = base.numFullBlocks + (if (base.tailCount > 0) 1 else 0)
-    val posOffs = new Array[Int](numBlocksTotal)
-    var off = 0
-    var d = 0
-    while (d < n) {
-      if (d % BlockCodec.BlockSize == 0) posOffs(d / BlockCodec.BlockSize) = off
-      var j = 0
-      while (j < tfs(d)) {
-        while ((posBytes(off) & 0x80) == 0) off += 1
-        off += 1
-        j += 1
-      }
-      d += 1
+  /** Byte offset of each doc's positions in `posBytes` (doc `i` holds
+    * `tfs(i)` vints), plus posBytes.length at the end. */
+  def positionOffsets(posBytes: Array[Byte], tfs: Array[Int]): Array[Int] = {
+    val offs = new Array[Int](tfs.length + 1)
+    var i = 0
+    while (i < tfs.length) {
+      offs(i + 1) = BlockCodec.skipVints(posBytes, offs(i), tfs(i))
+      i += 1
     }
-    base.copy(posBytes = posBytes, posBlockOffsets = posOffs)
+    offs
   }
 }
 
@@ -191,6 +205,11 @@ trait TermCursor {
   def seek(target: Int): Int
   def advance(): Int
   def score: Float
+  /** Whether the cursor stands on `doc`, seeking forward to it when
+    * behind and never moving back: the posting_contains probe of an
+    * ascending doc walk (computer/mod.rs:154-160). */
+  final def contains(doc: Int): Boolean =
+    this.doc == doc || (this.doc < doc && seek(doc) == doc)
   /** Canonical position among the query's cursors. The WAND loop sums
     * per-term scores in this order, so a pruned traversal produces
     * bit-identical f32 sums to the exhaustive oracle (the reference
@@ -220,9 +239,10 @@ final class PostingsCursor(val data: PostingListData, fnorms: Array[Byte],
   private val numFull = data.numFullBlocks
   private val tailN = data.tailCount
   private val numBlocks = numFull + (if (tailN > 0) 1 else 0)
-  // byte offsets of each full block in the packed arrays
-  private val docOffs = new Array[Int](numFull)
-  private val tfOffs = new Array[Int](numFull)
+  // byte offsets of each full block in the packed arrays (the tail's
+  // entry is unused)
+  private val docOffs = new Array[Int](numBlocks)
+  private val tfOffs = new Array[Int](numBlocks)
   locally {
     var d = 0; var t = 0; var b = 0
     while (b < numFull) {
@@ -245,27 +265,10 @@ final class PostingsCursor(val data: PostingListData, fnorms: Array[Byte],
   load(0)
   curDoc = if (data.docFreq == 0) Terminated else blockDocs(0)
 
-  @inline private def blockBase(b: Int): Int =
-    if (b == 0) -1 else data.lastDocs(b - 1)
-
   private def load(b: Int): Unit = {
-    if (b >= numBlocks) { blockLen = 0; loadedIdx = b; return }
-    if (b < numFull) {
-      BlockCodec.decodeSortedBlock(data.packedDocs, docOffs(b), blockBase(b),
-        data.docBits(b) & 0xff, blockDocs)
-      BlockCodec.decodeTfBlock(data.packedTfs, tfOffs(b), data.tfBits(b) & 0xff, blockTfs)
-      blockLen = BlockSize
-    } else {
-      val base = if (numFull == 0) 0 else data.lastDocs(numFull - 1)
-      val used = BlockCodec.unvintSorted(data.tailBytes, 0, tailN, base, blockDocs)
-      BlockCodec.unvintUnsorted(data.tailBytes, used, tailN, blockTfs)
-      blockLen = tailN
-    }
-    // shift by docIdBase once at decode time
-    if (data.docIdBase != 0) {
-      var i = 0
-      while (i < blockLen) { blockDocs(i) += data.docIdBase; i += 1 }
-    }
+    blockLen =
+      if (b >= numBlocks) 0
+      else data.decodeBlock(b, docOffs(b), tfOffs(b), blockDocs, blockTfs)
     loadedIdx = b
     idx = 0
   }
@@ -354,13 +357,7 @@ final class PostingsCursor(val data: PostingListData, fnorms: Array[Byte],
     var i = 0
     while (i < blockLen) {
       posOffsets(i) = off
-      // skip tf vint-encoded gaps
-      var j = 0
-      while (j < blockTfs(i)) {
-        while ((data.posBytes(off) & 0x80) == 0) off += 1
-        off += 1
-        j += 1
-      }
+      off = BlockCodec.skipVints(data.posBytes, off, blockTfs(i))
       i += 1
     }
     posLoadedFor = loadedIdx
@@ -369,24 +366,8 @@ final class PostingsCursor(val data: PostingListData, fnorms: Array[Byte],
   /** Token positions of the term in the current doc (ascending). */
   override def positions: Array[Int] = {
     ensurePosOffsets()
-    val tf = blockTfs(idx)
-    val out = new Array[Int](tf)
-    var off = posOffsets(idx)
-    var acc = 0
-    var j = 0
-    while (j < tf) {
-      var v = 0
-      var shift = 0
-      var done = false
-      while (!done) {
-        val b = data.posBytes(off); off += 1
-        v += (b & 0x7f) << shift
-        if ((b & 0x80) != 0) done = true else shift += 7
-      }
-      acc += v
-      out(j) = acc
-      j += 1
-    }
+    val out = new Array[Int](blockTfs(idx))
+    BlockCodec.unvintSorted(data.posBytes, posOffsets(idx), out.length, 0, out)
     out
   }
 }

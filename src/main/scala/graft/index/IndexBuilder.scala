@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSessio
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
-import graft.core.{Bm25Weight, FieldNorm, PostingListData, Tokenizers}
+import graft.core.{BlockCodec, Bm25Weight, FieldNorm, PostingListData, Tokenizers}
 
 /** Distributed inverted-index build.
   *
@@ -178,7 +178,7 @@ object IndexBuilder {
     // positions pre-encoded as vint gaps per doc (1 byte/token typical):
     // accumulating raw ints costs 4-8x the memory traffic and hits the
     // host's bandwidth wall at high thread counts
-    var pos: graft.core.BlockCodec.ByteBuf = null
+    var pos: BlockCodec.ByteBuf = null
   }
 
   /** Segment-lifetime term accumulator: ONE open-addressing table maps
@@ -248,15 +248,9 @@ object IndexBuilder {
       cnts(idx) += 1
       if (recordPositions) {
         val pb = bufs(idx)
-        if (pb.pos == null) pb.pos = new graft.core.BlockCodec.ByteBuf(8)
-        var v = pos - lastPos(idx)
+        if (pb.pos == null) pb.pos = new BlockCodec.ByteBuf(8)
+        pb.pos.writeVint(pos - lastPos(idx))
         lastPos(idx) = pos
-        var done = false
-        while (!done) {
-          val b = v & 0x7f
-          v >>>= 7
-          if (v == 0) { pb.pos.write(b | 0x80); done = true } else pb.pos.write(b)
-        }
       }
     }
 
@@ -485,16 +479,11 @@ object IndexBuilder {
           .getOrElse(math.max(spark.sparkContext.defaultParallelism,
             math.min(batch.size * 4, 4096)))
         val staged = s"${stagingDir(outDir)}/$tag"
-        val tw0 = System.nanoTime()
         writeSegments(slice, parts, staged, cfg)
-        val ta0 = System.nanoTime()
         adoptStaged(staged, outDir, tag)
-        val tr0 = System.nanoTime()
 
         // commit manifests for this batch (checkpoint + lineage)
         val stats = readStats(spark, outDir).filter(s => batchSet.contains(s.segment))
-        if (sys.env.getOrElse("GRAFT_BUILD_TIMING", "0") == "1")
-          println(f"GRAFT_TIMING write=${(ta0 - tw0) / 1e9}%.2f adopt=${(tr0 - ta0) / 1e9}%.2f stats=${(System.nanoTime() - tr0) / 1e9}%.2f")
         stats.foreach(writeManifest(outDir, _))
         // segments with zero input rows still need a manifest to be "done"
         val seen = stats.map(_.segment).toSet
@@ -540,27 +529,15 @@ object IndexBuilder {
     * micro-batch append. */
   def writeSegments(tagged: Dataset[Tagged], parts: Int, stageOut: String,
                     cfg: Config): Unit = {
-    val maxShard = cfg.maxPostingsPerShard
-    val fnChunk = cfg.fnormChunkSize
-    val recordPos = cfg.recordPositions
-    val stemmedF = cfg.indexStemmed
-    val bigramF = cfg.indexBigrams
-    val trigramF = cfg.indexTrigrams
-    val simhashF = cfg.computeSimhash
-    val metaF = cfg.indexMeta
-    val jsonF = cfg.indexJson
-    val keyPhrasesF = cfg.indexKeyPhrases
-    val linksF = cfg.indexLinks
-    val qualityF = cfg.indexQuality
+    // the tagging already applied centrality: the tasks need no copy of
+    // the (possibly large) map
+    val taskCfg = cfg.copy(centrality = Map.empty)
     import tagged.sparkSession.implicits._
     tagged
       .repartition(parts, col("segment"))
       .sortWithinPartitions(col("segment"), col("sortKey").desc,
         col("repo"), col("path"), col("commit"))
-      .mapPartitions { it =>
-        new SegmentEmitter(it, maxShard, fnChunk, recordPos, stemmedF, bigramF,
-          trigramF, simhashF, metaF, jsonF, keyPhrasesF, linksF, qualityF)
-      }
+      .mapPartitions(it => new SegmentEmitter(it, taskCfg))
       .write.mode(SaveMode.Overwrite).partitionBy("kind")
       .parquet(stageOut)
   }
@@ -576,17 +553,9 @@ object IndexBuilder {
 
   /** Streams a sorted partition, building one segment at a time fully
     * in RAM and flushing it as doc/fnorm/posting/stat rows. */
-  private final class SegmentEmitter(it: Iterator[Tagged], maxShard: Int,
-                                     fnChunk: Int, recordPositions: Boolean,
-                                     indexStemmed: Boolean, indexBigrams: Boolean,
-                                     indexTrigrams: Boolean,
-                                     computeSimhash: Boolean,
-                                     indexMeta: Boolean,
-                                     indexJson: Boolean = false,
-                                     indexKeyPhrases: Boolean = false,
-                                     indexLinks: Boolean = false,
-                                     indexQuality: Boolean = false)
+  private final class SegmentEmitter(it: Iterator[Tagged], cfg: Config)
       extends Iterator[BuildRow] {
+    import cfg._
     private var pending: Iterator[BuildRow] = Iterator.empty
     private var curSeg = -1
     private var t0 = 0L
@@ -596,11 +565,7 @@ object IndexBuilder {
     private var fnormsTrigram = new java.io.ByteArrayOutputStream()
     private val table = new TermTable(recordPositions)
     private var numTokens = 0L
-    // shadow-field token totals accumulate the CLAMPED per-doc counts
-    // (max(nTok-1,0) / max(nTok-2,0)) so the segment average matches
-    // the mean of the stored per-doc norms even when a segment holds
-    // empty or one-token docs (segTokens - nDocs would go negative-ish
-    // and diverge from the fnorm bytes it is paired with)
+    // the CLAMPED shadow-field totals SegmentRows averages over
     private var bigramTokens = 0L
     private var trigramTokens = 0L
     private var shaAgg = new Array[Byte](32)
@@ -642,17 +607,6 @@ object IndexBuilder {
       trigramTokens = 0L
       shaAgg = new Array[Byte](32)
     }
-
-    private def extraFnRows(seg: Int, field: Int, arr: Array[Byte],
-                            nDocs: Int, chunk: Int): Iterator[BuildRow] =
-      if (arr.isEmpty) Iterator.empty
-      else (0 until nDocs by chunk).iterator.map { off =>
-        val end = math.min(off + chunk, nDocs)
-        BuildRow("fnorm", seg, None, None,
-          Some(FnormRow(seg,
-            (field << Fields.FnormFieldShift) | (off / chunk), end - off,
-            java.util.Arrays.copyOfRange(arr, off, end))), None)
-      }
 
     /** Visit every indexed (term, position) of a doc: the content field
       * plus the stemmed / bigram shadow fields (reference field
@@ -757,92 +711,102 @@ object IndexBuilder {
       val seg = curSeg
       val segDocs = docs
       val (terms, termBufs) = table.sortedEntries()
-      val segTokens = numTokens
-      val segBigramTokens = bigramTokens
-      val segTrigramTokens = trigramTokens
-      val segShaHex = hex(shaAgg)
-      val nDocs = segDocs.length
-      val fnArr = fnorms.toByteArray
-      val avgFn = if (nDocs == 0) 1.0f else segTokens.toFloat / nDocs.toFloat
       var totalPostings = 0L
       locally { var i = 0
         while (i < terms.length) { totalPostings += termBufs(i).docs.n; i += 1 } }
       val buildMs = (System.nanoTime() - t0) / 1000000
-
-      val docRows = segDocs.iterator.map(d =>
-        BuildRow("doc", seg, Some(d), None, None, None))
-      val bigramFnArr = fnormsBigram.toByteArray
-      val trigramFnArr = fnormsTrigram.toByteArray
-      // Fields.Content == 0, so the shared chunker emits the content
-      // rows with the same unshifted chunk ids the reader expects
-      val fnRows = extraFnRows(seg, Fields.Content, fnArr, nDocs, fnChunk) ++
-        extraFnRows(seg, Fields.Bigram, bigramFnArr, nDocs, fnChunk) ++
-        extraFnRows(seg, Fields.Trigram, trigramFnArr, nDocs, fnChunk)
+      val fnArrs = Seq(Fields.Content -> fnorms, Fields.Bigram -> fnormsBigram,
+        Fields.Trigram -> fnormsTrigram)
+        .collect { case (field, s) if s.size > 0 => field -> s.toByteArray }.toMap
+      val rows = new SegmentRows(seg, segDocs.length, numTokens, fnArrs,
+        bigramTokens, trigramTokens, cfg)
+      val segShaHex = hex(shaAgg)
       val postRows = terms.indices.iterator.flatMap { ti =>
-        val term = terms(ti)
         val pb = termBufs(ti)
-        val df = pb.docs.n
-        // shadow fields score against their own fieldnorms + averages
-        val field = Fields.fieldOf(term)
-        val termAvg =
-          if (field == Fields.Bigram && nDocs > 0)
-            math.max(segBigramTokens, 1L).toFloat / nDocs.toFloat
-          else if (field == Fields.Trigram && nDocs > 0)
-            math.max(segTrigramTokens, 1L).toFloat / nDocs.toFloat
-          else avgFn
-        val termFn = Fields.fnormFieldOf(field) match {
-          case Fields.Bigram => bigramFnArr
-          case Fields.Trigram => trigramFnArr
-          case _ => fnArr
-        }
-        val w = Bm25Weight.forTerm(df.toLong, nDocs.toLong, termAvg)
-        val dArr = pb.docs.toArray
-        val tArr = pb.tfs.toArray
-        val pEnc = if (pb.pos == null) null else pb.pos.toByteArray
-        if (df <= maxShard) {
-          val pl = PostingListData.buildEncoded(term, dArr, tArr, w, termFn, pEnc)
-          Iterator.single(BuildRow("posting", seg, None,
-            Some(PostingRow.from(seg, 0, 0, pl)), None, None))
-        } else {
-          // hot-term sharding: bound row size and per-task query memory;
-          // per-doc byte offsets in the encoded position stream let each
-          // shard slice without decoding
-          val docByteOff: Array[Int] =
-            if (pEnc == null) null
-            else {
-              val o = new Array[Int](df + 1)
-              var pos = 0
-              var i = 0
-              while (i < df) {
-                o(i) = pos
-                var j = 0
-                while (j < tArr(i)) {
-                  while ((pEnc(pos) & 0x80) == 0) pos += 1
-                  pos += 1
-                  j += 1
-                }
-                i += 1
-              }
-              o(df) = pos
-              o
-            }
-          (0 until df by maxShard).iterator.zipWithIndex.map { case (off, sh) =>
-            val end = math.min(off + maxShard, df)
-            val pSlice = if (pEnc == null) null
-              else java.util.Arrays.copyOfRange(pEnc, docByteOff(off), docByteOff(end))
-            val pl = PostingListData.buildEncoded(term,
-              java.util.Arrays.copyOfRange(dArr, off, end),
-              java.util.Arrays.copyOfRange(tArr, off, end), w, termFn, pSlice)
-            BuildRow("posting", seg, None,
-              Some(PostingRow.from(seg, sh, 0, pl)), None, None)
-          }
+        rows.postings(terms(ti), pb.docs.toArray, pb.tfs.toArray,
+          if (pb.pos == null) null else pb.pos.toByteArray)
+      }
+      // `++` takes its operand by name: the stat row is made once the
+      // posting rows have drained
+      segDocs.iterator.map(d => BuildRow("doc", seg, Some(d), None, None, None)) ++
+        rows.fnormRows ++ postRows ++
+        Iterator.single(rows.statRow(totalPostings, segShaHex, buildMs))
+    }
+  }
+
+  /** The one encoder of a segment's fnorm, posting and stat rows, shared
+    * by the build (SegmentEmitter) and the merge (SegmentMerge). Fnorm
+    * chunking, each term's fieldnorms and BM25 average and hot-term
+    * sharding live here only, so a merged segment's rows are a fresh
+    * build's rows by construction.
+    *
+    * @param fnorms        per fnorm field (Content always, Bigram and
+    *                      Trigram when indexed), the per-doc fieldnorm ids
+    * @param bigramTokens  the CLAMPED per-doc sums max(n-1, 0) and
+    * @param trigramTokens max(n-2, 0): each shadow-field average is then
+    *                      the mean of its stored norms even when the
+    *                      segment holds empty or one-token docs
+    */
+  private[index] final class SegmentRows(seg: Int, numDocs: Int, numTokens: Long,
+                                         fnorms: Map[Int, Array[Byte]],
+                                         bigramTokens: Long, trigramTokens: Long,
+                                         cfg: Config) {
+    private val chunk = cfg.fnormChunkSize
+    private val maxShard = cfg.maxPostingsPerShard
+    private var numTerms = 0L
+
+    /** Each field's fieldnorms in rows of fnormChunkSize docs, fields in
+      * id order; a row's chunk id is (field << FnormFieldShift) | index. */
+    def fnormRows: Iterator[BuildRow] =
+      fnorms.toSeq.sortBy(_._1).iterator.flatMap { case (field, arr) =>
+        Iterator.range(0, (arr.length + chunk - 1) / chunk).map { c =>
+          val off = c * chunk
+          val end = math.min(off + chunk, arr.length)
+          BuildRow("fnorm", seg, None, None,
+            Some(FnormRow(seg, (field << Fields.FnormFieldShift) | c, end - off,
+              java.util.Arrays.copyOfRange(arr, off, end))), None)
         }
       }
-      val statRow = Iterator.single(
-        BuildRow("stat", seg, None, None, None,
-          Some(SegStatRow(seg, nDocs.toLong, segTokens, terms.length.toLong,
-            totalPostings, segShaHex, buildMs))))
-      docRows ++ fnRows ++ postRows ++ statRow
+
+    /** One term's posting rows. A term with more than
+      * maxPostingsPerShard docs splits into shards of that many (bounding
+      * row size and per-task query memory); each shard takes its docs'
+      * position bytes. `posBytes` is null when positions are off. */
+    def postings(term: String, docs: Array[Int], tfs: Array[Int],
+                 posBytes: Array[Byte]): Iterator[BuildRow] = {
+      numTerms += 1
+      // shadow fields score against their own fieldnorms and averages
+      val field = Fields.fieldOf(term)
+      val avg =
+        if (numDocs == 0) 1.0f
+        else (if (field == Fields.Bigram) math.max(bigramTokens, 1L)
+              else if (field == Fields.Trigram) math.max(trigramTokens, 1L)
+              else numTokens).toFloat / numDocs.toFloat
+      val w = Bm25Weight.forTerm(docs.length.toLong, numDocs.toLong, avg)
+      val fn = fnorms.getOrElse(Fields.fnormFieldOf(field), fnorms(Fields.Content))
+      def row(shard: Int, d: Array[Int], t: Array[Int], p: Array[Byte]): BuildRow =
+        BuildRow("posting", seg, None,
+          Some(PostingRow.from(seg, shard, 0, PostingListData.build(term, d, t, w, fn, p))),
+          None, None)
+      val df = docs.length
+      if (df <= maxShard) Iterator.single(row(0, docs, tfs, posBytes))
+      else {
+        val posOffs =
+          if (posBytes == null) null else PostingListData.positionOffsets(posBytes, tfs)
+        Iterator.range(0, (df + maxShard - 1) / maxShard).map { sh =>
+          val (from, to) = (sh * maxShard, math.min((sh + 1) * maxShard, df))
+          row(sh, java.util.Arrays.copyOfRange(docs, from, to),
+            java.util.Arrays.copyOfRange(tfs, from, to),
+            if (posOffs == null) null
+            else java.util.Arrays.copyOfRange(posBytes, posOffs(from), posOffs(to)))
+        }
+      }
     }
+
+    /** The segment's stat row; make it after the posting rows have
+      * drained, since it counts their terms. */
+    def statRow(numPostings: Long, sha256Agg: String, buildMs: Long): BuildRow =
+      BuildRow("stat", seg, None, None, None, Some(SegStatRow(seg, numDocs.toLong,
+        numTokens, numTerms, numPostings, sha256Agg, buildMs)))
   }
 }

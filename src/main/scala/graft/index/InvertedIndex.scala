@@ -788,12 +788,10 @@ final class InvertedIndex(spark: SparkSession, dir: String,
       val bigramCs = bigrams.flatMap(cursor(_, Fields.Bigram))
       val urlCs = urlTerms.flatMap(cursor(_, Fields.Url))
       val repoCs = repoTerms.flatMap(cursor(_, Fields.Repo))
-      @inline def contains(c: TermCursor, doc: Int): Boolean =
-        c.doc == doc || (c.doc < doc && c.seek(doc) == doc)
       candDocs.iterator.map { doc =>
         var bm25f = 0.0; var bm25c = 0.0; var matched = 0
         contentCs.foreach { case (c, bw, bf, _) =>
-          if (contains(c, doc)) {
+          if (c.contains(doc)) {
             val fn = c.fieldNormId; val tf = c.termFreq
             bm25c += bw.score(fn, tf).toDouble
             bm25f += bf.score(fn, tf).toDouble
@@ -802,7 +800,7 @@ final class InvertedIndex(spark: SparkSession, dir: String,
         }
         var bm25st = 0.0
         stemCs.foreach { case (c, bw, bf, _) =>
-          if (contains(c, doc)) {
+          if (c.contains(doc)) {
             val fn = c.fieldNormId; val tf = c.termFreq
             bm25st += bw.score(fn, tf).toDouble
             bm25f += bf.score(fn, tf).toDouble
@@ -810,16 +808,16 @@ final class InvertedIndex(spark: SparkSession, dir: String,
         }
         var bm25bi = 0.0
         bigramCs.foreach { case (c, bw, bf, _) =>
-          if (contains(c, doc)) {
+          if (c.contains(doc)) {
             val fn = c.fieldNormId; val tf = c.termFreq
             bm25bi += bw.score(fn, tf).toDouble
             bm25f += bf.score(fn, tf).toDouble
           }
         }
         var idfUrl = 0.0
-        urlCs.foreach { case (c, _, _, idf) => if (contains(c, doc)) idfUrl += idf.toDouble }
+        urlCs.foreach { case (c, _, _, idf) => if (c.contains(doc)) idfUrl += idf.toDouble }
         var idfRepo = 0.0
-        repoCs.foreach { case (c, _, _, idf) => if (contains(c, doc)) idfRepo += idf.toDouble }
+        repoCs.foreach { case (c, _, _, idf) => if (c.contains(doc)) idfRepo += idf.toDouble }
         (seg, doc, bm25f, bm25c, matched.toDouble / base.length, bm25bi,
           bm25st, idfUrl, idfRepo)
       }
@@ -941,8 +939,6 @@ final class InvertedIndex(spark: SparkSession, dir: String,
         }
       val drivers = cursors.filter(c => bPos.value.contains(c._1)).values.toArray
       if (drivers.isEmpty) return Iterator.empty
-      @inline def contains(c: TermCursor, doc: Int): Boolean =
-        c.doc == doc || (c.doc < doc && c.seek(doc) == doc)
       val topk = new TopK(k)
       var cand = Int.MaxValue
       drivers.foreach(c => if (c.doc < cand) cand = c.doc)
@@ -950,7 +946,7 @@ final class InvertedIndex(spark: SparkSession, dir: String,
         val doc = cand
         val (m, s) = BooleanQuery.evaluate(bNode.value, t =>
           cursors.get(t) match {
-            case Some(c) if contains(c, doc) => Some(c.score)
+            case Some(c) if c.contains(doc) => Some(c.score)
             case _ => None
           })
         if (m) topk.push(doc, s)
@@ -1023,7 +1019,7 @@ final class InvertedIndex(spark: SparkSession, dir: String,
         while (i < cs.length) {
           val c = cs(i)
           // posting_contains: ascending re-walk (computer/mod.rs:154-160)
-          if (c.doc == doc || (c.doc < doc && c.seek(doc) == doc)) score += c.score
+          if (c.contains(doc)) score += c.score
           i += 1
         }
         (seg, doc, score)

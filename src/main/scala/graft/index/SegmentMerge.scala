@@ -3,7 +3,7 @@ package graft.index
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 
-import graft.core.{BlockCodec, Bm25Weight, PostingListData}
+import graft.core.PostingListData
 
 /** Record-level segment merge: K input segments -> K/fanIn output
   * segments, the Spark re-derivation of the reference's TermMerger
@@ -28,13 +28,18 @@ import graft.core.{BlockCodec, Bm25Weight, PostingListData}
   *    bases from the tiny per-segment stats), then permute through
   *    `remap` into score order.
   *  - posting sublists (kindOrder 1) grouped by term, in old-segment
-  *    order: each term's sublists decode, shift by their base, remap and
-  *    re-sort (positions ride with their doc), and re-encode blocks with
-  *    the merged segment's stats — the reference recomputes block-max
-  *    metadata the same way at merge time. Merged ids keep the
-  *    index-wide docid-order invariant (inverted_index/mod.rs:195-204),
-  *    so ShortCircuit/searchApprox truncation keeps its "top static-rank
+  *    order: each sublist decodes through the codec
+  *    (PostingListData.decode) and remaps its ids (base(oldSeg) + docId
+  *    through `remap`). Positions never decode: they move as bytes, the
+  *    sublists' position bytes concatenating and the re-sort moving each
+  *    doc's byte range with it. Merged ids keep the index-wide
+  *    docid-order invariant (inverted_index/mod.rs:195-204), so
+  *    ShortCircuit/searchApprox truncation keeps its "top static-rank
   *    prefix" meaning on merged segments.
+  *  - IndexBuilder.SegmentRows, the build's own encoder, writes the
+  *    fnorm, posting and stat rows with the merged segment's stats (the
+  *    reference recomputes block-max metadata the same way at merge
+  *    time), so merged rows equal a fresh build's.
   *
   * Task memory per merged segment is `remap` plus the fieldnorm arrays;
   * doc rows stream through. Skew: the shuffled unit is a *compressed
@@ -112,8 +117,7 @@ object SegmentMerge {
     val bBase = spark.sparkContext.broadcast(baseOf)
     val bStats = spark.sparkContext.broadcast(mergedStats)
     val bMeta = spark.sparkContext.broadcast(mergedMeta)
-    val maxShard = cfg.maxPostingsPerShard
-    val fnChunk = cfg.fnormChunkSize
+    val taskCfg = cfg.copy(centrality = Map.empty)
 
     // one shuffle per merged segment: doc rows (kindOrder -1) sort first
     // in score order, ties by (oldSeg, docId) in the shard slot, then
@@ -135,8 +139,7 @@ object SegmentMerge {
         col("doc.sortKey").desc, col("doc.repo"), col("doc.path"),
         col("doc.commit"), col("oldSeg"), col("shard"))
       .mapPartitions { it =>
-        new MergeEmitter(it, bBase.value, bStats.value, bMeta.value,
-          maxShard, fnChunk)
+        new MergeEmitter(it, bBase.value, bStats.value, bMeta.value, taskCfg)
       }
       .write.mode(SaveMode.Overwrite).partitionBy("kind")
       .parquet(staged) // Overwrite clears a crashed prior staging
@@ -181,7 +184,7 @@ object SegmentMerge {
                                    bases: Map[Int, Int],
                                    stats: Map[Int, (Long, Long)],
                                    meta: Map[Int, (Long, String)],
-                                   maxShard: Int, fnChunk: Int)
+                                   cfg: IndexBuilder.Config)
       extends Iterator[IndexBuilder.BuildRow] {
     private val buf = it.buffered
     private var pending: Iterator[IndexBuilder.BuildRow] = Iterator.empty
@@ -235,8 +238,6 @@ object SegmentMerge {
       * its doc rows filled `remap` and the shadow-field totals. */
     private def indexRows(seg: Int, nDocs: Int, nTokens: Long, remap: Array[Int],
                           bgTok: Long, tgTok: Long): Iterator[IndexBuilder.BuildRow] = {
-      val avgFn = if (nDocs == 0) 1.0f else nTokens.toFloat / nDocs.toFloat
-
       // fieldnorms: kindOrder 0 rows, sorted by (field, oldSeg, chunk);
       // bases are ascending with oldSeg so per-field concatenation
       // indexes by concatenated id — then each array permutes into
@@ -268,248 +269,88 @@ object SegmentMerge {
         }
         b.result()
       }
-      val fnArr = fnArrs(Fields.Content)
-      // the merged average must equal the mean of the permuted fnorm
-      // bytes even when the segment holds empty/1-token docs
-      val bigramAvg = if (nDocs > 0)
-        math.max(bgTok, 1L).toFloat / nDocs.toFloat else 1.0f
-      val trigramAvg = if (nDocs > 0)
-        math.max(tgTok, 1L).toFloat / nDocs.toFloat else 1.0f
-
-      val fnRows = fnArrs.iterator.flatMap { case (field, arr) =>
-        (0 until arr.length by fnChunk).iterator.map { off =>
-          val end = math.min(off + fnChunk, arr.length)
-          IndexBuilder.BuildRow("fnorm", seg, None, None,
-            Some(FnormRow(seg,
-              (field << Fields.FnormFieldShift) | (off / fnChunk),
-              end - off, java.util.Arrays.copyOfRange(arr, off, end))), None)
+      val rows = new IndexBuilder.SegmentRows(seg, nDocs, nTokens, fnArrs,
+        bgTok, tgTok, cfg)
+      val postRows = new Iterator[Iterator[IndexBuilder.BuildRow]] {
+        def hasNext: Boolean = buf.hasNext && buf.head.segment == seg
+        def next(): Iterator[IndexBuilder.BuildRow] = {
+          val (term, docs, tfs, posBytes) = mergeTerm(seg, remap)
+          rows.postings(term, docs, tfs, posBytes)
         }
-      }
-
-      var numTerms = 0L
-      val postRows: Iterator[IndexBuilder.BuildRow] = new Iterator[IndexBuilder.BuildRow] {
-        private var out: Iterator[IndexBuilder.BuildRow] = Iterator.empty
-        def hasNext: Boolean = {
-          while (!out.hasNext && buf.hasNext && buf.head.segment == seg) out = nextTerm()
-          out.hasNext
-        }
-        def next(): IndexBuilder.BuildRow = { hasNext; out.next() }
-
-        /** k-way merge of one term: sublists arrive ordered by
-          * (oldSeg, shard); decode, shift, concatenate, re-encode. */
-        private def nextTerm(): Iterator[IndexBuilder.BuildRow] = {
-          val term = buf.head.term
-          val docs = new java.util.ArrayList[Array[Int]]
-          val tfs = new java.util.ArrayList[Array[Int]]
-          val poss = new java.util.ArrayList[Array[Int]]
-          var df = 0
-          var nPos = 0
-          var anyPos = false
-          while (buf.hasNext && buf.head.segment == seg && buf.head.term == term) {
-            val row = buf.next()
-            val p = row.posting.get
-            val base = bases(row.oldSeg)
-            val (d, t, ps) = decodeAll(p, base)
-            docs.add(d); tfs.add(t); poss.add(ps); df += d.length
-            if (ps != null) { anyPos = true; nPos += ps.length }
-          }
-          // sublists must agree on positions: a mix means the input
-          // segments were built with different recordPositions configs
-          // (e.g. a live dir resumed under another cfg) and the
-          // concatenation below would NPE or silently drop positions
-          if (anyPos) {
-            var ci = 0
-            while (ci < poss.size) {
-              if (poss.get(ci) == null)
-                throw new IllegalStateException(
-                  s"term '$term' in merged seg $seg mixes position-bearing " +
-                    "and position-free sublists — input segments were built " +
-                    "with different recordPositions configs; rebuild uniformly")
-              ci += 1
-            }
-          }
-          numTerms += 1
-          var allD = new Array[Int](df)
-          var allT = new Array[Int](df)
-          var allP = if (anyPos) new Array[Int](nPos) else null
-          var off = 0
-          var pOff = 0
-          var i = 0
-          while (i < docs.size) {
-            System.arraycopy(docs.get(i), 0, allD, off, docs.get(i).length)
-            System.arraycopy(tfs.get(i), 0, allT, off, tfs.get(i).length)
-            if (anyPos) {
-              System.arraycopy(poss.get(i), 0, allP, pOff, poss.get(i).length)
-              pOff += poss.get(i).length
-            }
-            off += docs.get(i).length
-            i += 1
-          }
-          // global score re-sort (doc_id_mapping.rs:120-141): remap the
-          // concatenated ids to score-ordered merged ids and re-sort
-          // the list, positions riding with their doc (indirect sort on
-          // (newId << 32 | srcIdx) keys — allocation-light, stable)
-          locally {
-            var q = 0
-            while (q < df) { allD(q) = remap(allD(q)); q += 1 }
-            var isSorted = true
-            q = 1
-            while (isSorted && q < df) {
-              if (allD(q) < allD(q - 1)) isSorted = false
-              q += 1
-            }
-            if (!isSorted) {
-              val keys = new Array[Long](df)
-              q = 0
-              while (q < df) { keys(q) = (allD(q).toLong << 32) | q.toLong; q += 1 }
-              java.util.Arrays.sort(keys)
-              val d2 = new Array[Int](df)
-              val t2 = new Array[Int](df)
-              var p2: Array[Int] = null
-              var tfCumP: Array[Int] = null
-              if (anyPos) {
-                tfCumP = new Array[Int](df + 1)
-                var w = 0
-                while (w < df) { tfCumP(w + 1) = tfCumP(w) + allT(w); w += 1 }
-                p2 = new Array[Int](nPos)
-              }
-              var o = 0
-              q = 0
-              while (q < df) {
-                val src = (keys(q) & 0xffffffffL).toInt
-                d2(q) = (keys(q) >>> 32).toInt
-                t2(q) = allT(src)
-                if (anyPos) {
-                  var s0 = tfCumP(src)
-                  val s1 = tfCumP(src + 1)
-                  while (s0 < s1) { p2(o) = allP(s0); o += 1; s0 += 1 }
-                }
-                q += 1
-              }
-              allD = d2
-              allT = t2
-              if (anyPos) allP = p2
-            }
-          }
-          val field = Fields.fieldOf(term)
-          val termAvg = if (field == Fields.Bigram) bigramAvg
-                        else if (field == Fields.Trigram) trigramAvg
-                        else avgFn
-          val termFn = fnArrs.getOrElse(Fields.fnormFieldOf(field), fnArr)
-          val w = Bm25Weight.forTerm(df.toLong, nDocs.toLong, termAvg)
-          if (df <= maxShard) {
-            val pl = PostingListData.build(term, allD, allT, w, termFn, allP)
-            Iterator.single(IndexBuilder.BuildRow("posting", seg, None,
-              Some(PostingRow.from(seg, 0, 0, pl)), None, None))
-          } else {
-            val tfCum = new Array[Int](df + 1)
-            locally { var q = 0
-              while (q < df) { tfCum(q + 1) = tfCum(q) + allT(q); q += 1 } }
-            (0 until df by maxShard).iterator.zipWithIndex.map { case (o, sh) =>
-              val end = math.min(o + maxShard, df)
-              val pSlice = if (allP == null) null
-                else java.util.Arrays.copyOfRange(allP, tfCum(o), tfCum(end))
-              val pl = PostingListData.build(term,
-                java.util.Arrays.copyOfRange(allD, o, end),
-                java.util.Arrays.copyOfRange(allT, o, end), w, termFn, pSlice)
-              IndexBuilder.BuildRow("posting", seg, None,
-                Some(PostingRow.from(seg, sh, 0, pl)), None, None)
-            }
-          }
-        }
-      }
-
-      val statRow: Iterator[IndexBuilder.BuildRow] = new Iterator[IndexBuilder.BuildRow] {
-        private var done = false
-        def hasNext: Boolean = !done
-        def next(): IndexBuilder.BuildRow = {
-          done = true
-          // lineage rides into the merged stat row (posting counts sum,
-          // sha aggregates XOR) so a second-generation merge and the
-          // fidelity witness keep working
-          val (nPost, sha) = meta.getOrElse(seg, (0L, ""))
-          IndexBuilder.BuildRow("stat", seg, None, None, None,
-            Some(SegStatRow(seg, nDocs.toLong, nTokens, numTerms, nPost, sha, 0L)))
-        }
-      }
-      fnRows ++ postRows ++ statRow
+      }.flatten
+      // lineage rides into the merged stat row (posting counts sum, sha
+      // aggregates XOR) so a second-generation merge and the fidelity
+      // witness keep working; `++` takes its operand by name, so the
+      // stat row is made once the posting rows have drained
+      val (nPost, sha) = meta.getOrElse(seg, (0L, ""))
+      rows.fnormRows ++ postRows ++ Iterator.single(rows.statRow(nPost, sha, 0L))
     }
 
-    /** Decode a whole posting row into (docs+base, tfs, positions|null).
-      * COUPLED to the codec conventions in core/Postings.scala
-      * (block framing, tail vint base, position gap-vint terminator):
-      * a framing change there must be mirrored here, and
-      * SegmentMergeSpec's merged==fresh-build property is the gate
-      * that catches a drift. */
-    private def decodeAll(p: PostingRow, base: Int)
-        : (Array[Int], Array[Int], Array[Int]) = {
-      val data = p.toData
-      val n = data.docFreq
-      val d = new Array[Int](n)
-      val t = new Array[Int](n)
-      val blockD = new Array[Int](BlockCodec.BlockSize)
-      val blockT = new Array[Int](BlockCodec.BlockSize)
-      var dOff = 0
-      var tOff = 0
-      var out = 0
-      var b = 0
-      while (b < data.numFullBlocks) {
-        val prev = if (b == 0) -1 else data.lastDocs(b - 1)
-        BlockCodec.decodeSortedBlock(data.packedDocs, dOff, prev,
-          data.docBits(b) & 0xff, blockD)
-        BlockCodec.decodeTfBlock(data.packedTfs, tOff, data.tfBits(b) & 0xff, blockT)
+    /** k-way merge of the next term's sublists, which arrive ordered by
+      * (oldSeg, shard): each decodes and remaps its ids, the position
+      * bytes concatenate, and the re-sort moves each doc's tf and
+      * position bytes with it. Returns (term, docs, tfs, posBytes or
+      * null). */
+    private def mergeTerm(seg: Int, remap: Array[Int])
+        : (String, Array[Int], Array[Int], Array[Byte]) = {
+      val term = buf.head.term
+      val subs = scala.collection.mutable.ArrayBuffer.empty[(Int, PostingListData)]
+      while (buf.hasNext && buf.head.segment == seg && buf.head.term == term) {
+        val r = buf.next()
+        subs += (bases(r.oldSeg) -> r.posting.get.toData)
+      }
+      // sublists must agree on positions: a mix means the input
+      // segments were built with different recordPositions configs
+      // (e.g. a live dir resumed under another cfg), and concatenating
+      // them would misalign or silently drop positions
+      val withPos = subs.count(_._2.hasPositions)
+      if (withPos != 0 && withPos != subs.length)
+        throw new IllegalStateException(
+          s"term '$term' in merged seg $seg mixes position-bearing " +
+            "and position-free sublists — input segments were built " +
+            "with different recordPositions configs; rebuild uniformly")
+      val df = subs.iterator.map(_._2.docFreq).sum
+      val docs = new Array[Int](df)
+      val tfs = new Array[Int](df)
+      var off = 0
+      subs.foreach { case (base, data) =>
+        val (d, t) = data.decode()
         var i = 0
-        while (i < BlockCodec.BlockSize) {
-          d(out) = blockD(i) + data.docIdBase + base
-          t(out) = blockT(i)
-          out += 1; i += 1
-        }
-        dOff += BlockCodec.packedSize(data.docBits(b) & 0xff)
-        tOff += BlockCodec.packedSize(data.tfBits(b) & 0xff)
-        b += 1
+        while (i < d.length) { docs(off + i) = remap(base + d(i)); i += 1 }
+        System.arraycopy(t, 0, tfs, off, t.length)
+        off += d.length
       }
-      val tailN = data.tailCount
-      if (tailN > 0) {
-        val baseDoc = if (data.numFullBlocks == 0) 0 else data.lastDocs(data.numFullBlocks - 1)
-        val used = BlockCodec.unvintSorted(data.tailBytes, 0, tailN, baseDoc, blockD)
-        BlockCodec.unvintUnsorted(data.tailBytes, used, tailN, blockT)
-        var i = 0
-        while (i < tailN) {
-          d(out) = blockD(i) + data.docIdBase + base
-          t(out) = blockT(i)
-          out += 1; i += 1
+      val posBytes =
+        if (withPos == 0) null else Array.concat(subs.map(_._2.posBytes).toSeq: _*)
+      var sorted = true
+      var q = 1
+      while (sorted && q < df) { sorted = docs(q - 1) < docs(q); q += 1 }
+      if (sorted) return (term, docs, tfs, posBytes)
+      // global score re-sort (doc_id_mapping.rs:120-141): an indirect
+      // sort on (newId << 32 | srcIdx) keys, allocation-light and stable
+      val keys = new Array[Long](df)
+      q = 0
+      while (q < df) { keys(q) = (docs(q).toLong << 32) | q; q += 1 }
+      java.util.Arrays.sort(keys)
+      val posOffs =
+        if (posBytes == null) null else PostingListData.positionOffsets(posBytes, tfs)
+      val d2 = new Array[Int](df)
+      val t2 = new Array[Int](df)
+      val p2 = if (posBytes == null) null else new Array[Byte](posBytes.length)
+      var pOff = 0
+      q = 0
+      while (q < df) {
+        val src = keys(q).toInt
+        d2(q) = (keys(q) >>> 32).toInt
+        t2(q) = tfs(src)
+        if (p2 != null) {
+          val len = posOffs(src + 1) - posOffs(src)
+          System.arraycopy(posBytes, posOffs(src), p2, pOff, len)
+          pOff += len
         }
+        q += 1
       }
-      // positions: sequential vint gap decode across all docs
-      var ps: Array[Int] = null
-      if (data.hasPositions) {
-        var total = 0
-        var q = 0
-        while (q < n) { total += t(q); q += 1 }
-        ps = new Array[Int](total)
-        var off = 0
-        var o = 0
-        q = 0
-        while (q < n) {
-          var acc = 0
-          var j = 0
-          while (j < t(q)) {
-            var v = 0
-            var shift = 0
-            var done = false
-            while (!done) {
-              val b2 = data.posBytes(off); off += 1
-              v += (b2 & 0x7f) << shift
-              if ((b2 & 0x80) != 0) done = true else shift += 7
-            }
-            acc += v
-            ps(o) = acc
-            o += 1; j += 1
-          }
-          q += 1
-        }
-      }
-      (d, t, ps)
+      (term, d2, t2, p2)
     }
   }
 }

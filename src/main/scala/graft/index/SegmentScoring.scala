@@ -59,8 +59,7 @@ private[index] object SegmentScoring {
     @inline def excluded(doc: Int): Boolean = {
       var i = 0
       while (i < negs.length) {
-        val n = negs(i)
-        if (n.doc == doc || (n.doc < doc && n.seek(doc) == doc)) return true
+        if (negs(i).contains(doc)) return true
         i += 1
       }
       false

@@ -215,4 +215,74 @@ class BlockCodecSpec extends AnyFunSuite {
       assert(out.toSeq == vals.toSeq)
     }
   }
+
+  test("posting list codec: decode, cursor and position offsets give back the input (property)") {
+    val rnd = new scala.util.Random(2101)
+    val lengths = Seq(1, 127, 128, 129, 256, 257, 1000) ++ Seq.fill(40)(1 + rnd.nextInt(1000))
+    lengths.foreach { n =>
+      var last = -1
+      val docs = Array.fill(n) { last += 1 + rnd.nextInt(if (rnd.nextBoolean()) 3 else 400); last }
+      val tfs = Array.fill(n)(1 + rnd.nextInt(5))
+      // ascending positions per doc, gaps from 1 byte to 3-byte vints
+      val positions = tfs.map { tf =>
+        var p = -1
+        Array.fill(tf) { p += 1 + rnd.nextInt(1 << rnd.nextInt(18)); p }
+      }
+      val enc = new ByteBuf()
+      positions.foreach { ps =>
+        var prev = 0
+        ps.foreach { p => enc.writeVint(p - prev); prev = p }
+      }
+      val posBytes = enc.toByteArray
+      val fnorms = Array.fill(last + 1)(rnd.nextInt(256).toByte)
+      val w = Bm25Weight.forTerm(n.toLong, (last + 1).toLong, 37.5f)
+      val base = 1 + rnd.nextInt(1 << 20)
+      val data = PostingListData.build("t", docs, tfs, w, fnorms, posBytes).copy(docIdBase = base)
+
+      val (gotDocs, gotTfs) = data.decode()
+      assert(gotDocs.toSeq == docs.map(_ + base).toSeq, s"n=$n docs")
+      assert(gotTfs.toSeq == tfs.toSeq, s"n=$n tfs")
+
+      val offs = PostingListData.positionOffsets(posBytes, tfs)
+      assert(offs.length == n + 1 && offs.last == posBytes.length, s"n=$n offsets")
+      assert(data.posBlockOffsets.length == (n + BlockSize - 1) / BlockSize)
+      data.posBlockOffsets.indices.foreach { b =>
+        assert(data.posBlockOffsets(b) == offs(BlockSize * b), s"n=$n block $b")
+      }
+
+      val shiftedFnorms = new Array[Byte](base + last + 1)
+      System.arraycopy(fnorms, 0, shiftedFnorms, base, fnorms.length)
+      val c = new PostingsCursor(data, shiftedFnorms, w)
+      var i = 0
+      while (c.doc != Int.MaxValue) {
+        assert(c.doc == docs(i) + base && c.termFreq == tfs(i), s"n=$n doc $i")
+        assert(c.positions.toSeq == positions(i).toSeq, s"n=$n positions of doc $i")
+        c.advance()
+        i += 1
+      }
+      assert(i == n)
+    }
+  }
+
+  test("every vint lives in BlockCodec: no vint bit pattern elsewhere in src/main (source scan)") {
+    // a hand-rolled vint loop masks 7-bit groups (0x7f) or tests the
+    // terminator bit (& 0x80); comments are blanked
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"$root not found")
+    def scalaFiles(d: java.io.File): Seq[java.io.File] = d.listFiles().toSeq.flatMap { f =>
+      if (f.isDirectory) scalaFiles(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    }
+    val comment = """(?s)/\*.*?\*/|//[^\n]*""".r
+    val vintBits = """0x7f(?![0-9a-fA-F])|&\s*0x80\b""".r
+    val hits = scalaFiles(root).flatMap { f =>
+      val src = comment.replaceAllIn(
+        new String(java.nio.file.Files.readAllBytes(f.toPath), "ISO-8859-1"),
+        m => "\n" * m.matched.count(_ == '\n'))
+      val name = root.toPath.relativize(f.toPath).toString
+      vintBits.findAllMatchIn(src).map(m => (name, src.substring(0, m.start).count(_ == '\n') + 1))
+    }
+    assert(hits.exists(_._1 == "graft/core/BlockCodec.scala"), "the scan must see BlockCodec's own loops")
+    val outside = hits.filter(_._1 != "graft/core/BlockCodec.scala")
+    assert(outside.isEmpty, outside.map { case (f, l) => s"$f:$l" }.mkString("; "))
+  }
 }

@@ -337,6 +337,30 @@ class SegmentMergeSpec extends AnyFunSuite {
     }
   }
 
+  test("positional hot-term shards and chunked fieldnorms: compaction == fresh build, row for row") {
+    // 480-doc batches give ~120-doc mini-segments, so each holds two
+    // 100-doc fnorm chunks the merge must concatenate in chunk order,
+    // and the skew corpus's hot terms exceed 64 docs, so both sides
+    // shard position-bearing lists
+    val cfg = IndexBuilder.Config(numSegments = 1, maxPostingsPerShard = 64,
+      fnormChunkSize = 100, recordPositions = true)
+    val batches = (0L until 3L).map(b =>
+      (b * 480L until b * 480L + 480L).map(i => Corpus.mkDoc(i, 17L, skew = true)))
+    val live = liveIndexOf(batches, cfg)
+    assert(new InvertedIndex(spark, live).fnorms.filter(_.chunk > 0).count() > 0,
+      "live mini-segments should hold several fnorm chunks")
+    val compacted = tmpDir()
+    graft.streaming.LiveIndex.compact(spark, live, compacted, cfg)
+    val fresh = tmpDir()
+    import spark.implicits._
+    IndexBuilder.build(spark, spark.createDataset(batches.flatten), fresh, cfg)
+    assertSameRows(compacted, fresh)
+    val merged = new InvertedIndex(spark, compacted)
+    assert(merged.postings.filter(p => p.shard > 0 && p.posBytes.nonEmpty).count() > 0,
+      "expected position-bearing hot-term shards")
+    assert(merged.fnorms.count() > 1, "expected more than one fnorm row")
+  }
+
   test("docs sharing (repo, path, commit) merge in a fixed order, each keeping its own terms") {
     // at-least-once delivery can bring the same key with different
     // content in several batches: equal (sortKey, repo, path, commit),
