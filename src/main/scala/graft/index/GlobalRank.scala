@@ -42,16 +42,24 @@ object GlobalRank {
   private def metaPath(indexDir: String) = s"${dirOf(indexDir)}/_grank_meta.json"
   private def dataPath(indexDir: String) = s"${dirOf(indexDir)}/data"
 
+  /** Write the table unless `load` accepts the current one for `stats`,
+    * the index's segment stats: the one refresh after a build or a merge
+    * (a merge renumbers docids, so a table from before it is refused).
+    * A committed re-run thus heals a table lost to a crash between the
+    * batch marker and the write, and otherwise writes nothing. */
+  def refresh(spark: SparkSession, indexDir: String, stats: Seq[SegStatRow]): Unit =
+    if (stats.exists(_.numDocs > 0) && load(spark, indexDir, stats).isEmpty)
+      write(spark, indexDir)
+
   /** Compute and persist the ordinal table (overwrite — derived data,
     * recompute is idempotent). */
-  def write(spark: SparkSession, indexDir: String, partitions: Int = 0): Unit = {
+  def write(spark: SparkSession, indexDir: String): Unit = {
     import spark.implicits._
     val docs = IndexBuilder.readKind(spark, IndexBuilder.dataDir(indexDir), "doc")
       .select("doc.*").as[DocRow]
     val keyed = docs
       .select($"segment", $"docId", $"sortKey", $"repo", $"path", $"commit")
-    val parts = if (partitions > 0) partitions
-      else math.max(spark.sparkContext.defaultParallelism, 1)
+    val parts = math.max(spark.sparkContext.defaultParallelism, 1)
     // freeze the arranged partitioning so the count pass and the emit
     // pass see the SAME layout (range-partitioner boundary sampling is
     // otherwise re-run, and need not resample identically)

@@ -33,9 +33,9 @@ import graft.core.{BlockCodec, Bm25Weight, FieldNorm, PostingListData, Tokenizer
   *  - hot terms are sharded at maxPostingsPerShard entries per posting
   *    row, bounding both row size and query-task memory per term.
   *  - checkpoint/resume at segment granularity: segments are built in
-  *    batches; a manifest JSON per segment commits after its batch's
-  *    write; a restarted job skips manifested segments (north rule:
-  *    "restarts at segment granularity").
+  *    batches; each batch commits through `commit` (a manifest JSON per
+  *    segment, then the batch marker); a restarted job skips committed
+  *    batches (north rule: "restarts at segment granularity").
   */
 object IndexBuilder {
 
@@ -374,10 +374,6 @@ object IndexBuilder {
   def batchCommitted(outDir: String, tag: String): Boolean =
     java.nio.file.Files.exists(batchMarkerPath(outDir, tag))
 
-  def commitBatch(outDir: String, tag: String, detail: String): Unit =
-    java.nio.file.Files.writeString(batchMarkerPath(outDir, tag),
-      s"""{"batch":"$tag",$detail}""")
-
   /** Move staged parquet files into the live data dir under
     * deterministic names `<prefix>-<j>.parquet`, deleting any previous
     * adoption of the same prefix first (idempotent on replay). Local-FS
@@ -414,15 +410,59 @@ object IndexBuilder {
     f.delete()
   }
 
-  def build(spark: SparkSession, input: Dataset[SourceDoc], outDir: String,
-            cfg: Config = Config()): BuildReport = {
-    import spark.implicits._
-    val t0 = System.nanoTime()
+  /** The one commit of an index write: a build batch, a live append and
+    * a merge all stage, adopt, manifest and mark through it (the
+    * exactly-once protocol; IndexPipelineSpec's source scan fails on
+    * any other committer in src/main).
+    *  1. Make the manifest dir. A committed `tag` is a no-op.
+    *  2. `write` fills the staging dir it is given. It returns the stat
+    *     rows it already holds on the driver, or None: commit then
+    *     reads them off the staged stat table (one job, and only this
+    *     write's rows, however many the index already holds).
+    *  3. Adopt the staged files, write each segment's manifest, then
+    *     the batch marker `{"batch":tag,detail}`.
+    * `segments` are manifested with zero rows when the write left them
+    * no stat row (a build batch's empty segments). A write that leaves
+    * nothing to manifest (an empty live batch) is dropped with its
+    * staging and commits nothing. A manifest `seg-<id>.json` is its
+    * segment's stat row plus `lineage(segment)`: one JSON field, or
+    * nothing. Returns whether this call committed. */
+  def commit(spark: SparkSession, outDir: String, tag: String, detail: String,
+             segments: Seq[Int] = Nil, lineage: Int => String = _ => "")
+            (write: String => Option[Seq[SegStatRow]]): Boolean = {
     new java.io.File(manifestDir(outDir)).mkdirs()
-    val S = cfg.numSegments
+    if (batchCommitted(outDir, tag)) return false
+    val staged = s"${stagingDir(outDir)}/$tag"
+    val stats = write(staged).getOrElse(readStats(spark, staged))
+    val seen = stats.map(_.segment).toSet
+    val rows = stats ++ segments.filterNot(seen).map(SegStatRow(_, 0, 0, 0, 0, "0" * 64, 0))
+    if (rows.isEmpty) {
+      deleteRecursively(new java.io.File(staged))
+      return false
+    }
+    adoptStaged(staged, outDir, tag)
+    rows.foreach { s =>
+      val field = lineage(s.segment)
+      val extra = if (field.isEmpty) "" else "," + field
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(manifestDir(outDir), f"seg-${s.segment}%05d.json"),
+        s"""{"segment":${s.segment},"numDocs":${s.numDocs},"numTokens":${s.numTokens},""" +
+          s""""numTerms":${s.numTerms},"numPostings":${s.numPostings},""" +
+          s""""sha256Agg":"${s.sha256Agg}","buildMs":${s.buildMs}$extra}""")
+    }
+    java.nio.file.Files.writeString(batchMarkerPath(outDir, tag), s"""{"batch":"$tag",$detail}""")
+    true
+  }
 
-    val bCent = spark.sparkContext.broadcast(cfg.centrality)
-    val tagged = input.map { d =>
+  /** The one tagging of source docs for a segment build (the batch build
+    * and the live append): segment `firstSegment + segmentOf(repo, path,
+    * numSegments)` and the precomputed-score sortKey. */
+  def tag(input: Dataset[SourceDoc], firstSegment: Int, numSegments: Int,
+          centrality: Map[String, Long]): Dataset[Tagged] = {
+    val spark = input.sparkSession
+    import spark.implicits._
+    val bCent = if (centrality.isEmpty) None else Some(spark.sparkContext.broadcast(centrality))
+    input.map { d =>
       val base = sortKeyOf(d.repo, d.path, d.commit)
       // centrality occupies the high bits, the fnv proxy's top 40 the
       // low bits (within-repo tie-break); un-scored repos keep only the
@@ -433,16 +473,20 @@ object IndexBuilder {
       // emits up to ~60 x reachable-nodes — a 140k-node in-ball would
       // overflow without the clamp; ordering among such mega-hubs
       // degrades to the tie-break, never inverts).
-      val key =
-        if (bCent.value.isEmpty) base
-        else {
-          val c = math.min(math.max(bCent.value.getOrElse(d.repo, 0L), 0L),
-            (1L << 23) - 1)
-          (c << 40) | (base >>> 24)
-        }
-      Tagged(segmentOf(d.repo, d.path, S), key,
+      val key = bCent.fold(base) { b =>
+        val c = math.min(math.max(b.value.getOrElse(d.repo, 0L), 0L), (1L << 23) - 1)
+        (c << 40) | (base >>> 24)
+      }
+      Tagged(firstSegment + segmentOf(d.repo, d.path, numSegments), key,
         d.repo, d.path, d.commit, d.lang, d.content, d.props, d.links)
     }
+  }
+
+  def build(spark: SparkSession, input: Dataset[SourceDoc], outDir: String,
+            cfg: Config = Config()): BuildReport = {
+    val t0 = System.nanoTime()
+    val S = cfg.numSegments
+    val tagged = tag(input, 0, S, cfg.centrality)
 
     // batches are a STABLE grouping of all segments (independent of what
     // is already done) so the batch commit marker names stay meaningful
@@ -458,9 +502,8 @@ object IndexBuilder {
     var built = 0
     var skipped = 0
     (0 until S).grouped(cfg.segmentsPerBatch).zipWithIndex.foreach { case (batch, bi) =>
-      val tag = s"b$bi"
-      if (batchCommitted(outDir, tag)) { skipped += batch.size }
-      else {
+      val committed = commit(spark, outDir, s"b$bi", s""""segments":${batch.size}""",
+          segments = batch) { staged =>
         val batchSet = batch.toSet
         val slice =
           if (batch.size == S) tagged
@@ -468,41 +511,26 @@ object IndexBuilder {
         // over-partition well beyond the segment count: hash placement of S
         // segment keys into exactly S partitions leaves ~37% empty and some
         // with 3-4 segments (straggler waves); at 4x, surplus partitions are
-        // cheap no-ops and the max per-task load stays ~1-2 segments.
-        // DATA-driven, never cluster-size-driven: the partition count is a
-        // property of the dataset (like files.maxPartitionBytes sizing), so
-        // the same build is bit- and plan-identical at any executor count —
-        // the north-rule N-vs-4N comparison must run the IDENTICAL job at
-        // both levels (a cores-derived count was tried and distorted the
-        // ratio by giving the small level a cheaper job).
+        // cheap no-ops and the max per-task load stays ~1-2 segments. The
+        // count never goes below defaultParallelism, so the task count
+        // follows the cluster once it has more cores than 4 x segments; the
+        // index bytes do not, since each segment lands whole in one
+        // partition and its rows depend only on its docs' sort order.
         val parts = sys.env.get("GRAFT_BUILD_PARTS").map(_.toInt)
           .getOrElse(math.max(spark.sparkContext.defaultParallelism,
             math.min(batch.size * 4, 4096)))
-        val staged = s"${stagingDir(outDir)}/$tag"
         writeSegments(slice, parts, staged, cfg)
-        adoptStaged(staged, outDir, tag)
-
-        // commit manifests for this batch (checkpoint + lineage)
-        val stats = readStats(spark, outDir).filter(s => batchSet.contains(s.segment))
-        stats.foreach(writeManifest(outDir, _))
-        // segments with zero input rows still need a manifest to be "done"
-        val seen = stats.map(_.segment).toSet
-        batch.filterNot(seen).foreach { seg =>
-          writeManifest(outDir, SegStatRow(seg, 0, 0, 0, 0, "0" * 64, 0))
-        }
-        commitBatch(outDir, tag, s""""segments":${batch.size}""")
-        built += batch.size
+        None
       }
+      if (committed) built += batch.size else skipped += batch.size
     }
 
-    val allStats = readStats(spark, outDir)
+    val allStats = readStats(spark, dataDir(outDir))
     // serving-tier global static-rank ordinal: derived data computed
     // AFTER the batch markers (a crash here just loses the derived
     // table; the index itself is already committed, and rankSignals
-    // degrades to its counting pass until a re-run re-derives it).
-    // Recompute-on-resume is idempotent overwrite.
-    if (cfg.storeGlobalRank && allStats.exists(_.numDocs > 0))
-      GlobalRank.write(spark, outDir)
+    // degrades to its counting pass until a re-run re-derives it)
+    if (cfg.storeGlobalRank) GlobalRank.refresh(spark, outDir, allStats)
     // skipped counts batch-marker skips only: segment manifests without
     // a batch marker (a crashed pre-marker run) are REBUILT, so they
     // must not report as skipped
@@ -510,22 +538,22 @@ object IndexBuilder {
       built, skipped, (System.nanoTime() - t0) / 1000000)
   }
 
-  /** Stat rows of everything adopted so far. An EMPTY input writes no
-    * parquet at all (partitionBy creates no kind= dirs), so the missing
-    * path reads as zero rows instead of an AnalysisException — an empty
-    * build is a valid BuildReport(0, 0, ...), and its batch markers
-    * commit like any other (the resume contract assumes a stable input
-    * across retries). */
-  private[index] def readStats(spark: SparkSession, outDir: String): Array[SegStatRow] = {
+  /** The stat rows under `root`, a data or staging dir. A write of no
+    * rows leaves no kind= dirs (partitionBy creates none), so the
+    * missing table reads as zero rows, with no job, instead of an
+    * AnalysisException — an empty build is a valid BuildReport(0, 0,
+    * ...), and its batch markers commit like any other (the resume
+    * contract assumes a stable input across retries). */
+  private def readStats(spark: SparkSession, root: String): Seq[SegStatRow] = {
     import spark.implicits._
-    if (!new java.io.File(s"${dataDir(outDir)}/kind=stat").exists()) Array.empty
-    else readKind(spark, dataDir(outDir), "stat").select("stat.*").as[SegStatRow].collect()
+    if (!new java.io.File(s"$root/kind=stat").exists()) Nil
+    else readKind(spark, root, "stat").select("stat.*").as[SegStatRow].collect().toSeq
   }
 
   /** Shared segment-build stage: shuffle to segments, sort, accumulate,
     * serialize, write parquet partitioned by row kind into
     * `<stageOut>/kind=*` (overwrite — callers stage then adopt, see
-    * adoptStaged). Used by the batch build and the live (streaming)
+    * commit). Used by the batch build and the live (streaming)
     * micro-batch append. */
   def writeSegments(tagged: Dataset[Tagged], parts: Int, stageOut: String,
                     cfg: Config): Unit = {
@@ -540,15 +568,6 @@ object IndexBuilder {
       .mapPartitions(it => new SegmentEmitter(it, taskCfg))
       .write.mode(SaveMode.Overwrite).partitionBy("kind")
       .parquet(stageOut)
-  }
-
-  private def writeManifest(outDir: String, s: SegStatRow): Unit = {
-    val json =
-      s"""{"segment":${s.segment},"numDocs":${s.numDocs},"numTokens":${s.numTokens},
-         |"numTerms":${s.numTerms},"numPostings":${s.numPostings},
-         |"sha256Agg":"${s.sha256Agg}","buildMs":${s.buildMs}}""".stripMargin
-    val p = java.nio.file.Paths.get(manifestDir(outDir), f"seg-${s.segment}%05d.json")
-    java.nio.file.Files.writeString(p, json)
   }
 
   /** Streams a sorted partition, building one segment at a time fully

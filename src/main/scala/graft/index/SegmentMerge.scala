@@ -1,7 +1,10 @@
 package graft.index
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.util.CollectionAccumulator
 
 import graft.core.PostingListData
 
@@ -41,6 +44,14 @@ import graft.core.PostingListData
   *    reference recomputes block-max metadata the same way at merge
   *    time), so merged rows equal a fresh build's.
   *
+  * Jobs: three — the input stat collect, the shuffle-map stage and the
+  * write. The merge commits through IndexBuilder.commit like a build
+  * batch. Its driver-side table of merged segments (one SegStatRow
+  * each: summed docs, tokens and posting counts, XOR-ed sha256) feeds
+  * the emitter. The stat rows the write emits come back through an
+  * accumulator and become the manifests, so the commit reads nothing
+  * back and starts no job.
+  *
   * Task memory per merged segment is `remap` plus the fieldnorm arrays;
   * doc rows stream through. Skew: the shuffled unit is a *compressed
   * posting-list row*, never individual postings, so a hot term
@@ -60,18 +71,12 @@ object SegmentMerge {
             segFilter: Int => Boolean = _ => true): Unit = {
     import spark.implicits._
     val in = new InvertedIndex(spark, inDir)
-    new java.io.File(IndexBuilder.manifestDir(outDir)).mkdirs()
 
     // bases + merged stats from the stat table (driver-side, tiny);
     // segFilter drops expired segments (live-index TTL compaction)
     val stats = in.segStats.collect().filter(s => segFilter(s.segment))
       .sortBy(_.segment)
     if (stats.isEmpty) return
-    // the merge commits through the SAME staged->adopt->manifest->marker
-    // protocol as build()/appendBatch (the exactly-once invariant): a
-    // crashed merge re-run re-stages wholesale, a committed one is a
-    // no-op — bare Append into the data dir would duplicate every row
-    // on retry
     // the tag folds the FULL filtered input set and its sha256 lineage,
     // not just the endpoint segment ids: two merges into the same
     // outDir that share endpoints but differ in membership or content
@@ -81,27 +86,13 @@ object SegmentMerge {
     val lineage = IndexBuilder.fnv1a64(
       stats.map(s => s"${s.segment}:${s.sha256Agg}").mkString(","))
     val tag = f"merge${stats.head.segment}-${stats.last.segment}-f$fanIn-$lineage%016x"
-    if (IndexBuilder.batchCommitted(outDir, tag)) {
-      // committed merge re-run: heal a grank table lost to a crash
-      // between the commit marker and the refresh (idempotent)
-      refreshGlobalRank(spark, outDir, cfg)
-      return
-    }
-    val staged = s"${IndexBuilder.stagingDir(outDir)}/$tag"
     val newSegOf: Int => Int = old => old / fanIn
     val grouped = stats.groupBy(s => newSegOf(s.segment))
-    val baseOf: Map[Int, Int] = grouped.values.flatMap { g =>
-      var acc = 0
-      g.sortBy(_.segment).map { s =>
-        val b = s.segment -> acc
-        acc += s.numDocs.toInt
-        b
-      }
-    }.toMap
-    // lineage carried into the merged stat rows: posting-entry counts
-    // sum; sha256 aggregates XOR (associative over the doc union) —
-    // legacy inputs with an empty sha propagate "" explicitly
-    val mergedMeta: Map[Int, (Long, String)] = grouped.map { case (ns, g) =>
+    // the merged segments' stats: docs, tokens and posting entries sum;
+    // sha256 aggregates XOR (associative over the doc union) — legacy
+    // inputs with an empty sha propagate "" explicitly. The emitter
+    // counts the terms.
+    val merged: Map[Int, SegStatRow] = grouped.map { case (ns, g) =>
       val sha =
         if (g.exists(_.sha256Agg.isEmpty)) ""
         else g.map(_.sha256Agg).reduce { (a, b) =>
@@ -109,81 +100,66 @@ object SegmentMerge {
             f"${Integer.parseInt(x, 16) ^ Integer.parseInt(y, 16)}%02x"
           }.mkString
         }
-      ns -> (g.map(_.numPostings).sum, sha)
+      ns -> SegStatRow(ns, g.map(_.numDocs).sum, g.map(_.numTokens).sum, 0,
+        g.map(_.numPostings).sum, sha, 0)
     }
-    val mergedStats: Map[Int, (Long, Long)] = grouped.map { case (ns, g) =>
-      ns -> (g.map(_.numDocs).sum, g.map(_.numTokens).sum)
+    // a crashed merge re-run re-stages wholesale, a committed one is a
+    // no-op — bare Append into the data dir would duplicate every row
+    // on retry
+    IndexBuilder.commit(spark, outDir, tag, s""""mergedSegments":${stats.length}""",
+        lineage = ns => s""""mergedFrom":[${grouped(ns).map(_.segment).mkString(",")}]""") {
+        staged =>
+      val baseOf: Map[Int, Int] = grouped.values.flatMap { g =>
+        var acc = 0
+        g.sortBy(_.segment).map { s =>
+          val b = s.segment -> acc
+          acc += s.numDocs.toInt
+          b
+        }
+      }.toMap
+      val bBase = spark.sparkContext.broadcast(baseOf)
+      val bMerged = spark.sparkContext.broadcast(merged)
+      // the stat rows the write emits are the manifests' rows: reading
+      // them back off the staged table would be one more job
+      val written = spark.sparkContext.collectionAccumulator[SegStatRow]("merged stat rows")
+      val taskCfg = cfg.copy(centrality = Map.empty)
+
+      // one shuffle per merged segment: doc rows (kindOrder -1) sort first
+      // in score order, ties by (oldSeg, docId) in the shard slot, then
+      // fnorm rows by (field, oldSeg, chunk) via the term slot so per-field
+      // arrays concatenate correctly, then posting rows by term
+      val docRows = in.docs.filter(d => segFilter(d.segment)).map(d =>
+        MergeRow(newSegOf(d.segment), -1, "", d.segment, d.docId, Some(d), None, None))
+      val fnRows = in.fnorms.filter(f => segFilter(f.segment)).map(f =>
+        MergeRow(newSegOf(f.segment), 0,
+          f"${f.chunk >> Fields.FnormFieldShift}%03d", f.segment, f.chunk,
+          None, None, Some(f)))
+      val postRows = in.postings.filter(p => segFilter(p.segment)).map(p =>
+        MergeRow(newSegOf(p.segment), 1, p.term, p.segment, p.shard, None, Some(p), None))
+      val parts = math.max(spark.sparkContext.defaultParallelism, merged.size)
+      docRows.union(fnRows).union(postRows)
+        .repartition(parts, col("segment"))
+        .sortWithinPartitions(col("segment"), col("kindOrder"), col("term"),
+          col("doc.sortKey").desc, col("doc.repo"), col("doc.path"),
+          col("doc.commit"), col("oldSeg"), col("shard"))
+        .mapPartitions { it =>
+          new MergeEmitter(it, bBase.value, bMerged.value, written, taskCfg)
+        }
+        .write.mode(SaveMode.Overwrite).partitionBy("kind")
+        .parquet(staged) // Overwrite clears a crashed prior staging
+      Some(written.value.asScala.toSeq)
     }
-    val bBase = spark.sparkContext.broadcast(baseOf)
-    val bStats = spark.sparkContext.broadcast(mergedStats)
-    val bMeta = spark.sparkContext.broadcast(mergedMeta)
-    val taskCfg = cfg.copy(centrality = Map.empty)
-
-    // one shuffle per merged segment: doc rows (kindOrder -1) sort first
-    // in score order, ties by (oldSeg, docId) in the shard slot, then
-    // fnorm rows by (field, oldSeg, chunk) via the term slot so per-field
-    // arrays concatenate correctly, then posting rows by term
-    val docRows = in.docs.filter(d => segFilter(d.segment)).map(d =>
-      MergeRow(newSegOf(d.segment), -1, "", d.segment, d.docId, Some(d), None, None))
-    val fnRows = in.fnorms.filter(f => segFilter(f.segment)).map(f =>
-      MergeRow(newSegOf(f.segment), 0,
-        f"${f.chunk >> Fields.FnormFieldShift}%03d", f.segment, f.chunk,
-        None, None, Some(f)))
-    val postRows = in.postings.filter(p => segFilter(p.segment)).map(p =>
-      MergeRow(newSegOf(p.segment), 1, p.term, p.segment, p.shard, None, Some(p), None))
-    val parts = math.max(spark.sparkContext.defaultParallelism,
-      mergedStats.size)
-    docRows.union(fnRows).union(postRows)
-      .repartition(parts, col("segment"))
-      .sortWithinPartitions(col("segment"), col("kindOrder"), col("term"),
-        col("doc.sortKey").desc, col("doc.repo"), col("doc.path"),
-        col("doc.commit"), col("oldSeg"), col("shard"))
-      .mapPartitions { it =>
-        new MergeEmitter(it, bBase.value, bStats.value, bMeta.value, taskCfg)
-      }
-      .write.mode(SaveMode.Overwrite).partitionBy("kind")
-      .parquet(staged) // Overwrite clears a crashed prior staging
-
-    // adopt the staged files, then manifests, then the commit marker
-    // LAST (the exactly-once order)
-    IndexBuilder.adoptStaged(staged, outDir, tag)
-
-    // merged manifests (lineage: XOR of input sha aggregates combines)
-    grouped.toSeq.sortBy(_._1).foreach { case (ns, g) =>
-      val (nPost, sha) = mergedMeta(ns)
-      val row = SegStatRow(ns, g.map(_.numDocs).sum, g.map(_.numTokens).sum,
-        0, nPost, sha, 0)
-      val json =
-        s"""{"segment":${row.segment},"numDocs":${row.numDocs},"numTokens":${row.numTokens},
-           |"numPostings":${row.numPostings},"sha256Agg":"${row.sha256Agg}",
-           |"mergedFrom":[${g.map(_.segment).mkString(",")}]}""".stripMargin
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(
-        IndexBuilder.manifestDir(outDir), f"seg-${row.segment}%05d.json"), json)
-    }
-    IndexBuilder.commitBatch(outDir, tag, s""""mergedSegments":${stats.length}""")
-    refreshGlobalRank(spark, outDir, cfg)
+    // derived data, refreshed after the marker: a committed re-run heals
+    // a table lost to a crash between the two
+    if (cfg.storeGlobalRank) GlobalRank.refresh(spark, outDir, merged.values.toSeq)
   }
-
-  /** Post-merge refresh of the stored global-rank ordinal: a merge
-    * renumbers docids, so any table computed before it fails
-    * GlobalRank.load validation (correct, but rankSignals degrades to
-    * its counting pass). Runs AFTER the commit marker — derived data;
-    * a crash between marker and refresh just leaves the fallback, and
-    * the committed-merge re-run path below heals it idempotently. */
-  private def refreshGlobalRank(spark: SparkSession, outDir: String,
-                                cfg: IndexBuilder.Config): Unit =
-    if (cfg.storeGlobalRank) {
-      val stats = IndexBuilder.readStats(spark, outDir).toSeq
-      if (stats.nonEmpty && GlobalRank.load(spark, outDir, stats).isEmpty)
-        GlobalRank.write(spark, outDir)
-    }
 
   /** Streams one sorted partition of MergeRows; per merged segment:
     * doc rows first, then fieldnorm chunks, then terms in sorted order. */
   private final class MergeEmitter(it: Iterator[MergeRow],
                                    bases: Map[Int, Int],
-                                   stats: Map[Int, (Long, Long)],
-                                   meta: Map[Int, (Long, String)],
+                                   merged: Map[Int, SegStatRow],
+                                   written: CollectionAccumulator[SegStatRow],
                                    cfg: IndexBuilder.Config)
       extends Iterator[IndexBuilder.BuildRow] {
     private val buf = it.buffered
@@ -203,8 +179,7 @@ object SegmentMerge {
       * and sorted) and emits doc/fnorm/posting/stat rows lazily. */
     private def emitSegment(): Iterator[IndexBuilder.BuildRow] = {
       val seg = buf.head.segment
-      val (nDocs64, nTokens) = stats(seg)
-      val nDocs = nDocs64.toInt
+      val nDocs = merged(seg).numDocs.toInt
       val remap = new Array[Int](nDocs)
       // clamped per-doc shadow-field token sums (IndexBuilder's rule)
       var bgTok = 0L
@@ -231,12 +206,12 @@ object SegmentMerge {
       }
       // `++` takes its operand by name: the rest runs once the last doc
       // row has streamed out, with remap and the totals complete
-      docRows ++ indexRows(seg, nDocs, nTokens, remap, bgTok, tgTok)
+      docRows ++ indexRows(seg, nDocs, remap, bgTok, tgTok)
     }
 
     /** The fnorm, posting and stat rows of merged segment `seg`, after
       * its doc rows filled `remap` and the shadow-field totals. */
-    private def indexRows(seg: Int, nDocs: Int, nTokens: Long, remap: Array[Int],
+    private def indexRows(seg: Int, nDocs: Int, remap: Array[Int],
                           bgTok: Long, tgTok: Long): Iterator[IndexBuilder.BuildRow] = {
       // fieldnorms: kindOrder 0 rows, sorted by (field, oldSeg, chunk);
       // bases are ascending with oldSeg so per-field concatenation
@@ -269,7 +244,8 @@ object SegmentMerge {
         }
         b.result()
       }
-      val rows = new IndexBuilder.SegmentRows(seg, nDocs, nTokens, fnArrs,
+      val m = merged(seg)
+      val rows = new IndexBuilder.SegmentRows(seg, nDocs, m.numTokens, fnArrs,
         bgTok, tgTok, cfg)
       val postRows = new Iterator[Iterator[IndexBuilder.BuildRow]] {
         def hasNext: Boolean = buf.hasNext && buf.head.segment == seg
@@ -282,8 +258,11 @@ object SegmentMerge {
       // aggregates XOR) so a second-generation merge and the fidelity
       // witness keep working; `++` takes its operand by name, so the
       // stat row is made once the posting rows have drained
-      val (nPost, sha) = meta.getOrElse(seg, (0L, ""))
-      rows.fnormRows ++ postRows ++ Iterator.single(rows.statRow(nPost, sha, 0L))
+      rows.fnormRows ++ postRows ++ Iterator.single {
+        val stat = rows.statRow(m.numPostings, m.sha256Agg, 0L)
+        written.add(stat.stat.get)
+        stat
+      }
     }
 
     /** k-way merge of the next term's sublists, which arrive ordered by

@@ -26,52 +26,29 @@ object LiveIndex {
   /** Append one micro-batch as SegsPerBatch mini-segments + manifests.
     *
     * foreachBatch is only at-least-once, so the append must be
-    * idempotent on replay: data is staged (overwrite), adopted into the
-    * live data dir under deterministic per-batch file names (replacing
-    * any partial earlier adoption), and a batch marker commits last —
-    * a marker present means the batch is fully in, so the replay
-    * becomes a no-op and a crash at any earlier point converges to
-    * exactly one copy (the reference's WAL replay gives the same
-    * guarantee, live_index/index.rs:109-151). */
+    * idempotent on replay: it commits through IndexBuilder.commit
+    * (staged write, adoption under deterministic per-batch file names
+    * that replaces any partial earlier adoption, manifests, then the
+    * batch marker), so a replay of a committed batch is a no-op and a
+    * crash at any earlier point converges to exactly one copy (the
+    * reference's WAL replay gives the same guarantee,
+    * live_index/index.rs:109-151). Every non-empty segment writes a
+    * stat row, so an empty batch stages none and commit leaves no data
+    * and no marker: emptiness is read off the write, because a probe
+    * before it would be one more job evaluating the micro-batch a
+    * second time. */
   def appendBatch(batch: Dataset[SourceDoc], batchId: Long, dir: String,
                   cfg: IndexBuilder.Config = IndexBuilder.Config(),
                   grankRefreshEvery: Int = 8): Unit = {
     val spark = batch.sparkSession
-    import spark.implicits._
-    val tag = s"live$batchId"
-    new java.io.File(IndexBuilder.manifestDir(dir)).mkdirs()
-    if (IndexBuilder.batchCommitted(dir, tag)) return
     val base = LiveBase + (batchId * SegsPerBatch).toInt
-    val tagged = batch.map { d =>
-      IndexBuilder.Tagged(
-        base + IndexBuilder.segmentOf(d.repo, d.path, SegsPerBatch),
-        IndexBuilder.sortKeyOf(d.repo, d.path, d.commit),
-        d.repo, d.path, d.commit, d.lang, d.content, d.props, d.links)
+    val lineage = s""""batchId":$batchId"""
+    val committed = IndexBuilder.commit(spark, dir, s"live$batchId", lineage,
+        lineage = _ => lineage) { staged =>
+      IndexBuilder.writeSegments(IndexBuilder.tag(batch, base, SegsPerBatch, cfg.centrality),
+        SegsPerBatch * 2, staged, cfg)
+      None
     }
-    val staged = s"${IndexBuilder.stagingDir(dir)}/$tag"
-    IndexBuilder.writeSegments(tagged, SegsPerBatch * 2, staged, cfg)
-    // every non-empty segment writes a stat row, so no stat dir means
-    // an empty batch: it leaves no data and no marker. Emptiness is read
-    // off the write because a probe before it would be one more job
-    // evaluating the micro-batch a second time.
-    if (!new java.io.File(s"$staged/kind=stat").exists()) {
-      IndexBuilder.deleteRecursively(new java.io.File(staged))
-      return
-    }
-    // this batch's stats come from the STAGED output before adoption —
-    // re-reading the live dir's whole stat table here grows O(total
-    // batches) per batch over a long-running stream
-    val stats = IndexBuilder.readKind(spark, staged, "stat")
-      .select("stat.*").as[SegStatRow]
-      .filter(s => s.segment >= base && s.segment < base + SegsPerBatch)
-      .collect()
-    IndexBuilder.adoptStaged(staged, dir, tag)
-    stats.foreach { s =>
-      val json = s"""{"segment":${s.segment},"numDocs":${s.numDocs},"numTokens":${s.numTokens},"batchId":$batchId}"""
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(
-        IndexBuilder.manifestDir(dir), f"seg-${s.segment}%07d.json"), json)
-    }
-    IndexBuilder.commitBatch(dir, tag, s""""batchId":$batchId""")
     // stored global-rank refresh policy: every append invalidates the
     // ordinal table (the validator then routes rankSignals to its
     // counting pass — correct, slower), and a refresh costs one narrow
@@ -79,7 +56,7 @@ object LiveIndex {
     // is quadratic over a long stream. Every-N keeps the materialized
     // path warm at bounded amortized cost; queries between refreshes
     // just use the fallback.
-    if (cfg.storeGlobalRank && grankRefreshEvery > 0 &&
+    if (committed && cfg.storeGlobalRank && grankRefreshEvery > 0 &&
         batchId % grankRefreshEvery == 0)
       GlobalRank.write(spark, dir)
   }
@@ -92,7 +69,6 @@ object LiveIndex {
             trigger: Trigger = Trigger.AvailableNow(),
             cfg: IndexBuilder.Config = IndexBuilder.Config(),
             grankRefreshEvery: Int = 8): StreamingQuery = {
-    new java.io.File(IndexBuilder.manifestDir(dir)).mkdirs()
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)

@@ -299,4 +299,70 @@ class IndexPipelineSpec extends AnyFunSuite {
     val b = idx3.docs.map(d => (d.segment, d.docId, d.repo, d.path)).collect().toSet
     assert(a == b)
   }
+
+  test("multi-batch build resumes at segment granularity after a crash past adoption") {
+    // 5 segments, 2 per batch: b0 = {0, 1}, b1 = {2, 3}, b2 = {4}
+    val cfg = IndexBuilder.Config(numSegments = 5, segmentsPerBatch = 2)
+    val d = tmpDir()
+    val first = IndexBuilder.build(spark, corpus, d, cfg)
+    assert(first.segmentsBuilt == 5 && first.segmentsSkipped == 0)
+    // a crash after b1's adoption: its rows are in, its manifests and
+    // marker are not
+    val manifest = (seg: Int) =>
+      java.nio.file.Paths.get(IndexBuilder.manifestDir(d), f"seg-$seg%05d.json")
+    java.nio.file.Files.delete(IndexBuilder.batchMarkerPath(d, "b1"))
+    Seq(2, 3).foreach(seg => java.nio.file.Files.delete(manifest(seg)))
+    val again = IndexBuilder.build(spark, corpus, d, cfg)
+    assert(again.segmentsSkipped == 3 && again.segmentsBuilt == 2)
+    assert(again.numDocs == 800)
+    assert(IndexBuilder.batchCommitted(d, "b1"))
+    assert((0 until 5).forall(seg => java.nio.file.Files.exists(manifest(seg))))
+    val single = tmpDir()
+    IndexBuilder.build(spark, corpus, single, IndexBuilder.Config(numSegments = 5))
+    IndexRows.assertSame(spark, d, single)
+  }
+
+  test("build job counts: fresh single-batch builds, and a committed re-run only reads its stats") {
+    // a computed input, so that any extra pass over it shows as a job;
+    // 4 = shuffle-map stage, write, the batch's staged stat read and the
+    // report's stat read
+    val input = Corpus.generate(spark, 200, seed = 29L, partitions = 3)
+    assert(SparkJobs.count(spark)(
+      IndexBuilder.build(spark, input, tmpDir(), IndexBuilder.Config(numSegments = 4))) == 4)
+    // + 7 for writing the rank table
+    val d = tmpDir()
+    val cfg = IndexBuilder.Config(numSegments = 4, storeGlobalRank = true)
+    assert(SparkJobs.count(spark)(IndexBuilder.build(spark, input, d, cfg)) == 11)
+    // the stored rank table still validates, so the re-run leaves it be
+    assert(SparkJobs.count(spark)(IndexBuilder.build(spark, input, d, cfg)) == 1)
+    assert(new InvertedIndex(spark, d).storedGlobalRanks.nonEmpty)
+  }
+
+  test("one committer: no commit step or manifest name outside IndexBuilder.commit (source scan)") {
+    // a call of adoptStaged / commitBatch / batchCommitted or a "seg-
+    // manifest name in code (comments blanked) is a commit step; in
+    // src/main only IndexBuilder.commit takes them
+    def scalaFiles(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).getOrElse(Array.empty).toSeq.flatMap { f =>
+        if (f.isDirectory) scalaFiles(f) else Seq(f).filter(_.getName.endsWith(".scala"))
+      }
+    val files = scalaFiles(new java.io.File("src/main/scala"))
+    assert(files.size > 10, "src/main/scala not found")
+    val comment = """(?s)/\*.*?\*/|//[^\n]*""".r
+    val step = """(?<!def )\b(?:adoptStaged|commitBatch|batchCommitted)\(|"seg-""".r
+    val hits = files.flatMap { f =>
+      val src = comment.replaceAllIn(
+        new String(java.nio.file.Files.readAllBytes(f.toPath), "ISO-8859-1"),
+        m => "\n" * m.matched.count(_ == '\n'))
+      step.findAllMatchIn(src).map { m =>
+        val before = src.substring(0, m.start)
+        val owner = """def\s+(\w+)""".r.findAllMatchIn(before).toSeq.lastOption
+          .map(_.group(1)).getOrElse("")
+        (s"${f.getName.stripSuffix(".scala")}.$owner", before.count(_ == '\n') + 1)
+      }.toSeq
+    }
+    assert(hits.nonEmpty, "the scan found not even IndexBuilder.commit")
+    assert(hits.map(_._1).distinct == Seq("IndexBuilder.commit"),
+      hits.map { case (o, l) => s"$o (line $l)" }.mkString("; "))
+  }
 }

@@ -228,33 +228,7 @@ class SegmentMergeSpec extends AnyFunSuite {
     skew.unpersist()
   }
 
-  private def hex(a: Array[Byte]): String = a.map(b => f"$b%02x").mkString
-
-  /** Every doc, posting, fnorm and stat row of an index, rendered with
-    * its byte arrays in hex and sorted; stat rows drop buildMs. */
-  private def rowsOf(dir: String): Seq[Seq[String]] = {
-    val idx = new InvertedIndex(spark, dir)
-    Seq(
-      idx.docs.collect().map(_.toString).toSeq,
-      idx.postings.collect().map { p =>
-        Seq(p.segment, p.term, p.shard, p.docFreq, p.docIdBase,
-          p.lastDocs.mkString(","), hex(p.docBits), hex(p.tfBits),
-          hex(p.bwFnormIds), hex(p.bwTfs), hex(p.packedDocs), hex(p.packedTfs),
-          hex(p.tailBytes), hex(p.posBytes), p.posBlockOffsets.mkString(","))
-          .mkString("|")
-      }.toSeq,
-      idx.fnorms.collect().map(f => s"${f.segment}|${f.chunk}|${f.numDocs}|${hex(f.fnorms)}").toSeq,
-      idx.segStats.collect().map(_.copy(buildMs = 0L).toString).toSeq
-    ).map(_.sorted)
-  }
-
-  private def assertSameRows(a: String, b: String): Unit =
-    rowsOf(a).zip(rowsOf(b)).zip(Seq("doc", "posting", "fnorm", "stat")).foreach {
-      case ((x, y), kind) =>
-        assert(x.size == y.size, s"$kind row count")
-        x.zip(y).find { case (p, q) => p != q }
-          .foreach { case (p, q) => fail(s"$kind rows differ:\n$p\n$q") }
-    }
+  private def assertSameRows(a: String, b: String): Unit = IndexRows.assertSame(spark, a, b)
 
   /** A live index of `batches` appended as batch ids 0, 1, ... */
   private def liveIndexOf(batches: Seq[Seq[SourceDoc]], cfg: IndexBuilder.Config): String = {
@@ -384,6 +358,79 @@ class SegmentMergeSpec extends AnyFunSuite {
       assert(hits.length == 1, v)
       val d = docAt((hits.head._1, hits.head._2))
       assert(d.repo == "dup/repo" && d.sha256 == IndexBuilder.sha256Hex(dup(v).content), v)
+    }
+  }
+
+  test("live appends key docids by centrality: compaction == fresh build, row for row") {
+    // the live tagging is the build's, so a scored repo's docs take the
+    // small docids in every mini-segment and the compacted index is the
+    // fresh one
+    val batches = (0L until 3L).map(b =>
+      (b * 90L until b * 90L + 90L).map(i => Corpus.mkDoc(i, 19L, skew = false)))
+    val repos = batches.flatten.map(_.repo).distinct.sorted
+    val cfg = IndexBuilder.Config(numSegments = 1, centrality =
+      repos.zipWithIndex.collect { case (r, i) if i % 3 == 0 => r -> (i + 1).toLong }.toMap)
+    val live = liveIndexOf(batches, cfg)
+    val compacted = tmpDir()
+    graft.streaming.LiveIndex.compact(spark, live, compacted, cfg)
+    val fresh = tmpDir()
+    import spark.implicits._
+    IndexBuilder.build(spark, spark.createDataset(batches.flatten), fresh, cfg)
+    assertSameRows(compacted, fresh)
+  }
+
+  /** The fields of every seg-*.json manifest under `dir`, by segment. */
+  private def manifests(dir: String): Map[Int, Map[String, String]] = {
+    val field = """"(\w+)":("[^"]*"|\[[^\]]*\]|-?\d+)""".r
+    new java.io.File(IndexBuilder.manifestDir(dir)).listFiles()
+      .filter(_.getName.startsWith("seg-")).map { f =>
+        val m = field.findAllMatchIn(java.nio.file.Files.readString(f.toPath))
+          .map(x => x.group(1) -> x.group(2).stripPrefix("\"").stripSuffix("\"")).toMap
+        m("segment").toInt -> m
+      }.toMap
+  }
+
+  private def fieldsOf(s: SegStatRow): Map[String, String] =
+    Map("segment" -> s.segment, "numDocs" -> s.numDocs, "numTokens" -> s.numTokens,
+      "numTerms" -> s.numTerms, "numPostings" -> s.numPostings,
+      "sha256Agg" -> s.sha256Agg, "buildMs" -> s.buildMs).map { case (k, v) => k -> v.toString }
+
+  test("every manifest is its segment's stat row plus one lineage field: built, live and merged") {
+    import spark.implicits._
+    def statsOf(dir: String) = new InvertedIndex(spark, dir).segStats.collect().toSeq
+    // 50 docs over 64 segments leave some segments empty: they get
+    // zero-row manifests
+    val built = tmpDir()
+    IndexBuilder.build(spark, Corpus.generate(spark, 50, seed = 23L), built,
+      IndexBuilder.Config(numSegments = 64))
+    val bs = statsOf(built)
+    val bm = manifests(built)
+    assert(bm.keySet == (0 until 64).toSet && bs.size < 64)
+    bs.foreach(s => assert(bm(s.segment) == fieldsOf(s), s"built seg ${s.segment}"))
+    (bm.keySet -- bs.map(_.segment)).foreach { seg =>
+      assert(bm(seg) == fieldsOf(SegStatRow(seg, 0, 0, 0, 0, "0" * 64, 0)), s"empty seg $seg")
+    }
+
+    val live = liveIndexOf((0L until 2L).map(b =>
+      (b * 40L until b * 40L + 40L).map(i => Corpus.mkDoc(i, 23L, skew = false))),
+      IndexBuilder.Config())
+    val ls = statsOf(live)
+    assert(manifests(live).keySet == ls.map(_.segment).toSet)
+    ls.foreach { s =>
+      assert(manifests(live)(s.segment) == fieldsOf(s) +
+        ("batchId" -> graft.streaming.LiveIndex.batchIdOf(s.segment).toString),
+        s"live seg ${s.segment}")
+    }
+
+    val merged = tmpDir()
+    SegmentMerge.merge(spark, built, merged, fanIn = 16)
+    val ms = statsOf(merged)
+    assert(ms.map(_.segment).sorted == Seq(0, 1, 2, 3))
+    assert(manifests(merged).keySet == ms.map(_.segment).toSet)
+    ms.foreach { s =>
+      val from = bs.map(_.segment).filter(_ / 16 == s.segment).sorted
+      assert(manifests(merged)(s.segment) == fieldsOf(s) +
+        ("mergedFrom" -> from.mkString("[", ",", "]")), s"merged seg ${s.segment}")
     }
   }
 }
