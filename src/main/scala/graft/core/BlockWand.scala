@@ -96,10 +96,20 @@ final class TopK(k: Int) {
 object BlockWand {
   final val Terminated = Int.MaxValue
 
+  /** Stable in-place insertion sort by doc: runs once per scored pivot
+    * on a nearly sorted buffer, so it allocates nothing. Equal docs keep
+    * their order, as the stable sort it replaced did, so every pivot
+    * and f32 sum stays the same. */
   private def sortByDoc(s: ArrayBuffer[TermCursor]): Unit = {
-    val a = s.sortBy(_.doc) // stable
-    var i = 0
-    while (i < a.length) { s(i) = a(i); i += 1 }
+    var i = 1
+    while (i < s.length) {
+      val c = s(i)
+      val doc = c.doc
+      var j = i - 1
+      while (j >= 0 && s(j).doc > doc) { s(j + 1) = s(j); j -= 1 }
+      s(j + 1) = c
+      i += 1
+    }
   }
 
   /** Packed pivot: (before << 48) | (pivotLen << 32) | pivotDoc, or

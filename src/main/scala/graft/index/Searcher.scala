@@ -1,5 +1,10 @@
 package graft.index
 
+import java.util.concurrent.{ExecutionException, Executors, FutureTask, ThreadFactory}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.reflect.ClassTag
+
 /** Driver-side serving searcher — the Spark analog of the reference's
   * search shard, which serves queries from mmap'd segment files without
   * spinning up jobs (crates/core/src/inverted_index + the distributed
@@ -11,6 +16,15 @@ package graft.index
   * both run the same code: InvertedIndex.lower lowers the query,
   * SegmentScoring.scoreQuery scores each segment's rows (same cursors,
   * same WAND) and SegmentScoring.cut merges (property tested).
+  *
+  * Segments score in parallel, as the reference's searcher runs its
+  * per-segment collectors on its executor pool (crates/core/src/
+  * executor.rs): one task per segment on the JVM's one serving pool
+  * (`Searcher.fanOut`), each with its own cursors and TopK; the caller
+  * joins them and merges with the total-order cut, so the fan-out cannot
+  * change a result. The posting fetch stays on the calling thread, so a
+  * miss's one Spark job runs in the caller's job group; scoring never
+  * starts a job.
   *
   * Scale note: this is the SERVING tier. At web scale each serving node
   * holds a shard's segments; the cache cap bounds driver memory
@@ -67,11 +81,42 @@ final class Searcher(idx: InvertedIndex, maxCachedTerms: Int = 4096) {
     val rows = rowsFor((terms ++ minus).distinct)
     val weights = SegmentScoring.weights(
       rows.map { case (t, rs) => t -> rs.map(_.docFreq.toLong).sum }, stats.numDocs)
-    val perSeg = rows.valuesIterator.flatten.toArray.groupBy(_.segment).toArray.flatMap {
-      case (seg, plist) =>
+    val tasks = rows.valuesIterator.flatten.toArray.groupBy(_.segment).toArray.map {
+      case (seg, plist) => new FutureTask(() =>
         SegmentScoring.scoreQuery(terms, k, m, minus, plist.groupBy(_.term),
-          fnorms(seg), weights, stats).map(h => (seg, h.doc, h.score))
+          fnorms(seg), weights, stats).map(h => (seg, h.doc, h.score)))
     }
-    SegmentScoring.cut(perSeg, k)
+    SegmentScoring.cut(Searcher.fanOut(tasks).flatten, k)
+  }
+}
+
+object Searcher {
+
+  /** The serving pool: one per JVM, not per Searcher (a server opens
+    * several), daemon threads, one per core. It holds threads, not
+    * derived index state, so it is not SessionMemo material: no Spark
+    * session owns it and nothing in it goes stale. */
+  private lazy val pool = {
+    val n = new AtomicInteger()
+    Executors.newFixedThreadPool(Runtime.getRuntime.availableProcessors, new ThreadFactory {
+      def newThread(r: Runnable): Thread = {
+        val t = new Thread(r, s"graft-searcher-${n.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      }
+    })
+  }
+
+  /** Runs `tasks` on the serving pool and returns their results in
+    * order. The caller takes tasks from the back while the pool takes
+    * them from the front (a FutureTask runs once; a later run is a
+    * no-op), so a busy pool never leaves the caller idle. A task's
+    * exception reaches the caller as thrown, not wrapped. */
+  private[graft] def fanOut[T: ClassTag](tasks: Array[FutureTask[T]]): Array[T] = {
+    if (tasks.length > 1) tasks.foreach(pool.execute)
+    var i = tasks.length - 1
+    while (i >= 0) { tasks(i).run(); i -= 1 }
+    try tasks.map(_.get())
+    catch { case e: ExecutionException => throw e.getCause }
   }
 }

@@ -65,6 +65,54 @@ class WandSpec extends AnyFunSuite {
     }
   }
 
+  test("WAND == exhaustive union with 5-16 cursors: colliding docs, early ends, chained shards") {
+    val rnd = new scala.util.Random(4243)
+    var chained, early = 0
+    (0 until 150).foreach { i =>
+      val nTerms = 5 + rnd.nextInt(12)
+      val maxDoc = 200 + rnd.nextInt(2800)
+      val tokenCounts = Array.fill(maxDoc)(2 + rnd.nextInt(999))
+      val fnorms = tokenCounts.map(c => FieldNorm.fieldNormToId(c.toLong))
+      val avgFn = tokenCounts.map(_.toLong).sum.toFloat / maxDoc.toFloat
+      // docs most lists share, so many cursors sit on one doc at a pivot
+      val shared = (0 until maxDoc).filter(_ => rnd.nextDouble() < 0.08).toSet
+      val terms = Array.tabulate(nTerms) { _ =>
+        // a third of the lists end early and leave the buffer mid-run
+        val end = if (rnd.nextInt(3) == 0) { early += 1; 1 + rnd.nextInt(maxDoc / 3) } else maxDoc
+        val density = 0.01 + rnd.nextDouble() * 0.4
+        val docs0 = (0 until end).filter(d =>
+          (shared(d) && rnd.nextDouble() < 0.9) || rnd.nextDouble() < density).toArray
+        val docs = if (docs0.isEmpty) Array(rnd.nextInt(end)) else docs0
+        // few tf values: equal scores across docs and cursors
+        val tfs = docs.map(_ => 1 + rnd.nextInt(if (rnd.nextBoolean()) 3 else 60))
+        val w = Bm25Weight.forTerm(docs.length.toLong, maxDoc.toLong, avgFn)
+        // a third of the lists are docId-range shards, chained
+        val shardSize = if (rnd.nextInt(3) == 0) 40 + rnd.nextInt(300) else docs.length
+        val shards = docs.indices.by(shardSize).map { off =>
+          val e = math.min(off + shardSize, docs.length)
+          PostingListData.build("t", docs.slice(off, e), tfs.slice(off, e), w, fnorms)
+        }.toArray
+        (shards, w)
+      }
+      def cs(): Seq[TermCursor] = terms.toSeq.map { case (shards, w) =>
+        if (shards.length == 1) new PostingsCursor(shards(0), fnorms, w)
+        else new ChainedCursor(shards.map(s => new PostingsCursor(s, fnorms, w)))
+      }
+      if (terms.exists(_._1.length > 1)) chained += 1
+      Seq(1, 3, 10, 50).foreach { k =>
+        val wand = new TopK(k)
+        BlockWand.run(cs(), Float.MinValue, (d, s) => wand.push(d, s))
+        val exh = new TopK(k)
+        BlockWand.exhaustiveUnion(cs(), (d, s) => exh.push(d, s))
+        val (w, e) = (wand.sorted.toSeq, exh.sorted.toSeq)
+        assert(w.map(h => (h.doc, java.lang.Float.floatToRawIntBits(h.score))) ==
+          e.map(h => (h.doc, java.lang.Float.floatToRawIntBits(h.score))),
+          s"case $i k=$k terms=$nTerms maxDoc=$maxDoc\nwand=$w\nexh =$e")
+      }
+    }
+    assert(chained > 50 && early > 300, s"chained=$chained early=$early")
+  }
+
   test("bitset-horizon union == exhaustive union, bit-identically") {
     val rnd = new scala.util.Random(1717)
     (0 until 100).foreach { i =>
