@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.index.{IndexBuilder, InvertedIndex, SourceDoc}
-import graft.ops.{Dedup, Multimodal, Similarity, TextOps}
+import graft.ops.{Dedup, Multimodal, Similarity, TextOps, Webgraph}
 import graft.ops.{Centrality => CentralityOps}
 
 /** Driver contract — one `queries` entry per operator family from
@@ -48,17 +48,6 @@ object SparkEntry {
     (m, test)
   }
 
-  // the PREPPED (distinct, deloop'd, checkpointed) derived edge table
-  // with its count, shared by all three centrality faces — each was
-  // re-running the same distinct+checkpoint+count prologue per job
-  private def centralityEdgesPrepped(s: SparkSession, d: String): (DataFrame, Long) =
-    SessionMemo(s, d, "centEdges") {
-      val e = centralityEdges(s, d)
-        .select(col("src").cast("long"), col("dst").cast("long"))
-        .where(col("src") =!= col("dst")).distinct().localCheckpoint()
-      (e, e.count())
-    }
-
   // shared exact-harmonic twin: q_centrality, q_centrality_hll and
   // q_centrality_approx all compare against the same maxDepth-4 integer
   // scores over the same derived graph — compute the 4-round BFS once
@@ -66,8 +55,8 @@ object SparkEntry {
   // SparkContext, which is why the memo is session-bound)
   private def centralityExact(s: SparkSession, d: String): DataFrame =
     SessionMemo(s, d, "centExact") {
-      val (e, cnt) = centralityEdgesPrepped(s, d)
-      CentralityOps.harmonicExactPrepped(s, e, cnt, maxDepth = 4).localCheckpoint()
+      CentralityOps.harmonicExact(s, centralityEdges(s, d), maxDepth = 4)
+        .localCheckpoint()
     }
 
   /** `documents` rows (doc_id, source, lang, text) as engine docs named
@@ -302,8 +291,7 @@ object SparkEntry {
       // estimate against it; the oracle recomputes the exact side and
       // asserts the flag, so sketch drift fails the hash loudly
       val exact = centralityExact(s, d)
-      val (ce, ceCnt) = centralityEdgesPrepped(s, d)
-      val est = CentralityOps.harmonicHyperBallPrepped(s, ce, ceCnt,
+      val est = CentralityOps.harmonicHyperBall(s, centralityEdges(s, d),
         maxDepth = 4).select(col("node"), col("harmonic"))
       exact.join(est, "node")
         .select(col("node"), col("h"),
@@ -324,8 +312,8 @@ object SparkEntry {
       // 500 sources); 0.06 clears it while still failing loudly on a
       // sampling or BFS regression — the theory bound (epsilon) is 0.3.
       val exact = centralityExact(s, d)
-      val approx = CentralityOps.approxHarmonicPrepped(s,
-        centralityEdgesPrepped(s, d)._1, maxDist = 4)
+      val approx = CentralityOps.approxHarmonic(s, centralityEdges(s, d),
+        maxDist = 4)
       exact.join(approx, Seq("node"), "left_outer")
         .select(col("node"), col("h"),
           (abs(coalesce(col("score"), lit(0.0)) -
@@ -351,9 +339,10 @@ object SparkEntry {
         .select(col("doc_id").as("src"))
       val edges = Seq((7L, 3L), (13L, 11L), (29L, 17L)).map { case (a, b) =>
         nodes.select(col("src"), ((col("src") * a + b) % 60).as("dst"))
-      }.reduce(_ union _).where(col("src") =!= col("dst"))
+      }.reduce(_ union _)
       val sources = nodes.select(col("src").as("s"))
-      CentralityOps.betweennessChecked(s, edges, sources, maxDepth = 4)
+      CentralityOps.betweennessChecked(s, Webgraph.Edges(edges), sources,
+          maxDepth = 4)
         .select(col("node"), col("spc"),
           (abs(col("bc") - col("bc_formula")) <=
             lit(1e-9) + abs(col("bc_formula")) * lit(1e-9))
@@ -763,7 +752,6 @@ object SparkEntry {
       // in for the harmonic rank (identical column contract — the
       // centrality jobs' output plugs straight in); LogGroupSpec pins
       // the band math against the reference's own vectors.
-      import graft.ops.Webgraph
       // checkpoint the derived edge table: the repo-universe count
       // action and the final grouped-backlink pass would otherwise each
       // re-run the typed-map edge derivation over the documents scan
@@ -1110,7 +1098,7 @@ object SparkEntry {
       // raw_distances_with_max): minimum hop count from r0, capped at
       // 6 — integer-exact; the oracle is a recursive CTE over the same
       // formula-derived edge table
-      graft.ops.Webgraph.distances(webgraphEdges(s, d), "r0", maxDist = 6)
+      Webgraph.distances(Webgraph.Edges(webgraphEdges(s, d)), "r0", maxDist = 6)
         .orderBy("repo")
     }),
     "q_dedup_embed" -> ((s, d) => {
@@ -1940,15 +1928,17 @@ object SparkEntry {
     * constant doc_id < 500 node set (identical at every SF): three
     * affine out-edges per node. Data-independent on purpose — the
     * corpus carries no link structure, so the graph exists to exercise
-    * the operator with a SQL-re-derivable shape. */
-  private def centralityEdges(s: SparkSession, d: String): DataFrame = {
-    val n = t(s, d, "documents").where(col("doc_id") < CentralityNodes)
-      .select(col("doc_id").as("src"))
-    Seq((7L, 3L), (13L, 11L), (29L, 17L)).map { case (a, b) =>
-      n.select(col("src"),
-        ((col("src") * a + b) % CentralityNodes).as("dst"))
-    }.reduce(_ union _).where(col("src") =!= col("dst"))
-  }
+    * the operator with a SQL-re-derivable shape. Prepared once per
+    * session and shared by all three centrality faces. */
+  private def centralityEdges(s: SparkSession, d: String): Webgraph.Edges =
+    SessionMemo(s, d, "centEdges") {
+      val n = t(s, d, "documents").where(col("doc_id") < CentralityNodes)
+        .select(col("doc_id").as("src"))
+      Webgraph.Edges(Seq((7L, 3L), (13L, 11L), (29L, 17L)).map { case (a, b) =>
+        n.select(col("src"),
+          ((col("src") * a + b) % CentralityNodes).as("dst"))
+      }.reduce(_ union _))
+    }
 
   /** q_centrality oracle: recursive-CTE BFS over the same derived
     * graph; shortest distance = min depth per (target, source) pair;

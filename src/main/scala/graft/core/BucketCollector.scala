@@ -7,6 +7,17 @@ package graft.core
 final case class DocHashes(site: Long, url: Long, urlWithoutTld: Long,
                            title: Long, simhash: Long)
 
+object DocHashes {
+  /** The bucket keys of one source file: repo = site, repo/path = url,
+    * path = url without tld, file name = title. */
+  def of(repo: String, path: String, simhash: Long): DocHashes = {
+    import graft.index.IndexBuilder.fnv1a64
+    DocHashes(fnv1a64("site:" + repo), fnv1a64("url:" + repo + "/" + path),
+      fnv1a64("path:" + path),
+      fnv1a64("title:" + path.substring(path.lastIndexOf('/') + 1)), simhash)
+  }
+}
+
 /** Penalty weights (reference defaults,
   * crates/core/src/config/defaults.rs:22-36). */
 final case class CollectorConfig(sitePenalty: Double = 0.1,

@@ -689,17 +689,16 @@ final class InvertedIndex(spark: SparkSession, dir: String,
     val terms = clauses.map(_._1).distinct
     if (terms.isEmpty || stats.numDocs == 0) return Array.empty
     val boosts = clauses.toMap
+    val sorted = terms.sorted
     val st = stats
     SegmentScoring.cut(perSegment(terms) { (seg, plist, fnArrs, dfs) =>
-      val w = SegmentScoring.weights(dfs, st.numDocs)
+      val boosted = SegmentScoring.weights(dfs, st.numDocs).map { case (t, w) =>
+        t -> w * boosts.getOrElse(t, 1.0f)
+      }
       // term-sorted cursors; an n-gram shadow term in a boosted clause
       // scores with ITS field's average and fnorm bytes
-      val cursors = plist.groupBy(_.term).toSeq.sortBy(_._1).map { case (t, rows) =>
-        SegmentScoring.bm25Cursor(t, rows, fnArrs, w(t) * boosts.getOrElse(t, 1.0f), st)
-      }
-      val topk = new TopK(k)
-      BlockWand.run(cursors, Float.MinValue, (d, s) => topk.push(d, s))
-      topk.sorted.iterator.map(h => (seg, h.doc, h.score))
+      SegmentScoring.scoreQuery(sorted, k, "or", Nil, plist.groupBy(_.term),
+        fnArrs, boosted, st).iterator.map(h => (seg, h.doc, h.score))
     }, k)
   }
 
@@ -1047,13 +1046,7 @@ final class InvertedIndex(spark: SparkSession, dir: String,
       (seg, d, sc, repo, path, sh)
     }
     val coll = new BucketCollector[(Int, Int, Float, String, String, Long)](k,
-      c => c._3.toDouble,
-      c => DocHashes(
-        IndexBuilder.fnv1a64("site:" + c._4),
-        IndexBuilder.fnv1a64("url:" + c._4 + "/" + c._5),
-        IndexBuilder.fnv1a64("path:" + c._5),
-        IndexBuilder.fnv1a64("title:" + c._5.substring(c._5.lastIndexOf('/') + 1)),
-        c._6))
+      c => c._3.toDouble, c => DocHashes.of(c._4, c._5, c._6))
     cands.foreach(coll.insert) // already (score desc, segment, docId) order
     coll.sortedResults(deRankSimilar = true).zipWithIndex.map { case (c, i) =>
       Hit(i + 1, c._1, c._2, c._3, c._4, c._5)

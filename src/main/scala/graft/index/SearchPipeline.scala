@@ -156,12 +156,7 @@ object SearchPipeline {
       idx.simhashOf(boosted.map(c => (c._1.repo, c._1.path)))
     val coll = new BucketCollector[(Hit, Map[String, Double])](k,
       c => c._1.score.toDouble,
-      c => DocHashes(
-        IndexBuilder.fnv1a64("site:" + c._1.repo),
-        IndexBuilder.fnv1a64("url:" + c._1.repo + "/" + c._1.path),
-        IndexBuilder.fnv1a64("path:" + c._1.path),
-        IndexBuilder.fnv1a64("title:" +
-          c._1.path.substring(c._1.path.lastIndexOf('/') + 1)),
+      c => DocHashes.of(c._1.repo, c._1.path,
         simhashes.getOrElse((c._1.repo, c._1.path), 0L)))
     boosted.foreach(coll.insert)
     val page = coll.sortedResults(cfg.deRankSimilar)

@@ -15,11 +15,13 @@ import org.apache.spark.sql.functions._
   *
   * Two paths, same contract as the HLL vocab face:
   *
-  *  - [[harmonicExact]]: frontier BFS as DataFrame joins. To keep the
-  *    result hash-exact across engines the score is returned as an
-  *    INTEGER: h`L` = Σ L/d with L = lcm(1..maxDepth), so no float
-  *    summation order exists at all (maxDepth ≤ 6 keeps L/d integral:
-  *    L(4)=12, L(6)=60). The oracle is a recursive-CTE BFS.
+  *  - [[harmonicExact]]: the multi-source distance BFS
+  *    ([[Webgraph.multiSourceDistances]]) from every node over the
+  *    reversed edges. To keep the result hash-exact across engines the
+  *    score is returned as an INTEGER: h`L` = Σ L/d with
+  *    L = lcm(1..maxDepth), so no float summation order exists at all
+  *    (maxDepth ≤ 6 keeps L/d integral: L(4)=12, L(6)=60). The oracle
+  *    is a recursive-CTE BFS.
   *  - [[harmonicHyperBall]]: per-node HLL registers of the in-ball,
   *    one round = ship each node's sketch along its out-edges and
   *    elementwise-max-merge at the destination. State is 2^p bytes per
@@ -43,85 +45,37 @@ object Centrality {
 
   // ------------------------------------------------------------- exact
 
-  /** Above this many distinct edges the per-round frontier⋈edges join
-    * stops BROADCASTING the edge side (~16 B/row → ~64 MB at this
-    * default, the usual autoBroadcastJoinThreshold class) and falls
-    * back to a shuffle join. harmonicExact is the oracle-exact
-    * small-graph path — HyperBall is the 100 TB design — but a caller
-    * that routes a big graph here by mistake must degrade to a slower
+  /** Above this many distinct edges [[Webgraph.Edges.joinSide]] stops
+    * BROADCASTING the edge side of the per-round joins (~16 B/row →
+    * ~64 MB at this default, the usual autoBroadcastJoinThreshold
+    * class) and falls back to a shuffle join: a caller that routes a
+    * big graph through the small-graph paths must degrade to a slower
     * correct plan, not OOM the driver re-broadcasting the edge table
     * every BFS round. */
   final val ExactBroadcastMaxEdges: Long = 4L * 1000 * 1000
 
   /** Exact harmonic centrality (integer form): returns
-    * (node, h) where h = Σ_{u reaches node, d ≤ maxDepth} lcm/d.
-    * `edges` needs (src, dst) long columns; nodes = union of endpoints.
-    * Each round: frontier ⋈ edges (dst = frontier node-at-ball-edge)
-    * pulls the next shell, anti-join drops already-visited pairs. */
-  def harmonicExact(spark: SparkSession, edges: DataFrame,
-                    maxDepth: Int,
-                    broadcastMaxEdges: Long = ExactBroadcastMaxEdges): DataFrame = {
-    val e0 = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .where(col("src") =!= col("dst")).distinct().localCheckpoint()
-    // the checkpoint above already materialized e0, so this count is a
-    // cheap cached-block scan, not a recompute
-    harmonicExactPrepped(spark, e0, e0.count(), maxDepth, broadcastMaxEdges)
-  }
-
-  /** [[harmonicExact]] over an edge table the caller has ALREADY
-    * deduplicated, deloop'd, cast to long and checkpointed, with its
-    * row count — callers sharing one prepped graph across several
-    * centrality jobs (exact / sketch / sampled faces) skip a redundant
-    * distinct shuffle + materialization + count per job. */
-  def harmonicExactPrepped(spark: SparkSession, e0: DataFrame, eCnt: Long,
-                           maxDepth: Int,
-                           broadcastMaxEdges: Long = ExactBroadcastMaxEdges): DataFrame = {
+    * (node, h) where h = Σ_{u reaches node, d ≤ maxDepth} lcm/d, for
+    * every node of `edges`. It is the all-sources case of the distance
+    * BFS: walking the reversed edges from v finds every u that reaches
+    * v, at its forward distance d(u, v). */
+  def harmonicExact(spark: SparkSession, edges: Webgraph.Edges,
+                    maxDepth: Int): DataFrame = {
     require(maxDepth >= 1 && maxDepth <= 6, "lcm trick holds for depth 1..6")
     val lcm = maxDepth match {
       case 1 => 1L; case 2 => 2L; case 3 => 6L
       case 4 => 12L; case 5 => 60L; case 6 => 60L
     }
-    val e = if (eCnt <= broadcastMaxEdges) broadcast(e0) else e0
-    val nodes = e0.select(col("src").as("n"))
-      .union(e0.select(col("dst").as("n"))).distinct().localCheckpoint()
-    // the visited pair table is bounded by nodes², so one node count
-    // decides broadcasting for every round's anti-join and score join
-    // (≤2000 nodes ⇒ ≤4M pairs) — no per-round size probes; sums are
-    // exact integers, so join strategy cannot change any value. An
-    // over-threshold graph keeps the scale-safe shuffle joins.
-    val nodesCnt = nodes.count()
-    val tiny = nodesCnt * nodesCnt <= BackwardBroadcastMaxRows
-    def hinted(df: DataFrame): DataFrame = if (tiny) broadcast(df) else df
-    // visited pairs (v, u): u ∈ B(v, d); frontier = the newest shell.
-    // Iterative plans need their lineage TRUNCATED each round
-    // (localCheckpoint): without it the d-th round's plan nests every
-    // earlier round's joins and Catalyst's optimize/codegen time grows
-    // superlinearly with depth — the classic iterative-algorithm trap
-    // (12 s for 4 rounds over a 500-node graph before truncation).
-    // The edge side broadcasts only under the size guard above: small
-    // reused relation -> broadcast; over-threshold -> shuffle join.
-    var visited = nodes.select(col("n").as("v"), col("n").as("u"))
-      .localCheckpoint()
-    var frontier = visited
-    var scores = nodes.select(col("n").as("v"), lit(0L).as("h"))
-    var d = 1
-    while (d <= maxDepth) {
-      val next = frontier.join(e, e("dst") === frontier("u"))
-        .select(col("v"), col("src").as("u")).distinct()
-        .join(hinted(visited), Seq("v", "u"), "left_anti")
-        .localCheckpoint()
-      val shell = next.groupBy("v").agg(count(lit(1)).as("c"))
-        .select(col("v"), (col("c") * lit(lcm / d)).as("add"))
-      // scores/visited build on CHECKPOINTED shells only, so their own
-      // lineage stays shallow (a 4-deep join/union chain) — no extra
-      // materialization jobs needed for them
-      scores = scores.join(hinted(shell), Seq("v"), "left_outer")
-        .select(col("v"), (col("h") + coalesce(col("add"), lit(0L))).as("h"))
-      visited = visited.union(next)
-      frontier = next
-      d += 1
+    // lcm/d divided on the driver, so the per-row weight is an exact
+    // integer; dist 0 (the node itself) weighs 0
+    val weight = (1 to maxDepth).foldLeft(lit(0L)) { (w, d) =>
+      when(col("dist") === d, lit(lcm / d)).otherwise(w)
     }
-    scores.select(col("v").as("node"), col("h"))
+    val nodes = edges.df.select(col("src").as("n"))
+      .union(edges.df.select(col("dst").as("n")))
+    Webgraph.multiSourceDistances(edges.reversed, nodes, maxDepth)
+      .groupBy(col("source")).agg(sum(weight).as("h"))
+      .select(col("source").cast("long").as("node"), col("h"))
   }
 
   // --------------------------------------------------------- HyperBall
@@ -223,20 +177,10 @@ object Centrality {
     * deterministic fold is the engine-wide ord-order summation rule.
     * The only driver-held values are n, s and the sampled source list
     * (all O(log n)). */
-  def approxHarmonic(spark: SparkSession, edges: DataFrame,
+  def approxHarmonic(spark: SparkSession, edges: Webgraph.Edges,
                      maxDist: Int = 7, epsilon: Double = ApproxEpsilon,
                      seed: String = "ah"): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-      .where(col("src") =!= col("dst")).distinct().localCheckpoint()
-    approxHarmonicPrepped(spark, e, maxDist, epsilon, seed)
-  }
-
-  /** [[approxHarmonic]] over an already-prepped (distinct, deloop'd,
-    * checkpointed) edge table — see [[harmonicExactPrepped]]. */
-  def approxHarmonicPrepped(spark: SparkSession, e: DataFrame,
-                            maxDist: Int = 7,
-                            epsilon: Double = ApproxEpsilon,
-                            seed: String = "ah"): DataFrame = {
+    val e = edges.df
     val nEst = math.max(2L,
       e.select(col("src").as("n")).union(e.select(col("dst").as("n")))
         .agg(approx_count_distinct(col("n"), 0.023)).head().getLong(0))
@@ -249,10 +193,7 @@ object Centrality {
     // otherwise deflate every score by the shortfall factor
     val sActual = math.max(1L, sampled.count())
     val norm = nEst.toDouble / (sActual.toDouble * (nEst.toDouble - 1.0))
-    // e is already distinct, deloop'd and checkpointed above — use the
-    // prepped entry so the BFS does not repeat that shuffle
-    Webgraph.multiSourceDistancesPrepped(
-      e.select(col("src").as("from"), col("dst").as("to")), sampled, maxDist)
+    Webgraph.multiSourceDistances(edges, sampled, maxDist)
       .where(col("dist") > 0) // dist 0 rows are the sources themselves
       .groupBy(col("node"))
       .agg(aggregate(
@@ -294,109 +235,68 @@ object Centrality {
     * State is O(Σ ball sizes) rows, shuffles keyed by (source, node) —
     * sampled `sources` keep that linear in the sample size at 100 TB;
     * passing every node is the small-graph exact mode. */
-  /** The n(n−1) normalization silently becomes 0/0 (NaN) or ∞ with a
-    * single source — a plausible degenerate call under the sampled-
-    * source API — so every betweenness entry fails loudly instead. */
-  private def requireSources(nSources: Long): Unit =
-    require(nSources >= 2,
-      s"betweenness needs >= 2 distinct sources (got $nSources): " +
-        "the n(n-1) normalization is degenerate")
-
-  def betweenness(spark: SparkSession, edges: DataFrame,
-                  sources: DataFrame, maxDepth: Int = 8): DataFrame = {
-    val e = prepBetweennessEdges(edges)
-    val src = prepBetweennessSources(sources)
-    val nSources = src.count()
-    requireSources(nSources)
-    val sh = sigmaForwardShells(e, src, maxDepth)
-    brandesBackward(spark, e, sh, nSources)
-  }
-
-  /** Distinct (from, to) edges, checkpointed; BROADCAST-hinted under
-    * the same size guard as [[harmonicExact]]. The checkpointed
-    * LogicalRDD carries no Catalyst stats, so without the hint every
-    * BFS round and every backward level pays a full shuffle join
-    * against a relation Spark cannot see is small; the count is a
-    * cached-block scan, and an over-threshold graph degrades to the
-    * shuffle join rather than OOMing executors on a re-broadcast per
-    * round. Sums on both sides of the hint are integer or
-    * sorted-fold, so the join strategy cannot change any result. */
-  private[graft] def prepBetweennessEdges(
-      edges: DataFrame,
-      broadcastMaxEdges: Long = ExactBroadcastMaxEdges): DataFrame = {
-    val e0 = edges.select(col("src").as("from"), col("dst").as("to"))
-      .where(col("from") =!= col("to")).distinct().localCheckpoint()
-    if (e0.count() <= broadcastMaxEdges) broadcast(e0) else e0
-  }
-
-  private[graft] def prepBetweennessSources(sources: DataFrame): DataFrame = {
-    val srcCol = sources.columns.head
-    sources.select(col(srcCol).as("s")).distinct().localCheckpoint()
-  }
+  def betweenness(spark: SparkSession, edges: Webgraph.Edges,
+                  sources: DataFrame, maxDepth: Int = 8): DataFrame =
+    brandesBackward(edges, brandesForward(edges, sources, maxDepth))
 
   /** Forward-pass result: checkpointed BFS shells (one per level,
     * level = index) with their row counts. Counts come for free from
     * the per-round emptiness probe and drive every downstream
-    * broadcast decision without extra count() jobs. */
+    * broadcast decision without extra count() jobs; level 0 holds one
+    * row per distinct source. */
   private[graft] final case class SigmaShells(shells: IndexedSeq[DataFrame],
                                               counts: IndexedSeq[Long]) {
     def dMax: Int = shells.length - 1
     def all: DataFrame = shells.reduce(_ union _)
     def totalRows: Long = counts.sum
+    def nSources: Long = counts(0)
   }
 
-  /** Forward pass: shells of (s, v, d, sigma) rows, sigma = number of
-    * shortest s→v paths, grown one BFS level per round with a single
-    * integer-sum aggregate; returns the table and the deepest level
-    * actually reached. */
-  private[graft] def sigmaForward(e: DataFrame, src: DataFrame,
-                                  maxDepth: Int): (DataFrame, Int) = {
-    val sh = sigmaForwardShells(e, src, maxDepth)
-    (sh.all, sh.dMax)
-  }
-
-  /** As [[sigmaForward]], but keeps the per-level shells and counts.
-    * The visited anti-join's right side broadcasts while the running
-    * pair table stays under [[BackwardBroadcastMaxRows]] (the per-round
-    * emptiness probe doubles as the row count, so the guard costs no
-    * extra job); an over-threshold ball degrades to the scale-safe
-    * shuffle join. Sigma is an exact integer sum, so join strategy
-    * cannot change any value. */
-  private[graft] def sigmaForwardShells(e: DataFrame, src: DataFrame,
-                                        maxDepth: Int): SigmaShells = {
+  /** Brandes' forward pass: shells of (s, v, d, sigma) rows, sigma =
+    * the number of shortest s→v paths, grown one BFS level per round
+    * with a single integer-sum aggregate. `sources` is a one-column
+    * frame of start nodes.
+    *
+    * This is the only frontier loop besides
+    * [[Webgraph.multiSourceDistances]], because it carries path COUNTS:
+    * sigma grows exponentially with depth on dense graphs, and under
+    * Spark's default ANSI mode a long `sum` throws on overflow, so a
+    * plain distance query must never ride it.
+    *
+    * The n(n−1) normalization silently becomes 0/0 (NaN) or ∞ with a
+    * single source — a plausible degenerate call under the sampled-
+    * source API — so every betweenness entry fails loudly instead. */
+  private[graft] def brandesForward(edges: Webgraph.Edges, sources: DataFrame,
+                                    maxDepth: Int): SigmaShells = {
     require(maxDepth >= 1 && maxDepth <= 255, "dist is a u8-class cap")
-    val level0 = src.select(col("s"), col("s").as("v"), lit(0).as("d"),
-      lit(1L).as("sigma")).localCheckpoint()
+    val e = edges.joinSide
+    val srcCol = sources.columns.head
+    val level0 = sources.select(col(srcCol).as("s")).distinct()
+      .select(col("s"), col("s").as("v"), lit(0).as("d"), lit(1L).as("sigma"))
+      .localCheckpoint()
+    val nSources = level0.count()
+    require(nSources >= 2,
+      s"betweenness needs >= 2 distinct sources (got $nSources): " +
+        "the n(n-1) normalization is degenerate")
     val shells = scala.collection.mutable.ArrayBuffer(level0)
-    val counts = scala.collection.mutable.ArrayBuffer(level0.count())
+    val counts = scala.collection.mutable.ArrayBuffer(nSources)
     var all = level0
-    var allRows = counts(0)
     var frontier = level0
     var d = 1
     var exhausted = false
     while (d <= maxDepth && !exhausted) {
-      val visitedKeys0 = all.select(col("s"), col("v").as("w"))
-      val visitedKeys = if (allRows <= BackwardBroadcastMaxRows)
-        broadcast(visitedKeys0) else visitedKeys0
-      val cand = frontier.join(e, frontier("v") === e("from"))
-        .groupBy(col("s"), col("to").as("w"))
+      val next = frontier.join(e, frontier("v") === e("src"))
+        .groupBy(col("s"), col("dst").as("w"))
         .agg(sum(col("sigma")).as("sigma"))
-      val next = cand
-        .join(visitedKeys, Seq("s", "w"), "left_anti")
+        .join(Webgraph.hinted(all.select(col("s"), col("v").as("w")), counts.sum),
+          Seq("s", "w"), "left_anti")
         .select(col("s"), col("w").as("v"), lit(d).as("d"), col("sigma"))
         .localCheckpoint()
       val n = next.count()
       if (n == 0L) exhausted = true
       else {
-        // next is checkpointed, so the running union is a flat plan of
-        // materialized shells — re-checkpointing it would cost a job
-        // per round for nothing (it is only ever scanned, its lineage
-        // is already truncated at every leaf). At DEEP caps the flat
-        // union still accumulates O(d) leaves per round (O(d²) total
-        // Catalyst work), so a periodic re-checkpoint bounds it.
         all = all.union(next)
-        if (d % 32 == 0) all = all.localCheckpoint()
-        allRows += n
+        if (d % Webgraph.RecheckpointEvery == 0) all = all.localCheckpoint()
         shells += next
         counts += n
         frontier = next
@@ -408,7 +308,8 @@ object Centrality {
 
   /** Per-level delta tables at or under this many rows broadcast into
     * the backward-pass outer join (~24 B/row → ~100 MB at this cap);
-    * larger levels keep the shuffle join. */
+    * larger levels keep the shuffle join. [[Webgraph.hinted]] applies
+    * the same cap to every row-sized side of the graph operators. */
   final val BackwardBroadcastMaxRows: Long = 4L * 1000 * 1000
 
   /** Backward pass: dependency accumulation level by level, then the
@@ -418,18 +319,17 @@ object Centrality {
     * table into the contribution join, per-level contribs back onto
     * the shell) is guarded without any count() probe jobs; floats fold
     * in pinned order, so join strategy cannot change any value. */
-  private[graft] def brandesBackward(spark: SparkSession, e: DataFrame,
-                              sh: SigmaShells, nSources: Long): DataFrame = {
+  private[graft] def brandesBackward(edges: Webgraph.Edges,
+                                     sh: SigmaShells): DataFrame = {
+    import Webgraph.hinted
+    val e = edges.joinSide
     val dMax = sh.dMax
-    def hinted(df: DataFrame, rows: Long): DataFrame =
-      if (rows <= BackwardBroadcastMaxRows) broadcast(df) else df
     // delta rows for the current level+1 (leaves start at 0 implicitly).
     // A projection of an already-checkpointed shell — no checkpoint of
     // its own needed.
     var deltaNext = sh.shells(dMax)
       .select(col("s"), col("v"), lit(0.0).as("delta"))
     var deltaRows = sh.counts(dMax)
-    val sess = spark
     // per-level gains stay as references to their (checkpointed)
     // deltaNext parents and union flat at the end — checkpointing the
     // running accumulator per level bought nothing but a job per round
@@ -447,9 +347,9 @@ object Centrality {
       // cur and succ both descend from the shells' lineage: aliased
       // sides keep the join keys explicit instead of leaving Spark to
       // rewrite a `s = s` self-join condition
-      val contribs = cur.as("cur").join(e.as("e"), col("cur.v") === col("e.from"))
+      val contribs = cur.as("cur").join(e.as("e"), col("cur.v") === col("e.src"))
         .join(hinted(succ.as("succ"), sh.counts(lvl + 1)),
-          col("cur.s") === col("succ.s") && col("e.to") === col("succ.w"))
+          col("cur.s") === col("succ.s") && col("e.dst") === col("succ.w"))
         .select(col("cur.s").as("s"), col("cur.v").as("v"),
           struct(col("succ.w").as("w"),
             ((col("cur.sigma").cast("double") / col("succ.sigma_w").cast("double")) *
@@ -475,21 +375,20 @@ object Centrality {
       gains ::= deltaNext.where(col("v") =!= col("s") && col("delta") =!= 0.0)
       lvl -= 1
     }
-    val norm = nSources.toDouble * (nSources.toDouble - 1.0)
-    val summed =
-      if (gains.isEmpty) sess.emptyDataFrame
-      else gains.reduce(_ union _).groupBy(col("v"))
+    val everyNode = sh.all.select(col("v")).distinct()
+    if (gains.isEmpty)
+      everyNode.select(col("v").as("node"), lit(0.0).as("bc"))
+    else {
+      val norm = sh.nSources.toDouble * (sh.nSources.toDouble - 1.0)
+      val summed = gains.reduce(_ union _).groupBy(col("v"))
         .agg((aggregate(
           array_sort(collect_list(struct(col("s"), col("delta")))),
           lit(0.0), (a, x) => a + x.getField("delta")) / lit(norm))
           .as("bc"))
-    val everyNode = sh.all.select(col("v")).distinct()
-    if (gains.isEmpty)
-      everyNode.select(col("v").as("node"), lit(0.0).as("bc"))
-    else
       everyNode.join(hinted(summed, sh.totalRows), Seq("v"), "left_outer")
         .select(col("v").as("node"),
           coalesce(col("bc"), lit(0.0)).as("bc"))
+    }
   }
 
   /** Shortest-path pair table for the pair-dependency identity —
@@ -501,47 +400,31 @@ object Centrality {
     * spc(v) = Σ σ_sv·σ_vt is an integer a SQL oracle reproduces
     * hash-exactly; the float quotient sum folds in (s,t) order. Output:
     * (node, spc, bc_formula) for every node in the BFS table. */
-  def betweennessPairDependency(spark: SparkSession, edges: DataFrame,
+  def betweennessPairDependency(spark: SparkSession, edges: Webgraph.Edges,
                                 sources: DataFrame,
-                                maxDepth: Int = 8): DataFrame = {
-    val e = prepBetweennessEdges(edges)
-    val src = prepBetweennessSources(sources)
-    val nSources = src.count()
-    requireSources(nSources)
-    val sh = sigmaForwardShells(e, src, maxDepth)
-    pairDependencyFrom(sh.all, nSources, sh.totalRows)
-  }
+                                maxDepth: Int = 8): DataFrame =
+    pairDependencyFrom(brandesForward(edges, sources, maxDepth))
 
   /** Both sides from ONE forward pass: (node, spc, bc, bc_formula) —
     * the Brandes back-propagated score next to the pair-dependency
     * identity value and integer path count. The driver face uses this
     * so the shared sigma table is computed once, not twice. */
-  def betweennessChecked(spark: SparkSession, edges: DataFrame,
+  def betweennessChecked(spark: SparkSession, edges: Webgraph.Edges,
                          sources: DataFrame, maxDepth: Int = 8): DataFrame = {
-    val e = prepBetweennessEdges(edges)
-    val src = prepBetweennessSources(sources)
-    val nSources = src.count()
-    requireSources(nSources)
-    val sh = sigmaForwardShells(e, src, maxDepth)
-    val bc = brandesBackward(spark, e, sh, nSources)
-    val pd = pairDependencyFrom(sh.all, nSources, sh.totalRows)
+    val sh = brandesForward(edges, sources, maxDepth)
     // both sides are one row per reached node (≤ totalRows)
-    if (sh.totalRows <= BackwardBroadcastMaxRows)
-      bc.join(broadcast(pd), Seq("node"))
-    else bc.join(pd, Seq("node"))
+    brandesBackward(edges, sh)
+      .join(Webgraph.hinted(pairDependencyFrom(sh), sh.totalRows), Seq("node"))
   }
 
-  /** `allRows`, when known, enables broadcast hints on the small side
-    * of every join (the pair table itself and the per-(s,t) sigma
-    * lookup); 0 (unknown) keeps the stats-free shuffle joins. Sums are
-    * exact integers or pinned-order folds — strategy cannot change
-    * results. */
-  private[graft] def pairDependencyFrom(all: DataFrame, nSources: Long,
-                                 allRows: Long = 0L): DataFrame = {
-    def hinted(df: DataFrame): DataFrame =
-      if (allRows > 0L && allRows <= BackwardBroadcastMaxRows) broadcast(df)
-      else df
-    val sp = all
+  /** The pair table's small sides (the shells themselves and the
+    * per-(s,t) sigma lookup) broadcast under the shells' row count.
+    * Sums are exact integers or pinned-order folds — strategy cannot
+    * change results. */
+  private[graft] def pairDependencyFrom(sh: SigmaShells): DataFrame = {
+    import Webgraph.hinted
+    val rows = sh.totalRows
+    val sp = sh.all
     val a = sp.select(col("s"), col("v"), col("d").as("dsv"),
       col("sigma").as("ssv")).where(col("s") =!= col("v"))
     val b = sp.select(col("s").as("v"), col("v").as("t"),
@@ -549,11 +432,11 @@ object Centrality {
       .where(col("v") =!= col("t"))
     val st = sp.select(col("s"), col("v").as("t"), col("d").as("dst"),
       col("sigma").as("sst"))
-    val through = a.join(hinted(b), Seq("v"))
+    val through = a.join(hinted(b, rows), Seq("v"))
       .where(col("s") =!= col("t"))
-      .join(hinted(st), Seq("s", "t"))
+      .join(hinted(st, rows), Seq("s", "t"))
       .where(col("dsv") + col("dvt") === col("dst"))
-    val norm = nSources.toDouble * (nSources.toDouble - 1.0)
+    val norm = sh.nSources.toDouble * (sh.nSources.toDouble - 1.0)
     val scored = through
       .select(col("v"),
         (col("ssv") * col("svt")).as("spc_part"),
@@ -565,7 +448,7 @@ object Centrality {
         (aggregate(array_sort(collect_list(col("stq"))), lit(0.0),
           (acc2, x) => acc2 + x.getField("q")) / lit(norm)).as("bc_formula"))
     sp.select(col("v")).distinct()
-      .join(hinted(scored), Seq("v"), "left_outer")
+      .join(hinted(scored, rows), Seq("v"), "left_outer")
       .select(col("v").as("node"),
         coalesce(col("spc"), lit(0L)).as("spc"),
         coalesce(col("bc_formula"), lit(0.0)).as("bc_formula"))
@@ -577,27 +460,18 @@ object Centrality {
     * x→v imply u ∈ B(v, t)), destinations reduce by elementwise max,
     * and the harmonic accumulator adds (est_t - est_{t-1})/t clamped
     * at 0. */
-  def harmonicHyperBall(spark: SparkSession, edges: DataFrame,
+  def harmonicHyperBall(spark: SparkSession, edges: Webgraph.Edges,
                         maxDepth: Int): Dataset[BallState] = {
-    val e0 = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .where(col("src") =!= col("dst")).distinct()
-      .localCheckpoint()
-    harmonicHyperBallPrepped(spark, e0, e0.count(), maxDepth)
-  }
-
-  /** [[harmonicHyperBall]] over an already-prepped edge table with its
-    * row count — see [[harmonicExactPrepped]]. */
-  def harmonicHyperBallPrepped(spark: SparkSession, eDf: DataFrame,
-                               eCnt: Long, maxDepth: Int): Dataset[BallState] = {
     import spark.implicits._
-    val e0 = eDf.as[(Long, Long)]
-    // small-graph fast path: broadcast the 16 B/row edge list into the
-    // per-round sketch-shipping join and the ≈300 B/row merged-sketch
-    // table into the per-round outer join (register max-merge is
-    // commutative/associative, so join strategy cannot change a
-    // sketch); counts are cached-block scans. Over-threshold graphs
-    // keep the scale-safe shuffle joins — HyperBall's 100 TB shape.
-    val e = if (eCnt <= ExactBroadcastMaxEdges) broadcast(e0) else e0
+    def typed(df: DataFrame): Dataset[(Long, Long)] =
+      df.select(col("src").cast("long"), col("dst").cast("long")).as[(Long, Long)]
+    val e0 = typed(edges.df)
+    // the edge list broadcasts under the edges' guard and the ≈300 B/row
+    // merged-sketch table under a node-count guard (register max-merge
+    // is commutative/associative, so join strategy cannot change a
+    // sketch). Over-threshold graphs keep the scale-safe shuffle joins
+    // — HyperBall's 100 TB shape.
+    val e = typed(edges.joinSide)
     val nodes = e0.map(_._1).union(e0.map(_._2)).distinct().localCheckpoint()
     val tinySketch = nodes.count() <= 200000L
     // prevEst seeds with the ESTIMATOR's view of the singleton ball,

@@ -51,91 +51,114 @@ object Webgraph {
       .select(col("dst"), grp.as("grp"), col("src"), col("rank"))
   }
 
+  /** A graph's edge table prepared ONCE for every graph operator
+    * (distances, exact / sampled / HyperBall harmonic centrality,
+    * betweenness): (src, dst) with self-loops dropped and duplicates
+    * removed, localCheckpointed and counted. Node columns keep their
+    * input type.
+    *
+    * [[joinSide]] is the frame for a per-round join: broadcast at or
+    * under `broadcastMaxEdges` rows. The checkpointed LogicalRDD carries
+    * no Catalyst stats, so without the hint every round would pay a
+    * shuffle join against a relation Spark cannot see is small; over
+    * the guard a big graph degrades to the slower shuffle join instead
+    * of re-broadcasting the edge table every round. Every sum on either
+    * side of the hint is an exact integer or a pinned-order fold, so
+    * the join strategy cannot change a result (`broadcastMaxEdges = 0`
+    * forces the shuffle path). */
+  final class Edges private (val df: DataFrame, count: Long,
+                             broadcastMaxEdges: Long) {
+    def joinSide: DataFrame =
+      if (count <= broadcastMaxEdges) broadcast(df) else df
+
+    /** The same edges walked backwards (inbound links). */
+    def reversed: Edges = new Edges(
+      df.select(col("dst").as("src"), col("src").as("dst")), count,
+      broadcastMaxEdges)
+  }
+
+  object Edges {
+    def apply(edges: DataFrame,
+              broadcastMaxEdges: Long = Centrality.ExactBroadcastMaxEdges): Edges = {
+      val e = edges.select(col("src"), col("dst"))
+        .where(col("src") =!= col("dst")).distinct().localCheckpoint()
+      // the checkpoint materialized e: the count is a cached-block scan
+      new Edges(e, e.count(), broadcastMaxEdges)
+    }
+  }
+
+  /** The one broadcast guard of the graph operators' row-sized sides
+    * (visited pairs, BFS shells, per-node results): broadcast at or
+    * under [[Centrality.BackwardBroadcastMaxRows]] rows, else keep the
+    * scale-safe shuffle join. `rows` always comes from a count the
+    * caller already holds, never from a probe job. */
+  private[graft] def hinted(df: DataFrame, rows: Long): DataFrame =
+    if (rows <= Centrality.BackwardBroadcastMaxRows) broadcast(df) else df
+
+  /** Rounds between re-checkpoints of a BFS's running union of shells.
+    * Each shell is checkpointed, so the union is a flat plan over
+    * materialized leaves, but it still grows by one leaf per round:
+    * O(d^2) Catalyst work at deep caps unless periodically truncated. */
+  private[graft] final val RecheckpointEvery = 32
+
   /** BFS shortest-path distances from `source` over the repo graph —
     * the reference's webgraph distance queries
     * (crates/core/src/webgraph/shortest_path.rs: `dijkstra_multi` with
     * unit edge cost = breadth-first levels, `raw_distances_with_max`
     * caps the depth, the `reversed` variants walk inbound edges).
-    * Returns (repo, dist) with dist = minimum hop count, source at 0.
-    *
-    * Scale shape: each round is one frontier⋈edges join (src-keyed
-    * shuffle) plus an anti-join against the visited set — no driver
-    * state beyond the loop counter; rounds are bounded by `maxDist`
-    * (the reference caps at u8 too). Per-round lineage is
-    * localCheckpoint-truncated — the iterative-Catalyst trap. */
-  def distances(edges: DataFrame, source: String, maxDist: Int,
+    * Returns (repo, dist) with dist = minimum hop count, source at 0. */
+  def distances(edges: Edges, source: String, maxDist: Int,
                 reversed: Boolean = false): DataFrame = {
-    val e = if (reversed) edges.select(col("dst").as("src"), col("src").as("dst"))
-            else edges.select(col("src"), col("dst"))
-    val src = edges.sparkSession.range(1).select(lit(source).as("source"))
-    multiSourceDistances(e, src, maxDist)
+    val src = edges.df.sparkSession.range(1).select(lit(source).as("source"))
+    multiSourceDistances(if (reversed) edges.reversed else edges, src, maxDist)
       .select(col("node").as("repo"), col("dist"))
   }
 
-  /** Multi-source capped BFS — the shared core under [[distances]] and
-    * ops.Centrality's sampled-source jobs (approx harmonic,
-    * betweenness). `sources` is a one-column frame of start nodes (any
-    * node type; the reference's `raw_distances_with_max` is the
-    * single-source form, shortest_path.rs). Returns
-    * (source, node, dist) with dist = min hop count, each source at 0.
+  /** Multi-source capped BFS — the one distance BFS under
+    * [[distances]] and ops.Centrality's exact (every node a source,
+    * reversed edges) and sampled-source harmonic jobs. `sources` is a
+    * one-column frame of start nodes (the reference's
+    * `raw_distances_with_max` is the single-source form,
+    * shortest_path.rs). Returns (source, node, dist) with dist = min
+    * hop count, each source at 0.
     *
     * Scale shape: all sources advance in ONE frontier — each round is a
-    * single frontier⋈edges join (shuffle keyed by the frontier node)
-    * plus an anti-join against the visited (source, node) pairs, so s
-    * sources cost one job sequence, not s of them. State is
-    * O(Σ ball sizes) rows — the same product the reference materializes
-    * per source, sharded instead of driver-held. Per-round lineage is
-    * localCheckpoint-truncated (the iterative-Catalyst trap). */
-  def multiSourceDistances(edges: DataFrame, sources: DataFrame,
-                           maxDist: Int): DataFrame =
-    multiSourceDistancesPrepped(
-      edges.select(col("src").as("from"), col("dst").as("to"))
-        .where(col("from") =!= col("to")).distinct().localCheckpoint(),
-      sources, maxDist)
-
-  /** [[multiSourceDistances]] over edges a caller has ALREADY
-    * deduplicated/deloop'd and checkpointed as (from, to) — callers
-    * that hold such a frame (approxHarmonic) skip a redundant distinct
-    * shuffle + materialization per invocation. */
-  private[graft] def multiSourceDistancesPrepped(e: DataFrame,
-                                                 sources: DataFrame,
-                                                 maxDist: Int): DataFrame = {
+    * single frontier⋈edges join (the edges' [[Edges.joinSide]]) plus an
+    * anti-join against the visited (source, node) pairs, so s sources
+    * cost one job sequence, not s of them. State is O(Σ ball sizes)
+    * rows — the same product the reference materializes per source,
+    * sharded instead of driver-held. Each round's shell is
+    * localCheckpointed: without that truncation the d-th round's plan
+    * nests every earlier round and Catalyst time grows superlinearly
+    * with depth. */
+  def multiSourceDistances(edges: Edges, sources: DataFrame,
+                           maxDist: Int): DataFrame = {
     require(maxDist >= 0 && maxDist <= 255, "dist is a u8 in the reference")
+    val e = edges.joinSide
     val srcCol = sources.columns.head
     var visited = sources
       .select(col(srcCol).as("source"), col(srcCol).as("node"),
         lit(0L).as("dist"))
       .distinct().localCheckpoint()
-    // the emptiness probe per round doubles as the row count, so the
-    // anti-join's visited side gets a size-guarded broadcast hint for
-    // free (stats-free checkpointed frames otherwise force a two-sided
-    // shuffle join every round); dist is an exact integer — join
-    // strategy cannot change any value. Over-threshold ball state
-    // degrades to the scale-safe shuffle join.
+    // the emptiness probe per round doubles as the row count that
+    // guards the anti-join's visited-side broadcast
     var visRows = visited.count()
     var frontier = visited.select("source", "node")
     var d = 1
     var exhausted = false
     while (d <= maxDist && !exhausted) {
-      val vk0 = visited.select("source", "node")
-      val vk = if (visRows <= Centrality.BackwardBroadcastMaxRows)
-        broadcast(vk0) else vk0
-      val next = frontier.join(e, frontier("node") === e("from"))
-        .select(col("source"), col("to").as("node")).distinct()
-        .join(vk, Seq("source", "node"), "left_anti")
+      val next = frontier.join(e, frontier("node") === e("src"))
+        .select(col("source"), col("dst").as("node")).distinct()
+        .join(hinted(visited.select("source", "node"), visRows),
+          Seq("source", "node"), "left_anti")
         .localCheckpoint()
       val n = next.count()
       if (n == 0L) exhausted = true
       else {
-        // next is checkpointed, so the running union of shells stays a
-        // flat plan over materialized leaves — re-checkpointing it per
-        // round costs a job and buys no lineage truncation; at DEEP
-        // caps the O(d) leaves per round still cost O(d²) Catalyst
-        // work, so a periodic re-checkpoint bounds it
         visited = visited
           .union(next.select(col("source"), col("node"),
             lit(d.toLong).as("dist")))
-        if (d % 32 == 0) visited = visited.localCheckpoint()
+        if (d % RecheckpointEvery == 0) visited = visited.localCheckpoint()
         visRows += n
         frontier = next
       }
@@ -185,8 +208,6 @@ object Webgraph {
     // join strategy cannot change results; an over-threshold graph
     // keeps the shuffle joins
     val eCnt = e.count()
-    def hinted(df: DataFrame): DataFrame =
-      if (eCnt <= Centrality.BackwardBroadcastMaxRows) broadcast(df) else df
     val back = e.where(col("dst").isin(liked: _*)).select("src").distinct()
     val nBack = back.count()
     val votes = e.join(broadcast(back), Seq("src"))
@@ -213,8 +234,8 @@ object Webgraph {
         case (acc, (r, i)) => acc.when(col("l") === r, lit(i))
       }
     val sims = inter
-      .join(hinted(deg.select(col("dst").as("l"), col("deg").as("dl"))), Seq("l"))
-      .join(hinted(deg.select(col("dst").as("c"), col("deg").as("dc"))), Seq("c"))
+      .join(hinted(deg.select(col("dst").as("l"), col("deg").as("dl")), eCnt), Seq("l"))
+      .join(hinted(deg.select(col("dst").as("c"), col("deg").as("dc")), eCnt), Seq("c"))
       .select(col("c"), liCol.as("li"),
         (col("inter").cast("double") /
           (sqrt(col("dl").cast("double")) * sqrt(col("dc").cast("double"))))
@@ -225,7 +246,7 @@ object Webgraph {
         lit(0.0), (acc, x) => acc + x.getField("sim")).as("ssum"))
     // zero-overlap candidates still rank (score 0.0), like the
     // reference's scored_nodes over every potential node
-    cand.join(hinted(scored), cand("cand") === scored("c"), "left_outer")
+    cand.join(hinted(scored, eCnt), cand("cand") === scored("c"), "left_outer")
       .select(col("cand").as("repo"),
         greatest(lit(0.0),
           coalesce(col("ssum"), lit(0.0)) / lit(liked.size.toDouble))

@@ -36,7 +36,7 @@ class AutosuggestSpec extends AnyFunSuite {
         "merge sort meets hash join. hash join wins sometimes."),
       SourceDoc("r3", "c.md", "c", "en",
         "hash join beats nested loops badly. nested loops crawl."))
-    val dir = java.nio.file.Files.createTempDirectory("graftsug").toString
+    val dir = TestDirs("graftsug")
     IndexBuilder.build(spark, corpus.toDS(), dir,
       IndexBuilder.Config(numSegments = 2, indexKeyPhrases = true))
     val idx = new InvertedIndex(spark, dir)

@@ -13,7 +13,7 @@ class BooleanSpec extends AnyFunSuite {
 
   private lazy val corpus = Corpus.generate(spark, 400, seed = 21L).cache()
   private lazy val index = {
-    val d = java.nio.file.Files.createTempDirectory("graftbool").toString
+    val d = TestDirs("graftbool")
     IndexBuilder.build(spark, corpus, d, IndexBuilder.Config(numSegments = 3))
     new InvertedIndex(spark, d)
   }

@@ -29,7 +29,7 @@ class CandidateBudgetSpec extends AnyFunSuite {
     val corpus = Corpus.generate(spark, 300, seed = 31L).cache()
     val budget = InvertedIndex.candidateBudget(10)
     def pools(nseg: Int): (Array[Float], Int) = {
-      val d = java.nio.file.Files.createTempDirectory(s"graftcb$nseg").toString
+      val d = TestDirs(s"graftcb$nseg")
       IndexBuilder.build(spark, corpus, d, IndexBuilder.Config(
         numSegments = nseg, indexStemmed = true, indexBigrams = true))
       val idx = new InvertedIndex(spark, d)

@@ -80,7 +80,7 @@ class CollectorSpec extends AnyFunSuite {
       graft.index.SourceDoc(s"org$i", s"src/lib$i.rs", "c1", "rust",
         s"needle needle other$i content " + ("pad " * 40))
     }
-    val dir = java.nio.file.Files.createTempDirectory("graftbc").toString
+    val dir = TestDirs("graftbc")
     IndexBuilder.build(spark, spark.createDataset(docs), dir,
       IndexBuilder.Config(numSegments = 2, computeSimhash = true))
     val idx = new InvertedIndex(spark, dir)

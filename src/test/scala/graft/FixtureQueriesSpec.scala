@@ -11,7 +11,7 @@ class FixtureQueriesSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
 
   private lazy val index = {
-    val d = java.nio.file.Files.createTempDirectory("graftfx").toString
+    val d = TestDirs("graftfx")
     IndexBuilder.build(spark, Corpus.generate(spark, 600, seed = 42L), d,
       IndexBuilder.Config(numSegments = 4, indexStemmed = true, indexBigrams = true))
     new InvertedIndex(spark, d)

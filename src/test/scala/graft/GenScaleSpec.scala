@@ -12,7 +12,7 @@ class GenScaleSpec extends AnyFunSuite {
 
   private val in = "/root/testdata/sf0.001"
   private lazy val out: String = {
-    val dir = java.nio.file.Files.createTempDirectory("genscale").toString
+    val dir = TestDirs("genscale")
     GenScale.generate(spark, in, dir, 3)
     dir
   }
@@ -73,7 +73,7 @@ class GenScaleSpec extends AnyFunSuite {
   }
 
   test("generation is deterministic: same input and factor give identical content") {
-    val dir2 = java.nio.file.Files.createTempDirectory("genscale2").toString
+    val dir2 = TestDirs("genscale2")
     GenScale.generate(spark, in, dir2, 3)
     Seq("documents", "lineitem").foreach { tbl =>
       val a = st(tbl)

@@ -12,7 +12,7 @@ class GrammarSpec extends AnyFunSuite {
 
   private lazy val corpus = Corpus.generate(spark, 400, seed = 33L).cache()
   private lazy val index = {
-    val d = java.nio.file.Files.createTempDirectory("graftgr").toString
+    val d = TestDirs("graftgr")
     IndexBuilder.build(spark, corpus, d,
       IndexBuilder.Config(numSegments = 3, indexMeta = true))
     new InvertedIndex(spark, d)
@@ -57,7 +57,7 @@ class GrammarSpec extends AnyFunSuite {
         """{"k": 7, "tags": {"env": "prod"}}"""),
       SourceDoc("r3", "c.md", "c", "en", "gamma text here",
         """{"k": 5, "tags": {"env": "dev"}}"""))
-    val dir = java.nio.file.Files.createTempDirectory("graftjs").toString
+    val dir = TestDirs("graftjs")
     IndexBuilder.build(spark, spark.createDataset(docs), dir,
       IndexBuilder.Config(numSegments = 1, indexJson = true))
     val idx = new InvertedIndex(spark, dir)
@@ -80,7 +80,7 @@ class GrammarSpec extends AnyFunSuite {
         links = Seq("libfoo")),
       SourceDoc("app-c", "main.rs", "c", "rust", "gamma standalone parser",
         links = Seq.empty))
-    val dir = java.nio.file.Files.createTempDirectory("graftlk").toString
+    val dir = TestDirs("graftlk")
     IndexBuilder.build(spark, spark.createDataset(docs), dir,
       IndexBuilder.Config(numSegments = 1, indexLinks = true))
     val idx = new InvertedIndex(spark, dir)
@@ -110,7 +110,7 @@ class GrammarSpec extends AnyFunSuite {
       SourceDoc("g2", "b.md", "c", "en", good + " table extra"),
       SourceDoc("b1", "c.md", "c", "en", bad + " table"),
       SourceDoc("b2", "d.md", "c", "en", "tiny table"))  // < 5 tokens
-    val dir = java.nio.file.Files.createTempDirectory("graftsafe").toString
+    val dir = TestDirs("graftsafe")
     IndexBuilder.build(spark, spark.createDataset(docs), dir,
       IndexBuilder.Config(numSegments = 1, indexQuality = true, indexMeta = true))
     val idx = new InvertedIndex(spark, dir)

@@ -24,6 +24,22 @@ object SparkTestSession {
   }
 }
 
+/** Temp dirs for the specs' indexes and checkpoints. Each is deleted,
+  * recursively, when the forked test JVM exits: File.deleteOnExit
+  * cannot remove a non-empty directory. */
+object TestDirs {
+  private val made = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+  Runtime.getRuntime.addShutdownHook(new Thread(() =>
+    made.forEach(d => IndexBuilder.deleteRecursively(d))))
+
+  /** A new empty dir named `prefix…` under the system temp dir. */
+  def apply(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    made.add(d)
+    d.getAbsolutePath
+  }
+}
+
 /** End-to-end: corpus -> segmented index -> BM25 top-k, verified three
   * ways (SURVEY.md §7.2): WAND == exhaustive oracle, scores == the
   * relational (join/agg) BM25 computed from raw tokens, and per-row
@@ -31,11 +47,7 @@ object SparkTestSession {
 class IndexPipelineSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
 
-  private def tmpDir(): String = {
-    val d = java.nio.file.Files.createTempDirectory("graftidx").toFile
-    d.deleteOnExit()
-    d.getAbsolutePath
-  }
+  private def tmpDir(): String = TestDirs("graftidx")
 
   private lazy val corpus = Corpus.generate(spark, 800, seed = 42L, partitions = 7).cache()
 

@@ -14,9 +14,6 @@ import graft.streaming.LiveIndex
 class IndexTableSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
 
-  private def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   // fills positions, meta terms, both shadow fieldnorms, simhash and grank
   private val cfg = IndexBuilder.Config(numSegments = 3, recordPositions = true,
     indexMeta = true, indexBigrams = true, indexTrigrams = true,
@@ -57,7 +54,7 @@ class IndexTableSpec extends AnyFunSuite {
 
   test("declared-schema reads == inferred-schema reads: built, live and merged indexes") {
     import spark.implicits._
-    val built = tmpDir("graftdeclbuilt")
+    val built = TestDirs("graftdeclbuilt")
     IndexBuilder.build(spark, Corpus.generate(spark, 300, seed = 5L), built, cfg)
     val bi = new InvertedIndex(spark, built)
     assert(bi.fnorms.map(_.chunk >> Fields.FnormFieldShift).distinct().count() == 3,
@@ -66,7 +63,7 @@ class IndexTableSpec extends AnyFunSuite {
     assert(bi.docs.filter($"simhash" =!= 0L).count() > 0)
     checkIndex("built", built)
 
-    val live = tmpDir("graftdecllive")
+    val live = TestDirs("graftdecllive")
     Seq(0L, 1L).foreach { b =>
       LiveIndex.appendBatch(spark.createDataset(
         (b * 60L until b * 60L + 60L).map(i => Corpus.mkDoc(i, 5L, skew = false))),
@@ -74,7 +71,7 @@ class IndexTableSpec extends AnyFunSuite {
     }
     checkIndex("live", live)
 
-    val merged = tmpDir("graftdeclmerged")
+    val merged = TestDirs("graftdeclmerged")
     SegmentMerge.merge(spark, built, merged, fanIn = 2, cfg)
     checkIndex("merged", merged)
   }

@@ -41,7 +41,7 @@ class KeyPhraseSpec extends AnyFunSuite {
 
   test("topKeyPhrases == RAKE doc_freq oracle (filters applied)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graftkp").toString
+    val dir = TestDirs("graftkp")
     IndexBuilder.build(spark, corpus.toDS(), dir,
       IndexBuilder.Config(numSegments = 2, indexKeyPhrases = true))
     val idx = new InvertedIndex(spark, dir)
@@ -56,8 +56,8 @@ class KeyPhraseSpec extends AnyFunSuite {
 
   test("key phrases survive a record-level segment merge") {
     import spark.implicits._
-    val src = java.nio.file.Files.createTempDirectory("graftkpm1").toString
-    val out = java.nio.file.Files.createTempDirectory("graftkpm2").toString
+    val src = TestDirs("graftkpm1")
+    val out = TestDirs("graftkpm2")
     val cfg = IndexBuilder.Config(numSegments = 4, indexKeyPhrases = true)
     IndexBuilder.build(spark, corpus.toDS(), src, cfg)
     val before = new InvertedIndex(spark, src).topKeyPhrases(50)

@@ -12,13 +12,10 @@ import graft.streaming.LiveIndex
 class LiveIndexSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
 
-  private def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   test("appendBatch replay is idempotent (foreachBatch is at-least-once)") {
     import spark.implicits._
     val docs = (0L until 50L).map(i => Corpus.mkDoc(i, 7L, skew = false))
-    val dir = tmpDir("graftreplay")
+    val dir = TestDirs("graftreplay")
     new java.io.File(IndexBuilder.manifestDir(dir)).mkdirs()
     val ds = spark.createDataset(docs)
     LiveIndex.appendBatch(ds, 0L, dir)
@@ -35,7 +32,7 @@ class LiveIndexSpec extends AnyFunSuite {
 
   test("an empty batch leaves no marker, staging dir or data; its id commits later") {
     import spark.implicits._
-    val dir = tmpDir("graftempty")
+    val dir = TestDirs("graftempty")
     LiveIndex.appendBatch(spark.emptyDataset[SourceDoc], 3L, dir)
     assert(!IndexBuilder.batchCommitted(dir, "live3"))
     assert(!new java.io.File(s"${IndexBuilder.stagingDir(dir)}/live3").exists())
@@ -49,7 +46,7 @@ class LiveIndexSpec extends AnyFunSuite {
 
   test("appendBatch starts 3 Spark jobs: shuffle-map stage, write, staged stat collect") {
     import spark.implicits._
-    val dir = tmpDir("graftappendjobs")
+    val dir = TestDirs("graftappendjobs")
     // a computed batch, like a streaming micro-batch, so that any extra
     // pass over it shows as a job (a local relation answers some
     // actions without one)
@@ -62,7 +59,7 @@ class LiveIndexSpec extends AnyFunSuite {
 
   test("grank refresh policy: every-N appends rewrite the table, others leave a refused stale one") {
     import spark.implicits._
-    val dir = tmpDir("graftlivegrank")
+    val dir = TestDirs("graftlivegrank")
     new java.io.File(IndexBuilder.manifestDir(dir)).mkdirs()
     val cfg = IndexBuilder.Config(storeGlobalRank = true)
     def docsFor(b: Long) = spark.createDataset(
@@ -98,8 +95,8 @@ class LiveIndexSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
 
     val docs = (0L until 300L).map(i => Corpus.mkDoc(i, 42L, skew = false))
-    val liveDir = tmpDir("graftlive")
-    val ckpt = tmpDir("graftckpt")
+    val liveDir = TestDirs("graftlive")
+    val ckpt = TestDirs("graftckpt")
 
     val stream = MemoryStream[SourceDoc]
     val query = LiveIndex.start(stream.toDS(), liveDir, ckpt,
@@ -111,7 +108,7 @@ class LiveIndexSpec extends AnyFunSuite {
     assert(live.stats.numDocs == 300)
 
     // batch reference index over the same docs
-    val batchDir = tmpDir("graftbatch")
+    val batchDir = TestDirs("graftbatch")
     IndexBuilder.build(spark, spark.createDataset(docs), batchDir,
       IndexBuilder.Config(numSegments = 4))
     val batch = new InvertedIndex(spark, batchDir)
@@ -134,13 +131,13 @@ class LiveIndexSpec extends AnyFunSuite {
     assert(new InvertedIndex(spark, liveDir).stats.numDocs == 300)
 
     // TTL compaction: drop batch 0 (first 100 docs), keep batches >= 1
-    val ttlDir = tmpDir("graftttl")
+    val ttlDir = TestDirs("graftttl")
     LiveIndex.compact(spark, liveDir, ttlDir, minBatchId = 1L)
     val ttl = new InvertedIndex(spark, ttlDir)
     assert(ttl.stats.numDocs == 200, "TTL should expire batch 0's 100 docs")
 
     // compact all mini-segments into one batch-layout segment
-    val compactDir = tmpDir("graftcompact")
+    val compactDir = TestDirs("graftcompact")
     LiveIndex.compact(spark, liveDir, compactDir)
     val compacted = new InvertedIndex(spark, compactDir)
     assert(compacted.stats.numDocs == 300)

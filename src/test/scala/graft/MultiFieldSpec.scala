@@ -45,8 +45,7 @@ class PorterStemmerSpec extends AnyFunSuite {
 class MultiFieldSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
 
-  private def tmpDir(): String =
-    java.nio.file.Files.createTempDirectory("graftmf").toString
+  private def tmpDir(): String = TestDirs("graftmf")
 
   private lazy val corpus = Corpus.generate(spark, 500, seed = 11L).cache()
 

@@ -234,7 +234,7 @@ class OpsSpec extends AnyFunSuite {
     import spark.implicits._
     // path a(1) -> b(2) -> c(3) plus 4 -> 3: h12(3) = 12/1 + 12/1 + 12/2 = 30
     val edges = Seq((1L, 2L), (2L, 3L), (4L, 3L)).toDF("src", "dst")
-    val exact = Centrality.harmonicExact(spark, edges, maxDepth = 4)
+    val exact = Centrality.harmonicExact(spark, Webgraph.Edges(edges), maxDepth = 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(exact(1L) == 0L)          // nothing reaches 1
     assert(exact(2L) == 12L)         // 1 at distance 1
@@ -246,9 +246,9 @@ class OpsSpec extends AnyFunSuite {
     val big = (0L until n.toLong).flatMap(i =>
       Seq((i, (i * 7 + 3) % n), (i, (i * 13 + 11) % n), (i, (i * 29 + 17) % n)))
       .filter(e => e._1 != e._2).toDF("src", "dst")
-    val ex2 = Centrality.harmonicExact(spark, big, maxDepth = 4)
+    val ex2 = Centrality.harmonicExact(spark, Webgraph.Edges(big), maxDepth = 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val est = Centrality.harmonicHyperBall(spark, big, maxDepth = 4)
+    val est = Centrality.harmonicHyperBall(spark, Webgraph.Edges(big), maxDepth = 4)
       .collect().map(b => b.node -> b.harmonic).toMap
     val offenders = ex2.collect { case (node, h) =>
       val e = est(node) * 12.0
@@ -256,16 +256,61 @@ class OpsSpec extends AnyFunSuite {
     }.filter(_._4)
     assert(offenders.isEmpty, s"out of bound: ${offenders.take(5)}")
     // determinism: sketches are partition-order independent
-    val est2 = Centrality.harmonicHyperBall(spark, big.repartition(7), maxDepth = 4)
+    val est2 = Centrality.harmonicHyperBall(spark, Webgraph.Edges(big.repartition(7)),
+        maxDepth = 4)
       .collect().map(b => b.node -> b.harmonic).toMap
     assert(est == est2)
     // over-threshold edge tables take the NON-broadcast join path (the
     // driver-OOM guard: a caller mistake degrades to a shuffle join,
     // same results) — threshold 0 forces every edge batch over it
-    val ex3 = Centrality.harmonicExact(spark, big, maxDepth = 4,
-        broadcastMaxEdges = 0L)
+    val ex3 = Centrality.harmonicExact(spark,
+        Webgraph.Edges(big, broadcastMaxEdges = 0L), maxDepth = 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(ex3 == ex2, "shuffle-join fallback must be result-identical")
+  }
+
+  /** Driver-side exact harmonic centrality: for every node v, a
+    * backward BFS over the deduplicated loop-free edges, summing lcm/d
+    * over the nodes that reach v within maxDepth. */
+  private def bruteHarmonic(edges: Seq[(Long, Long)], maxDepth: Int): Map[Long, Long] = {
+    val e = edges.filter(p => p._1 != p._2).distinct
+    val into = e.groupBy(_._2).map { case (v, ps) => v -> ps.map(_._1) }
+    def gcd(a: Long, b: Long): Long = if (b == 0) a else gcd(b, a % b)
+    val lcm = (1L to maxDepth.toLong).foldLeft(1L)((a, b) => a / gcd(a, b) * b)
+    e.flatMap(p => Seq(p._1, p._2)).distinct.map { v =>
+      var seen = Set(v)
+      var shell = Seq(v)
+      var h = 0L
+      for (d <- 1 to maxDepth) {
+        shell = shell.flatMap(into.getOrElse(_, Nil)).distinct.filterNot(seen)
+        seen ++= shell
+        h += shell.size * (lcm / d)
+      }
+      v -> h
+    }.toMap
+  }
+
+  test("harmonicExact == driver-side BFS at every maxDepth 1..6, both join paths") {
+    import spark.implicits._
+    for (seed <- Seq(11L, 29L)) {
+      val rnd = new scala.util.Random(seed)
+      val n = 24
+      val core = Seq.fill(50)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+      val ring = (0L until 5L).map(i => (i, (i + 1) % 5))
+      // a 9-hop chain reaches depths 5 and 6, where lcm = 60
+      val chain = (60L until 69L).map(i => (i, i + 1)) :+ ((69L, 0L))
+      val loops = Seq((3L, 3L), (7L, 7L), (99L, 99L)) // 99 has no other edge
+      val sources = Seq((40L, 1L), (41L, 2L), (41L, 3L), (50L, 51L))
+      val all = rnd.shuffle(core ++ core.take(10) ++ ring ++ chain ++ loops ++ sources)
+      val df = all.toDF("src", "dst")
+      for (depth <- 1 to 6; guard <- Seq(Centrality.ExactBroadcastMaxEdges, 0L)) {
+        val got = Centrality.harmonicExact(spark,
+            Webgraph.Edges(df, broadcastMaxEdges = guard), maxDepth = depth)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(got == bruteHarmonic(all, depth),
+          s"seed $seed maxDepth $depth broadcastMaxEdges $guard")
+      }
+    }
   }
 
   test("bpe-ish token count and multi-language ID heuristics") {
@@ -401,15 +446,16 @@ class OpsSpec extends AnyFunSuite {
     // a -> b -> c -> a (cycle), c -> d, x -> y (unreachable island)
     val edges = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"),
       ("x", "y")).toDF("src", "dst")
-    val d = Webgraph.distances(edges, "a", maxDist = 6)
+    val d = Webgraph.distances(Webgraph.Edges(edges), "a", maxDist = 6)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(d == Map("a" -> 0L, "b" -> 1L, "c" -> 2L, "d" -> 3L))
     // reversed: who reaches d, at what distance
-    val rd = Webgraph.distances(edges, "d", maxDist = 6, reversed = true)
+    val rd = Webgraph.distances(Webgraph.Edges(edges), "d", maxDist = 6,
+        reversed = true)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(rd == Map("d" -> 0L, "c" -> 1L, "b" -> 2L, "a" -> 3L))
     // cap stops the walk
-    val capped = Webgraph.distances(edges, "a", maxDist = 1)
+    val capped = Webgraph.distances(Webgraph.Edges(edges), "a", maxDist = 1)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(capped == Map("a" -> 0L, "b" -> 1L))
   }
@@ -418,12 +464,12 @@ class OpsSpec extends AnyFunSuite {
     import spark.implicits._
     val edges = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"),
       ("x", "y")).toDF("src", "dst")
-    val multi = Webgraph.multiSourceDistances(edges,
+    val multi = Webgraph.multiSourceDistances(Webgraph.Edges(edges),
         Seq("a", "x").toDF("source"), maxDist = 6)
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
       .toMap
     val singles = Seq("a", "x").flatMap { s0 =>
-      Webgraph.distances(edges, s0, maxDist = 6)
+      Webgraph.distances(Webgraph.Edges(edges), s0, maxDist = 6)
         .collect().map(r => (s0, r.getString(0)) -> r.getLong(1))
     }.toMap
     assert(multi == singles)
@@ -436,9 +482,9 @@ class OpsSpec extends AnyFunSuite {
     val big = (0L until n.toLong).flatMap(i =>
       Seq((i, (i * 7 + 3) % n), (i, (i * 13 + 11) % n), (i, (i * 29 + 17) % n)))
       .filter(e => e._1 != e._2).toDF("src", "dst")
-    val exact = Centrality.harmonicExact(spark, big, maxDepth = 4)
+    val exact = Centrality.harmonicExact(spark, Webgraph.Edges(big), maxDepth = 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val all = Centrality.approxHarmonic(spark, big, maxDist = 4,
+    val all = Centrality.approxHarmonic(spark, Webgraph.Edges(big), maxDist = 4,
         epsilon = 0.01) // ceil(log2(200)/1e-4) >> 200 -> every source
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     exact.filter(_._2 > 0).foreach { case (node, h) =>
@@ -449,9 +495,10 @@ class OpsSpec extends AnyFunSuite {
     }
     // true sampling (reference epsilon): seeded-hash sample is a fixed
     // subset, so the result is identical under any input partitioning
-    val s1 = Centrality.approxHarmonic(spark, big, maxDist = 4)
+    val s1 = Centrality.approxHarmonic(spark, Webgraph.Edges(big), maxDist = 4)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val s2 = Centrality.approxHarmonic(spark, big.repartition(7), maxDist = 4)
+    val s2 = Centrality.approxHarmonic(spark, Webgraph.Edges(big.repartition(7)),
+        maxDist = 4)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(s1 == s2)
     // sample-size formula: ceil(log2(n)/eps^2) sources, all with
@@ -471,7 +518,7 @@ class OpsSpec extends AnyFunSuite {
     // nodes as sources
     val path = (0L until 4L).map(i => (i, i + 1)).toDF("src", "dst")
     val srcs5 = (0L until 5L).toDF("s")
-    val bc = Centrality.betweenness(spark, path, srcs5)
+    val bc = Centrality.betweenness(spark, Webgraph.Edges(path), srcs5)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(bc == Map(0L -> 0.0, 1L -> 0.15, 2L -> 0.2, 3L -> 0.15, 4L -> 0.0))
     // denser deterministic graph: back-propagated Brandes must satisfy
@@ -482,9 +529,9 @@ class OpsSpec extends AnyFunSuite {
       Seq((i, (i * 7 + 3) % n), (i, (i * 13 + 11) % n), (i, (i * 29 + 17) % n)))
       .filter(e => e._1 != e._2).toDF("src", "dst")
     val srcsAll = (0L until n.toLong).toDF("s")
-    val b1 = Centrality.betweenness(spark, big, srcsAll, maxDepth = 6)
+    val b1 = Centrality.betweenness(spark, Webgraph.Edges(big), srcsAll, maxDepth = 6)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val pd = Centrality.betweennessPairDependency(spark, big, srcsAll,
+    val pd = Centrality.betweennessPairDependency(spark, Webgraph.Edges(big), srcsAll,
         maxDepth = 6)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     assert(b1.keySet == pd.keySet)
@@ -494,14 +541,14 @@ class OpsSpec extends AnyFunSuite {
         s"node $node: brandes $v vs formula $f")
     }
     assert(pd.values.exists(_._1 > 0L)) // some through-paths exist
-    val b2 = Centrality.betweenness(spark, big.repartition(7), srcsAll,
+    val b2 = Centrality.betweenness(spark, Webgraph.Edges(big.repartition(7)), srcsAll,
         maxDepth = 6)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(b1 == b2)
     // sampled-source mode: a subset of sources runs the same machinery
     // (the 100 TB shape) and normalizes by the SAMPLE's n(n-1)
     val some = Seq(0L, 7L, 13L).toDF("s")
-    val bs = Centrality.betweenness(spark, big, some, maxDepth = 6)
+    val bs = Centrality.betweenness(spark, Webgraph.Edges(big), some, maxDepth = 6)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(bs.values.forall(_ >= 0.0) && bs.values.exists(_ > 0.0))
   }

@@ -92,7 +92,7 @@ class OpticsSpec extends AnyFunSuite {
       graft.index.SourceDoc("r2", "b.md", "c", "en", "alpha gamma beta delta"),
       graft.index.SourceDoc("r3", "c.md", "c", "en", "beta alpha beta gamma"),
       graft.index.SourceDoc("r4", "d.md", "c", "en", "gamma delta"))
-    val dir = java.nio.file.Files.createTempDirectory("graftpat").toString
+    val dir = TestDirs("graftpat")
     graft.index.IndexBuilder.build(spark, spark.createDataset(docs), dir,
       graft.index.IndexBuilder.Config(numSegments = 2))
     val idx = new graft.index.InvertedIndex(spark, dir)
@@ -132,7 +132,7 @@ class OpticsSpec extends AnyFunSuite {
       val toks = Array.fill(n)(vocab(rnd.nextInt(vocab.length)))
       graft.index.SourceDoc(s"r$i", "f.md", "c", "en", toks.mkString(" "))
     }
-    val dir = java.nio.file.Files.createTempDirectory("graftpatp").toString
+    val dir = TestDirs("graftpatp")
     graft.index.IndexBuilder.build(spark, spark.createDataset(docs), dir,
       graft.index.IndexBuilder.Config(numSegments = 3))
     val idx = new graft.index.InvertedIndex(spark, dir)
@@ -196,7 +196,7 @@ class OpticsSpec extends AnyFunSuite {
         "data stream table sink pipeline " * 5),
       graft.index.SourceDoc("r3", "c.md", "c", "en",
         "table data write merge reader " * 5))
-    val dir = java.nio.file.Files.createTempDirectory("graftpat2").toString
+    val dir = TestDirs("graftpat2")
     graft.index.IndexBuilder.build(spark, spark.createDataset(docs), dir,
       graft.index.IndexBuilder.Config(numSegments = 2, indexStemmed = true,
         indexBigrams = true, computeSimhash = true))
@@ -221,7 +221,7 @@ class OpticsSpec extends AnyFunSuite {
         "data table " * 8)) :+
       graft.index.SourceDoc("good/repo", "b.md", "c", "en",
         "data table once here")
-    val dir = java.nio.file.Files.createTempDirectory("graftwb").toString
+    val dir = TestDirs("graftwb")
     graft.index.IndexBuilder.build(spark, spark.createDataset(docs), dir,
       graft.index.IndexBuilder.Config(numSegments = 2, indexStemmed = true,
         indexBigrams = true, indexMeta = true, computeSimhash = true))
@@ -271,7 +271,7 @@ class OpticsSpec extends AnyFunSuite {
     val docs = Seq(
       graft.index.SourceDoc("p1", "a.md", "c", "en", "alpha beta"),
       graft.index.SourceDoc("p2", "b.md", "c", "en", "beta alpha"))
-    val dir = java.nio.file.Files.createTempDirectory("graftpat3").toString
+    val dir = TestDirs("graftpat3")
     graft.index.IndexBuilder.build(spark, spark.createDataset(docs), dir,
       graft.index.IndexBuilder.Config(numSegments = 1))
     val idx = new graft.index.InvertedIndex(spark, dir)
@@ -314,7 +314,7 @@ class OpticsSpec extends AnyFunSuite {
   test("pipeline integration: boost reorders, discard removes") {
     val spark = SparkTestSession.spark
     val corpus = graft.index.Corpus.generate(spark, 300, seed = 55L).cache()
-    val dir = java.nio.file.Files.createTempDirectory("graftoptic").toString
+    val dir = TestDirs("graftoptic")
     graft.index.IndexBuilder.build(spark, corpus, dir,
       graft.index.IndexBuilder.Config(numSegments = 2, indexStemmed = true,
         indexBigrams = true, indexMeta = true, computeSimhash = true))

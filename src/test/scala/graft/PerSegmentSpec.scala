@@ -15,7 +15,7 @@ class PerSegmentSpec extends AnyFunSuite {
   private val seed = 17L
   // a small shard cap splits every hot term into docId-range shards
   private lazy val dir = {
-    val d = java.nio.file.Files.createTempDirectory("graftperseg").toString
+    val d = TestDirs("graftperseg")
     IndexBuilder.build(spark, Corpus.generate(spark, 600, seed = seed), d,
       IndexBuilder.Config(numSegments = 5, maxPostingsPerShard = 32))
     d

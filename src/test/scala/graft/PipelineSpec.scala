@@ -16,7 +16,7 @@ class PipelineSpec extends AnyFunSuite {
   private def fetch(keys: Seq[(String, String)]): Map[(String, String), String] =
     keys.flatMap(k => textMap.get(k).map(k -> _)).toMap
   private lazy val index = {
-    val d = java.nio.file.Files.createTempDirectory("graftpipe").toString
+    val d = TestDirs("graftpipe")
     IndexBuilder.build(spark, corpus, d, IndexBuilder.Config(numSegments = 3,
       indexStemmed = true, indexBigrams = true, indexMeta = true,
       computeSimhash = true))

@@ -11,7 +11,7 @@ class QueryOpsSpec extends AnyFunSuite {
 
   private lazy val corpus = Corpus.generate(spark, 400, seed = 3L).cache()
   private lazy val index = {
-    val d = java.nio.file.Files.createTempDirectory("graftqo").toString
+    val d = TestDirs("graftqo")
     IndexBuilder.build(spark, corpus, d, IndexBuilder.Config(numSegments = 3))
     new InvertedIndex(spark, d)
   }

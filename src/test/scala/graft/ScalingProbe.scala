@@ -24,7 +24,7 @@ object ScalingProbe {
       // warm
       IndexBuilder.build(spark,
         Corpus.generate(spark, 2000, partitions = cpus),
-        java.nio.file.Files.createTempDirectory("probewarm").toString,
+        TestDirs("probewarm"),
         IndexBuilder.Config(numSegments = 8))
       val listener = new SparkListener {
         override def onStageCompleted(ev: SparkListenerStageCompleted): Unit = {
@@ -38,7 +38,7 @@ object ScalingProbe {
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
       IndexBuilder.build(spark, Corpus.generate(spark, docs, partitions = cpus * 4),
-        java.nio.file.Files.createTempDirectory(s"probe$cpus").toString,
+        TestDirs(s"probe$cpus"),
         IndexBuilder.Config(numSegments = 64))
       println(f"[probe] local[$cpus] total build: ${(System.nanoTime() - t0) / 1e9}%.2f s for $docs docs")
       Thread.sleep(1000)

@@ -15,7 +15,7 @@ class SearcherSpec extends AnyFunSuite {
 
   private lazy val corpus = Corpus.generate(spark, 500, seed = 88L).cache()
   private def build(segments: Int, shardCap: Int): InvertedIndex = {
-    val d = java.nio.file.Files.createTempDirectory("graftsrv").toString
+    val d = TestDirs("graftsrv")
     IndexBuilder.build(spark, corpus, d, IndexBuilder.Config(numSegments = segments,
       indexStemmed = true, indexBigrams = true, indexMeta = true,
       maxPostingsPerShard = shardCap))

@@ -8,11 +8,7 @@ import graft.index._
 class SegmentMergeSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
 
-  private def tmpDir(): String = {
-    val d = java.nio.file.Files.createTempDirectory("graftmerge").toFile
-    d.deleteOnExit()
-    d.getAbsolutePath
-  }
+  private def tmpDir(): String = TestDirs("graftmerge")
 
   private lazy val corpus = Corpus.generate(spark, 600, seed = 7L, partitions = 5).cache()
 
@@ -163,12 +159,7 @@ class SegmentMergeSpec extends AnyFunSuite {
     }
     // crash-between-marker-and-refresh: delete the table, re-run the
     // committed merge — the early-return path must heal it
-    def rmTree(p: java.nio.file.Path): Unit = {
-      if (java.nio.file.Files.isDirectory(p))
-        java.nio.file.Files.list(p).forEach(rmTree(_))
-      java.nio.file.Files.deleteIfExists(p)
-    }
-    rmTree(java.nio.file.Paths.get(GlobalRank.dirOf(out)))
+    IndexBuilder.deleteRecursively(new java.io.File(GlobalRank.dirOf(out)))
     assert(GlobalRank.load(spark, out, stats).isEmpty)
     SegmentMerge.merge(spark, srcDir, out, fanIn = 3,
       IndexBuilder.Config(storeGlobalRank = true))

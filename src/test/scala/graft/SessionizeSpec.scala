@@ -40,7 +40,7 @@ class SessionizeSpec extends AnyFunSuite {
       .format("memory").queryName("sessout")
       .outputMode("append")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graftsess").toString)
+        TestDirs("graftsess"))
       .start()
 
     // feed chronologically in 4 chunks so the watermark advances and

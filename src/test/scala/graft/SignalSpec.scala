@@ -11,7 +11,7 @@ class SignalSpec extends AnyFunSuite {
 
   private lazy val corpus = Corpus.generate(spark, 400, seed = 55L).cache()
   private lazy val index = {
-    val d = java.nio.file.Files.createTempDirectory("graftsig").toString
+    val d = TestDirs("graftsig")
     IndexBuilder.build(spark, corpus, d, IndexBuilder.Config(numSegments = 3,
       indexStemmed = true, indexBigrams = true, indexMeta = true))
     new InvertedIndex(spark, d)
@@ -106,7 +106,7 @@ class SignalSpec extends AnyFunSuite {
   test("stored global-rank table: identical ranking, brute-force-equal, stale-refusing") {
     // same corpus with Config.storeGlobalRank: the lookup path must be
     // end-to-end identical to the counting pass (hits AND vectors)
-    val d2 = java.nio.file.Files.createTempDirectory("graftsig2").toString
+    val d2 = TestDirs("graftsig2")
     IndexBuilder.build(spark, corpus, d2, IndexBuilder.Config(numSegments = 3,
       indexStemmed = true, indexBigrams = true, indexMeta = true,
       storeGlobalRank = true))
@@ -146,7 +146,7 @@ class SignalSpec extends AnyFunSuite {
       SourceDoc("r1", "dup.md", "c", "en", "alpha beta gamma data"),
       SourceDoc("r2", "x.md", "c", "en", "delta epsilon data"),
       SourceDoc("r3", "y.md", "c", "en", "zeta eta data"))
-    val d = java.nio.file.Files.createTempDirectory("graftgrktie").toString
+    val d = TestDirs("graftgrktie")
     IndexBuilder.build(spark, spark.createDataset(docs), d,
       IndexBuilder.Config(numSegments = 2, storeGlobalRank = true))
     val idx = new InvertedIndex(spark, d)

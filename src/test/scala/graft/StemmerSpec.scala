@@ -270,7 +270,7 @@ class StemmerSpec extends AnyFunSuite {
       SourceDoc("r1", "a.md", "c", "de", "die häuser sind groß und alt"),
       SourceDoc("r2", "b.md", "c", "de", "ein kleines haus am see"),
       SourceDoc("r3", "c.md", "c", "de", "gänzlich anderes thema hier völlig"))
-    val dir = java.nio.file.Files.createTempDirectory("graftde").toString
+    val dir = TestDirs("graftde")
     IndexBuilder.build(spark, spark.createDataset(docs), dir,
       IndexBuilder.Config(numSegments = 1, indexStemmed = true))
     val idx = new InvertedIndex(spark, dir, queryLang = "de")
