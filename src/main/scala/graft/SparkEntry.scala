@@ -2460,7 +2460,7 @@ object SparkEntry {
        |       phrase AS suggestion
        |FROM pick ORDER BY rank""".stripMargin
 
-  /** FNV-1a 64 of a string column, bit-exactly IndexBuilder.fnv1a64:
+  /** FNV-1a 64 of a string column, bit-exactly graft.core.Fnv1a:
     * HUGEINT fold over UTF-16 code units with mod-2^64 wrapping (the
     * corpus is ASCII so code units == bytes == chars). */
   private def fnvSql(sSql: String): String =

@@ -102,11 +102,9 @@ object Bloom {
     private val words = new Array[Long](((numBitsLen + 63) / 64).toInt)
 
     private def baseHash(item: Array[Byte]): (Long, Long) = {
-      var a = 0xcbf29ce484222325L
-      var i = 0
-      while (i < item.length) { a ^= (item(i) & 0xff); a *= 0x100000001b3L; i += 1 }
+      val a = Fnv1a.bytes(item)
       var b = a ^ 0x9e3779b97f4a7c15L
-      i = 0
+      var i = 0
       while (i < item.length) { b ^= (item(i) & 0xff); b *= 0x100000001b3L; b = java.lang.Long.rotateLeft(b, 17); i += 1 }
       (a, b)
     }

@@ -11,10 +11,8 @@ object DocHashes {
   /** The bucket keys of one source file: repo = site, repo/path = url,
     * path = url without tld, file name = title. */
   def of(repo: String, path: String, simhash: Long): DocHashes = {
-    import graft.index.IndexBuilder.fnv1a64
-    DocHashes(fnv1a64("site:" + repo), fnv1a64("url:" + repo + "/" + path),
-      fnv1a64("path:" + path),
-      fnv1a64("title:" + path.substring(path.lastIndexOf('/') + 1)), simhash)
+    DocHashes(Fnv1a("site:" + repo), Fnv1a("url:" + repo + "/" + path), Fnv1a("path:" + path),
+      Fnv1a("title:" + path.substring(path.lastIndexOf('/') + 1)), simhash)
   }
 }
 
@@ -92,7 +90,9 @@ final class BucketCollector[T](topN: Int,
                                cfg: CollectorConfig = CollectorConfig()) {
   require(topN > 0)
 
-  private final case class Entry(item: T, seq: Int, adjusted: Double)
+  // not a case class: a case class nested in a generic class compiles
+  // an unchecked outer-reference test into its equals
+  private final class Entry(val item: T, val seq: Int, val adjusted: Double)
   private val heap = new java.util.PriorityQueue[Entry](16,
     new java.util.Comparator[Entry] {
       def compare(a: Entry, b: Entry): Int = {
@@ -117,7 +117,7 @@ final class BucketCollector[T](topN: Int,
     taken.merge(java.lang.Long.valueOf(h), 1, (a, b) => a + b)
 
   def insert(item: T): Unit = {
-    heap.add(Entry(item, seq, score(item) * adjuster(hashes(item))))
+    heap.add(new Entry(item, seq, score(item) * adjuster(hashes(item))))
     seq += 1
   }
 
@@ -132,7 +132,7 @@ final class BucketCollector[T](topN: Int,
       // lazy re-adjustment: counts may have grown since this entry was
       // scored; if its fresh score is lower it goes back into the heap
       val fresh = score(e.item) * adjuster(hashes(e.item))
-      if (fresh < e.adjusted) heap.add(e.copy(adjusted = fresh))
+      if (fresh < e.adjusted) heap.add(new Entry(e.item, e.seq, fresh))
       else {
         val h = hashes(e.item)
         if (deRankSimilar && h.simhash != 0 && table.contains(h.simhash)) {

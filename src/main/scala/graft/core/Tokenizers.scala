@@ -276,7 +276,7 @@ object Tokenizers {
     val out = scala.collection.mutable.ArrayBuffer[String]()
     def walk(node: com.fasterxml.jackson.databind.JsonNode, path: List[String]): Unit = {
       if (node.isObject) {
-        val it = node.fields()
+        val it = node.properties().iterator()
         while (it.hasNext) {
           val e = it.next()
           walk(e.getValue, e.getKey :: path)

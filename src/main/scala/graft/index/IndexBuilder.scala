@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSessio
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
-import graft.core.{BlockCodec, Bm25Weight, FieldNorm, PostingListData, Tokenizers}
+import graft.core.{BlockCodec, Bm25Weight, FieldNorm, Fnv1a, PostingListData, Tokenizers}
 
 /** Distributed inverted-index build.
   *
@@ -109,27 +109,14 @@ object IndexBuilder {
                           content: String, props: String = "",
                           links: Seq[String] = Seq.empty)
 
-  /** FNV-1a 64-bit — stable across Spark/JVM versions, unlike
-    * Murmur3-based Spark `hash()` which is only stable per version. */
-  def fnv1a64(s: String): Long = {
-    var h = 0xcbf29ce484222325L
-    var i = 0
-    while (i < s.length) {
-      h ^= s.charAt(i) & 0xffffL
-      h *= 0x100000001b3L
-      i += 1
-    }
-    h
-  }
-
   /** Deterministic pseudo-centrality standing in for the reference's
     * query-independent precomputed score (ranking/computer/mod.rs:499-509;
     * the docid-order invariant of inverted_index/mod.rs:195-204). */
   def sortKeyOf(repo: String, path: String, commit: String): Long =
-    fnv1a64(s"score:$repo/$path@$commit")
+    Fnv1a(s"score:$repo/$path@$commit")
 
   def segmentOf(repo: String, path: String, numSegments: Int): Int = {
-    val h = fnv1a64(repo + "|" + path)
+    val h = Fnv1a(repo + "|" + path)
     val m = (h % numSegments).toInt
     if (m < 0) m + numSegments else m
   }
@@ -544,7 +531,7 @@ object IndexBuilder {
     * AnalysisException — an empty build is a valid BuildReport(0, 0,
     * ...), and its batch markers commit like any other (the resume
     * contract assumes a stable input across retries). */
-  private def readStats(spark: SparkSession, root: String): Seq[SegStatRow] = {
+  private[index] def readStats(spark: SparkSession, root: String): Seq[SegStatRow] = {
     import spark.implicits._
     if (!new java.io.File(s"$root/kind=stat").exists()) Nil
     else readKind(spark, root, "stat").select("stat.*").as[SegStatRow].collect().toSeq

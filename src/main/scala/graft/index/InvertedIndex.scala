@@ -1,5 +1,7 @@
 package graft.index
 
+import java.util.concurrent.{ConcurrentHashMap, FutureTask}
+
 import scala.reflect.ClassTag
 
 import org.apache.spark.Partitioner
@@ -28,6 +30,13 @@ import graft.core._
   * path; SegmentScoring holds the per-segment scoring and the merge.
   * `resolve` is one more job: a pushed-down doc-table scan.
   *
+  * That shuffle is the DISTRIBUTED executor. A resident instance (see
+  * Searcher) runs the same callers on the RESIDENT executor instead:
+  * posting rows come from a driver-side term cache and each segment
+  * scores on the serving pool, so a warm call starts no job. Both
+  * executors hand the callbacks the same rows, fieldnorms and df, so a
+  * caller's answer does not depend on where it ran.
+  *
   * Opening starts no job: every table is read through
   * IndexBuilder.readKind with the schema its writer declared, so a
   * reader costs a file listing and never a schema-inference job. The
@@ -48,9 +57,19 @@ import graft.core._
   * segment, or uniformly distributed corpora); otherwise it inherits the
   * reference's approximation.
   */
-final class InvertedIndex(spark: SparkSession, dir: String,
-                          queryLang: String = "en") extends Serializable {
+class InvertedIndex private (private val spark: SparkSession, private val dir: String,
+                             private val queryLang: String, origin: Option[InvertedIndex],
+                             rowCacheBytes: Long) extends Serializable {
   import spark.implicits._
+
+  def this(spark: SparkSession, dir: String, queryLang: String = "en") =
+    this(spark, dir, queryLang, None, 0L)
+
+  /** A resident view of `origin`: it shares origin's readers, stat rows,
+    * residency gate and driver-side fieldnorms, and caches posting rows
+    * up to `rowCacheBytes`. */
+  private[index] def this(origin: InvertedIndex, rowCacheBytes: Long) =
+    this(origin.spark, origin.dir, origin.queryLang, Some(origin), rowCacheBytes)
 
   // query-side stemmer for field expansion (the reference stems queries
   // in the detected query language; doc-side stemming dispatched per
@@ -66,8 +85,8 @@ final class InvertedIndex(spark: SparkSession, dir: String,
   // instance already snapshots the directory via its lazy
   // stats/fieldnorm caches (consumers build a fresh InvertedIndex after
   // an append), so caching the readers adds no new staleness class.
-  @transient private lazy val dataFrames =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  @transient private lazy val dataFrames: ConcurrentHashMap[String, DataFrame] =
+    origin.fold(new ConcurrentHashMap[String, DataFrame]())(_.dataFrames)
 
   private def data(kind: String): DataFrame =
     dataFrames.computeIfAbsent(kind, k =>
@@ -90,11 +109,12 @@ final class InvertedIndex(spark: SparkSession, dir: String,
 
   /** The per-segment stat rows, collected once for `stats` and
     * `grankTable`. */
-  @transient private lazy val segStatRows: Seq[SegStatRow] = segStats.collect().toSeq
+  @transient private lazy val segStatRows: Seq[SegStatRow] =
+    origin.fold(segStats.collect().toSeq)(_.segStatRows)
 
-  lazy val stats: CollectionStats =
+  lazy val stats: CollectionStats = origin.fold(
     CollectionStats(segStatRows.map(_.numDocs).sum, segStatRows.map(_.numTokens).sum,
-      segStatRows.length)
+      segStatRows.length))(_.stats)
 
   /** Tokenize + dedup (the reference's clause deduplication,
     * plan/node.rs:276-305) + 32-term cap (parser/mod.rs:17). */
@@ -108,67 +128,95 @@ final class InvertedIndex(spark: SparkSession, dir: String,
     * serving; this is the Spark analog. Above the cap, queries send the
     * fnorm rows through the per-segment shuffle instead (scales to any
     * corpus). */
-  private val maxResidentFnormBytes: Long =
+  private[index] val maxResidentFnormBytes: Long =
     spark.conf.get(InvertedIndex.ResidentFnormBytesConf, (64L << 20).toString).toLong
 
-  @transient private lazy val residentFnorms
-      : Option[Broadcast[Map[Int, Map[Int, Array[Byte]]]]] = {
-    // the cap bounds the driver's memory, so the gate compares the TRUE
-    // resident bytes: one per doc PER FNORM FIELD (content + optional
-    // bigram/trigram shadows). numDocs x the field count bounds them
-    // from the stat rows already collected, so only an index whose
-    // bound exceeds the cap pays a job to sum the chunk metadata. A
-    // non-empty index always holds content fieldnorms, so a zero bound
-    // is exactly the empty index.
+  /** The residency gate: whether the fieldnorms fit the cap, so queries
+    * read them resident rather than shuffling the fnorm rows. The cap
+    * bounds the driver's memory, so the gate compares the TRUE resident
+    * bytes: one per doc PER FNORM FIELD (content + optional
+    * bigram/trigram shadows). numDocs x the field count bounds them
+    * from the stat rows already collected, so only an index whose bound
+    * exceeds the cap pays a job to sum the chunk metadata. */
+  private[graft] lazy val fnormsResident: Boolean = origin.fold {
     val bound = stats.numDocs * InvertedIndex.FnormFields
     def residentBytes = fnorms.select($"numDocs").as[Int].collect().map(_.toLong).sum
-    val fits = bound > 0L &&
-      (bound <= maxResidentFnormBytes || residentBytes <= maxResidentFnormBytes)
-    if (fits) Some(spark.sparkContext.broadcast(residentFnormsLocal)) else None
-  }
+    bound <= maxResidentFnormBytes || residentBytes <= maxResidentFnormBytes
+  }(_.fnormsResident)
 
-  /** Whether queries read resident (broadcast) fieldnorms rather than
-    * shuffling the fnorm rows. */
-  private[graft] def fnormsResident: Boolean = residentFnorms.isDefined
+  /** The distributed executor's fieldnorm broadcast, made on its first
+    * query; the resident executor reads `residentFnormsLocal` and never
+    * makes it. */
+  @transient private lazy val residentFnorms
+      : Option[Broadcast[Map[Int, Map[Int, Array[Byte]]]]] =
+    if (fnormsResident) Some(spark.sparkContext.broadcast(residentFnormsLocal)) else None
 
-  /** All fieldnorm arrays collected to the driver, once per instance:
-    * the broadcast above and the serving tier (Searcher) share them. */
+  /** All fieldnorm arrays collected to the driver, once per instance and
+    * its resident views: the broadcast above and the resident executor
+    * share them. */
   @transient lazy val residentFnormsLocal: Map[Int, Map[Int, Array[Byte]]] =
-    fnorms.collect().groupBy(_.segment).map { case (seg, chunks) =>
+    origin.fold(fnorms.collect().groupBy(_.segment).map { case (seg, chunks) =>
       seg -> InvertedIndex.assembleFnorms(chunks)
-    }
+    })(_.residentFnormsLocal)
 
-  /** The one place a posting scan is grouped by segment and scored, and
-    * the one place the df of the scanned terms is computed. One Spark
-    * job: the term-filtered posting scan is one shuffle keyed by
-    * segment. Each scan task also sums its rows' docFreq per term and
-    * sends those partial sums once to every reduce partition, where
-    * they sort ahead of the segments; a reduce task adds them up (the
-    * same Long sums as `dfOf`) before it scores its first segment.
-    * Above the residency cap the fnorm rows ride the same shuffle, keyed
-    * by segment. `score` runs once per segment holding any of the terms,
-    * with the segment's rows, its fieldnorms and the collection df. */
+  /** The resident executor's posting rows; None on a distributed
+    * instance. */
+  @transient private lazy val rowCache: Option[RowCache] =
+    origin.map(o => new RowCache(o.postingRows, rowCacheBytes))
+
+  /** Posting bytes the resident executor holds in its row cache. */
+  private[graft] def cachedRowBytes: Long = rowCache.fold(0L)(_.heldBytes)
+
+  /** The one place posting rows are grouped by segment and scored, and
+    * the one place the df of the scanned terms is computed. `score` runs
+    * once per segment holding any of the terms, with the segment's rows,
+    * its fieldnorms and the collection df (summed docFreq of the terms
+    * that have rows). It must not create a broadcast: the distributed
+    * executor ships it in its task closure, and the resident one runs it
+    * on the driver.
+    *
+    * Resident executor: the rows come from the row cache (one
+    * pushed-down scan for all misses, on the calling thread, so the job
+    * keeps the caller's job group), and each segment scores as one task
+    * on the serving pool (Searcher.fanOut) with the driver-side
+    * fieldnorms.
+    *
+    * Distributed executor: one Spark job, the term-filtered posting scan
+    * as one shuffle keyed by segment. Each scan task also sums its rows'
+    * docFreq per term and sends those partial sums once to every reduce
+    * partition, where they sort ahead of the segments; a reduce task
+    * adds them up before it scores its first segment. Above the
+    * residency cap the fnorm rows ride the same shuffle, keyed by
+    * segment. */
   private def perSegment[T: ClassTag](terms: Seq[String])(
       score: (Int, Array[PostingRow], Map[Int, Array[Byte]], Map[String, Long]) => Iterator[T])
-      : Array[T] = {
-    val n = math.max(1, math.min(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt, stats.numSegments))
-    val scan = postings.filter($"term".isin(terms: _*)).rdd.mapPartitions { rows =>
-      val part = scala.collection.mutable.HashMap[String, Long]()
-      rows.map { r =>
-        part(r.term) = part.getOrElse(r.term, 0L) + r.docFreq
-        (r.segment, r: Any)
-      } ++ { // by-name: evaluated once the rows are drained
-        val d = InvertedIndex.DfPartial(part.toMap)
-        if (part.isEmpty) Iterator.empty else Iterator.tabulate(n)(p => (-1 - p, d))
+      : Array[T] = rowCache match {
+    case Some(cache) =>
+      val rows = cache.rows(terms)
+      val dfs = InvertedIndex.dfSums(rows)
+      val fn = residentFnormsLocal
+      Searcher.fanOut(rows.valuesIterator.flatten.toArray.groupBy(_.segment).toArray.sortBy(_._1)
+        .map { case (seg, plist) => new FutureTask(() => score(seg, plist, fn(seg), dfs).toArray) })
+        .flatten
+    case None =>
+      val n = math.max(1, math.min(
+        spark.conf.get("spark.sql.shuffle.partitions").toInt, stats.numSegments))
+      val scan = postings.filter($"term".isin(terms: _*)).rdd.mapPartitions { rows =>
+        val part = scala.collection.mutable.HashMap[String, Long]()
+        rows.map { r =>
+          part(r.term) = part.getOrElse(r.term, 0L) + r.docFreq
+          (r.segment, r: Any)
+        } ++ { // by-name: evaluated once the rows are drained
+          val d = InvertedIndex.DfPartial(part.toMap)
+          if (part.isEmpty) Iterator.empty else Iterator.tabulate(n)(p => (-1 - p, d))
+        }
       }
-    }
-    val resident = residentFnorms
-    val input = if (resident.isDefined) scan
-      else scan.union(fnorms.rdd.map(f => (f.segment, f: Any)))
-    input.repartitionAndSortWithinPartitions(new InvertedIndex.SegmentPartitioner(n))
-      .mapPartitions(in => InvertedIndex.scoreSegments(in.buffered, resident, score))
-      .collect()
+      val resident = residentFnorms
+      val input = if (resident.isDefined) scan
+        else scan.union(fnorms.rdd.map(f => (f.segment, f: Any)))
+      input.repartitionAndSortWithinPartitions(new InvertedIndex.SegmentPartitioner(n))
+        .mapPartitions(in => InvertedIndex.scoreSegments(in.buffered, resident, score))
+        .collect()
   }
 
   /** Posting rows for `terms` via one pushed-down scan, grouped by
@@ -178,14 +226,17 @@ final class InvertedIndex(spark: SparkSession, dir: String,
     postings.filter($"term".isin(terms: _*)).collect().groupBy(_.term)
   }
 
-  /** Per-term collection document frequency: one pushed-down
-    * (term, docFreq) projection, summed on the driver. For dfs needed
-    * outside a scan's per-term weights; `perSegment` hands its callback
-    * the df of the terms it scans. */
-  def dfOf(terms: Seq[String]): Map[String, Long] = {
-    if (terms.isEmpty) return Map.empty
-    postings.filter($"term".isin(terms: _*)).select($"term", $"docFreq").as[(String, Int)]
-      .collect().groupMapReduce(_._1)(_._2.toLong)(_ + _)
+  /** Per-term collection document frequency, for dfs needed outside a
+    * scan's per-term weights (`perSegment` hands its callback the df of
+    * the terms it scans). Resident: summed over the cached rows.
+    * Distributed: one pushed-down (term, docFreq) projection, summed on
+    * the driver. Either way a term with no rows has no entry. */
+  def dfOf(terms: Seq[String]): Map[String, Long] = rowCache match {
+    case _ if terms.isEmpty => Map.empty
+    case Some(cache) => InvertedIndex.dfSums(cache.rows(terms))
+    case None =>
+      postings.filter($"term".isin(terms: _*)).select($"term", $"docFreq").as[(String, Int)]
+        .collect().groupMapReduce(_._1)(_._2.toLong)(_ + _)
   }
 
   /** One query, exact BM25 top-k. mode: "or" (WAND), "and" (leapfrog
@@ -199,8 +250,7 @@ final class InvertedIndex(spark: SparkSession, dir: String,
   /** (segment, docId, score) before doc-table resolution. */
   def searchRaw(query: String, k: Int, mode: String = "or",
                 minusTerms: Seq[String] = Nil): Array[(Int, Int, Float)] = {
-    val out = searchBatchRaw(Seq(("q", query, k, mode, minusTerms)))
-    out.getOrElse("q", Array.empty)
+    searchBatchRaw(Seq(("q", query, k, mode, minusTerms))).getOrElse("q", Array.empty)
   }
 
   /** Batch query execution: one distributed pass for many queries —
@@ -212,13 +262,13 @@ final class InvertedIndex(spark: SparkSession, dir: String,
       (qid, terms, k, mode, minusTerms)
     })
 
-  /** Lower one query string to (index terms, base mode, minus terms) —
-    * shared by searchBatchRaw and the serving tier. "<mode>+" =
+  /** Lower one query string to (index terms, base mode, minus terms).
+    * "<mode>+" =
     * field-expanded: each term ORs with its stemmed form, adjacent
     * pairs add compound bigram terms (the reference's field expansion +
     * compound augmentation, plan/node.rs:104-127 + plan/mod.rs:235-300).
     * Phrase modes keep every token occurrence, in order. */
-  private[index] def lower(q: String, mode0: String, minus: Seq[String])
+  private def lower(q: String, mode0: String, minus: Seq[String])
       : (Seq[String], String, Seq[String]) = {
     val expanded = mode0.endsWith("+")
     val mode = if (expanded) mode0.dropRight(1) else mode0
@@ -249,18 +299,17 @@ final class InvertedIndex(spark: SparkSession, dir: String,
     val allTerms = plans.flatMap(p => p._2 ++ p._5).distinct
     if (allTerms.isEmpty || stats.numDocs == 0) return plans.map(p => p._1 -> Array.empty[(Int, Int, Float)]).toMap
     val st = stats
-    val bPlans = spark.sparkContext.broadcast(plans)
-    val byQid = perSegment(allTerms) { (seg, plist, fnArrs, dfs) =>
+    // per segment, one (plan index, hits) per plan
+    val byPlan = perSegment(allTerms) { (seg, plist, fnArrs, dfs) =>
       val byTerm = plist.groupBy(_.term)
       val weights = SegmentScoring.weights(dfs, st.numDocs)
-      bPlans.value.iterator.flatMap { case (qid, terms, k, mode, minus) =>
-        SegmentScoring.scoreQuery(terms, k, mode, minus, byTerm, fnArrs, weights, st)
-          .iterator.map(h => (qid, seg, h.doc, h.score))
+      plans.iterator.zipWithIndex.map { case ((_, terms, k, mode, minus), i) =>
+        (i, SegmentScoring.scoreQuery(terms, k, mode, minus, byTerm, fnArrs, weights, st)
+          .map(h => (seg, h.doc, h.score)))
       }
     }.groupBy(_._1)
-    plans.map { case (qid, _, k, _, _) =>
-      qid -> SegmentScoring.cut(
-        byQid.getOrElse(qid, Array.empty).map(t => (t._2, t._3, t._4)), k)
+    plans.zipWithIndex.map { case ((qid, _, k, _, _), i) =>
+      qid -> SegmentScoring.cut(byPlan.getOrElse(i, Array.empty).flatMap(_._2), k)
     }.toMap
   }
 
@@ -447,8 +496,7 @@ final class InvertedIndex(spark: SparkSession, dir: String,
   }
 
   @transient private lazy val reposMatchingMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      (List[String], List[String], Int), Seq[String]]()
+    new ConcurrentHashMap[(List[String], List[String], Int), Seq[String]]()
 
   /** Minimal query grammar (the core of the reference's nom parser,
     * query/parser/mod.rs:33-120): whole-query "quoted phrase" (incl.
@@ -656,13 +704,11 @@ final class InvertedIndex(spark: SparkSession, dir: String,
 
   /** Prefix query: OR-WAND over all terms starting with `prefix`
     * (reference PhrasePrefixQuery's term-expansion path). */
-  def searchPrefix(prefix: String, k: Int, cap: Int = 64): Array[(Int, Int, Float)] = {
-    val terms = termsWhere($"term".startsWith(prefix), cap)
-    if (terms.isEmpty) return Array.empty
-    searchTermSet(terms, k)
-  }
+  def searchPrefix(prefix: String, k: Int, cap: Int = 64): Array[(Int, Int, Float)] =
+    searchTermSet(termsWhere($"term".startsWith(prefix), cap), k)
 
-  /** Set query (reference set_query.rs): OR over an explicit term set.
+  /** Set query (reference set_query.rs): OR over an explicit term set
+    * (an empty set answers nothing and starts no job).
     * Terms enter the batch planner AS-IS — a string round-trip would
     * re-tokenize them (destroying field prefixes) and re-cap at the
     * parser's 32 while the expansion caps above go to 64. */
@@ -673,10 +719,8 @@ final class InvertedIndex(spark: SparkSession, dir: String,
     * automaton_weight.rs — the automaton accepts WHOLE terms, so the
     * pattern is anchored; rlike alone is an unanchored substring
     * search). */
-  def searchRegex(pattern: String, k: Int, cap: Int = 64): Array[(Int, Int, Float)] = {
-    val terms = termsWhere($"term".rlike(s"^(?:$pattern)$$"), cap)
-    if (terms.isEmpty) Array.empty else searchTermSet(terms, k)
-  }
+  def searchRegex(pattern: String, k: Int, cap: Int = 64): Array[(Int, Int, Float)] =
+    searchTermSet(termsWhere($"term".rlike(s"^(?:$pattern)$$"), cap), k)
 
   /** Range filter over doc attributes (reference range_query over
     * columnfields = a plain filter on the columnar doc table). */
@@ -722,8 +766,7 @@ final class InvertedIndex(spark: SparkSession, dir: String,
                   coeffs: Map[String, Double] = Signals.DefaultCoefficients,
                   minusTerms: Seq[String] = Nil)
       : Array[(Hit, Map[String, Double])] = {
-    val fetchK = InvertedIndex.candidateBudget(k)
-    val cands = searchBatchRaw(Seq(("q", query, fetchK, "or+", minusTerms)))("q")
+    val cands = searchRaw(query, InvertedIndex.candidateBudget(k), "or+", minusTerms)
     rankSignalsOver(query, cands, k, coeffs)
   }
 
@@ -758,8 +801,6 @@ final class InvertedIndex(spark: SparkSession, dir: String,
     val textDfs = dfOf(idfTexts)
 
     val candBySeg = cands.groupBy(_._1).map { case (s, rs) => s -> rs.map(_._2).sorted }
-    val bCands = spark.sparkContext.broadcast(candBySeg)
-    val bTextDfs = spark.sparkContext.broadcast(textDfs)
     val fCoeffs = Fields.DefaultBm25fCoeffs
 
     // (seg, doc, bm25f, bm25Content, coverage, bm25Bigrams, bm25Stemmed,
@@ -767,7 +808,7 @@ final class InvertedIndex(spark: SparkSession, dir: String,
     def sigSeg(seg: Int, plist: Array[PostingRow], fnArrs: Map[Int, Array[Byte]],
                dfs: Map[String, Long])
         : Iterator[(Int, Int, Double, Double, Double, Double, Double, Double, Double)] = {
-      val candDocs = bCands.value.getOrElse(seg, Array.empty)
+      val candDocs = candBySeg.getOrElse(seg, Array.empty)
       if (candDocs.isEmpty) return Iterator.empty
       val byTerm = plist.groupBy(_.term)
       def cursor(term: String, field: Int): Option[(TermCursor, Bm25Weight, Bm25FWeight, Float)] =
@@ -778,7 +819,7 @@ final class InvertedIndex(spark: SparkSession, dir: String,
           val bw = new Bm25Weight(idf * (1.0f + Bm25.K1), av)
           val text = if (field == Fields.Content) term
             else term.substring(2) // strip the 2-char field prefix
-          val sharedIdf = Bm25.idf(bTextDfs.value.getOrElse(text, 0L), N)
+          val sharedIdf = Bm25.idf(textDfs.getOrElse(text, 0L), N)
           val bf = new Bm25FWeight(sharedIdf, av, fCoeffs.getOrElse(field, 0.0f))
           (SegmentScoring.cursor(rows, fnArrs(Fields.fnormFieldOf(field)), bw), bw, bf, idf)
         }
@@ -788,37 +829,25 @@ final class InvertedIndex(spark: SparkSession, dir: String,
       val urlCs = urlTerms.flatMap(cursor(_, Fields.Url))
       val repoCs = repoTerms.flatMap(cursor(_, Fields.Repo))
       candDocs.iterator.map { doc =>
-        var bm25f = 0.0; var bm25c = 0.0; var matched = 0
-        contentCs.foreach { case (c, bw, bf, _) =>
-          if (c.contains(doc)) {
-            val fn = c.fieldNormId; val tf = c.termFreq
-            bm25c += bw.score(fn, tf).toDouble
-            bm25f += bf.score(fn, tf).toDouble
-            matched += 1
+        var bm25f = 0.0
+        // a field's BM25 sum; each match also adds its BM25F part to
+        // bm25f, so bm25f sums content, stemmed, bigram in cursor order
+        def bm25(cs: Seq[(TermCursor, Bm25Weight, Bm25FWeight, Float)]): Double =
+          cs.foldLeft(0.0) { case (sum, (c, bw, bf, _)) =>
+            if (!c.contains(doc)) sum
+            else {
+              val fn = c.fieldNormId; val tf = c.termFreq
+              bm25f += bf.score(fn, tf).toDouble
+              sum + bw.score(fn, tf).toDouble
+            }
           }
-        }
-        var bm25st = 0.0
-        stemCs.foreach { case (c, bw, bf, _) =>
-          if (c.contains(doc)) {
-            val fn = c.fieldNormId; val tf = c.termFreq
-            bm25st += bw.score(fn, tf).toDouble
-            bm25f += bf.score(fn, tf).toDouble
-          }
-        }
-        var bm25bi = 0.0
-        bigramCs.foreach { case (c, bw, bf, _) =>
-          if (c.contains(doc)) {
-            val fn = c.fieldNormId; val tf = c.termFreq
-            bm25bi += bw.score(fn, tf).toDouble
-            bm25f += bf.score(fn, tf).toDouble
-          }
-        }
-        var idfUrl = 0.0
-        urlCs.foreach { case (c, _, _, idf) => if (c.contains(doc)) idfUrl += idf.toDouble }
-        var idfRepo = 0.0
-        repoCs.foreach { case (c, _, _, idf) => if (c.contains(doc)) idfRepo += idf.toDouble }
-        (seg, doc, bm25f, bm25c, matched.toDouble / base.length, bm25bi,
-          bm25st, idfUrl, idfRepo)
+        def idfSum(cs: Seq[(TermCursor, Bm25Weight, Bm25FWeight, Float)]): Double =
+          cs.foldLeft(0.0) { case (sum, (c, _, _, idf)) => if (c.contains(doc)) sum + idf.toDouble else sum }
+        val bm25c = bm25(contentCs)
+        val bm25st = bm25(stemCs)
+        val bm25bi = bm25(bigramCs)
+        (seg, doc, bm25f, bm25c, contentCs.count(_._1.contains(doc)).toDouble / base.length, bm25bi,
+          bm25st, idfSum(urlCs), idfSum(repoCs))
       }
     }
 
@@ -900,8 +929,7 @@ final class InvertedIndex(spark: SparkSession, dir: String,
     * reference. Returns hits re-ranked with their ltr scores. */
   def rankLtr(query: String, k: Int, model: Ltr.Ensemble)
       : Array[(Hit, Double)] = {
-    val fetchK = InvertedIndex.candidateBudget(k)
-    val cands = searchBatchRaw(Seq(("q", query, fetchK, "or+", Nil)))("q")
+    val cands = searchRaw(query, InvertedIndex.candidateBudget(k), "or+")
     if (cands.isEmpty) return Array.empty
     val withVecs = rankSignalsOver(query, cands, cands.length)
     withVecs.map { case (h, v) => (h, v, model.predict(v)) }
@@ -924,8 +952,6 @@ final class InvertedIndex(spark: SparkSession, dir: String,
     val posTerms = BooleanQuery.positiveTerms(node).toSet
     if (posTerms.isEmpty || stats.numDocs == 0) return Array.empty
     val st = stats
-    val bNode = spark.sparkContext.broadcast(node)
-    val bPos = spark.sparkContext.broadcast(posTerms)
 
     def boolSegment(seg: Int, plist: Array[PostingRow], fnArrs: Map[Int, Array[Byte]],
                     dfs: Map[String, Long]): Iterator[(Int, Int, Float)] = {
@@ -936,14 +962,14 @@ final class InvertedIndex(spark: SparkSession, dir: String,
         plist.groupBy(_.term).map { case (t, rows) =>
           t -> SegmentScoring.bm25Cursor(t, rows, fnArrs, w(t), st)
         }
-      val drivers = cursors.filter(c => bPos.value.contains(c._1)).values.toArray
+      val drivers = cursors.filter(c => posTerms.contains(c._1)).values.toArray
       if (drivers.isEmpty) return Iterator.empty
       val topk = new TopK(k)
       var cand = Int.MaxValue
       drivers.foreach(c => if (c.doc < cand) cand = c.doc)
       while (cand != BlockWand.Terminated) {
         val doc = cand
-        val (m, s) = BooleanQuery.evaluate(bNode.value, t =>
+        val (m, s) = BooleanQuery.evaluate(node, t =>
           cursors.get(t) match {
             case Some(c) if c.contains(doc) => Some(c.score)
             case _ => None
@@ -987,8 +1013,7 @@ final class InvertedIndex(spark: SparkSession, dir: String,
             (Fields.bigramTerm(p(0), p(1)), Fields.Bigram, p(0) + p(1)) }.toSeq
         else Nil)
     // recall stage (per-segment budget independent of segment count)
-    val fetchK = InvertedIndex.candidateBudget(k)
-    val cands = searchBatchRaw(Seq(("q", query, fetchK, "or+", Nil)))("q")
+    val cands = searchRaw(query, InvertedIndex.candidateBudget(k), "or+")
     if (cands.isEmpty) return Array.empty
     val candBySeg: Map[Int, Array[Int]] =
       cands.groupBy(_._1).map { case (s, rs) => s -> rs.map(_._2).sorted }
@@ -998,19 +1023,16 @@ final class InvertedIndex(spark: SparkSession, dir: String,
     val plan: Seq[(String, Int, Float)] = fieldTerms.map { case (term, field, idfText) =>
       (term, field, Bm25.idf(dfs.getOrElse(idfText, 0L), st.numDocs))
     }
-    val bPlan = spark.sparkContext.broadcast(plan)
-    val bCands = spark.sparkContext.broadcast(candBySeg)
-    val bCoeffs = spark.sparkContext.broadcast(coeffs)
 
     def scoreSeg(seg: Int, plist: Array[PostingRow], fnArrs: Map[Int, Array[Byte]],
                  dfs: Map[String, Long]): Iterator[(Int, Int, Float)] = {
-      val candDocs = bCands.value.getOrElse(seg, Array.empty)
+      val candDocs = candBySeg.getOrElse(seg, Array.empty)
       if (candDocs.isEmpty) return Iterator.empty
       val byTerm = plist.groupBy(_.term)
       // cursors in plan order => deterministic f32 summation order
-      val cs: Array[TermCursor] = bPlan.value.flatMap { case (term, field, idf) =>
+      val cs: Array[TermCursor] = plan.flatMap { case (term, field, idf) =>
         byTerm.get(term).map(SegmentScoring.cursor(_, fnArrs(Fields.fnormFieldOf(field)),
-          new Bm25FWeight(idf, st.avgNorm(field), bCoeffs.value(field))))
+          new Bm25FWeight(idf, st.avgNorm(field), coeffs(field))))
       }.toArray
       candDocs.iterator.map { doc =>
         var score = 0.0f
@@ -1037,8 +1059,7 @@ final class InvertedIndex(spark: SparkSession, dir: String,
     * code corpus as repo=site, repo/path=url, path=url-sans-tld,
     * file name=title. */
   def searchDeduped(query: String, k: Int, mode: String = "or"): Array[Hit] = {
-    val fetchK = InvertedIndex.candidateBudget(k)
-    val raw = searchBatchRaw(Seq(("q", query, fetchK, mode, Nil)))("q")
+    val raw = searchRaw(query, InvertedIndex.candidateBudget(k), mode)
     if (raw.isEmpty) return Array.empty
     val info = docsOf(raw)
     val cands = raw.map { case (seg, d, sc) =>
@@ -1059,11 +1080,9 @@ final class InvertedIndex(spark: SparkSession, dir: String,
   def searchFuzzy(term: String, k: Int, maxDist: Int = 1, cap: Int = 64)
       : Array[(Int, Int, Float)] = {
     import org.apache.spark.sql.functions.{length => slen, levenshtein, lit}
-    val terms = termsWhere(
+    searchTermSet(termsWhere(
       slen($"term").between(term.length - maxDist, term.length + maxDist) &&
-        levenshtein($"term", lit(term)) <= maxDist, cap)
-    if (terms.isEmpty) Array.empty
-    else searchTermSet(terms, k)
+        levenshtein($"term", lit(term)) <= maxDist, cap), k)
   }
 
   /** Spell correction (re-derivation of crates/web-spell: the
@@ -1218,11 +1237,10 @@ final class InvertedIndex(spark: SparkSession, dir: String,
       : (Array[(Int, Int, Float)], Long, Boolean) = {
     val terms = queryTerms(query)
     if (terms.isEmpty || stats.numDocs == 0) return (Array.empty, 0L, false)
-    val N = stats.numDocs
     val st = stats
-    val budget = maxDocsPerSegment
+    val N = st.numDocs
     val perSeg = perSegment(terms.toSeq) { (seg, plist, fnArrs, dfs) =>
-      approxSegment(seg, plist, fnArrs, SegmentScoring.weights(dfs, N), st, k, budget)
+      approxSegment(seg, plist, fnArrs, SegmentScoring.weights(dfs, N), st, k, maxDocsPerSegment)
     }
     val saturated = perSeg.exists(_._5)
     val exactCount = perSeg.groupBy(_._1).map { case (_, rows) => rows.head._4.toLong }.sum
@@ -1240,9 +1258,8 @@ final class InvertedIndex(spark: SparkSession, dir: String,
   }
 
   private def approxSegment(seg: Int, plist: Array[PostingRow],
-                            fnArrs: Map[Int, Array[Byte]],
-                            weights: Map[String, Float], stats: CollectionStats,
-                            k: Int, budget: Int)
+                            fnArrs: Map[Int, Array[Byte]], weights: Map[String, Float],
+                            stats: CollectionStats, k: Int, budget: Int)
       : Iterator[(Int, Int, Float, Int, Boolean)] = {
     val byTerm = plist.groupBy(_.term)
     // query terms are content terms: content norms and average
@@ -1276,6 +1293,12 @@ object InvertedIndex {
   /** Fieldnorm fields an index can store, one byte per doc each:
     * content and the bigram/trigram shadows. */
   private val FnormFields = 3L
+
+  /** The collection df of fetched rows: docFreq summed per term, over
+    * the terms that have rows (as the distributed executor's partials
+    * count them). */
+  private def dfSums(rows: Map[String, Array[PostingRow]]): Map[String, Long] =
+    rows.collect { case (t, rs) if rs.nonEmpty => t -> rs.map(_.docFreq.toLong).sum }
 
   /** One scan task's per-term docFreq sums, sent to every reduce
     * partition of `perSegment`'s shuffle. */

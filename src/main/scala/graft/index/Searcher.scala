@@ -1,6 +1,6 @@
 package graft.index
 
-import java.util.concurrent.{ExecutionException, Executors, FutureTask, ThreadFactory}
+import java.util.concurrent.{CompletableFuture, ExecutionException, Executors, FutureTask, ThreadFactory}
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.reflect.ClassTag
@@ -8,86 +8,30 @@ import scala.reflect.ClassTag
 /** Driver-side serving searcher — the Spark analog of the reference's
   * search shard, which serves queries from mmap'd segment files without
   * spinning up jobs (crates/core/src/inverted_index + the distributed
-  * searcher's shard RPC). Fieldnorms (1 byte/doc) are collected once;
-  * posting rows are fetched through the pushed-down parquet scan on
-  * first use and LRU-cached per term, so a repeated-vocabulary query
-  * stream runs entirely on the driver: no job, no shuffle, sub-ms
-  * latency. Results are IDENTICAL to InvertedIndex.searchRaw because
-  * both run the same code: InvertedIndex.lower lowers the query,
-  * SegmentScoring.scoreQuery scores each segment's rows (same cursors,
-  * same WAND) and SegmentScoring.cut merges (property tested).
+  * searcher's shard RPC; searcher/local/inner.rs runs every query shape
+  * through per-segment collectors on its executor pool).
   *
-  * Segments score in parallel, as the reference's searcher runs its
-  * per-segment collectors on its executor pool (crates/core/src/
-  * executor.rs): one task per segment on the JVM's one serving pool
-  * (`Searcher.fanOut`), each with its own cursors and TopK; the caller
-  * joins them and merges with the total-order cut, so the fan-out cannot
-  * change a result. The posting fetch stays on the calling thread, so a
-  * miss's one Spark job runs in the caller's job group; scoring never
-  * starts a job.
+  * A Searcher IS an InvertedIndex over `idx`'s directory, one that runs
+  * on the resident executor (see InvertedIndex.perSegment): every
+  * per-segment caller (searchRaw, searchBatchRaw, searchBoosted,
+  * searchBool, searchBm25F, searchApprox, rankSignalsOver) and dfOf
+  * read posting rows from a term cache and score one task per segment
+  * on the JVM's one serving pool, so a warm call starts no job. The
+  * code is the distributed path's own, so the answers are identical
+  * (property tested). It shares `idx`'s stats and driver-side
+  * fieldnorms, collected when it opens, and refuses an index whose
+  * fieldnorms exceed `spark.graft.residentFnormBytes`.
   *
   * Scale note: this is the SERVING tier. At web scale each serving node
-  * holds a shard's segments; the cache cap bounds driver memory
-  * (posting rows stay compressed in cache — decode happens per query
+  * holds a shard's segments; `maxCachedBytes` bounds the cached posting
+  * bytes (rows stay compressed in the cache — decode happens per query
   * in the cursor, exactly like the mmap'd reference). Batch/analytical
   * paths keep using the distributed InvertedIndex. */
-final class Searcher(idx: InvertedIndex, maxCachedTerms: Int = 4096) {
-
-  private val stats = idx.stats
-
-  // fieldnorms resident: segment -> field -> bytes; the instance's one
-  // collect, shared with its query broadcast
-  private val fnorms: Map[Int, Map[Int, Array[Byte]]] = idx.residentFnormsLocal
-
-  // LRU posting cache: term -> rows across segments (compressed)
-  private val cache = new java.util.LinkedHashMap[String, Array[PostingRow]](
-    64, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[String, Array[PostingRow]]): Boolean =
-      size() > maxCachedTerms
-  }
-
-  /** Fetch-and-cache posting rows for `terms`; one pushed-down scan for
-    * all misses. Cache access synchronizes (an access-order
-    * LinkedHashMap rewires its links on every get, so concurrent
-    * serving calls would corrupt it), and the result assembles from a
-    * LOCAL map — a single query whose vocabulary exceeds the cache cap
-    * must not read back entries its own puts already evicted. */
-  private def rowsFor(terms: Seq[String]): Map[String, Array[PostingRow]] = {
-    val local = scala.collection.mutable.Map[String, Array[PostingRow]]()
-    val missing = cache.synchronized {
-      terms.filter { t =>
-        val v = cache.get(t)
-        if (v != null) { local(t) = v; false } else true
-      }
-    }
-    if (missing.nonEmpty) {
-      val fetched = idx.postingRows(missing)
-      cache.synchronized {
-        missing.foreach(t => cache.put(t, fetched.getOrElse(t, Array.empty)))
-      }
-      missing.foreach(t => local(t) = fetched.getOrElse(t, Array.empty))
-    }
-    terms.map(t => t -> local(t)).toMap
-  }
-
-  /** Same contract as InvertedIndex.searchRaw, served from the driver:
-    * the cached rows grouped by segment go through the distributed
-    * path's per-segment scoring and merge. */
-  def searchRaw(query: String, k: Int, mode: String = "or",
-                minusTerms: Seq[String] = Nil): Array[(Int, Int, Float)] = {
-    val (terms, m, minus) = idx.lower(query, mode, minusTerms)
-    if (terms.isEmpty || stats.numDocs == 0) return Array.empty
-    val rows = rowsFor((terms ++ minus).distinct)
-    val weights = SegmentScoring.weights(
-      rows.map { case (t, rs) => t -> rs.map(_.docFreq.toLong).sum }, stats.numDocs)
-    val tasks = rows.valuesIterator.flatten.toArray.groupBy(_.segment).toArray.map {
-      case (seg, plist) => new FutureTask(() =>
-        SegmentScoring.scoreQuery(terms, k, m, minus, plist.groupBy(_.term),
-          fnorms(seg), weights, stats).map(h => (seg, h.doc, h.score)))
-    }
-    SegmentScoring.cut(Searcher.fanOut(tasks).flatten, k)
-  }
+final class Searcher(idx: InvertedIndex, maxCachedBytes: Long = 64L << 20)
+    extends InvertedIndex(idx, maxCachedBytes) {
+  require(fnormsResident, s"a Searcher keeps the fieldnorms on the driver, and this index's " +
+    s"exceed ${InvertedIndex.ResidentFnormBytesConf} = ${idx.maxResidentFnormBytes} bytes")
+  residentFnormsLocal // collected when the searcher opens
 }
 
 object Searcher {
@@ -119,4 +63,61 @@ object Searcher {
     try tasks.map(_.get())
     catch { case e: ExecutionException => throw e.getCause }
   }
+}
+
+/** The resident executor's term -> posting rows cache (rows of every
+  * segment, compressed), least recently used first out once the cached
+  * bytes exceed `maxBytes`. An entry is a future: the caller that misses
+  * a term puts it and fetches all its misses with one pushed-down scan
+  * on its own thread; a caller that finds the term still in flight waits
+  * for that fetch instead of starting another. */
+private[index] final class RowCache(fetch: Seq[String] => Map[String, Array[PostingRow]],
+                                    maxBytes: Long) {
+  private type Entry = CompletableFuture[Array[PostingRow]]
+  // access-order: a get rewires the links, so every access holds the lock
+  private val lru = new java.util.LinkedHashMap[String, Entry](64, 0.75f, true)
+  private var bytes = 0L
+
+  def heldBytes: Long = synchronized(bytes)
+
+  /** The rows of `terms`, read from this call's own entries: a query
+    * whose rows exceed the cap must not lose rows its own puts evicted. */
+  def rows(terms: Seq[String]): Map[String, Array[PostingRow]] = {
+    val mine = Map.newBuilder[String, Entry]
+    val entries = synchronized(terms.distinct.map { t =>
+      t -> Option(lru.get(t)).getOrElse { val e = new Entry; lru.put(t, e); mine += t -> e; e }
+    })
+    val misses = mine.result()
+    if (misses.nonEmpty) {
+      val fetched = try fetch(misses.keys.toSeq) catch {
+        case e: Throwable =>
+          synchronized(misses.foreach { case (t, f) => lru.remove(t, f); f.completeExceptionally(e) })
+          throw e
+      }
+      synchronized {
+        misses.foreach { case (t, f) =>
+          f.complete(fetched.getOrElse(t, Array.empty))
+          if (lru.get(t) eq f) bytes += bytesOf(t, f.join())
+        }
+        // evict done entries only: an in-flight one is not counted yet
+        val it = lru.entrySet.iterator
+        while (bytes > maxBytes && it.hasNext) {
+          val e = it.next()
+          if (e.getValue.isDone) { bytes -= bytesOf(e.getKey, e.getValue.join()); it.remove() }
+        }
+      }
+    }
+    entries.map { case (t, f) =>
+      t -> (try f.get() catch { case e: ExecutionException => throw e.getCause })
+    }.toMap
+  }
+
+  /** An entry's bytes: the term, and each row's encoded postings,
+    * block-max metadata and positions. */
+  private def bytesOf(term: String, rows: Array[PostingRow]): Long =
+    term.length + rows.iterator.map { r =>
+      r.packedDocs.length.toLong + r.packedTfs.length + r.tailBytes.length +
+        r.docBits.length + r.tfBits.length + r.bwFnormIds.length + r.bwTfs.length +
+        r.posBytes.length + 4L * (r.lastDocs.length + r.posBlockOffsets.length)
+    }.sum
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.util.CollectionAccumulator
 
-import graft.core.PostingListData
+import graft.core.{Fnv1a, PostingListData}
 
 /** Record-level segment merge: K input segments -> K/fanIn output
   * segments, the Spark re-derivation of the reference's TermMerger
@@ -83,7 +83,7 @@ object SegmentMerge {
     // (a TTL filter dropping only middle segments; re-compacting the
     // same range after new data) must commit under DISTINCT markers —
     // an endpoint-only tag silently skipped them as already done
-    val lineage = IndexBuilder.fnv1a64(
+    val lineage = Fnv1a(
       stats.map(s => s"${s.segment}:${s.sha256Agg}").mkString(","))
     val tag = f"merge${stats.head.segment}-${stats.last.segment}-f$fanIn-$lineage%016x"
     val newSegOf: Int => Int = old => old / fanIn
@@ -109,6 +109,13 @@ object SegmentMerge {
     IndexBuilder.commit(spark, outDir, tag, s""""mergedSegments":${stats.length}""",
         lineage = ns => s""""mergedFrom":[${grouped(ns).map(_.segment).mkString(",")}]""") {
         staged =>
+      // a merged id the out dir already holds would become a second copy
+      // of that segment (a re-run of this same merge never gets here: its
+      // marker makes the commit a no-op)
+      val held = IndexBuilder.readStats(spark, IndexBuilder.dataDir(outDir)).map(_.segment)
+        .filter(merged.contains).distinct.sorted.mkString(", ")
+      require(held.isEmpty,
+        s"merge into $outDir refused: it already holds segment(s) $held, which this merge would write")
       val baseOf: Map[Int, Int] = grouped.values.flatMap { g =>
         var acc = 0
         g.sortBy(_.segment).map { s =>

@@ -2,8 +2,9 @@ package graft.index
 
 import graft.core._
 
-/** Per-segment scoring shared by the distributed InvertedIndex paths and
-  * the driver-side Searcher. Each decision below lives here only, so
+/** Per-segment scoring shared by every InvertedIndex caller on both of
+  * its executors (distributed, and resident in a Searcher). Each
+  * decision below lives here only, so
   * bit-identity with BlockWand.exhaustiveUnion has one place to hold:
   *  - how a term's posting rows in one segment become one scored cursor;
   *  - how one lowered query scores over one segment (mode dispatch,

@@ -103,7 +103,7 @@ object Centrality {
   }
 
   private[graft] def addTo(regs: Array[Byte], v: Long): Unit = {
-    val h = mix64(graft.index.IndexBuilder.fnv1a64("hb:" + v))
+    val h = mix64(graft.core.Fnv1a("hb:" + v))
     val idx = (h >>> (64 - P)).toInt
     val rest = h << P
     val rank = (java.lang.Long.numberOfLeadingZeros(rest | 1L) + 1).toByte

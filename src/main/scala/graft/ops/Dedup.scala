@@ -103,7 +103,7 @@ object Dedup {
   def simhash64(tokens: Iterable[String]): Long = {
     val counts = new Array[Int](64)
     tokens.foreach { t =>
-      val h = graft.index.IndexBuilder.fnv1a64(t)
+      val h = graft.core.Fnv1a(t)
       var b = 0
       while (b < 64) {
         if (((h >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1

@@ -461,7 +461,7 @@ object LtrTrain {
       // session — concurrent persists would be misattributed).
       val before = sc.getPersistentRDDs.keySet
       val out = ds.localCheckpoint() // eager
-      val mine = sc.getPersistentRDDs.keySet -- before
+      val mine = sc.getPersistentRDDs.keySet.filterNot(before)
       (out, mine.toSet)
     }
     def freePrev(keep: Set[Int]): Unit = {

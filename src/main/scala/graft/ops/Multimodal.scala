@@ -24,9 +24,7 @@ object Multimodal {
     * feature i = scaled FNV hash of (bytes digest, i). A real deploy
     * swaps only this function (same batch shape). */
   def fakeDecodeFeatures(bytes: Array[Byte], dim: Int): Array[Float] = {
-    var h = 0xcbf29ce484222325L
-    var i = 0
-    while (i < bytes.length) { h ^= bytes(i) & 0xffL; h *= 0x100000001b3L; i += 1 }
+    val h = graft.core.Fnv1a.bytes(bytes)
     Array.tabulate(dim) { d =>
       var x = h ^ (d * 0x9e3779b97f4a7c15L)
       x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L

@@ -174,8 +174,8 @@ object NaiveBayes {
           m.idf(tid).toDouble * m.flp(c).getOrElse(tid, 0.5f).toDouble).toArray)
     }.toSeq
     val termDf = termRows.toDF("term", "tid", "w")
-    val start = array(m.priorLn.map(p => lit(p.toDouble)): _*)
-    val classesArr = array(m.classes.map(lit(_)): _*)
+    val start = array(m.priorLn.map(p => lit(p.toDouble)).toIndexedSeq: _*)
+    val classesArr = array(m.classes.map(lit(_)).toIndexedSeq: _*)
 
     val ids = TextOps.fanOut(
       docs.select(col(idCol).as("id"), col(textCol).as("text")))

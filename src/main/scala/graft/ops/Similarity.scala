@@ -67,7 +67,7 @@ object Similarity {
     val a = new Array[Float](dim)
     var i = 0
     while (i < dim) {
-      val h = graft.index.IndexBuilder.fnv1a64(s"lsh:$b:$i")
+      val h = graft.core.Fnv1a(s"lsh:$b:$i")
       a(i) = ((h >>> 11).toDouble / (1L << 53).toDouble).toFloat * 2f - 1f
       i += 1
     }

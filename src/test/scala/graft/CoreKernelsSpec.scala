@@ -284,5 +284,23 @@ class BlockCodecSpec extends AnyFunSuite {
     assert(hits.exists(_._1 == "graft/core/BlockCodec.scala"), "the scan must see BlockCodec's own loops")
     val outside = hits.filter(_._1 != "graft/core/BlockCodec.scala")
     assert(outside.isEmpty, outside.map { case (f, l) => s"$f:$l" }.mkString("; "))
+    // core/ depends on nothing above it, and FNV-1a has one home there
+    val upward = scalaFiles(new java.io.File(root, "graft/core")).filter(f =>
+      comment.replaceAllIn(new String(java.nio.file.Files.readAllBytes(f.toPath), "ISO-8859-1"), "")
+        .contains("graft.index")).map(_.getName)
+    assert(upward.isEmpty, s"core/ files naming graft.index: $upward")
+    val fnv = scalaFiles(root).filter(f =>
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "ISO-8859-1").contains("0xcbf29ce484222325L"))
+      .map(f => root.toPath.relativize(f.toPath).toString)
+    assert(fnv == Seq("graft/core/Fnv1a.scala"), fnv)
+  }
+
+  test("FNV-1a: the string and byte forms agree on ASCII and match the published 64-bit vectors") {
+    assert(Fnv1a("") == 0xcbf29ce484222325L)
+    assert(Fnv1a("a") == 0xaf63dc4c8601ec8cL)
+    assert(Fnv1a("foobar") == 0x85944171f73967e8L)
+    Seq("", "a", "foobar", "site:apache/spark", "hb:42").foreach { s =>
+      assert(Fnv1a.bytes(s.getBytes("US-ASCII")) == Fnv1a(s), s)
+    }
   }
 }

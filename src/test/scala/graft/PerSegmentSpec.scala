@@ -73,6 +73,33 @@ class PerSegmentSpec extends AnyFunSuite {
     assert(jobsOf(fresh.searchRaw("query engine table", 10)) == 1)
   }
 
+  test("a resident instance refuses an index whose fieldnorms exceed the cap, when it opens") {
+    val e = intercept[IllegalArgumentException](new Searcher(capped()))
+    assert(e.getMessage.contains(InvertedIndex.ResidentFnormBytesConf) && e.getMessage.contains("= 1 bytes"),
+      e.getMessage)
+  }
+
+  test("scoreQuery is called only by InvertedIndex, and InvertedIndex broadcasts only its fieldnorms and patternMatch's candidates (source scan)") {
+    val root = new java.io.File("src/main/scala")
+    def scalaFiles(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).getOrElse(Array.empty).toSeq.flatMap { f =>
+        if (f.isDirectory) scalaFiles(f) else Seq(f).filter(_.getName.endsWith(".scala"))
+      }
+    val comment = """(?s)/\*.*?\*/|//[^\n]*""".r
+    def code(f: java.io.File): String = comment.replaceAllIn(
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "ISO-8859-1"),
+      m => "\n" * m.matched.count(_ == '\n'))
+    val files = scalaFiles(root)
+    assert(files.size > 10, s"$root not found")
+    val callers = files.filter(f => """\bscoreQuery\(""".r.findFirstIn(code(f)).nonEmpty).map(_.getName)
+    assert(callers.toSet == Set("InvertedIndex.scala", "SegmentScoring.scala"), callers)
+    val idx = files.find(_.getName == "InvertedIndex.scala").get
+    val lines = code(idx).split("\n", -1).toSeq
+    val broadcasts = lines.filter(_.contains("sparkContext.broadcast"))
+    assert(broadcasts.length == 2 && broadcasts.exists(_.contains("broadcast(residentFnormsLocal)")) &&
+      broadcasts.exists(_.contains("candidates.map")), broadcasts.mkString("\n"))
+  }
+
   test("folded df: searchRaw == Searcher (df from its own rows) == exhaustive, on sharded postings") {
     val sp = spark
     import sp.implicits._

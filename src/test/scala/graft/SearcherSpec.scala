@@ -1,12 +1,14 @@
 package graft
 
+import java.lang.Double.doubleToRawLongBits
 import java.lang.Float.floatToRawIntBits
-import java.util.concurrent.{Callable, Executors, FutureTask}
+import java.util.concurrent.{Callable, CyclicBarrier, Executors, FutureTask}
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.core.BooleanQuery.{Bool, Term}
 import graft.index._
 
 /** Driver-side serving searcher == the distributed query path. */
@@ -108,6 +110,21 @@ class SearcherSpec extends AnyFunSuite {
         assert(got == sequential(j), s"'${qs(j)._1}' mode=${qs(j)._2}")
       })
     } finally clients.shutdown()
+    // 8 concurrent FIRST calls on one new term share one fetch. The
+    // client threads start inside the count, so they inherit its job group
+    val fresh = new Searcher(wide)
+    val (q, mode) = qs(3)
+    var got = Seq.empty[Seq[(Int, Int, Int)]]
+    val jobs = SparkJobs.count(spark) {
+      val burst = Executors.newFixedThreadPool(8)
+      val start = new CyclicBarrier(8)
+      try got = (0 until 8).map(_ => burst.submit(new Callable[Seq[(Int, Int, Int)]] {
+        def call(): Seq[(Int, Int, Int)] = { start.await(); bits(fresh.searchRaw(q, 20, mode)) }
+      })).map(_.get())
+      finally burst.shutdown()
+    }
+    assert(jobs == 1, s"8 concurrent first calls on '$q' started $jobs jobs")
+    assert(got.forall(_ == sequential(3)))
   }
 
   test("Searchers share one pool: 20 of them leave the thread count within the pool size") {
@@ -145,5 +162,111 @@ class SearcherSpec extends AnyFunSuite {
     val e = intercept[IllegalStateException](Searcher.fanOut(tasks))
     assert(e.getMessage == "segment 4")
     assert(Searcher.fanOut(Array.tabulate(6)(i => new FutureTask[Int](() => i))).toSeq == (0 until 6))
+  }
+
+  private def hitBits(hs: Array[(Hit, Map[String, Double])]) = hs.toSeq.map { case (h, v) =>
+    ((h.rank, h.segment, h.docId, floatToRawIntBits(h.score), h.repo, h.path),
+      v.toSeq.sorted.map { case (n, x) => (n, doubleToRawLongBits(x)) })
+  }
+
+  test("every perSegment caller and dfOf: the resident executor == the distributed one, bit for bit (16 sharded segments)") {
+    val srv = new Searcher(wide)
+    val rnd = new scala.util.Random(1101L)
+    val words = Corpus.Vocab.take(90).toIndexedSeq
+    def pick(n: Int): Seq[String] = Seq.fill(n)(words(rnd.nextInt(words.length)))
+    val modes = Seq("or", "and", "phrase", "phrase~2", "or+", "and+", "dismax", "exhaustive", "bitset")
+    val topRepo = wide.search("spark session", 1).head.repo
+    val plans = (0 until 48).map { i =>
+      val text = (pick(1 + rnd.nextInt(4)) ++ (if (i % 7 == 0) Seq(s"zzsalt${i}a") else Nil)).mkString(" ")
+      val minus = rnd.nextInt(4) match {
+        case 0 => pick(1)
+        case 1 => Seq(Fields.RepoPrefix + topRepo)
+        case _ => Nil
+      }
+      (s"q$i", text, 1 + rnd.nextInt(40), modes(i % modes.length), minus)
+    }
+    val want = wide.searchBatchRaw(plans)
+    val got = srv.searchBatchRaw(plans)
+    assert(want.values.count(_.nonEmpty) > plans.length / 2)
+    plans.foreach { case (qid, q, k, mode, minus) =>
+      val tag = s"'$q' k=$k mode=$mode minus=$minus"
+      assert(bits(got(qid)) == bits(want(qid)), tag)
+      assert(bits(srv.searchRaw(q, k, mode, minus)) == bits(want(qid)), tag)
+    }
+
+    (0 until 6).foreach { i =>
+      val ws = pick(2 + rnd.nextInt(3))
+      val clauses = ws.map(w => (w, 0.25f + rnd.nextInt(12) * 0.5f)) ++
+        Seq((Fields.bigramTerm(ws(0), ws(1)), 1.5f), (Fields.StemPrefix + ws(0), 0.75f))
+      assert(bits(srv.searchBoosted(clauses, 25)) == bits(wide.searchBoosted(clauses, 25)), s"boosted $clauses")
+      val tree = Bool(must = Seq(Term(ws(0))),
+        should = ws.drop(1).map(Term.apply) :+ Term(Fields.bigramTerm(ws(0), ws(1))),
+        mustNot = if (i % 2 == 0) Seq(Term(pick(1).head)) else Nil)
+      assert(bits(srv.searchBool(tree, 25)) == bits(wide.searchBool(tree, 25)), s"bool $tree")
+      val q = ws.mkString(" ")
+      assert(bits(srv.searchBm25F(q, 20)) == bits(wide.searchBm25F(q, 20)), s"bm25f '$q'")
+      Seq(10, 10000).foreach { budget =>
+        val (wh, wc, ws0) = wide.searchApprox(q, 15, budget)
+        val (gh, gc, gs) = srv.searchApprox(q, 15, budget)
+        assert((bits(gh), gc, gs) == ((bits(wh), wc, ws0)), s"approx '$q' budget=$budget")
+        if (budget == 10) assert(ws0, "a 10-doc budget saturates a 31-doc segment")
+      }
+      if (i < 3) {
+        val cands = wide.searchRaw(q, InvertedIndex.candidateBudget(10), "or+")
+        assert(hitBits(srv.rankSignalsOver(q, cands, 10)) == hitBits(wide.rankSignalsOver(q, cands, 10)),
+          s"signals '$q'")
+      }
+    }
+    val dfTerms = pick(20) ++ Seq("nosuchtok", Fields.bigramTerm("spark", "data"), "zzsalt9a")
+    assert(srv.dfOf(dfTerms) == wide.dfOf(dfTerms))
+    assert(!srv.dfOf(dfTerms).contains("nosuchtok"))
+  }
+
+  test("a warm resident call starts no job, a miss exactly one, and rankSignalsOver keeps only its doc-table lookups") {
+    val srv = new Searcher(wide)
+    val clauses = Seq(("spark", 2.0f), ("data", 1.0f), (Fields.bigramTerm("data", "table"), 0.5f))
+    val tree = Bool(must = Seq(Term("data")), should = Seq(Term("spark")), mustNot = Seq(Term("batch")))
+    val cands = wide.searchRaw("spark data", InvertedIndex.candidateBudget(10), "or+")
+    val calls: Seq[(String, () => Any)] = Seq(
+      "searchBatchRaw" -> (() => srv.searchBatchRaw(Seq(("a", "spark data", 10, "or", Nil),
+        ("b", "data table", 10, "phrase", Seq("session"))))),
+      "searchBoosted" -> (() => srv.searchBoosted(clauses, 10)),
+      "searchBool" -> (() => srv.searchBool(tree, 10)),
+      "searchBm25F" -> (() => srv.searchBm25F("spark data", 10)),
+      "searchApprox" -> (() => srv.searchApprox("spark data", 10, 10)),
+      "dfOf" -> (() => srv.dfOf(Seq("spark", "data", "nosuchtok"))))
+    calls.foreach { case (name, f) =>
+      f()
+      assert(SparkJobs.count(spark)(f()) == 0, s"warm $name")
+    }
+    // rankSignalsOver: the doc-table lookups (the candidates' rows and
+    // their global ranks) stay; the df and segment passes are gone
+    def signals(idx: InvertedIndex) = idx.rankSignalsOver("spark data", cands, 10)
+    signals(srv)
+    val (resident, distributed) = (SparkJobs.count(spark)(signals(srv)), SparkJobs.count(spark)(signals(wide)))
+    assert(resident == 5 && distributed == resident + 2, s"resident $resident, distributed $distributed")
+    // a miss: one fetch job, on the calling thread
+    assert(SparkJobs.count(spark)(srv.searchBoosted(Seq(("zzsalt31a", 1.0f), ("spark", 1.0f)), 10)) == 1)
+    assert(SparkJobs.count(spark)(srv.dfOf(Seq("zzsalt31a", "zzsalt31b"))) == 1)
+  }
+
+  test("the row cache is capped by bytes; a query whose rows exceed the cap still answers exactly") {
+    val cap = 24L << 10
+    val srv = new Searcher(wide, maxCachedBytes = cap)
+    val hot = "spark data table session query engine the license"
+    val uncapped = new Searcher(wide)
+    uncapped.searchRaw(hot, 20)
+    val rowBytes = uncapped.cachedRowBytes
+    assert(rowBytes > cap, s"the hot query's rows ($rowBytes bytes) must exceed the $cap-byte cap")
+    Seq("or", "and", "or+", "exhaustive").foreach { mode =>
+      assert(bits(srv.searchRaw(hot, 20, mode)) == bits(wide.searchRaw(hot, 20, mode)), mode)
+      assert(srv.cachedRowBytes <= cap)
+    }
+    Corpus.Vocab.take(60).grouped(3).foreach { ws =>
+      val q = ws.mkString(" ")
+      assert(bits(srv.searchRaw(q, 10)) == bits(wide.searchRaw(q, 10)), q)
+      assert(srv.cachedRowBytes <= cap, q)
+    }
+    assert(srv.cachedRowBytes > 0)
   }
 }

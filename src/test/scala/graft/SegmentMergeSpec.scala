@@ -120,9 +120,29 @@ class SegmentMergeSpec extends AnyFunSuite {
     // exact re-run of the same filtered set: idempotent no-op
     SegmentMerge.merge(spark, srcDir, out, fanIn = 6, segFilter = _ != 2)
     assert(markers().size == 1)
-    // same endpoints (0..5), different middle: must NOT be skipped
-    SegmentMerge.merge(spark, srcDir, out, fanIn = 6, segFilter = _ != 3)
-    assert(markers().size == 2, "a different input set must commit its own marker")
+    // same endpoints (0..5), different middle: a different merge, so it
+    // must NOT be skipped as done. Its merged segment 0 is already in
+    // `out`, so it is refused before staging and the dir stays as it was
+    val manifest = java.nio.file.Paths.get(IndexBuilder.manifestDir(out), "seg-00000.json")
+    def state() = {
+      val idx = new InvertedIndex(spark, out)
+      (java.nio.file.Files.readString(manifest), idx.segStats.collect().toSeq,
+        idx.docs.collect().toSeq.map(d => (d.segment, d.docId, d.repo, d.path)).sorted)
+    }
+    val before = state()
+    val e = intercept[IllegalArgumentException] {
+      SegmentMerge.merge(spark, srcDir, out, fanIn = 6, segFilter = _ != 3)
+    }
+    assert(e.getMessage.contains(out) && e.getMessage.contains("segment(s) 0,"), e.getMessage)
+    assert(markers().size == 1)
+    assert(state() == before)
+    // into a fresh dir the different set commits under its own marker
+    val other = tmpDir()
+    SegmentMerge.merge(spark, srcDir, other, fanIn = 6, segFilter = _ != 3)
+    val otherMarkers = new java.io.File(IndexBuilder.manifestDir(other)).listFiles()
+      .map(_.getName).filter(_.startsWith("batch-merge")).toSeq
+    assert(otherMarkers.size == 1 && !markers().contains(otherMarkers.head),
+      "a different input set must commit its own marker")
   }
 
   test("merged segments preserve exact per-doc numTokens (end-anchor contract)") {
