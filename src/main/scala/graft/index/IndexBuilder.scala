@@ -346,8 +346,8 @@ object IndexBuilder {
   /** Batch commit marker: written last, checked first — the unit of
     * exactly-once. A batch whose marker exists is fully committed (data
     * adopted + manifests written); one without is re-staged from
-    * scratch, and `adoptStaged` first deletes any partially-adopted
-    * files of the same batch, so replay after a PROCESS crash at any
+    * scratch, and `commit` first deletes any partially-adopted files
+    * of the same batch, so replay after a PROCESS crash at any
     * point (mid-stage, mid-adopt, mid-manifest) converges to exactly
     * one copy of the batch's rows. Durability caveat: the marker and
     * the adopted files are not fsynced, so an OS crash / power loss
@@ -361,16 +361,9 @@ object IndexBuilder {
   def batchCommitted(outDir: String, tag: String): Boolean =
     java.nio.file.Files.exists(batchMarkerPath(outDir, tag))
 
-  /** Move staged parquet files into the live data dir under
-    * deterministic names `<prefix>-<j>.parquet`, deleting any previous
-    * adoption of the same prefix first (idempotent on replay). Local-FS
-    * rename here; a real cluster deploy uses the same protocol through
-    * its object-store committer. */
-  def adoptStaged(staged: String, outDir: String, prefix: String): Unit = {
-    val stagedDir = new java.io.File(staged)
-    val kinds = Option(stagedDir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("kind="))
-    // 1) clear any partial previous adoption of this batch
+  /** Delete the files a previous, uncommitted adoption of `prefix` left
+    * in the data dir (idempotent on replay). */
+  private def clearAdopted(outDir: String, prefix: String): Unit = {
     val dd = new java.io.File(dataDir(outDir))
     if (dd.isDirectory) {
       dd.listFiles().filter(_.isDirectory).foreach { kd =>
@@ -379,7 +372,16 @@ object IndexBuilder {
           .foreach(_.delete())
       }
     }
-    // 2) deterministic-name adopt
+  }
+
+  /** Move staged parquet files into the live data dir under
+    * deterministic names `<prefix>-<j>.parquet`. Local-FS rename here;
+    * a real cluster deploy uses the same protocol through its
+    * object-store committer. */
+  def adoptStaged(staged: String, outDir: String, prefix: String): Unit = {
+    val stagedDir = new java.io.File(staged)
+    val kinds = Option(stagedDir.listFiles()).getOrElse(Array.empty)
+      .filter(f => f.isDirectory && f.getName.startsWith("kind="))
     kinds.foreach { kd =>
       val target = java.nio.file.Paths.get(dataDir(outDir), kd.getName)
       java.nio.file.Files.createDirectories(target)
@@ -401,7 +403,9 @@ object IndexBuilder {
     * a merge all stage, adopt, manifest and mark through it (the
     * exactly-once protocol; IndexPipelineSpec's source scan fails on
     * any other committer in src/main).
-    *  1. Make the manifest dir. A committed `tag` is a no-op.
+    *  1. Make the manifest dir. A committed `tag` is a no-op; an
+    *     uncommitted one first loses what a crashed run of it adopted,
+    *     so `write` sees the data dir without this batch's rows.
     *  2. `write` fills the staging dir it is given. It returns the stat
     *     rows it already holds on the driver, or None: commit then
     *     reads them off the staged stat table (one job, and only this
@@ -419,6 +423,7 @@ object IndexBuilder {
             (write: String => Option[Seq[SegStatRow]]): Boolean = {
     new java.io.File(manifestDir(outDir)).mkdirs()
     if (batchCommitted(outDir, tag)) return false
+    clearAdopted(outDir, tag)
     val staged = s"${stagingDir(outDir)}/$tag"
     val stats = write(staged).getOrElse(readStats(spark, staged))
     val seen = stats.map(_.segment).toSet
@@ -478,7 +483,7 @@ object IndexBuilder {
     // batches are a STABLE grouping of all segments (independent of what
     // is already done) so the batch commit marker names stay meaningful
     // across resumes; an uncommitted batch is re-staged wholesale and
-    // adoptStaged clears its partial files, so a crash between the data
+    // commit clears its partial files, so a crash between the data
     // append and the manifest write can never duplicate rows.
     // Each batch re-scans the input and filters to its segments — a
     // DELIBERATE trade: persisting the full tagged corpus to skip the

@@ -168,12 +168,14 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
   private[graft] def cachedRowBytes: Long = rowCache.fold(0L)(_.heldBytes)
 
   /** The one place posting rows are grouped by segment and scored, and
-    * the one place the df of the scanned terms is computed. `score` runs
-    * once per segment holding any of the terms, with the segment's rows,
-    * its fieldnorms and the collection df (summed docFreq of the terms
-    * that have rows). It must not create a broadcast: the distributed
-    * executor ships it in its task closure, and the resident one runs it
-    * on the driver.
+    * the one place the df of the scanned terms is computed. `scorer` is
+    * given the collection df (summed docFreq of the terms that have
+    * rows) and returns the segment scorer, which runs once per segment
+    * holding any of the terms, with the segment's rows and fieldnorms:
+    * the work that depends only on the df is done once per call, not
+    * per segment. Neither may create a broadcast: the distributed
+    * executor ships them in its task closure, and the resident one runs
+    * them on the driver.
     *
     * Resident executor: the rows come from the row cache (one
     * pushed-down scan for all misses, on the calling thread, so the job
@@ -189,15 +191,14 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
     * residency cap the fnorm rows ride the same shuffle, keyed by
     * segment. */
   private def perSegment[T: ClassTag](terms: Seq[String])(
-      score: (Int, Array[PostingRow], Map[Int, Array[Byte]], Map[String, Long]) => Iterator[T])
-      : Array[T] = rowCache match {
+      scorer: Map[String, Long] => InvertedIndex.SegmentScorer[T]): Array[T] = rowCache match {
     case Some(cache) =>
       val rows = cache.rows(terms)
-      val dfs = InvertedIndex.dfSums(rows)
+      val score = scorer(InvertedIndex.dfSums(rows))
       val fn = residentFnormsLocal
-      Searcher.fanOut(rows.valuesIterator.flatten.toArray.groupBy(_.segment).toArray.sortBy(_._1)
-        .map { case (seg, plist) => new FutureTask(() => score(seg, plist, fn(seg), dfs).toArray) })
-        .flatten
+      Searcher.fanOut(rows.valuesIterator.flatten.toArray.groupBy(_.segment).iterator
+        .map { case (seg, plist) => new FutureTask(() => score(seg, plist, fn(seg)).toArray) }
+        .toArray).flatten
     case None =>
       val n = math.max(1, math.min(
         spark.conf.get("spark.sql.shuffle.partitions").toInt, stats.numSegments))
@@ -215,7 +216,7 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
       val input = if (resident.isDefined) scan
         else scan.union(fnorms.rdd.map(f => (f.segment, f: Any)))
       input.repartitionAndSortWithinPartitions(new InvertedIndex.SegmentPartitioner(n))
-        .mapPartitions(in => InvertedIndex.scoreSegments(in.buffered, resident, score))
+        .mapPartitions(in => InvertedIndex.scoreSegments(in.buffered, resident, scorer))
         .collect()
   }
 
@@ -226,17 +227,18 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
     postings.filter($"term".isin(terms: _*)).collect().groupBy(_.term)
   }
 
-  /** Per-term collection document frequency, for dfs needed outside a
-    * scan's per-term weights (`perSegment` hands its callback the df of
-    * the terms it scans). Resident: summed over the cached rows.
-    * Distributed: one pushed-down (term, docFreq) projection, summed on
-    * the driver. Either way a term with no rows has no entry. */
-  def dfOf(terms: Seq[String]): Map[String, Long] = rowCache match {
-    case _ if terms.isEmpty => Map.empty
-    case Some(cache) => InvertedIndex.dfSums(cache.rows(terms))
-    case None =>
-      postings.filter($"term".isin(terms: _*)).select($"term", $"docFreq").as[(String, Int)]
-        .collect().groupMapReduce(_._1)(_._2.toLong)(_ + _)
+  /** Per-term collection document frequency, for dfs needed outside
+    * any scan (`perSegment` hands its scorer the df of the terms it
+    * scans). A resident instance sums the rows its cache
+    * already holds; every other term costs one pushed-down (term,
+    * docFreq) projection, summed on the driver, whose rows stay out of
+    * the cache. A term with no rows has no entry. */
+  def dfOf(terms: Seq[String]): Map[String, Long] = {
+    val held = rowCache.fold(Map.empty[String, Array[PostingRow]])(_.cached(terms))
+    val rest = terms.filterNot(held.contains)
+    InvertedIndex.dfSums(held) ++ (if (rest.isEmpty) Nil else
+      postings.filter($"term".isin(rest: _*)).select($"term", $"docFreq").as[(String, Int)]
+        .collect().groupMapReduce(_._1)(_._2.toLong)(_ + _))
   }
 
   /** One query, exact BM25 top-k. mode: "or" (WAND), "and" (leapfrog
@@ -300,16 +302,18 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
     if (allTerms.isEmpty || stats.numDocs == 0) return plans.map(p => p._1 -> Array.empty[(Int, Int, Float)]).toMap
     val st = stats
     // per segment, one (plan index, hits) per plan
-    val byPlan = perSegment(allTerms) { (seg, plist, fnArrs, dfs) =>
-      val byTerm = plist.groupBy(_.term)
+    val byPlan = Array.fill(plans.length)(Array.newBuilder[(Int, Int, Float)])
+    perSegment(allTerms) { dfs =>
       val weights = SegmentScoring.weights(dfs, st.numDocs)
-      plans.iterator.zipWithIndex.map { case ((_, terms, k, mode, minus), i) =>
-        (i, SegmentScoring.scoreQuery(terms, k, mode, minus, byTerm, fnArrs, weights, st)
-          .map(h => (seg, h.doc, h.score)))
-      }
-    }.groupBy(_._1)
-    plans.zipWithIndex.map { case ((qid, _, k, _, _), i) =>
-      qid -> SegmentScoring.cut(byPlan.getOrElse(i, Array.empty).flatMap(_._2), k)
+      (seg, plist, fnArrs) =>
+        val byTerm = plist.groupBy(_.term)
+        plans.iterator.zipWithIndex.map { case ((_, terms, k, mode, minus), i) =>
+          (i, SegmentScoring.scoreQuery(terms, k, mode, minus, byTerm, fnArrs, weights, st)
+            .map(h => (seg, h.doc, h.score)))
+        }
+    }.foreach { case (i, hits) => byPlan(i) ++= hits }
+    plans.iterator.zip(byPlan).map { case ((qid, _, k, _, _), hits) =>
+      qid -> SegmentScoring.cut(hits.result(), k)
     }.toMap
   }
 
@@ -704,11 +708,13 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
 
   /** Prefix query: OR-WAND over all terms starting with `prefix`
     * (reference PhrasePrefixQuery's term-expansion path). */
-  def searchPrefix(prefix: String, k: Int, cap: Int = 64): Array[(Int, Int, Float)] =
-    searchTermSet(termsWhere($"term".startsWith(prefix), cap), k)
+  def searchPrefix(prefix: String, k: Int, cap: Int = 64): Array[(Int, Int, Float)] = {
+    val terms = termsWhere($"term".startsWith(prefix), cap)
+    if (terms.isEmpty) return Array.empty
+    searchTermSet(terms, k)
+  }
 
-  /** Set query (reference set_query.rs): OR over an explicit term set
-    * (an empty set answers nothing and starts no job).
+  /** Set query (reference set_query.rs): OR over an explicit term set.
     * Terms enter the batch planner AS-IS — a string round-trip would
     * re-tokenize them (destroying field prefixes) and re-cap at the
     * parser's 32 while the expansion caps above go to 64. */
@@ -719,8 +725,10 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
     * automaton_weight.rs — the automaton accepts WHOLE terms, so the
     * pattern is anchored; rlike alone is an unanchored substring
     * search). */
-  def searchRegex(pattern: String, k: Int, cap: Int = 64): Array[(Int, Int, Float)] =
-    searchTermSet(termsWhere($"term".rlike(s"^(?:$pattern)$$"), cap), k)
+  def searchRegex(pattern: String, k: Int, cap: Int = 64): Array[(Int, Int, Float)] = {
+    val terms = termsWhere($"term".rlike(s"^(?:$pattern)$$"), cap)
+    if (terms.isEmpty) Array.empty else searchTermSet(terms, k)
+  }
 
   /** Range filter over doc attributes (reference range_query over
     * columnfields = a plain filter on the columnar doc table). */
@@ -735,14 +743,14 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
     val boosts = clauses.toMap
     val sorted = terms.sorted
     val st = stats
-    SegmentScoring.cut(perSegment(terms) { (seg, plist, fnArrs, dfs) =>
+    SegmentScoring.cut(perSegment(terms) { dfs =>
       val boosted = SegmentScoring.weights(dfs, st.numDocs).map { case (t, w) =>
         t -> w * boosts.getOrElse(t, 1.0f)
       }
       // term-sorted cursors; an n-gram shadow term in a boosted clause
       // scores with ITS field's average and fnorm bytes
-      SegmentScoring.scoreQuery(sorted, k, "or", Nil, plist.groupBy(_.term),
-        fnArrs, boosted, st).iterator.map(h => (seg, h.doc, h.score))
+      (seg, plist, fnArrs) => SegmentScoring.scoreQuery(sorted, k, "or", Nil,
+        plist.groupBy(_.term), fnArrs, boosted, st).iterator.map(h => (seg, h.doc, h.score))
     }, k)
   }
 
@@ -782,8 +790,8 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
                       coeffs: Map[String, Double] = Signals.DefaultCoefficients)
       : Array[(Hit, Map[String, Double])] = {
     val base = Tokenizers.default(query).distinct.take(16).toSeq
-    // the empty-candidate check comes BEFORE the dfOf scan below — no
-    // point launching a cluster job to rank nothing
+    // the empty-candidate check comes BEFORE the segment pass below —
+    // no point launching a cluster job to rank nothing
     if (base.isEmpty || cands.isEmpty || stats.numDocs == 0) return Array.empty
     val st = stats
     val N = st.numDocs
@@ -793,12 +801,11 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
     val urlTerms = base.map(Fields.urlTerm)
     val repoTerms = base.map(t => Fields.RepoPrefix + t)
     val allTerms = (base ++ stems ++ bigrams ++ urlTerms ++ repoTerms).distinct
-    // per-field dfs for the per-field bm25/idf signals come from the
-    // segment pass; content dfs of the stripped texts feed the BM25F
-    // shared idf
+    // the segment pass hands over the per-field dfs for the per-field
+    // bm25/idf signals and, as the stripped texts ride the scan, their
+    // content dfs for the BM25F shared idf
     val idfTexts = (base ++ stems.map(_.substring(Fields.StemPrefix.length)) ++
       bigrams.map(_.substring(Fields.BigramPrefix.length))).distinct
-    val textDfs = dfOf(idfTexts)
 
     val candBySeg = cands.groupBy(_._1).map { case (s, rs) => s -> rs.map(_._2).sorted }
     val fCoeffs = Fields.DefaultBm25fCoeffs
@@ -819,7 +826,7 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
           val bw = new Bm25Weight(idf * (1.0f + Bm25.K1), av)
           val text = if (field == Fields.Content) term
             else term.substring(2) // strip the 2-char field prefix
-          val sharedIdf = Bm25.idf(textDfs.getOrElse(text, 0L), N)
+          val sharedIdf = Bm25.idf(dfs.getOrElse(text, 0L), N)
           val bf = new Bm25FWeight(sharedIdf, av, fCoeffs.getOrElse(field, 0.0f))
           (SegmentScoring.cursor(rows, fnArrs(Fields.fnormFieldOf(field)), bw), bw, bf, idf)
         }
@@ -829,29 +836,41 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
       val urlCs = urlTerms.flatMap(cursor(_, Fields.Url))
       val repoCs = repoTerms.flatMap(cursor(_, Fields.Repo))
       candDocs.iterator.map { doc =>
-        var bm25f = 0.0
-        // a field's BM25 sum; each match also adds its BM25F part to
-        // bm25f, so bm25f sums content, stemmed, bigram in cursor order
-        def bm25(cs: Seq[(TermCursor, Bm25Weight, Bm25FWeight, Float)]): Double =
-          cs.foldLeft(0.0) { case (sum, (c, bw, bf, _)) =>
-            if (!c.contains(doc)) sum
-            else {
-              val fn = c.fieldNormId; val tf = c.termFreq
-              bm25f += bf.score(fn, tf).toDouble
-              sum + bw.score(fn, tf).toDouble
-            }
+        var bm25f = 0.0; var bm25c = 0.0; var matched = 0
+        contentCs.foreach { case (c, bw, bf, _) =>
+          if (c.contains(doc)) {
+            val fn = c.fieldNormId; val tf = c.termFreq
+            bm25c += bw.score(fn, tf).toDouble
+            bm25f += bf.score(fn, tf).toDouble
+            matched += 1
           }
-        def idfSum(cs: Seq[(TermCursor, Bm25Weight, Bm25FWeight, Float)]): Double =
-          cs.foldLeft(0.0) { case (sum, (c, _, _, idf)) => if (c.contains(doc)) sum + idf.toDouble else sum }
-        val bm25c = bm25(contentCs)
-        val bm25st = bm25(stemCs)
-        val bm25bi = bm25(bigramCs)
-        (seg, doc, bm25f, bm25c, contentCs.count(_._1.contains(doc)).toDouble / base.length, bm25bi,
-          bm25st, idfSum(urlCs), idfSum(repoCs))
+        }
+        var bm25st = 0.0
+        stemCs.foreach { case (c, bw, bf, _) =>
+          if (c.contains(doc)) {
+            val fn = c.fieldNormId; val tf = c.termFreq
+            bm25st += bw.score(fn, tf).toDouble
+            bm25f += bf.score(fn, tf).toDouble
+          }
+        }
+        var bm25bi = 0.0
+        bigramCs.foreach { case (c, bw, bf, _) =>
+          if (c.contains(doc)) {
+            val fn = c.fieldNormId; val tf = c.termFreq
+            bm25bi += bw.score(fn, tf).toDouble
+            bm25f += bf.score(fn, tf).toDouble
+          }
+        }
+        var idfUrl = 0.0
+        urlCs.foreach { case (c, _, _, idf) => if (c.contains(doc)) idfUrl += idf.toDouble }
+        var idfRepo = 0.0
+        repoCs.foreach { case (c, _, _, idf) => if (c.contains(doc)) idfRepo += idf.toDouble }
+        (seg, doc, bm25f, bm25c, matched.toDouble / base.length, bm25bi,
+          bm25st, idfUrl, idfRepo)
       }
     }
 
-    val perCand = perSegment(allTerms)(sigSeg)
+    val perCand = perSegment((allTerms ++ idfTexts).distinct)(dfs => sigSeg(_, _, _, dfs))
 
     // query-independent signals from the doc table (broadcast the small
     // candidate set into the join)
@@ -953,9 +972,8 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
     if (posTerms.isEmpty || stats.numDocs == 0) return Array.empty
     val st = stats
 
-    def boolSegment(seg: Int, plist: Array[PostingRow], fnArrs: Map[Int, Array[Byte]],
-                    dfs: Map[String, Long]): Iterator[(Int, Int, Float)] = {
-      val w = SegmentScoring.weights(dfs, st.numDocs)
+    def boolSegment(w: Map[String, Float])(seg: Int, plist: Array[PostingRow],
+                    fnArrs: Map[Int, Array[Byte]]): Iterator[(Int, Int, Float)] = {
       // an n-gram shadow term in a boolean tree scores with ITS field's
       // average and bytes
       val cursors: Map[String, TermCursor] =
@@ -984,7 +1002,7 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
       topk.sorted.iterator.map(h => (seg, h.doc, h.score))
     }
 
-    SegmentScoring.cut(perSegment(terms)(boolSegment), k)
+    SegmentScoring.cut(perSegment(terms)(dfs => boolSegment(SegmentScoring.weights(dfs, st.numDocs))), k)
   }
 
   /** BM25F ranked search (re-derivation of the reference's two-stage
@@ -1017,15 +1035,10 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
     if (cands.isEmpty) return Array.empty
     val candBySeg: Map[Int, Array[Int]] =
       cands.groupBy(_._1).map { case (s, rs) => s -> rs.map(_._2).sorted }
-    // shared idf from the content field
-    val dfs = dfOf(fieldTerms.map(_._3).distinct)
     val st = stats
-    val plan: Seq[(String, Int, Float)] = fieldTerms.map { case (term, field, idfText) =>
-      (term, field, Bm25.idf(dfs.getOrElse(idfText, 0L), st.numDocs))
-    }
 
-    def scoreSeg(seg: Int, plist: Array[PostingRow], fnArrs: Map[Int, Array[Byte]],
-                 dfs: Map[String, Long]): Iterator[(Int, Int, Float)] = {
+    def scoreSeg(plan: Seq[(String, Int, Float)])(seg: Int, plist: Array[PostingRow],
+                 fnArrs: Map[Int, Array[Byte]]): Iterator[(Int, Int, Float)] = {
       val candDocs = candBySeg.getOrElse(seg, Array.empty)
       if (candDocs.isEmpty) return Iterator.empty
       val byTerm = plist.groupBy(_.term)
@@ -1047,7 +1060,14 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
       }
     }
 
-    SegmentScoring.cut(perSegment(plan.map(_._1))(scoreSeg).filter(_._3 > 0.0f), k)
+    // the shared idf reads the content df of each term's text, which
+    // rides the scan
+    val scanned = (fieldTerms.map(_._1) ++ fieldTerms.map(_._3)).distinct
+    SegmentScoring.cut(perSegment(scanned) { dfs =>
+      scoreSeg(fieldTerms.map { case (term, field, idfText) =>
+        (term, field, Bm25.idf(dfs.getOrElse(idfText, 0L), st.numDocs))
+      })
+    }.filter(_._3 > 0.0f), k)
   }
 
   /** Bucket-deduped search (reference BucketCollector,
@@ -1080,9 +1100,11 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
   def searchFuzzy(term: String, k: Int, maxDist: Int = 1, cap: Int = 64)
       : Array[(Int, Int, Float)] = {
     import org.apache.spark.sql.functions.{length => slen, levenshtein, lit}
-    searchTermSet(termsWhere(
+    val terms = termsWhere(
       slen($"term").between(term.length - maxDist, term.length + maxDist) &&
-        levenshtein($"term", lit(term)) <= maxDist, cap), k)
+        levenshtein($"term", lit(term)) <= maxDist, cap)
+    if (terms.isEmpty) Array.empty
+    else searchTermSet(terms, k)
   }
 
   /** Spell correction (re-derivation of crates/web-spell: the
@@ -1237,10 +1259,12 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
       : (Array[(Int, Int, Float)], Long, Boolean) = {
     val terms = queryTerms(query)
     if (terms.isEmpty || stats.numDocs == 0) return (Array.empty, 0L, false)
+    val N = stats.numDocs
     val st = stats
-    val N = st.numDocs
-    val perSeg = perSegment(terms.toSeq) { (seg, plist, fnArrs, dfs) =>
-      approxSegment(seg, plist, fnArrs, SegmentScoring.weights(dfs, N), st, k, maxDocsPerSegment)
+    val budget = maxDocsPerSegment
+    val perSeg = perSegment(terms.toSeq) { dfs =>
+      val weights = SegmentScoring.weights(dfs, N)
+      approxSegment(_, _, _, weights, st, k, budget)
     }
     val saturated = perSeg.exists(_._5)
     val exactCount = perSeg.groupBy(_._1).map { case (_, rows) => rows.head._4.toLong }.sum
@@ -1258,8 +1282,9 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
   }
 
   private def approxSegment(seg: Int, plist: Array[PostingRow],
-                            fnArrs: Map[Int, Array[Byte]], weights: Map[String, Float],
-                            stats: CollectionStats, k: Int, budget: Int)
+                            fnArrs: Map[Int, Array[Byte]],
+                            weights: Map[String, Float], stats: CollectionStats,
+                            k: Int, budget: Int)
       : Iterator[(Int, Int, Float, Int, Boolean)] = {
     val byTerm = plist.groupBy(_.term)
     // query terms are content terms: content norms and average
@@ -1300,6 +1325,10 @@ object InvertedIndex {
   private def dfSums(rows: Map[String, Array[PostingRow]]): Map[String, Long] =
     rows.collect { case (t, rs) if rs.nonEmpty => t -> rs.map(_.docFreq.toLong).sum }
 
+  /** Scores one segment: (segment, its rows of the scanned terms, its
+    * fieldnorms) => results. */
+  private type SegmentScorer[T] = (Int, Array[PostingRow], Map[Int, Array[Byte]]) => Iterator[T]
+
   /** One scan task's per-term docFreq sums, sent to every reduce
     * partition of `perSegment`'s shuffle. */
   private final case class DfPartial(dfs: Map[String, Long])
@@ -1319,13 +1348,12 @@ object InvertedIndex {
   private def scoreSegments[T](
       in: scala.collection.BufferedIterator[(Int, Any)],
       resident: Option[Broadcast[Map[Int, Map[Int, Array[Byte]]]]],
-      score: (Int, Array[PostingRow], Map[Int, Array[Byte]], Map[String, Long]) => Iterator[T])
-      : Iterator[T] = {
+      scorer: Map[String, Long] => SegmentScorer[T]): Iterator[T] = {
     val sums = scala.collection.mutable.HashMap[String, Long]()
     while (in.hasNext && in.head._1 < 0) in.next()._2 match {
       case DfPartial(part) => part.foreach { case (t, c) => sums(t) = sums.getOrElse(t, 0L) + c }
     }
-    val dfs = sums.toMap
+    val score = scorer(sums.toMap)
     Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
       val seg = in.head._1
       val ps = Array.newBuilder[PostingRow]
@@ -1336,7 +1364,7 @@ object InvertedIndex {
       }
       val plist = ps.result()
       if (plist.isEmpty) Iterator.empty
-      else score(seg, plist, resident.fold(assembleFnorms(fs.result()))(_.value(seg)), dfs)
+      else score(seg, plist, resident.fold(assembleFnorms(fs.result()))(_.value(seg)))
     }
   }
 

@@ -14,9 +14,9 @@ import scala.reflect.ClassTag
   * A Searcher IS an InvertedIndex over `idx`'s directory, one that runs
   * on the resident executor (see InvertedIndex.perSegment): every
   * per-segment caller (searchRaw, searchBatchRaw, searchBoosted,
-  * searchBool, searchBm25F, searchApprox, rankSignalsOver) and dfOf
-  * read posting rows from a term cache and score one task per segment
-  * on the JVM's one serving pool, so a warm call starts no job. The
+  * searchBool, searchBm25F, searchApprox, rankSignalsOver) reads
+  * posting rows from a term cache and scores one task per segment on
+  * the JVM's one serving pool, so a warm call starts no job. The
   * code is the distributed path's own, so the answers are identical
   * (property tested). It shares `idx`'s stats and driver-side
   * fieldnorms, collected when it opens, and refuses an index whose
@@ -81,10 +81,21 @@ private[index] final class RowCache(fetch: Seq[String] => Map[String, Array[Post
   def heldBytes: Long = synchronized(bytes)
 
   /** The rows of `terms`, read from this call's own entries: a query
-    * whose rows exceed the cap must not lose rows its own puts evicted. */
+    * whose rows exceed the cap must not lose rows its own puts evicted.
+    * A call whose terms are all cached takes one lock and waits for
+    * nothing. */
   def rows(terms: Seq[String]): Map[String, Array[PostingRow]] = {
+    val held = cached(terms)
+    val rest = terms.filterNot(held.contains)
+    if (rest.isEmpty) held else held ++ fetchOrWait(rest.distinct)
+  }
+
+  /** The rows of `terms`, none of them cached when the caller looked: a
+    * term still absent is fetched, one already in flight is waited
+    * for. */
+  private def fetchOrWait(terms: Seq[String]): Map[String, Array[PostingRow]] = {
     val mine = Map.newBuilder[String, Entry]
-    val entries = synchronized(terms.distinct.map { t =>
+    val entries = synchronized(terms.map { t =>
       t -> Option(lru.get(t)).getOrElse { val e = new Entry; lru.put(t, e); mine += t -> e; e }
     })
     val misses = mine.result()
@@ -110,6 +121,17 @@ private[index] final class RowCache(fetch: Seq[String] => Map[String, Array[Post
     entries.map { case (t, f) =>
       t -> (try f.get() catch { case e: ExecutionException => throw e.getCause })
     }.toMap
+  }
+
+  /** The rows of those `terms` whose fetch is done; neither fetches nor
+    * waits. */
+  def cached(terms: Seq[String]): Map[String, Array[PostingRow]] = synchronized {
+    val out = Map.newBuilder[String, Array[PostingRow]]
+    terms.foreach { t =>
+      val f = lru.get(t)
+      if (f != null && f.isDone) out += t -> f.join()
+    }
+    out.result()
   }
 
   /** An entry's bytes: the term, and each row's encoded postings,

@@ -111,7 +111,8 @@ object SegmentMerge {
         staged =>
       // a merged id the out dir already holds would become a second copy
       // of that segment (a re-run of this same merge never gets here: its
-      // marker makes the commit a no-op)
+      // marker makes the commit a no-op, and a crashed run's adopted rows
+      // are gone before the write)
       val held = IndexBuilder.readStats(spark, IndexBuilder.dataDir(outDir)).map(_.segment)
         .filter(merged.contains).distinct.sorted.mkString(", ")
       require(held.isEmpty,

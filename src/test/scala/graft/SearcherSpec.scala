@@ -234,20 +234,26 @@ class SearcherSpec extends AnyFunSuite {
       "searchBool" -> (() => srv.searchBool(tree, 10)),
       "searchBm25F" -> (() => srv.searchBm25F("spark data", 10)),
       "searchApprox" -> (() => srv.searchApprox("spark data", 10, 10)),
-      "dfOf" -> (() => srv.dfOf(Seq("spark", "data", "nosuchtok"))))
+      "dfOf" -> (() => srv.dfOf(Seq("spark", "data"))))
     calls.foreach { case (name, f) =>
       f()
       assert(SparkJobs.count(spark)(f()) == 0, s"warm $name")
     }
     // rankSignalsOver: the doc-table lookups (the candidates' rows and
-    // their global ranks) stay; the df and segment passes are gone
+    // their global ranks) stay; the segment pass, which also brings the
+    // BM25F texts' dfs, is gone
     def signals(idx: InvertedIndex) = idx.rankSignalsOver("spark data", cands, 10)
     signals(srv)
     val (resident, distributed) = (SparkJobs.count(spark)(signals(srv)), SparkJobs.count(spark)(signals(wide)))
-    assert(resident == 5 && distributed == resident + 2, s"resident $resident, distributed $distributed")
+    assert(resident == 5 && distributed == resident + 1, s"resident $resident, distributed $distributed")
     // a miss: one fetch job, on the calling thread
     assert(SparkJobs.count(spark)(srv.searchBoosted(Seq(("zzsalt31a", 1.0f), ("spark", 1.0f)), 10)) == 1)
+    // dfOf's miss is one (term, docFreq) projection; its rows stay out
+    // of the cache
+    val held = srv.cachedRowBytes
     assert(SparkJobs.count(spark)(srv.dfOf(Seq("zzsalt31a", "zzsalt31b"))) == 1)
+    assert(srv.cachedRowBytes == held)
+    assert(SparkJobs.count(spark)(srv.dfOf(Seq("zzsalt31b"))) == 1)
   }
 
   test("the row cache is capped by bytes; a query whose rows exceed the cap still answers exactly") {

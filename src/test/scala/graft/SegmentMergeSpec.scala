@@ -105,6 +105,22 @@ class SegmentMergeSpec extends AnyFunSuite {
     assert(again.search("spark session", 10, "or").toSeq == hitsBefore)
   }
 
+  test("a merge that crashed after adopting its rows re-runs to one copy, not a refusal") {
+    val out = tmpDir()
+    SegmentMerge.merge(spark, srcDir, out, fanIn = 3)
+    // the crash: the rows are adopted, the manifests and marker are not
+    new java.io.File(IndexBuilder.manifestDir(out)).listFiles().foreach(_.delete())
+    SegmentMerge.merge(spark, srcDir, out, fanIn = 3)
+    val merged = new InvertedIndex(spark, out)
+    assert(merged.segStats.collect().map(_.segment).sorted.toSeq == Seq(0, 1))
+    assert(merged.stats.numDocs == 600)
+    import spark.implicits._
+    assert(merged.docs.map(d => (d.segment, d.repo, d.path)).distinct().count() == 600)
+    assert(merged.docs.count() == 600)
+    assert(new java.io.File(IndexBuilder.manifestDir(out)).listFiles()
+      .count(_.getName.startsWith("batch-merge")) == 1)
+  }
+
   test("merge identity covers the full input set, not just endpoints") {
     // two filtered merges sharing first/last segment ids but differing
     // in membership are DIFFERENT merges: the endpoint-only tag used to
