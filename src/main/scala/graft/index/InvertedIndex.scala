@@ -34,7 +34,7 @@ import graft.core._
   * Searcher) runs the same callers on the RESIDENT executor instead:
   * posting rows come from a driver-side term cache and each segment
   * scores on the serving pool, so a warm call starts no job. Both
-  * executors hand the callbacks the same rows, fieldnorms and df, so a
+  * executors hand the scorers the same rows, fieldnorms and df, so a
   * caller's answer does not depend on where it ran.
   *
   * Opening starts no job: every table is read through
