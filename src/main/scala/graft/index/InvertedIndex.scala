@@ -28,7 +28,10 @@ import graft.core._
   * fnorm rows through the same shuffle, keyed by segment, which scales
   * to any corpus. `perSegment` holds that shuffle for every scoring
   * path; SegmentScoring holds the per-segment scoring and the merge.
-  * `resolve` is one more job: a pushed-down doc-table scan.
+  * `resolve` names the hits from doc keys resident beside the
+  * fieldnorms, under the same cap: the first call collects them in one
+  * job and a warm call starts none. Above the cap it is one more job, a
+  * pushed-down doc-table scan.
   *
   * That shuffle is the DISTRIBUTED executor. A resident instance (see
   * Searcher) runs the same callers on the RESIDENT executor instead:
@@ -42,8 +45,8 @@ import graft.core._
   * reader costs a file listing and never a schema-inference job. The
   * first calls on a fresh instance add one job each for what they
   * collect once: the stat rows (`stats`) and, when resident, the
-  * fieldnorms. The residency gate is free unless numDocs x 3 fnorm
-  * fields exceeds the cap.
+  * fieldnorms and the doc keys. The residency gate is free unless
+  * numDocs x 3 fnorm fields exceeds the cap.
   *
   * Collection statistics (N, total tokens -> avg fieldnorm) are summed
   * on the driver from the per-segment stat rows; per-term df is summed
@@ -66,8 +69,8 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
     this(spark, dir, queryLang, None, 0L)
 
   /** A resident view of `origin`: it shares origin's readers, stat rows,
-    * residency gate and driver-side fieldnorms, and caches posting rows
-    * up to `rowCacheBytes`. */
+    * residency gate, driver-side fieldnorms and doc keys, and caches
+    * posting rows up to `rowCacheBytes`. */
   private[index] def this(origin: InvertedIndex, rowCacheBytes: Long) =
     this(origin.spark, origin.dir, origin.queryLang, Some(origin), rowCacheBytes)
 
@@ -127,7 +130,8 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
     * reference keeps fieldnorm files memory-mapped per shard for
     * serving; this is the Spark analog. Above the cap, queries send the
     * fnorm rows through the per-segment shuffle instead (scales to any
-    * corpus). */
+    * corpus). The same cap bounds the fieldnorms and the resident doc
+    * keys together (`residentDocKeys`). */
   private[index] val maxResidentFnormBytes: Long =
     spark.conf.get(InvertedIndex.ResidentFnormBytesConf, (64L << 20).toString).toLong
 
@@ -158,6 +162,45 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
     origin.fold(fnorms.collect().groupBy(_.segment).map { case (seg, chunks) =>
       seg -> InvertedIndex.assembleFnorms(chunks)
     })(_.residentFnormsLocal)
+
+  /** The doc keys on the driver, once per instance and its resident
+    * views, the way the reference reads a hit's keys from memory-mapped
+    * column fields: per segment, repo, path, sortKey, commit and simhash
+    * columns indexed by docId, filled by one projected doc-table collect
+    * on the first `docsOf`. They are resident only when the fieldnorms
+    * are, and only while both fit the residency cap together. The cap
+    * holds during the collect too: each scan task returns an overflow
+    * marker instead of rows once its rows pass its share of the room the
+    * fieldnorms leave, and one marker leaves the keys out (None:
+    * `docsOf` scans). An index too large even at the smallest key size
+    * pays no job to find that out. */
+  @transient private lazy val residentDocKeys: Option[Map[Int, InvertedIndex.DocKeyColumns]] =
+    origin.fold {
+      if (!fnormsResident) None
+      else {
+        val room = maxResidentFnormBytes -
+          residentFnormsLocal.valuesIterator.flatMap(_.valuesIterator).map(_.length.toLong).sum
+        if (stats.numDocs * InvertedIndex.MinKeyBytes > room) None else {
+          val scan = docKeys.rdd
+          val share = room / math.max(1, scan.getNumPartitions)
+          val parts = scan.mapPartitions(rows => Iterator.single(InvertedIndex.keysWithin(rows, share)))
+            .collect()
+          if (parts.contains(None)) None
+          else Some(InvertedIndex.keyColumns(parts.flatMap(_.get), segStatRows, dir))
+        }
+      }
+    }(_.residentDocKeys)
+
+  /** Bytes the resident doc keys hold (charged as `keyBytes` counts
+    * them), 0 when they are not resident. Collects them if no lookup
+    * has yet. */
+  private[graft] def residentKeyBytes: Long =
+    residentDocKeys.fold(0L)(_.valuesIterator.map(_.bytes).sum)
+
+  /** The doc table's key projection. */
+  private def docKeys: Dataset[DocKeyRow] =
+    docs.select($"segment", $"docId", $"repo", $"path", $"sortKey", $"commit", $"simhash")
+      .as[DocKeyRow]
 
   /** The resident executor's posting rows; None on a distributed
     * instance. */
@@ -317,28 +360,36 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
     }.toMap
   }
 
-  /** Hits resolved against the doc table (see `docsOf`). */
+  /** Hits resolved against the doc keys (see `docsOf`). */
   def resolve(hits: Array[(Int, Int, Float)], k: Int): Array[Hit] = {
     if (hits.isEmpty) return Array.empty
-    val info = docsOf(hits)
+    val info = docsOf(hits.map(h => (h._1, h._2)))
     hits.zipWithIndex.map { case ((seg, d, sc), i) =>
-      val (repo, path, _) = info((seg, d))
-      Hit(i + 1, seg, d, sc, repo, path)
+      val key = info((seg, d))
+      Hit(i + 1, seg, d, sc, key.repo, key.path)
     }
   }
 
-  /** (repo, path, simhash) of the hits' docs: one doc-table scan with
-    * `segment IN` and `docId IN` (≤ tieSlack values) pushed to parquet,
-    * so row-group min/max stats skip non-hit doc ranges. The two lists
-    * admit a few non-hit rows; lookups by (segment, docId) ignore them. */
-  private def docsOf(hits: Array[(Int, Int, Float)]): Map[(Int, Int), (String, String, Long)] = {
-    val segs = hits.map(_._1).distinct.toSeq
-    val ids = hits.map(_._2).distinct.toSeq
-    docs.filter($"segment".isin(segs: _*) && $"docId".isin(ids: _*))
-      .select($"segment", $"docId", $"repo", $"path", $"simhash")
-      .collect()
-      .map(r => (r.getInt(0), r.getInt(1)) -> ((r.getString(2), r.getString(3), r.getLong(4))))
-      .toMap
+  /** The doc keys of (segment, docId) pairs. The resident keys answer
+    * with no job; without them, one doc-table scan with `segment IN` and
+    * `docId IN` (≤ tieSlack values) pushed to parquet, so row-group
+    * min/max stats skip non-hit doc ranges. A pair with no doc row
+    * fails, naming it. */
+  private[graft] def docsOf(keys: Iterable[(Int, Int)]): Map[(Int, Int), DocKeyRow] = {
+    val wanted = keys.toSet
+    val found = residentDocKeys match {
+      case Some(cols) => wanted.iterator.flatMap { case k @ (s, d) =>
+          cols.get(s).filter(c => d >= 0 && d < c.size).map(c => k -> c(s, d))
+        }.toMap
+      case None =>
+        docKeys.filter($"segment".isin(wanted.map(_._1).toSeq: _*) &&
+            $"docId".isin(wanted.map(_._2).toSeq: _*))
+          .collect().iterator.map(r => (r.segment, r.docId) -> r).filter(e => wanted(e._1)).toMap
+    }
+    wanted.find(k => !found.contains(k)).foreach { case (s, d) =>
+      throw new IllegalStateException(s"hit (segment $s, docId $d) has no doc row in $dir")
+    }
+    found
   }
 
   /** Token-level pattern match (the reference's PatternQuery,
@@ -872,18 +923,9 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
 
     val perCand = perSegment((allTerms ++ idfTexts).distinct)(dfs => sigSeg(_, _, _, dfs))
 
-    // query-independent signals from the doc table (broadcast the small
-    // candidate set into the join)
-    val candDF = spark.createDataset(perCand.map(r => (r._1, r._2)).toSeq)
-      .toDF("segment", "docId")
-    val segs = perCand.map(_._1).distinct.toSeq
-    val meta = docs.filter($"segment".isin(segs: _*))
-      .join(broadcast(candDF), Seq("segment", "docId"))
-      .select($"segment", $"docId", $"repo", $"path", $"sortKey", $"commit")
-      .collect()
-      .map(r => (r.getInt(0), r.getInt(1)) ->
-        (r.getString(2), r.getString(3), r.getLong(4), r.getString(5)))
-      .toMap
+    // query-independent signals from the candidates' doc keys
+    val candKeys = perCand.map(r => (r._1, r._2)).distinct.toSeq
+    val meta = docsOf(candKeys)
 
     // GLOBAL static rank (the reference ranks its centrality ordinal
     // across the whole index, not per segment): rank(cand) = number of
@@ -899,13 +941,13 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
       case Some(g) =>
         // build-time-materialized ordinal (Config.storeGlobalRank):
         // keyed broadcast lookup on exactly the candidate keys
-        g.join(broadcast(candDF), Seq("segment", "docId"))
+        g.join(broadcast(candKeys.toDF("segment", "docId")), Seq("segment", "docId"))
           .select($"segment", $"docId", $"grank")
           .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
       case None =>
-        val candKeyDF = spark.createDataset(meta.toSeq.map { case ((seg, id), (rp, pt, sk, cm)) =>
-          (seg, id, sk, rp, pt, cm)
-        }).toDF("cseg", "cdoc", "csk", "crepo", "cpath", "ccommit")
+        val candKeyDF = meta.valuesIterator.map(r =>
+          (r.segment, r.docId, r.sortKey, r.repo, r.path, r.commit)
+        ).toSeq.toDF("cseg", "cdoc", "csk", "crepo", "cpath", "ccommit")
         docs.join(broadcast(candKeyDF),
             $"sortKey" > $"csk" ||
               ($"sortKey" === $"csk" &&
@@ -916,7 +958,7 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
     }
 
     val scored = perCand.map { r =>
-      val (repo, path, sortKey, _) = meta((r._1, r._2))
+      val DocKeyRow(_, _, repo, path, sortKey, _, _) = meta((r._1, r._2))
       val slashes = path.count(_ == '/').toDouble
       val digits = path.count(_.isDigit).toDouble
       val values = Map(
@@ -1081,10 +1123,10 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
   def searchDeduped(query: String, k: Int, mode: String = "or"): Array[Hit] = {
     val raw = searchRaw(query, InvertedIndex.candidateBudget(k), mode)
     if (raw.isEmpty) return Array.empty
-    val info = docsOf(raw)
+    val info = docsOf(raw.map(h => (h._1, h._2)))
     val cands = raw.map { case (seg, d, sc) =>
-      val (repo, path, sh) = info((seg, d))
-      (seg, d, sc, repo, path, sh)
+      val key = info((seg, d))
+      (seg, d, sc, key.repo, key.path, key.simhash)
     }
     val coll = new BucketCollector[(Int, Int, Float, String, String, Long)](k,
       c => c._3.toDouble, c => DocHashes.of(c._4, c._5, c._6))
@@ -1309,11 +1351,86 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
 }
 
 object InvertedIndex {
-  /** Session conf key: the largest total fieldnorm size (bytes, summed
-    * over segments and fnorm fields) queries keep resident and
-    * broadcast; a larger index shuffles the fnorm rows with the
-    * postings instead. */
+  /** Session conf key: the most driver bytes an instance keeps resident
+    * for its queries, fieldnorms (summed over segments and fnorm fields)
+    * and doc keys together. Fieldnorms that exceed it shuffle with the
+    * postings instead, and doc keys that do not fit beside the
+    * fieldnorms are scanned per lookup. */
   val ResidentFnormBytesConf = "spark.graft.residentFnormBytes"
+
+  /** The least one doc's resident keys can be charged: two longs, and
+    * for each of three strings 48 bytes for its reference and the
+    * headers of the String and its array. */
+  private val MinKeyBytes = 16L + 3 * 48L
+
+  /** Driver bytes charged for one doc's resident keys: two bytes per
+    * char, an upper bound for any string. */
+  private def keyBytes(r: DocKeyRow): Long =
+    MinKeyBytes + 2L * (r.repo.length + r.path.length + r.commit.length)
+
+  /** One scan task of the key collect: its rows, or None (the overflow
+    * marker) once they are charged more than `share` bytes. */
+  private def keysWithin(rows: Iterator[DocKeyRow], share: Long): Option[Array[DocKeyRow]] = {
+    val out = Array.newBuilder[DocKeyRow]
+    var bytes = 0L
+    while (rows.hasNext) {
+      val r = rows.next()
+      bytes += keyBytes(r)
+      if (bytes > share) return None
+      out += r
+    }
+    Some(out.result())
+  }
+
+  /** One segment's resident doc keys, indexed by docId. */
+  private final class DocKeyColumns(val size: Int) {
+    private val repo = new Array[String](size)
+    private val path = new Array[String](size)
+    private val sortKey = new Array[Long](size)
+    private val commit = new Array[String](size)
+    private val simhash = new Array[Long](size)
+    private val filled = new java.util.BitSet(size)
+    private var held = 0L
+
+    /** Bytes charged for the keys put so far. */
+    def bytes: Long = held
+
+    def count: Int = filled.cardinality
+
+    /** Puts `r` at its docId; false if that id is already filled. */
+    def put(r: DocKeyRow): Boolean = !filled.get(r.docId) && {
+      val d = r.docId
+      filled.set(d)
+      repo(d) = r.repo; path(d) = r.path; sortKey(d) = r.sortKey
+      commit(d) = r.commit; simhash(d) = r.simhash
+      held += keyBytes(r)
+      true
+    }
+
+    def apply(segment: Int, d: Int): DocKeyRow =
+      DocKeyRow(segment, d, repo(d), path(d), sortKey(d), commit(d), simhash(d))
+  }
+
+  /** The resident key columns of `rows`, one set per stat row. Each
+    * segment's rows must fill its ids 0 until its stat row's numDocs,
+    * each exactly once: a missing, truncated or duplicated doc file
+    * fails here, naming the segment. */
+  private def keyColumns(rows: Array[DocKeyRow], stats: Seq[SegStatRow],
+                         dir: String): Map[Int, DocKeyColumns] = {
+    def fail(seg: Int, what: String): Nothing =
+      throw new IllegalStateException(s"doc table of $dir, segment $seg: $what")
+    val cols = stats.map(s => s.segment -> new DocKeyColumns(s.numDocs.toInt)).toMap
+    rows.foreach { r =>
+      val c = cols.getOrElse(r.segment, fail(r.segment, "doc rows but no stat row"))
+      if (r.docId < 0 || r.docId >= c.size)
+        fail(r.segment, s"docId ${r.docId} outside 0 until ${c.size}, its stat row's numDocs")
+      if (!c.put(r)) fail(r.segment, s"docId ${r.docId} has more than one doc row")
+    }
+    cols.foreach { case (s, c) =>
+      if (c.count < c.size) fail(s, s"${c.size - c.count} of its ${c.size} doc ids have no doc row")
+    }
+    cols
+  }
 
   /** Fieldnorm fields an index can store, one byte per doc each:
     * content and the bigram/trigram shadows. */

@@ -24,6 +24,11 @@ final case class DocRow(segment: Int, docId: Int, repo: String, path: String,
                         numTokens: Int, fieldNormId: Byte, sortKey: Long,
                         simhash: Long = 0L)
 
+/** The keys a hit is named by: the doc table's projection that
+  * `resolve`, `searchDeduped` and `rankSignalsOver` read. */
+final case class DocKeyRow(segment: Int, docId: Int, repo: String, path: String,
+                           sortKey: Long, commit: String, simhash: Long)
+
 /** One posting list row. `shard` > 0 marks docId-range shards of a hot
   * term (skew bound: no single row/task ever holds more than
   * maxPostingsPerShard entries of one term). */

@@ -19,8 +19,9 @@ import scala.reflect.ClassTag
   * the JVM's one serving pool, so a warm call starts no job. The
   * code is the distributed path's own, so the answers are identical
   * (property tested). It shares `idx`'s stats and driver-side
-  * fieldnorms, collected when it opens, and refuses an index whose
-  * fieldnorms exceed `spark.graft.residentFnormBytes`.
+  * fieldnorms, collected when it opens, and its doc keys, collected by
+  * the first `resolve` of either, and refuses an index whose fieldnorms
+  * exceed `spark.graft.residentFnormBytes`.
   *
   * Scale note: this is the SERVING tier. At web scale each serving node
   * holds a shard's segments; `maxCachedBytes` bounds the cached posting

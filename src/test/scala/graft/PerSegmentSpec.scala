@@ -39,17 +39,20 @@ class PerSegmentSpec extends AnyFunSuite {
 
   private def jobsOf[T](f: => T): Int = SparkJobs.count(spark)(f)
 
-  test("searchRaw, resolve and searchBatchRaw each start exactly one Spark job") {
+  test("warm: searchRaw and searchBatchRaw 1 job each, resolve 0 (resident) or 1") {
     assert(index.stats.numSegments == 5)
     Seq(index, shuffledFnorms()).foreach { idx =>
       val tag = if (idx.fnormsResident) "resident" else "shuffled fnorms"
-      // warm: stats, the fieldnorm residency gate, the doc table's reader
+      // warm: stats, the fieldnorm residency gate, the doc keys or the
+      // doc table's reader
       val raw = idx.searchRaw("query engine table", 10)
       assert(raw.nonEmpty)
       idx.resolve(raw, 10)
       assert(jobsOf(idx.searchRaw("query engine table", 10)) == 1, tag)
       assert(jobsOf(idx.searchRaw("spark", 10, "or", Seq("data"))) == 1, tag)
-      assert(jobsOf(idx.resolve(raw, 10)) == 1, tag)
+      // resident doc keys answer with no job; without them, one scan
+      assert(jobsOf(idx.resolve(raw, 10)) == (if (idx.fnormsResident) 0 else 1), tag)
+      assert(jobsOf(idx.resolve(idx.searchRaw("spark", 10), 10)) == (if (idx.fnormsResident) 1 else 2), tag)
       val batch = Seq("spark session", "merge sort", "data table", "the license")
         .zipWithIndex.map { case (q, i) => (s"q$i", q, 10, if (i % 2 == 0) "or" else "and", Nil) }
       assert(jobsOf(idx.searchBatchRaw(batch)) == 1, tag)
@@ -65,6 +68,7 @@ class PerSegmentSpec extends AnyFunSuite {
       // residency count (numDocs x 3 exceeds the cap) + the query
       assert(jobsOf { raw = idx.searchRaw("query engine table", 10) } == 2, tag)
       assert(raw.nonEmpty && idx.fnormsResident == resident, tag)
+      // resident: the doc-key collect; capped: the pushed-down scan
       assert(jobsOf(idx.resolve(raw, 10)) == 1, tag)
     }
     val fresh = new InvertedIndex(spark, dir)

@@ -239,13 +239,14 @@ class SearcherSpec extends AnyFunSuite {
       f()
       assert(SparkJobs.count(spark)(f()) == 0, s"warm $name")
     }
-    // rankSignalsOver: the doc-table lookups (the candidates' rows and
-    // their global ranks) stay; the segment pass, which also brings the
-    // BM25F texts' dfs, is gone
+    // rankSignalsOver: the global-rank pass over the doc table stays;
+    // the segment pass, which also brings the BM25F texts' dfs, and the
+    // candidates' doc-key lookup (resident beside the fieldnorms) are gone
     def signals(idx: InvertedIndex) = idx.rankSignalsOver("spark data", cands, 10)
     signals(srv)
+    signals(wide)
     val (resident, distributed) = (SparkJobs.count(spark)(signals(srv)), SparkJobs.count(spark)(signals(wide)))
-    assert(resident == 5 && distributed == resident + 1, s"resident $resident, distributed $distributed")
+    assert(resident == 3 && distributed == resident + 1, s"resident $resident, distributed $distributed")
     // a miss: one fetch job, on the calling thread
     assert(SparkJobs.count(spark)(srv.searchBoosted(Seq(("zzsalt31a", 1.0f), ("spark", 1.0f)), 10)) == 1)
     // dfOf's miss is one (term, docFreq) projection; its rows stay out
