@@ -2,6 +2,8 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
@@ -49,6 +51,13 @@ object SessionMemo {
       sl.owned ::= out
       build(out)
     }
+
+  /** The values under (dir, name) of every session of `s`'s context:
+    * state a write must invalidate in each session that holds it. */
+  def everySession[T](s: SparkSession, dir: String, name: String): Seq[T] =
+    Option(contexts.get(s.sparkContext)).toSeq.flatMap(_.asScala.iterator.collect {
+      case ((_, d, n), sl) if d == dir && n == name => sl.value.asInstanceOf[T]
+    })
 
   private def slot[T](s: SparkSession, dir: String, name: String)(make: Slot => T): T = {
     val sc = s.sparkContext

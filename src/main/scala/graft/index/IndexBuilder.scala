@@ -410,8 +410,10 @@ object IndexBuilder {
     *     rows it already holds on the driver, or None: commit then
     *     reads them off the staged stat table (one job, and only this
     *     write's rows, however many the index already holds).
-    *  3. Adopt the staged files, write each segment's manifest, then
-    *     the batch marker `{"batch":tag,detail}`.
+    *  3. Drop what any session's InvertedIndex instances hold of
+    *     `outDir` (a rewritten id must not match its old fieldnorms or
+    *     doc keys), adopt the staged files, write each
+    *     segment's manifest, then the batch marker `{"batch":tag,detail}`.
     * `segments` are manifested with zero rows when the write left them
     * no stat row (a build batch's empty segments). A write that leaves
     * nothing to manifest (an empty live batch) is dropped with its
@@ -432,6 +434,7 @@ object IndexBuilder {
       deleteRecursively(new java.io.File(staged))
       return false
     }
+    InvertedIndex.dropHeld(spark, outDir)
     adoptStaged(staged, outDir, tag)
     rows.foreach { s =>
       val field = lineage(s.segment)

@@ -1,5 +1,6 @@
 package graft.index
 
+import java.lang.ref.SoftReference
 import java.util.concurrent.{ConcurrentHashMap, FutureTask}
 
 import scala.reflect.ClassTag
@@ -9,6 +10,7 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.SessionMemo
 import graft.core._
 
 /** Query-side view of an index directory.
@@ -45,8 +47,11 @@ import graft.core._
   * reader costs a file listing and never a schema-inference job. The
   * first calls on a fresh instance add one job each for what they
   * collect once: the stat rows (`stats`) and, when resident, the
-  * fieldnorms and the doc keys. The residency gate is free unless
-  * numDocs x 3 fnorm fields exceeds the cap.
+  * fieldnorms and the doc keys, unless an earlier instance in this
+  * session holds them for the same stat rows and files: a reopen of an
+  * unchanged dir so collects only its stat rows, while one after an
+  * append collects all three as a first open does. The residency gate
+  * is free unless numDocs x 3 fnorm fields exceeds the cap.
   *
   * Collection statistics (N, total tokens -> avg fieldnorm) are summed
   * on the driver from the per-segment stat rows; per-term df is summed
@@ -155,39 +160,68 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
       : Option[Broadcast[Map[Int, Map[Int, Array[Byte]]]]] =
     if (fnormsResident) Some(spark.sparkContext.broadcast(residentFnormsLocal)) else None
 
-  /** All fieldnorm arrays collected to the driver, once per instance and
-    * its resident views: the broadcast above and the resident executor
-    * share them. */
+  /** This dir's segment holder in this session: what an earlier instance
+    * collected (see InvertedIndex.SegmentHolder). */
+  @transient private lazy val held: InvertedIndex.SegmentHolder = InvertedIndex.holder(spark, dir)
+
+  /** What a held collect of the `kind` table is valid for: the stat rows
+    * and the table's files. A file added or removed outside a commit
+    * (a damaged dir) so never matches, and the collect that follows
+    * checks it again. */
+  private def heldKey(kind: String): InvertedIndex.HeldKey =
+    (segStatRows.toSet, data(kind).inputFiles.toSet)
+
+  /** All fieldnorm arrays, held locally once per instance and its
+    * resident views: the broadcast above and the resident executor share
+    * them. An earlier instance's arrays in this session are reused (no
+    * job) when the stat rows and the fnorm files are the same; otherwise
+    * they are collected and replace the held ones. */
   @transient lazy val residentFnormsLocal: Map[Int, Map[Int, Array[Byte]]] =
-    origin.fold(fnorms.collect().groupBy(_.segment).map { case (seg, chunks) =>
-      seg -> InvertedIndex.assembleFnorms(chunks)
-    })(_.residentFnormsLocal)
+    origin.fold {
+      val key = heldKey("fnorm")
+      held.fnorms.get(key).getOrElse {
+        val fn = fnorms.collect().groupBy(_.segment).map { case (seg, chunks) =>
+          seg -> InvertedIndex.assembleFnorms(chunks)
+        }
+        held.fnorms.publish(key, fn)
+        fn
+      }
+    }(_.residentFnormsLocal)
 
   /** The doc keys on the driver, once per instance and its resident
     * views, the way the reference reads a hit's keys from memory-mapped
     * column fields: per segment, repo, path, sortKey, commit and simhash
     * columns indexed by docId, filled by one projected doc-table collect
-    * on the first `docsOf`. They are resident only when the fieldnorms
-    * are, and only while both fit the residency cap together. The cap
-    * holds during the collect too: each scan task returns an overflow
-    * marker instead of rows once its rows pass its share of the room the
-    * fieldnorms leave, and one marker leaves the keys out (None:
-    * `docsOf` scans). An index too large even at the smallest key size
-    * pays no job to find that out. */
+    * on the first `docsOf`, or reused with no job from an earlier
+    * instance in this session when the stat rows and the doc files are
+    * the same. They are resident only when the fieldnorms are, and only
+    * while both fit the residency cap together. The cap holds during the
+    * collect too: each scan task returns an overflow marker instead of
+    * rows once its rows pass its share of the room the fieldnorms leave,
+    * and one marker leaves the keys out (None: `docsOf` scans). An index
+    * too large even at the smallest key size pays no job to find that
+    * out, nor does one whose held keys exceed the room. */
   @transient private lazy val residentDocKeys: Option[Map[Int, InvertedIndex.DocKeyColumns]] =
     origin.fold {
       if (!fnormsResident) None
       else {
         val room = maxResidentFnormBytes -
           residentFnormsLocal.valuesIterator.flatMap(_.valuesIterator).map(_.length.toLong).sum
-        if (stats.numDocs * InvertedIndex.MinKeyBytes > room) None else {
-          val scan = docKeys.rdd
-          val share = room / math.max(1, scan.getNumPartitions)
-          val parts = scan.mapPartitions(rows => Iterator.single(InvertedIndex.keysWithin(rows, share)))
-            .collect()
-          if (parts.contains(None)) None
-          else Some(InvertedIndex.keyColumns(parts.flatMap(_.get), segStatRows, dir))
-        }
+        val key = heldKey("doc")
+        held.keys.get(key).fold {
+          if (stats.numDocs * InvertedIndex.MinKeyBytes > room) None else {
+            val scan = docKeys.rdd
+            val share = room / math.max(1, scan.getNumPartitions)
+            val parts = scan.mapPartitions(rows => Iterator.single(InvertedIndex.keysWithin(rows, share)))
+              .collect()
+            if (parts.contains(None)) None
+            else {
+              val cols = InvertedIndex.keyColumns(parts.flatMap(_.get), segStatRows, dir)
+              held.keys.publish(key, cols)
+              Some(cols)
+            }
+          }
+        }(cols => Some(cols).filter(_.valuesIterator.map(_.bytes).sum <= room))
       }
     }(_.residentDocKeys)
 
@@ -360,11 +394,12 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
     }.toMap
   }
 
-  /** Hits resolved against the doc keys (see `docsOf`). */
+  /** The first `k` hits resolved against the doc keys (see `docsOf`). */
   def resolve(hits: Array[(Int, Int, Float)], k: Int): Array[Hit] = {
-    if (hits.isEmpty) return Array.empty
-    val info = docsOf(hits.map(h => (h._1, h._2)))
-    hits.zipWithIndex.map { case ((seg, d, sc), i) =>
+    val named = hits.take(k)
+    if (named.isEmpty) return Array.empty
+    val info = docsOf(named.map(h => (h._1, h._2)))
+    named.zipWithIndex.map { case ((seg, d, sc), i) =>
       val key = info((seg, d))
       Hit(i + 1, seg, d, sc, key.repo, key.path)
     }
@@ -1430,6 +1465,63 @@ object InvertedIndex {
       if (c.count < c.size) fail(s, s"${c.size - c.count} of its ${c.size} doc ids have no doc row")
     }
     cols
+  }
+
+  /** SessionMemo name of a dir's segment holder. */
+  private val HolderName = "residentSegments"
+
+  /** What a held collect is valid for: the stat rows and the file names
+    * of the table it read. */
+  private type HeldKey = (Set[SegStatRow], Set[String])
+
+  /** One collect's value and the key it is valid for, behind a
+    * SoftReference: memory pressure may take it, and the next instance
+    * then collects as a first one does. */
+  private final class Held[V] {
+    private var gen = new SoftReference[(HeldKey, V)](null)
+
+    def get(key: HeldKey): Option[V] = synchronized(Option(gen.get).collect { case (k, v) if k == key => v })
+
+    def publish(key: HeldKey, v: V): Unit = synchronized { gen = new SoftReference((key, v)) }
+
+    def clear(): Unit = synchronized(gen.clear())
+
+    /** The segment ids of the held key's stat rows. */
+    def segments: Set[Int] = synchronized(Option(gen.get).fold(Set.empty[Int])(_._1._1.map(_.segment)))
+  }
+
+  /** One dir's resident state in one session, kept across instances so
+    * a reopen of an unchanged dir collects nothing but its stat rows: the
+    * latest fieldnorm arrays and doc-key columns. A committed segment id
+    * is immutable, so equal stat rows and file names mean equal rows;
+    * IndexBuilder.commit clears the holder before it adopts, so a
+    * rewrite never matches an old entry, even under equal stat rows and
+    * file names. */
+  private final class SegmentHolder {
+    val fnorms = new Held[Map[Int, Map[Int, Array[Byte]]]]
+    val keys = new Held[Map[Int, DocKeyColumns]]
+  }
+
+  /** A local dir's one name, however a caller spells it. */
+  private def holderDir(dir: String): String =
+    java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString
+
+  private def holder(spark: SparkSession, dir: String): SegmentHolder =
+    SessionMemo(spark, holderDir(dir), HolderName)(new SegmentHolder)
+
+  /** Forgets what every session holds of `dir`; the commit of a write
+    * into it calls this before it adopts. */
+  private[index] def dropHeld(spark: SparkSession, dir: String): Unit =
+    SessionMemo.everySession[SegmentHolder](spark, holderDir(dir), HolderName).foreach { h =>
+      h.fnorms.clear()
+      h.keys.clear()
+    }
+
+  /** The segment ids this session holds for `dir`: (fieldnorms, doc
+    * keys). */
+  private[graft] def heldSegments(spark: SparkSession, dir: String): (Set[Int], Set[Int]) = {
+    val h = holder(spark, dir)
+    (h.fnorms.segments, h.keys.segments)
   }
 
   /** Fieldnorm fields an index can store, one byte per doc each:

@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Tokenizers
 import graft.index._
+import graft.streaming.LiveIndex
 
 /** InvertedIndex.perSegment folds the df pass into its per-segment
   * shuffle: a query is one posting scan and one Spark job, and the df
@@ -24,10 +25,10 @@ class PerSegmentSpec extends AnyFunSuite {
 
   /** A fresh instance whose resident-fieldnorm cap (1 byte) is below
     * the index's fieldnorm bytes. */
-  private def capped(): InvertedIndex = {
+  private def capped(s: SparkSession = spark): InvertedIndex = {
     val cap = InvertedIndex.ResidentFnormBytesConf
-    spark.conf.set(cap, "1")
-    try new InvertedIndex(spark, dir) finally spark.conf.unset(cap)
+    s.conf.set(cap, "1")
+    try new InvertedIndex(s, dir) finally s.conf.unset(cap)
   }
 
   /** An instance whose fnorm rows ride the posting shuffle. */
@@ -60,7 +61,10 @@ class PerSegmentSpec extends AnyFunSuite {
   }
 
   test("a fresh instance reads its tables with no schema job: stats 1, first searchRaw 2, first resolve 1, Searcher open 2") {
-    Seq(new InvertedIndex(spark, dir), capped()).zip(Seq(true, false)).foreach { case (idx, resident) =>
+    // a new session holds no earlier instance's segments, so each
+    // instance below opens as the first over `dir`
+    Seq(new InvertedIndex(spark.newSession(), dir), capped(spark.newSession())).zip(Seq(true, false))
+        .foreach { case (idx, resident) =>
       val tag = if (resident) "resident" else "capped at 1 byte"
       assert(jobsOf(idx.stats) == 1, tag) // the stat-row collect
       var raw = Array.empty[(Int, Int, Float)]
@@ -71,10 +75,54 @@ class PerSegmentSpec extends AnyFunSuite {
       // resident: the doc-key collect; capped: the pushed-down scan
       assert(jobsOf(idx.resolve(raw, 10)) == 1, tag)
     }
-    val fresh = new InvertedIndex(spark, dir)
+    val fresh = new InvertedIndex(spark.newSession(), dir)
     assert(jobsOf(new Searcher(fresh)) == 2) // stats + the fieldnorm collect
     // the broadcast reuses the fieldnorms the Searcher collected
     assert(jobsOf(fresh.searchRaw("query engine table", 10)) == 1)
+  }
+
+  test("a reopen of an unchanged dir collects only its stat rows: stats 1, first searchRaw 1, first resolve 0, Searcher open 1") {
+    val s = spark.newSession()
+    val first = new InvertedIndex(s, dir)
+    first.resolve(first.searchRaw("query engine table", 10), 10) // fieldnorms and doc keys held
+    val idx = new InvertedIndex(s, dir)
+    assert(jobsOf(idx.stats) == 1) // the stat-row collect
+    var raw = Array.empty[(Int, Int, Float)]
+    assert(jobsOf { raw = idx.searchRaw("query engine table", 10) } == 1) // the query
+    assert(raw.nonEmpty && idx.fnormsResident)
+    assert(jobsOf(idx.resolve(raw, 10)) == 0)
+    assert(jobsOf(new Searcher(new InvertedIndex(s, dir))) == 1) // stats
+  }
+
+  test("a reopen after one append collects as a first open: first searchRaw 2, first resolve 1") {
+    val sp = spark
+    import sp.implicits._
+    val s = spark.newSession()
+    val live = TestDirs("graftreopen")
+    def append(b: Long): Unit = LiveIndex.appendBatch(spark.createDataset(
+      (b * 60L until b * 60L + 60L).map(i => Corpus.mkDoc(i, seed, skew = false))), b, live)
+    def warm(idx: InvertedIndex): Unit = idx.resolve(idx.searchRaw("query engine table", 10), 10)
+    (0L to 1L).foreach(append)
+    warm(new InvertedIndex(s, live))
+    append(2L)
+    val idx = new InvertedIndex(s, live)
+    assert(jobsOf(idx.stats) == 1)
+    var raw = Array.empty[(Int, Int, Float)]
+    // the fieldnorm collect + the query
+    assert(jobsOf { raw = idx.searchRaw("query engine table", 10) } == 2)
+    assert(raw.nonEmpty)
+    assert(jobsOf(idx.resolve(raw, 10)) == 1) // the doc-key collect
+
+    // a reopen after an append reads every fnorm and doc row, as a first
+    // open does; a reopen of the unchanged dir then reads none
+    append(3L)
+    val (next, again) = (new InvertedIndex(s, live), new InvertedIndex(s, live))
+    Seq(next, again).foreach(_.stats)
+    val fnormRows = new InvertedIndex(spark.newSession(), live).fnorms.count()
+    assert(SparkJobs.inputRecords(spark)(next.residentFnormsLocal) == fnormRows)
+    assert(SparkJobs.inputRecords(spark)(next.residentKeyBytes) == 240)
+    assert(SparkJobs.inputRecords(spark)(again.residentFnormsLocal) == 0)
+    assert(SparkJobs.inputRecords(spark)(again.residentKeyBytes) == 0)
   }
 
   test("a resident instance refuses an index whose fieldnorms exceed the cap, when it opens") {

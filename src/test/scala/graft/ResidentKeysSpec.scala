@@ -18,6 +18,8 @@ import graft.streaming.LiveIndex
   * the keys never take the driver past the residency cap, and a doc
   * table that does not fill its segments' ids fails naming the segment. */
 class ResidentKeysSpec extends AnyFunSuite {
+  import ResidentKeysSpec._
+
   lazy val spark: SparkSession = SparkTestSession.spark
 
   private val seed = 23L
@@ -47,19 +49,6 @@ class ResidentKeysSpec extends AnyFunSuite {
     try f finally spark.conf.unset(conf)
   }
 
-  private def fnormBytes(idx: InvertedIndex): Long =
-    idx.residentFnormsLocal.valuesIterator.flatMap(_.valuesIterator).map(_.length.toLong).sum
-
-  private def allKeys(idx: InvertedIndex): Seq[(Int, Int)] =
-    idx.segStats.collect().toSeq.flatMap(s => (0 until s.numDocs.toInt).map(d => (s.segment, d)))
-
-  private def hitBits(hs: Array[Hit]) = hs.toSeq.map(h =>
-    (h.rank, h.segment, h.docId, floatToRawIntBits(h.score), h.repo, h.path))
-
-  private def signalBits(hs: Array[(Hit, Map[String, Double])]) = hs.toSeq.map { case (h, v) =>
-    (hitBits(Array(h)), v.toSeq.sorted.map { case (n, x) => (n, doubleToRawLongBits(x)) })
-  }
-
   private def jobsOf[T](f: => T): Int = SparkJobs.count(spark)(f)
 
   /** (name, instance, its residency cap) for one index, the instance
@@ -68,7 +57,13 @@ class ResidentKeysSpec extends AnyFunSuite {
     val resident = new InvertedIndex(spark, dir)
     val (fn, keys) = (fnormBytes(resident), resident.residentKeyBytes)
     assert(keys > 0 && fn + keys <= defaultCap, s"fieldnorms $fn + keys $keys bytes")
-    def capped(cap: Long) = withCap(cap)(new InvertedIndex(spark, dir))
+    // a new session holds none of `resident`'s segments: each capped
+    // instance collects as a first open does
+    def capped(cap: Long) = {
+      val s = spark.newSession()
+      s.conf.set(conf, cap.toString)
+      new InvertedIndex(s, dir)
+    }
     Seq(
       ("resident", resident, defaultCap),
       // the scan tasks' shares sum to less than the keys: some task
@@ -133,6 +128,19 @@ class ResidentKeysSpec extends AnyFunSuite {
     }
   }
 
+  test("resolve names at most k hits, and looks up no key beyond them") {
+    val idx = new InvertedIndex(spark, liveDir)
+    val raw = idx.searchRaw("spark data", 5)
+    assert(raw.length == 5)
+    Seq(idx, withCap(1L)(new InvertedIndex(spark, liveDir))).foreach { i =>
+      val hits = i.resolve(raw, 2)
+      assert(hits.map(h => (h.rank, h.segment, h.docId)).toSeq ==
+        raw.take(2).toSeq.zipWithIndex.map { case ((s, d, _), r) => (r + 1, s, d) })
+      // a third hit with no doc row is never looked up
+      assert(i.resolve(raw.take(2) :+ ((12345, 0, 0.1f)), 2).length == 2)
+    }
+  }
+
   private def copyDir(from: String, prefix: String): String = {
     val to = TestDirs(prefix)
     val src = Paths.get(from)
@@ -144,15 +152,22 @@ class ResidentKeysSpec extends AnyFunSuite {
     to
   }
 
-  private def docFiles(dir: String): Seq[Path] =
-    Files.list(Paths.get(IndexBuilder.dataDir(dir), "kind=doc")).iterator.asScala
+  private def docFiles(dir: String, kind: String = "doc"): Seq[Path] =
+    Files.list(Paths.get(IndexBuilder.dataDir(dir), s"kind=$kind")).iterator.asScala
       .filter(_.toString.endsWith(".parquet")).toSeq.sortBy(_.toString)
 
-  /** The segments whose doc rows `file` holds. */
-  private def segmentsIn(dir: String, file: Path): Set[Int] = {
-    val schema = IndexBuilder.readKind(spark, IndexBuilder.dataDir(dir), "doc").schema
-    IndexBuilder.readTable(spark, file.toString, schema).select("doc.segment").collect()
+  /** The segments whose `kind` rows `file` holds. */
+  private def segmentsIn(dir: String, file: Path, kind: String = "doc"): Set[Int] = {
+    val schema = IndexBuilder.readKind(spark, IndexBuilder.dataDir(dir), kind).schema
+    IndexBuilder.readTable(spark, file.toString, schema).select(s"$kind.segment").collect()
       .map(_.getInt(0)).toSet
+  }
+
+  /** `e` names a segment of `segs` and says `what`. */
+  private def namesSegment(e: IllegalStateException, segs: Set[Int], what: String): Unit = {
+    val named = "segment (\\d+):".r.findFirstMatchIn(e.getMessage).map(_.group(1).toInt)
+    assert(named.exists(segs), s"$what: ${e.getMessage}")
+    assert(e.getMessage.contains(what), e.getMessage)
   }
 
   /** The first resolve of a fresh instance over `dir` fails naming a
@@ -161,10 +176,7 @@ class ResidentKeysSpec extends AnyFunSuite {
     val idx = new InvertedIndex(spark, dir)
     val raw = idx.searchRaw("spark data", 5)
     assert(raw.nonEmpty)
-    val e = intercept[IllegalStateException](idx.resolve(raw, 5))
-    val named = "segment (\\d+):".r.findFirstMatchIn(e.getMessage).map(_.group(1).toInt)
-    assert(named.exists(segs), s"$what: ${e.getMessage}")
-    assert(e.getMessage.contains(what), e.getMessage)
+    namesSegment(intercept[IllegalStateException](idx.resolve(raw, 5)), segs, what)
   }
 
   test("a missing, duplicated or truncated doc file fails the key collect, naming the segment") {
@@ -192,5 +204,43 @@ class ResidentKeysSpec extends AnyFunSuite {
     Files.list(Paths.get(rewritten)).iterator.asScala.filter(_.toString.endsWith(".parquet"))
       .foreach(f => Files.move(f, Paths.get(data, "kind=doc", f.getFileName.toString)))
     failsNaming(truncated, Set(stat.segment), "1 of its")
+  }
+
+  test("a dir damaged after a healthy open fails the key collect of a reopen in the same session") {
+    // a stat file deleted, as by an append that never wrote it: its
+    // segments' doc rows have no stat row
+    val orphaned = copyDir(liveDir, "graftkeysorphan")
+    assert(new InvertedIndex(spark, orphaned).residentKeyBytes > 0)
+    val gone = docFiles(orphaned, "stat").last
+    val orphans = segmentsIn(orphaned, gone, "stat")
+    Files.delete(gone)
+    namesSegment(intercept[IllegalStateException](new InvertedIndex(spark, orphaned).residentKeyBytes),
+      orphans, "doc rows but no stat row")
+
+    // a doc file added under the same stat rows: the held keys are for
+    // other files, so the reopen collects and sees the duplicates
+    val duplicated = copyDir(liveDir, "graftkeysdupreopen")
+    assert(new InvertedIndex(spark, duplicated).residentKeyBytes > 0)
+    val twice = docFiles(duplicated).head
+    Files.copy(twice, twice.resolveSibling("dup-0.parquet"))
+    failsNaming(duplicated, segmentsIn(duplicated, twice), "more than one doc row")
+  }
+}
+
+/** What the resident-state specs compare: byte and bit views of an
+  * instance's fieldnorms, doc keys and answers. */
+object ResidentKeysSpec {
+  def fnormBytes(idx: InvertedIndex): Long =
+    idx.residentFnormsLocal.valuesIterator.flatMap(_.valuesIterator).map(_.length.toLong).sum
+
+  /** Every (segment, docId) of the index. */
+  def allKeys(idx: InvertedIndex): Seq[(Int, Int)] =
+    idx.segStats.collect().toSeq.flatMap(s => (0 until s.numDocs.toInt).map(d => (s.segment, d)))
+
+  def hitBits(hs: Array[Hit]) = hs.toSeq.map(h =>
+    (h.rank, h.segment, h.docId, floatToRawIntBits(h.score), h.repo, h.path))
+
+  def signalBits(hs: Array[(Hit, Map[String, Double])]) = hs.toSeq.map { case (h, v) =>
+    (hitBits(Array(h)), v.toSeq.sorted.map { case (n, x) => (n, doubleToRawLongBits(x)) })
   }
 }
