@@ -52,11 +52,12 @@ object SessionMemo {
       build(out)
     }
 
-  /** The values under (dir, name) of every session of `s`'s context:
-    * state a write must invalidate in each session that holds it. */
-  def everySession[T](s: SparkSession, dir: String, name: String): Seq[T] =
+  /** The values under (dir, name) of every session of `s`'s context,
+    * each with its session: state a write must update or invalidate in
+    * each session that holds it. */
+  def everySession[T](s: SparkSession, dir: String, name: String): Seq[(SparkSession, T)] =
     Option(contexts.get(s.sparkContext)).toSeq.flatMap(_.asScala.iterator.collect {
-      case ((_, d, n), sl) if d == dir && n == name => sl.value.asInstanceOf[T]
+      case ((ses, d, n), sl) if d == dir && n == name => ses -> sl.value.asInstanceOf[T]
     })
 
   private def slot[T](s: SparkSession, dir: String, name: String)(make: Slot => T): T = {

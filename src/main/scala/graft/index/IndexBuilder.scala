@@ -1,8 +1,11 @@
 package graft.index
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.CollectionAccumulator
 
 import graft.core.{BlockCodec, Bm25Weight, FieldNorm, Fnv1a, PostingListData, Tokenizers}
 
@@ -399,6 +402,35 @@ object IndexBuilder {
     f.delete()
   }
 
+  /** What a commit hands its write: the staging dir to fill, and `room`,
+    * set while some session's InvertedIndex holds the index's current
+    * generation: the bytes every such holder may still take under its
+    * session's residency cap. writeSegments reports its rows into
+    * `written`; with a room, its fnorm rows and doc keys as well. */
+  final class Stage private[index] (spark: SparkSession, val dir: String,
+                                    private[index] val room: Option[Long]) {
+    private[index] lazy val written: CollectionAccumulator[Written] =
+      spark.sparkContext.collectionAccumulator[Written]("written rows")
+
+    /** The segments of `stats` as the open readers hold them, when this
+      * stage had a room and no task of the write overflowed it. */
+    private[index] def handed(outDir: String, stats: Seq[SegStatRow]): Option[InvertedIndex.Handed] = {
+      val rows = if (room.isEmpty) Nil else written.value.asScala.toSeq.map(_.resident)
+      if (rows.isEmpty || rows.contains(None)) None
+      else {
+        val (fnorms, keys) = rows.flatten.unzip
+        Some(new InvertedIndex.Handed(outDir, stats, fnorms.flatten, keys.flatten))
+      }
+    }
+  }
+
+  /** One task of writeSegments, reported once after its last row: its
+    * stat rows and, when its stage has a room, its fnorm rows and doc
+    * keys, or None (the overflow marker) once they pass the task's share
+    * of the room. */
+  final case class Written(stats: Seq[SegStatRow],
+                           resident: Option[(Seq[FnormRow], Seq[DocKeyRow])])
+
   /** The one commit of an index write: a build batch, a live append and
     * a merge all stage, adopt, manifest and mark through it (the
     * exactly-once protocol; IndexPipelineSpec's source scan fails on
@@ -406,14 +438,16 @@ object IndexBuilder {
     *  1. Make the manifest dir. A committed `tag` is a no-op; an
     *     uncommitted one first loses what a crashed run of it adopted,
     *     so `write` sees the data dir without this batch's rows.
-    *  2. `write` fills the staging dir it is given. It returns the stat
-    *     rows it already holds on the driver, or None: commit then
-    *     reads them off the staged stat table (one job, and only this
-    *     write's rows, however many the index already holds).
-    *  3. Drop what any session's InvertedIndex instances hold of
+    *  2. `write` fills the Stage it is given and returns the stat rows it
+    *     wrote, which it already holds on the driver.
+    *  3. Take what every session's InvertedIndex instances hold of
     *     `outDir` (a rewritten id must not match its old fieldnorms or
-    *     doc keys), adopt the staged files, write each
-    *     segment's manifest, then the batch marker `{"batch":tag,detail}`.
+    *     doc keys), adopt the staged files, write each segment's
+    *     manifest, then the batch marker `{"batch":tag,detail}`.
+    *  4. Hand the write's segments to each session that held exactly the
+    *     generation this commit appends to (InvertedIndex.Holders), when
+    *     the write reported them all within the stage's room; every
+    *     other holder stays empty, and its next reader collects.
     * `segments` are manifested with zero rows when the write left them
     * no stat row (a build batch's empty segments). A write that leaves
     * nothing to manifest (an empty live batch) is dropped with its
@@ -422,20 +456,22 @@ object IndexBuilder {
     * nothing. Returns whether this call committed. */
   def commit(spark: SparkSession, outDir: String, tag: String, detail: String,
              segments: Seq[Int] = Nil, lineage: Int => String = _ => "")
-            (write: String => Option[Seq[SegStatRow]]): Boolean = {
+            (write: Stage => Seq[SegStatRow]): Boolean = {
     new java.io.File(manifestDir(outDir)).mkdirs()
     if (batchCommitted(outDir, tag)) return false
     clearAdopted(outDir, tag)
-    val staged = s"${stagingDir(outDir)}/$tag"
-    val stats = write(staged).getOrElse(readStats(spark, staged))
+    val holders = new InvertedIndex.Holders(spark, outDir)
+    val stage = new Stage(spark, s"${stagingDir(outDir)}/$tag", holders.room)
+    val stats = write(stage)
     val seen = stats.map(_.segment).toSet
     val rows = stats ++ segments.filterNot(seen).map(SegStatRow(_, 0, 0, 0, 0, "0" * 64, 0))
     if (rows.isEmpty) {
-      deleteRecursively(new java.io.File(staged))
+      deleteRecursively(new java.io.File(stage.dir))
       return false
     }
-    InvertedIndex.dropHeld(spark, outDir)
-    adoptStaged(staged, outDir, tag)
+    val handed = stage.handed(outDir, stats)
+    holders.take()
+    adoptStaged(stage.dir, outDir, tag)
     rows.foreach { s =>
       val field = lineage(s.segment)
       val extra = if (field.isEmpty) "" else "," + field
@@ -446,6 +482,7 @@ object IndexBuilder {
           s""""sha256Agg":"${s.sha256Agg}","buildMs":${s.buildMs}$extra}""")
     }
     java.nio.file.Files.writeString(batchMarkerPath(outDir, tag), s"""{"batch":"$tag",$detail}""")
+    handed.foreach(holders.extend(tag, _))
     true
   }
 
@@ -498,7 +535,7 @@ object IndexBuilder {
     var skipped = 0
     (0 until S).grouped(cfg.segmentsPerBatch).zipWithIndex.foreach { case (batch, bi) =>
       val committed = commit(spark, outDir, s"b$bi", s""""segments":${batch.size}""",
-          segments = batch) { staged =>
+          segments = batch) { stage =>
         val batchSet = batch.toSet
         val slice =
           if (batch.size == S) tagged
@@ -514,8 +551,7 @@ object IndexBuilder {
         val parts = sys.env.get("GRAFT_BUILD_PARTS").map(_.toInt)
           .getOrElse(math.max(spark.sparkContext.defaultParallelism,
             math.min(batch.size * 4, 4096)))
-        writeSegments(slice, parts, staged, cfg)
-        None
+        writeSegments(slice, parts, stage, cfg)
       }
       if (committed) built += batch.size else skipped += batch.size
     }
@@ -533,12 +569,12 @@ object IndexBuilder {
       built, skipped, (System.nanoTime() - t0) / 1000000)
   }
 
-  /** The stat rows under `root`, a data or staging dir. A write of no
-    * rows leaves no kind= dirs (partitionBy creates none), so the
-    * missing table reads as zero rows, with no job, instead of an
-    * AnalysisException — an empty build is a valid BuildReport(0, 0,
-    * ...), and its batch markers commit like any other (the resume
-    * contract assumes a stable input across retries). */
+  /** The stat rows under `root`, a data dir. A build of no rows leaves
+    * no kind= dirs (partitionBy creates none), so the missing table
+    * reads as zero rows, with no job, instead of an AnalysisException —
+    * an empty build is a valid BuildReport(0, 0, ...), and its batch
+    * markers commit like any other (the resume contract assumes a
+    * stable input across retries). */
   private[index] def readStats(spark: SparkSession, root: String): Seq[SegStatRow] = {
     import spark.implicits._
     if (!new java.io.File(s"$root/kind=stat").exists()) Nil
@@ -547,22 +583,72 @@ object IndexBuilder {
 
   /** Shared segment-build stage: shuffle to segments, sort, accumulate,
     * serialize, write parquet partitioned by row kind into
-    * `<stageOut>/kind=*` (overwrite — callers stage then adopt, see
+    * `<stage.dir>/kind=*` (overwrite — callers stage then adopt, see
     * commit). Used by the batch build and the live (streaming)
-    * micro-batch append. */
-  def writeSegments(tagged: Dataset[Tagged], parts: Int, stageOut: String,
-                    cfg: Config): Unit = {
+    * micro-batch append. Returns the stat rows it wrote: each task
+    * reports its rows once, after its last one, into the stage's
+    * accumulator (with a room, its fnorm rows and doc keys too, within
+    * its share of the room), so nothing is read back. */
+  def writeSegments(tagged: Dataset[Tagged], parts: Int, stage: Stage,
+                    cfg: Config): Seq[SegStatRow] = {
     // the tagging already applied centrality: the tasks need no copy of
     // the (possibly large) map
     val taskCfg = cfg.copy(centrality = Map.empty)
+    // a share per partition bounds the tasks' rows together by the room
+    val share = stage.room.map(_ / parts)
+    val written = stage.written
     import tagged.sparkSession.implicits._
     tagged
       .repartition(parts, col("segment"))
       .sortWithinPartitions(col("segment"), col("sortKey").desc,
         col("repo"), col("path"), col("commit"))
-      .mapPartitions(it => new SegmentEmitter(it, taskCfg))
+      .mapPartitions(it => new Reporting(new SegmentEmitter(it, taskCfg), share, written))
       .write.mode(SaveMode.Overwrite).partitionBy("kind")
-      .parquet(stageOut)
+      .parquet(stage.dir)
+    written.value.asScala.toSeq.flatMap(_.stats)
+  }
+
+  /** Passes one write task's rows through and reports them once, after
+    * the last (the write's result stage, where Spark applies a task's
+    * accumulator update once per partition): the stat rows, and with a
+    * `share`, the fnorm rows and doc keys, charged as the key collect
+    * charges them (InvertedIndex.keyBytes), until they pass it. */
+  private final class Reporting(rows: Iterator[BuildRow], share: Option[Long],
+                                written: CollectionAccumulator[Written]) extends Iterator[BuildRow] {
+    private val stats = Seq.newBuilder[SegStatRow]
+    private val fnorms = Seq.newBuilder[FnormRow]
+    private val keys = Seq.newBuilder[DocKeyRow]
+    private var within = share.isDefined
+    private var charged = 0L
+    private var reported = false
+
+    def hasNext: Boolean = rows.hasNext || {
+      if (!reported) {
+        reported = true
+        written.add(Written(stats.result(),
+          if (within) Some((fnorms.result(), keys.result())) else None))
+      }
+      false
+    }
+
+    def next(): BuildRow = {
+      val r = rows.next()
+      r.stat.foreach(stats += _)
+      if (within) {
+        r.fnorm.foreach { f => fnorms += f; charged += f.numDocs }
+        r.doc.foreach { d =>
+          val k = DocKeyRow(d.segment, d.docId, d.repo, d.path, d.sortKey, d.commit, d.simhash)
+          keys += k
+          charged += InvertedIndex.keyBytes(k)
+        }
+        if (charged > share.get) {
+          within = false
+          fnorms.clear()
+          keys.clear()
+        }
+      }
+      r
+    }
   }
 
   /** Streams a sorted partition, building one segment at a time fully

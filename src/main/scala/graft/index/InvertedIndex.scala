@@ -49,9 +49,11 @@ import graft.core._
   * collect once: the stat rows (`stats`) and, when resident, the
   * fieldnorms and the doc keys, unless an earlier instance in this
   * session holds them for the same stat rows and files: a reopen of an
-  * unchanged dir so collects only its stat rows, while one after an
-  * append collects all three as a first open does. The residency gate
-  * is free unless numDocs x 3 fnorm fields exceeds the cap.
+  * unchanged dir so collects only its stat rows, and one after an append
+  * only its stat rows when this session held the generation it appends
+  * to (the append's commit hands the holder its new segments; see
+  * InvertedIndex.Holders). The residency gate is free unless numDocs x 3
+  * fnorm fields exceeds the cap.
   *
   * Collection statistics (N, total tokens -> avg fieldnorm) are summed
   * on the driver from the per-segment stat rows; per-term df is summed
@@ -137,8 +139,7 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
     * fnorm rows through the per-segment shuffle instead (scales to any
     * corpus). The same cap bounds the fieldnorms and the resident doc
     * keys together (`residentDocKeys`). */
-  private[index] val maxResidentFnormBytes: Long =
-    spark.conf.get(InvertedIndex.ResidentFnormBytesConf, (64L << 20).toString).toLong
+  private[index] val maxResidentFnormBytes: Long = InvertedIndex.residentCap(spark)
 
   /** The residency gate: whether the fieldnorms fit the cap, so queries
     * read them resident rather than shuffling the fnorm rows. The cap
@@ -1393,6 +1394,10 @@ object InvertedIndex {
     * fieldnorms are scanned per lookup. */
   val ResidentFnormBytesConf = "spark.graft.residentFnormBytes"
 
+  /** `s`'s residency cap, in bytes (64 MB unless its conf sets one). */
+  private def residentCap(s: SparkSession): Long =
+    s.conf.get(ResidentFnormBytesConf, (64L << 20).toString).toLong
+
   /** The least one doc's resident keys can be charged: two longs, and
     * for each of three strings 48 bytes for its reference and the
     * headers of the String and its array. */
@@ -1400,7 +1405,7 @@ object InvertedIndex {
 
   /** Driver bytes charged for one doc's resident keys: two bytes per
     * char, an upper bound for any string. */
-  private def keyBytes(r: DocKeyRow): Long =
+  private[index] def keyBytes(r: DocKeyRow): Long =
     MinKeyBytes + 2L * (r.repo.length + r.path.length + r.commit.length)
 
   /** One scan task of the key collect: its rows, or None (the overflow
@@ -1418,7 +1423,7 @@ object InvertedIndex {
   }
 
   /** One segment's resident doc keys, indexed by docId. */
-  private final class DocKeyColumns(val size: Int) {
+  private[index] final class DocKeyColumns(val size: Int) {
     private val repo = new Array[String](size)
     private val path = new Array[String](size)
     private val sortKey = new Array[Long](size)
@@ -1474,6 +1479,9 @@ object InvertedIndex {
     * of the table it read. */
   private type HeldKey = (Set[SegStatRow], Set[String])
 
+  private type Fnorms = Map[Int, Map[Int, Array[Byte]]]
+  private type Keys = Map[Int, DocKeyColumns]
+
   /** One collect's value and the key it is valid for, behind a
     * SoftReference: memory pressure may take it, and the next instance
     * then collects as a first one does. */
@@ -1484,22 +1492,34 @@ object InvertedIndex {
 
     def publish(key: HeldKey, v: V): Unit = synchronized { gen = new SoftReference((key, v)) }
 
-    def clear(): Unit = synchronized(gen.clear())
+    /** The held key and value, if any. */
+    def peek: Option[(HeldKey, V)] = synchronized(Option(gen.get))
+
+    /** The held key and value, leaving nothing held. */
+    def take(): Option[(HeldKey, V)] = synchronized {
+      val e = Option(gen.get)
+      gen = new SoftReference(null)
+      e
+    }
+
+    /** Publishes unless something was published since the last take. */
+    def offer(key: HeldKey, v: V): Unit = synchronized { if (gen.get == null) publish(key, v) }
 
     /** The segment ids of the held key's stat rows. */
     def segments: Set[Int] = synchronized(Option(gen.get).fold(Set.empty[Int])(_._1._1.map(_.segment)))
   }
 
   /** One dir's resident state in one session, kept across instances so
-    * a reopen of an unchanged dir collects nothing but its stat rows: the
-    * latest fieldnorm arrays and doc-key columns. A committed segment id
-    * is immutable, so equal stat rows and file names mean equal rows;
-    * IndexBuilder.commit clears the holder before it adopts, so a
-    * rewrite never matches an old entry, even under equal stat rows and
-    * file names. */
+    * a reopen collects nothing but its stat rows: the latest fieldnorm
+    * arrays and doc-key columns. A committed segment id is immutable, so
+    * equal stat rows and file names mean equal rows. IndexBuilder.commit
+    * empties the holder before it adopts, so a rewrite never matches an
+    * old entry, even under equal stat rows and file names, and after its
+    * marker extends what held exactly the generation it appended to
+    * (Holders). */
   private final class SegmentHolder {
-    val fnorms = new Held[Map[Int, Map[Int, Array[Byte]]]]
-    val keys = new Held[Map[Int, DocKeyColumns]]
+    val fnorms = new Held[Fnorms]
+    val keys = new Held[Keys]
   }
 
   /** A local dir's one name, however a caller spells it. */
@@ -1509,13 +1529,87 @@ object InvertedIndex {
   private def holder(spark: SparkSession, dir: String): SegmentHolder =
     SessionMemo(spark, holderDir(dir), HolderName)(new SegmentHolder)
 
-  /** Forgets what every session holds of `dir`; the commit of a write
-    * into it calls this before it adopts. */
-  private[index] def dropHeld(spark: SparkSession, dir: String): Unit =
-    SessionMemo.everySession[SegmentHolder](spark, holderDir(dir), HolderName).foreach { h =>
-      h.fnorms.clear()
-      h.keys.clear()
+  /** The names of the files of `dir`'s `kind` table, as its reader lists
+    * them. */
+  private def tableFiles(dir: String, kind: String): Set[String] =
+    Option(new java.io.File(s"${IndexBuilder.dataDir(dir)}/kind=$kind").list()).fold(Set.empty[String])(
+      _.iterator.filter(n => n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")).toSet)
+
+  private def fileName(path: String): String = path.substring(path.lastIndexOf('/') + 1)
+
+  /** The fieldnorms and doc keys of a write's segments, assembled from
+    * the rows its tasks reported as a collect assembles them, with the
+    * same checks: keyColumns fails unless each segment's doc keys fill
+    * its ids exactly once. */
+  private[index] final class Handed(dir: String, val stats: Seq[SegStatRow], fnormRows: Seq[FnormRow],
+                                    keyRows: Seq[DocKeyRow]) {
+    val fnorms: Fnorms = fnormRows.toArray.groupBy(_.segment).map { case (seg, chunks) =>
+      seg -> assembleFnorms(chunks)
     }
+    val keys: Keys = keyColumns(keyRows.toArray, stats, dir)
+  }
+
+  /** What the sessions hold of `dir` when a commit into it starts: the
+    * entries that hold its current generation, whose files are the
+    * table's files now. An entry of an older generation lists fewer: one
+    * left stale by a write from another process, or filled by a reader
+    * whose table readers predate the last commit. */
+  private[index] final class Holders(spark: SparkSession, dir: String) {
+    private val all = SessionMemo.everySession[SegmentHolder](spark, holderDir(dir), HolderName)
+    private val listed = Seq("fnorm", "doc").map(k => k -> tableFiles(dir, k)).toMap
+
+    private def current[V](e: Option[(HeldKey, V)], kind: String): Option[(HeldKey, V)] =
+      e.filter { case ((_, files), _) => files.nonEmpty && files.map(fileName) == listed(kind) }
+
+    /** Per session that holds the current generation, its holder and
+      * current entries, and the bytes its cap leaves beside them. */
+    private val holding = all.flatMap { case (s, h) =>
+      val (fn, ks) = (current(h.fnorms.peek, "fnorm"), current(h.keys.peek, "doc"))
+      val bytes = fn.fold(0L)(_._2.valuesIterator.flatMap(_.valuesIterator).map(_.length.toLong).sum) +
+        ks.fold(0L)(_._2.valuesIterator.map(_.bytes).sum)
+      if (fn.isEmpty && ks.isEmpty) None else Some((h, fn, ks, residentCap(s) - bytes))
+    }
+
+    /** The bytes every session that holds the current generation may
+      * still take; None when none holds it, or one has no room left. */
+    val room: Option[Long] = holding.map(_._4).minOption.filter(_ > 0)
+
+    /** The holders of the current generation that still held the same
+      * entries when `take` emptied them. */
+    private var kept = Seq.empty[(SegmentHolder, Option[(HeldKey, Fnorms)], Option[(HeldKey, Keys)])]
+
+    /** Empties every session's holder of `dir`; the commit calls this
+      * before it adopts. */
+    def take(): Unit = {
+      val taken = all.map { case (_, h) => h -> ((h.fnorms.take(), h.keys.take())) }
+      kept = holding.collect { case (h, fn, ks, _) if taken.exists { case (t, (tf, tk)) =>
+          (t eq h) && fn.forall(e => tf.exists(_ eq e)) && ks.forall(e => tk.exists(_ eq e))
+        } => (h, fn, ks)
+      }
+    }
+
+    /** After the marker of `tag`: each holder `take` kept holds the new
+      * generation, its entries extended by the write's segments, when
+      * the commit added only `tag`'s files (`<tag>-<j>.parquet`) and none
+      * of the held segment ids. A holder a reader filled since the take
+      * keeps what the reader put there. */
+    def extend(tag: String, w: Handed): Unit = {
+      val own = s"${java.util.regex.Pattern.quote(tag)}-\\d+\\.parquet"
+      val added = listed.map { case (k, before) => k -> (tableFiles(dir, k) -- before) }
+      val ids = w.stats.map(_.segment).toSet
+      def next[V](e: Option[(HeldKey, V)], kind: String, more: V => V)(put: (HeldKey, V) => Unit): Unit =
+        e.foreach { case ((stats, files), v) =>
+          if (added(kind).forall(_.matches(own)) && !stats.exists(s => ids(s.segment))) {
+            val parent = files.head.substring(0, files.head.lastIndexOf('/') + 1)
+            put((stats ++ w.stats, files ++ added(kind).map(parent + _)), more(v))
+          }
+        }
+      kept.foreach { case (h, fn, ks) =>
+        next(fn, "fnorm", (v: Fnorms) => v ++ w.fnorms)(h.fnorms.offer)
+        next(ks, "doc", (v: Keys) => v ++ w.keys)(h.keys.offer)
+      }
+    }
+  }
 
   /** The segment ids this session holds for `dir`: (fieldnorms, doc
     * keys). */

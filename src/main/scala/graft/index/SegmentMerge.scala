@@ -108,7 +108,7 @@ object SegmentMerge {
     // on retry
     IndexBuilder.commit(spark, outDir, tag, s""""mergedSegments":${stats.length}""",
         lineage = ns => s""""mergedFrom":[${grouped(ns).map(_.segment).mkString(",")}]""") {
-        staged =>
+        stage =>
       // a merged id the out dir already holds would become a second copy
       // of that segment (a re-run of this same merge never gets here: its
       // marker makes the commit a no-op, and a crashed run's adopted rows
@@ -154,8 +154,8 @@ object SegmentMerge {
           new MergeEmitter(it, bBase.value, bMerged.value, written, taskCfg)
         }
         .write.mode(SaveMode.Overwrite).partitionBy("kind")
-        .parquet(staged) // Overwrite clears a crashed prior staging
-      Some(written.value.asScala.toSeq)
+        .parquet(stage.dir) // Overwrite clears a crashed prior staging
+      written.value.asScala.toSeq
     }
     // derived data, refreshed after the marker: a committed re-run heals
     // a table lost to a crash between the two

@@ -36,7 +36,17 @@ object LiveIndex {
     * stat row, so an empty batch stages none and commit leaves no data
     * and no marker: emptiness is read off the write, because a probe
     * before it would be one more job evaluating the micro-batch a
-    * second time. */
+    * second time.
+    *
+    * Two jobs: the shuffle-map stage and the write. The write's tasks
+    * report the stat rows they wrote, so commit reads nothing back.
+    * While a session's InvertedIndex holds the dir's current generation
+    * (the reader of the previous append, in any session of the
+    * context), they also report their fnorm rows and doc keys, within
+    * the room that session's residency cap leaves, and commit hands
+    * them to its holder: the next reopen there collects only its stat
+    * rows, the way Lucene's near-real-time reader takes new segments
+    * from the writer instead of reading them back. */
   def appendBatch(batch: Dataset[SourceDoc], batchId: Long, dir: String,
                   cfg: IndexBuilder.Config = IndexBuilder.Config(),
                   grankRefreshEvery: Int = 8): Unit = {
@@ -44,10 +54,9 @@ object LiveIndex {
     val base = LiveBase + (batchId * SegsPerBatch).toInt
     val lineage = s""""batchId":$batchId"""
     val committed = IndexBuilder.commit(spark, dir, s"live$batchId", lineage,
-        lineage = _ => lineage) { staged =>
+        lineage = _ => lineage) { stage =>
       IndexBuilder.writeSegments(IndexBuilder.tag(batch, base, SegsPerBatch, cfg.centrality),
-        SegsPerBatch * 2, staged, cfg)
-      None
+        SegsPerBatch * 2, stage, cfg)
     }
     // stored global-rank refresh policy: every append invalidates the
     // ordinal table (the validator then routes rankSignals to its

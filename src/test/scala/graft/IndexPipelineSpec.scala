@@ -75,11 +75,11 @@ class IndexPipelineSpec extends AnyFunSuite {
       IndexBuilder.Tagged(0, 1000L - i, "r", s"p$i", "c", "en",
         s"alpha beta doc$i content")) :+
       IndexBuilder.Tagged(1, 1L, "r", "solo", "c", "en", "solo gamma text")
-    val staged = tmpDir()
-    IndexBuilder.writeSegments(spark.createDataset(rows), 1, staged,
-      IndexBuilder.Config(numSegments = 2))
     val out = tmpDir()
-    IndexBuilder.adoptStaged(staged, out, "b0")
+    IndexBuilder.commit(spark, out, "b0", "") { stage =>
+      IndexBuilder.writeSegments(spark.createDataset(rows), 1, stage,
+        IndexBuilder.Config(numSegments = 2))
+    }
     val idx = new InvertedIndex(spark, out)
     assert(idx.docs.count() == 10)
     val seg1 = idx.segStats.filter(_.segment == 1).collect()
@@ -336,15 +336,15 @@ class IndexPipelineSpec extends AnyFunSuite {
 
   test("build job counts: fresh single-batch builds, and a committed re-run only reads its stats") {
     // a computed input, so that any extra pass over it shows as a job;
-    // 4 = shuffle-map stage, write, the batch's staged stat read and the
-    // report's stat read
+    // 3 = shuffle-map stage, write and the report's stat read (the write
+    // hands the commit its stat rows)
     val input = Corpus.generate(spark, 200, seed = 29L, partitions = 3)
     assert(SparkJobs.count(spark)(
-      IndexBuilder.build(spark, input, tmpDir(), IndexBuilder.Config(numSegments = 4))) == 4)
+      IndexBuilder.build(spark, input, tmpDir(), IndexBuilder.Config(numSegments = 4))) == 3)
     // + 7 for writing the rank table
     val d = tmpDir()
     val cfg = IndexBuilder.Config(numSegments = 4, storeGlobalRank = true)
-    assert(SparkJobs.count(spark)(IndexBuilder.build(spark, input, d, cfg)) == 11)
+    assert(SparkJobs.count(spark)(IndexBuilder.build(spark, input, d, cfg)) == 10)
     // the stored rank table still validates, so the re-run leaves it be
     assert(SparkJobs.count(spark)(IndexBuilder.build(spark, input, d, cfg)) == 1)
     assert(new InvertedIndex(spark, d).storedGlobalRanks.nonEmpty)

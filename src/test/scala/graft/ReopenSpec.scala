@@ -11,12 +11,13 @@ import graft.streaming.LiveIndex
 
 /** A reopen reuses the fieldnorms and doc keys that an earlier instance
   * in the same session holds when its stat rows and files are the same,
-  * and collects them otherwise (InvertedIndex's segment holder). Either
-  * way, a reopened instance and a Searcher over it answer bit for bit as
-  * a first open does (an instance in a new session, which holds
-  * nothing), the residency cap still bounds what it holds, and a
-  * rewritten segment id is never matched against the old segment's
-  * entries. */
+  * and collects them otherwise (InvertedIndex's segment holder). An
+  * append's commit hands its segments to every session that held the
+  * generation it appends to, and to no other. Either way, a reopened
+  * instance and a Searcher over it answer bit for bit as a first open
+  * does (an instance in a new session, which holds nothing), the
+  * residency cap still bounds what it holds, and a rewritten segment id
+  * is never matched against the old segment's entries. */
 class ReopenSpec extends AnyFunSuite {
   import ResidentKeysSpec._
 
@@ -28,10 +29,10 @@ class ReopenSpec extends AnyFunSuite {
   private val cfg = IndexBuilder.Config(indexBigrams = true, indexTrigrams = true, indexMeta = true,
     computeSimhash = true)
 
-  private def batch(b: Long): Dataset[SourceDoc] = {
-    val sp = spark
-    import sp.implicits._
-    spark.createDataset((b * perBatch until (b + 1) * perBatch).map(i => Corpus.mkDoc(i, seed, skew = false)))
+  /** Batch `b`'s docs, in session `in` (the session its append runs in). */
+  private def batch(b: Long, in: SparkSession = spark): Dataset[SourceDoc] = {
+    import in.implicits._
+    in.createDataset((b * perBatch until (b + 1) * perBatch).map(i => Corpus.mkDoc(i, seed, skew = false)))
   }
 
   private def firstOpen(dir: String): InvertedIndex = new InvertedIndex(spark.newSession(), dir)
@@ -88,19 +89,26 @@ class ReopenSpec extends AnyFunSuite {
     assert(got.docsOf(keys) == want.docsOf(keys), s"$tag: doc keys")
   }
 
-  test("after each of 6 appends, a reopen and a Searcher over it equal a first open, bit for bit") {
+  test("after each of 6 appends the holder holds the new generation, and a reopen and a Searcher over it equal a first open, bit for bit") {
     val dir = TestDirs("graftreopenprop")
     (0L until 6L).foreach { b =>
       LiveIndex.appendBatch(batch(b), b, dir, cfg)
-      // the commit cleared what the previous generation's instances held
-      assert(InvertedIndex.heldSegments(spark, dir) == ((Set.empty[Int], Set.empty[Int])), s"batch $b")
-      val reopened = new InvertedIndex(spark, dir)
       val first = firstOpen(dir)
+      // the commit handed the batch to the holder of the previous
+      // generation (none before the first reader)
+      val ids = if (b == 0) Set.empty[Int] else segments(first)
+      assert(ids.size == (if (b == 0) 0 else 4 * (b + 1)))
+      assert(InvertedIndex.heldSegments(spark, dir) == ((ids, ids)), s"batch $b")
+      val reopened = new InvertedIndex(spark, dir)
+      reopened.stats
+      val reads = if (b == 0) 1 else 0
+      assert(jobsOf(reopened.residentFnormsLocal) == reads && jobsOf(reopened.residentKeyBytes) == reads,
+        s"batch $b")
       val i = b * perBatch + 7
       val qs = queries(i)
       sameAnswers(s"batch $b, reopened", reopened, first, qs)
       // a reopen of the unchanged dir, and a Searcher over it, reuse what
-      // `reopened` collected
+      // `reopened` holds
       val unchanged = new InvertedIndex(spark, dir)
       unchanged.stats
       assert(jobsOf(unchanged.residentFnormsLocal) == 0 && jobsOf(unchanged.residentKeyBytes) == 0, s"batch $b")
@@ -116,6 +124,127 @@ class ReopenSpec extends AnyFunSuite {
       assert(held.size == 4 * (b + 1))
       assert(InvertedIndex.heldSegments(spark, dir) == ((held, held)), s"batch $b")
     }
+  }
+
+  /** Appends batches `bs` to a new dir and opens it in a new session,
+    * whose holder then holds that generation. */
+  private def held(name: String, bs: Seq[Long]): (String, SparkSession) = {
+    val dir = TestDirs(name)
+    bs.foreach(b => LiveIndex.appendBatch(batch(b), b, dir, cfg))
+    val s = spark.newSession()
+    warm(new InvertedIndex(s, dir))
+    assert(InvertedIndex.heldSegments(s, dir)._2.size == 4 * bs.size)
+    (dir, s)
+  }
+
+  private val nothing = (Set.empty[Int], Set.empty[Int])
+
+  /** A reopen in `s` after a commit that handed it nothing: it collects
+    * the fieldnorms and doc keys, and equals a first open. */
+  private def collectsAgain(tag: String, s: SparkSession, dir: String, i: Long): InvertedIndex = {
+    val reopened = new InvertedIndex(s, dir)
+    reopened.stats
+    assert(jobsOf(reopened.residentFnormsLocal) == 1, tag)
+    sameAnswers(tag, reopened, firstOpen(dir), queries(i))
+    reopened
+  }
+
+  test("an append whose rows pass the room its readers' cap leaves hands them nothing, and they hold no more than the cap") {
+    val (dir, s) = held("graftreopenroom", Seq(0L, 1L))
+    val reader = new InvertedIndex(s, dir)
+    val bytes = fnormBytes(reader) + reader.residentKeyBytes
+    // room for about half of the next batch's rows
+    val cap = bytes + bytes / 4
+    withCap(s, cap)(LiveIndex.appendBatch(batch(2L), 2L, dir, cfg))
+    assert(InvertedIndex.heldSegments(s, dir) == nothing)
+    val reopened = withCap(s, cap)(collectsAgain("overflowed", s, dir, 2 * perBatch + 7))
+    assert(fnormBytes(reopened) + reopened.residentKeyBytes <= cap)
+    // the keys did not fit beside the fieldnorms: only these are held
+    assert(reopened.residentKeyBytes == 0)
+    assert(InvertedIndex.heldSegments(s, dir) == ((segments(reopened), Set.empty[Int])))
+  }
+
+  test("a holder left stale by a reader of an older generation is not handed the next append") {
+    val dir = TestDirs("graftreopenstale")
+    LiveIndex.appendBatch(batch(0L), 0L, dir, cfg)
+    val s = spark.newSession()
+    // a reader whose stat rows and table readers predate the next append
+    val old = new InvertedIndex(s, dir)
+    old.stats; old.fnorms; old.docs; old.postings
+    // appended from a session that never opened the dir: nothing holds
+    // the dir yet, so nothing is handed
+    LiveIndex.appendBatch(batch(1L, spark.newSession()), 1L, dir, cfg)
+    assert(InvertedIndex.heldSegments(s, dir) == nothing)
+    // the old reader now fills the holder with batch 0 alone
+    warm(old)
+    assert(InvertedIndex.heldSegments(s, dir)._2.size == 4)
+    LiveIndex.appendBatch(batch(2L), 2L, dir, cfg)
+    assert(InvertedIndex.heldSegments(s, dir) == nothing)
+    collectsAgain("stale", s, dir, 2 * perBatch + 7)
+  }
+
+  test("a committed replay of a batch id hands nothing twice") {
+    val (dir, s) = held("graftreopenreplay", Seq(0L))
+    LiveIndex.appendBatch(batch(1L), 1L, dir, cfg)
+    val ids = segments(firstOpen(dir))
+    assert(InvertedIndex.heldSegments(s, dir) == ((ids, ids)))
+    LiveIndex.appendBatch(batch(1L), 1L, dir, cfg) // a no-op
+    assert(InvertedIndex.heldSegments(s, dir) == ((ids, ids)))
+    val reopened = new InvertedIndex(s, dir)
+    reopened.stats
+    assert(jobsOf(reopened.residentFnormsLocal) == 0 && jobsOf(reopened.residentKeyBytes) == 0)
+    assert(reopened.docsOf(allKeys(reopened)).size == 2 * perBatch)
+    sameAnswers("replayed", reopened, firstOpen(dir), queries(perBatch + 7))
+  }
+
+  test("an append that crashed after adopting and re-ran hands nothing, and each doc key is held once") {
+    val (dir, s) = held("graftreopencrash", Seq(0L))
+    LiveIndex.appendBatch(batch(1L), 1L, dir, cfg)
+    // the crash: the rows are adopted and manifested, the marker is not;
+    // a reader in `s` then holds them
+    java.nio.file.Files.delete(IndexBuilder.batchMarkerPath(dir, "live1"))
+    warm(new InvertedIndex(s, dir))
+    LiveIndex.appendBatch(batch(1L), 1L, dir, cfg)
+    assert(IndexBuilder.batchCommitted(dir, "live1"))
+    assert(InvertedIndex.heldSegments(s, dir) == nothing)
+    val reopened = collectsAgain("re-run", s, dir, perBatch + 7)
+    assert(reopened.docsOf(allKeys(reopened)).size == 2 * perBatch)
+  }
+
+  test("a SegmentMerge into a held dir hands it nothing") {
+    val (dir, s) = held("graftreopenmerged", Seq(0L))
+    val other = TestDirs("graftreopenmergein")
+    (1L to 2L).foreach(b => LiveIndex.appendBatch(batch(b), b, other, cfg))
+    SegmentMerge.merge(spark, other, dir, fanIn = 4, cfg)
+    assert(InvertedIndex.heldSegments(s, dir) == nothing)
+    collectsAgain("merged into", s, dir, 2 * perBatch + 7)
+  }
+
+  test("a LiveIndex.start micro-batch hands its segments to a reader in the caller's session") {
+    val sp = spark
+    import sp.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val dir = TestDirs("graftreopenstream")
+    val stream = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[SourceDoc]
+    val query = LiveIndex.start(stream.toDS(), dir, TestDirs("graftreopenckpt"),
+      org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"), cfg)
+    try {
+      def add(b: Long): Unit = {
+        stream.addData((b * perBatch until (b + 1) * perBatch).map(i => Corpus.mkDoc(i, seed, skew = false)))
+        query.processAllAvailable()
+      }
+      add(0L)
+      warm(new InvertedIndex(spark, dir))
+      add(1L)
+    } finally query.stop()
+    val first = firstOpen(dir)
+    val ids = segments(first)
+    assert(ids.size == 8)
+    assert(InvertedIndex.heldSegments(spark, dir) == ((ids, ids)))
+    val reopened = new InvertedIndex(spark, dir)
+    reopened.stats
+    assert(jobsOf(reopened.residentFnormsLocal) == 0 && jobsOf(reopened.residentKeyBytes) == 0)
+    sameAnswers("streamed", reopened, first, queries(perBatch + 7))
   }
 
   test("a capped reopen after a resident instance holds nothing resident and answers the same") {
@@ -143,9 +272,11 @@ class ReopenSpec extends AnyFunSuite {
     assert(jobsOf(tight.residentKeyBytes) == 0)
     assert(tight.fnormsResident && tight.residentKeyBytes == 0 && fnormBytes(tight) <= fn + keys - 1)
 
-    // after an append nothing is held: the keys are collected again and
-    // do not fit, so the collect's tasks return overflow markers
-    LiveIndex.appendBatch(batch(2L), 2L, dir, cfg)
+    // an append under that cap finds no room beside what `s` holds, so
+    // it hands `s` nothing: the keys are collected again and do not fit,
+    // so the collect's tasks return overflow markers
+    withCap(s, fn + keys - 1)(LiveIndex.appendBatch(batch(2L), 2L, dir, cfg))
+    assert(InvertedIndex.heldSegments(s, dir) == ((Set.empty[Int], Set.empty[Int])))
     val first = firstOpen(dir)
     val (fn2, keys2) = (fnormBytes(first), first.residentKeyBytes)
     val over = withCap(s, fn2 + keys2 - 1)(new InvertedIndex(s, dir))
