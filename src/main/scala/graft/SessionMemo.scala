@@ -52,12 +52,11 @@ object SessionMemo {
       build(out)
     }
 
-  /** The values under (dir, name) of every session of `s`'s context,
-    * each with its session: state a write must update or invalidate in
-    * each session that holds it. */
-  def everySession[T](s: SparkSession, dir: String, name: String): Seq[(SparkSession, T)] =
+  /** The values under (dir, name) of every session of `s`'s context:
+    * state a write must update in each session that holds it. */
+  def everySession[T](s: SparkSession, dir: String, name: String): Seq[T] =
     Option(contexts.get(s.sparkContext)).toSeq.flatMap(_.asScala.iterator.collect {
-      case ((ses, d, n), sl) if d == dir && n == name => ses -> sl.value.asInstanceOf[T]
+      case ((_, d, n), sl) if d == dir && n == name => sl.value.asInstanceOf[T]
     })
 
   private def slot[T](s: SparkSession, dir: String, name: String)(make: Slot => T): T = {

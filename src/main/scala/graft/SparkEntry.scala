@@ -176,18 +176,16 @@ object SparkEntry {
         .map { case ((id, sc), i) => (i + 1, id, sc) }.toSeq)
       .toDF("rank", "doc_id", "score")
 
-  /** Slack a fixed-k engine face needs for TIE-STABLE membership: the
-    * engine truncates an equal-score group at the heap boundary in
-    * DocAddress order (as the reference does), but the oracle's
-    * canonical cut keeps the doc_id-smallest of the group. Fetching
-    * k+slack and cutting AFTER the canonical re-sort makes the face
-    * deterministic whenever the boundary tie group is narrower than the
-    * slack (observed groups: <=4; sf0.1 phrase hit one of width 4). */
-  private def tieSlack(k: Int): Int = k + math.max(80, 4 * k)
-
+  /** A fixed-k engine face, TIE-STABLE: the engine truncates an
+    * equal-score group at the heap boundary in DocAddress order (as the
+    * reference does), but the oracle's canonical cut keeps the
+    * doc_id-smallest of the group. Fetching candidateBudget(k) hits and
+    * cutting AFTER the canonical re-sort makes the face deterministic
+    * whenever the boundary tie group is narrower than the slack
+    * (observed groups: <=4; sf0.1 phrase hit one of width 4). */
   private def canonicalTopK(s: SparkSession, k: Int)(
       fetch: Int => Array[graft.index.Hit]): DataFrame =
-    canonicalHitsDF(s, fetch(tieSlack(k))
+    canonicalHitsDF(s, fetch(graft.index.InvertedIndex.candidateBudget(k))
       .sortBy(h => (-h.score, h.repo.toLong)).take(k))
 
   /** Flagship: transient index over `documents`, one WAND query. */
@@ -1634,13 +1632,13 @@ object SparkEntry {
   /** q_engine_bm25f "table merge window": two stages like the engine —
     * recall = the field-expanded f32 WAND score (plain per-field BM25,
     * summed in cursor ord order) cut to the segment-count-independent
-    * candidateBudget(tieSlack(20)) = 500 in (score desc, seg, docid)
+    * candidateBudget(candidateBudget(20)) = 500 in (score desc, seg, docid)
     * order, then per-(term, field) BM25F scores in plan order over the
     * candidates only — content x3 (coeff 1.0), stemmed x3 (0.5, shared
     * idf from the CONTENT df of the stem text), bigram x2 (0.25, own
     * fieldnorms fnid2 + avg2) — summed f32 in plan ord. */
   private def engineBm25fOracleSql: String = {
-    val fetch = graft.index.InvertedIndex.candidateBudget(tieSlack(20))
+    val fetch = graft.index.InvertedIndex.candidateBudget(graft.index.InvertedIndex.candidateBudget(20))
     def recC(ord: Int, t: String): String =
       s"""SELECT x.doc_id, $ord AS ord,
          |       ${bmScoreSql("x.tf", dfText(t), "fnid.fn", "st.avg")} AS s

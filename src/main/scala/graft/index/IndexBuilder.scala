@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.CollectionAccumulator
 
+import graft.SessionMemo
 import graft.core.{BlockCodec, Bm25Weight, FieldNorm, Fnv1a, PostingListData, Tokenizers}
 
 /** Distributed inverted-index build.
@@ -364,6 +365,10 @@ object IndexBuilder {
   def batchCommitted(outDir: String, tag: String): Boolean =
     java.nio.file.Files.exists(batchMarkerPath(outDir, tag))
 
+  /** Whether the data file `name` is one that adoptStaged names for
+    * `prefix` (`<prefix>-<j>.parquet`). */
+  private[index] def adoptedFor(prefix: String, name: String): Boolean = name.startsWith(prefix + "-")
+
   /** Delete the files a previous, uncommitted adoption of `prefix` left
     * in the data dir (idempotent on replay). */
   private def clearAdopted(outDir: String, prefix: String): Unit = {
@@ -371,30 +376,33 @@ object IndexBuilder {
     if (dd.isDirectory) {
       dd.listFiles().filter(_.isDirectory).foreach { kd =>
         Option(kd.listFiles()).getOrElse(Array.empty)
-          .filter(_.getName.startsWith(prefix + "-"))
+          .filter(f => adoptedFor(prefix, f.getName))
           .foreach(_.delete())
       }
     }
   }
 
   /** Move staged parquet files into the live data dir under
-    * deterministic names `<prefix>-<j>.parquet`. Local-FS rename here;
-    * a real cluster deploy uses the same protocol through its
-    * object-store committer. */
-  def adoptStaged(staged: String, outDir: String, prefix: String): Unit = {
+    * deterministic names `<prefix>-<j>.parquet`, and return those names
+    * per row kind. Local-FS rename here; a real cluster deploy uses the
+    * same protocol through its object-store committer. */
+  def adoptStaged(staged: String, outDir: String, prefix: String): Map[String, Seq[String]] = {
     val stagedDir = new java.io.File(staged)
     val kinds = Option(stagedDir.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("kind="))
-    kinds.foreach { kd =>
+    val adopted = kinds.map { kd =>
       val target = java.nio.file.Paths.get(dataDir(outDir), kd.getName)
       java.nio.file.Files.createDirectories(target)
       val parts = kd.listFiles().filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      parts.zipWithIndex.foreach { case (f, j) =>
-        java.nio.file.Files.move(f.toPath, target.resolve(s"$prefix-$j.parquet"),
+      kd.getName.stripPrefix("kind=") -> parts.toSeq.zipWithIndex.map { case (f, j) =>
+        val name = s"$prefix-$j.parquet"
+        java.nio.file.Files.move(f.toPath, target.resolve(name),
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        name
       }
-    }
+    }.toMap
     deleteRecursively(stagedDir)
+    adopted
   }
 
   def deleteRecursively(f: java.io.File): Unit = {
@@ -403,14 +411,17 @@ object IndexBuilder {
   }
 
   /** What a commit hands its write: the staging dir to fill, and `room`,
-    * set while some session's InvertedIndex holds the index's current
-    * generation: the bytes every such holder may still take under its
-    * session's residency cap. writeSegments reports its rows into
-    * `written`; with a room, its fnorm rows and doc keys as well. */
+    * set while some session's InvertedIndex holds segments of the index:
+    * the most bytes any such holder may still take under its session's
+    * residency cap. writeSegments reports its rows into `written`; with a
+    * room, its fnorm rows and doc keys as well. */
   final class Stage private[index] (spark: SparkSession, val dir: String,
                                     private[index] val room: Option[Long]) {
     private[index] lazy val written: CollectionAccumulator[Written] =
       spark.sparkContext.collectionAccumulator[Written]("written rows")
+
+    /** The stat rows the write's tasks reported. */
+    private[index] def writtenStats: Seq[SegStatRow] = written.value.asScala.toSeq.flatMap(_.stats)
 
     /** The segments of `stats` as the open readers hold them, when this
       * stage had a room and no task of the write overflowed it. */
@@ -440,14 +451,17 @@ object IndexBuilder {
     *     so `write` sees the data dir without this batch's rows.
     *  2. `write` fills the Stage it is given and returns the stat rows it
     *     wrote, which it already holds on the driver.
-    *  3. Take what every session's InvertedIndex instances hold of
-    *     `outDir` (a rewritten id must not match its old fieldnorms or
-    *     doc keys), adopt the staged files, write each segment's
-    *     manifest, then the batch marker `{"batch":tag,detail}`.
-    *  4. Hand the write's segments to each session that held exactly the
-    *     generation this commit appends to (InvertedIndex.Holders), when
-    *     the write reported them all within the stage's room; every
-    *     other holder stays empty, and its next reader collects.
+    *  3. Every session's segment holder of `outDir` forgets the segment
+    *     ids this commit manifests and the file names `<tag>-*` (a
+    *     rewritten id must not match its old fieldnorms or doc keys);
+    *     then the staged files are adopted, each segment's manifest
+    *     written, then the batch marker `{"batch":tag,detail}`.
+    *  4. When the write reported its fnorm rows and doc keys within the
+    *     stage's room, every holder adds them with the adopted file names,
+    *     while they fit its session's cap (InvertedIndex.SegmentHolder).
+    *     A holder that held the generation this commit appends to now
+    *     holds the next one; any other holds a key no reader has, and its
+    *     next reader collects.
     * `segments` are manifested with zero rows when the write left them
     * no stat row (a build batch's empty segments). A write that leaves
     * nothing to manifest (an empty live batch) is dropped with its
@@ -460,8 +474,9 @@ object IndexBuilder {
     new java.io.File(manifestDir(outDir)).mkdirs()
     if (batchCommitted(outDir, tag)) return false
     clearAdopted(outDir, tag)
-    val holders = new InvertedIndex.Holders(spark, outDir)
-    val stage = new Stage(spark, s"${stagingDir(outDir)}/$tag", holders.room)
+    val holders = SessionMemo.everySession[InvertedIndex.SegmentHolder](spark,
+      InvertedIndex.holderDir(outDir), InvertedIndex.HolderName)
+    val stage = new Stage(spark, s"${stagingDir(outDir)}/$tag", holders.flatMap(_.room).maxOption.filter(_ > 0))
     val stats = write(stage)
     val seen = stats.map(_.segment).toSet
     val rows = stats ++ segments.filterNot(seen).map(SegStatRow(_, 0, 0, 0, 0, "0" * 64, 0))
@@ -470,8 +485,8 @@ object IndexBuilder {
       return false
     }
     val handed = stage.handed(outDir, stats)
-    holders.take()
-    adoptStaged(stage.dir, outDir, tag)
+    holders.foreach(_.forget(rows.map(_.segment).toSet, tag))
+    val adopted = adoptStaged(stage.dir, outDir, tag)
     rows.foreach { s =>
       val field = lineage(s.segment)
       val extra = if (field.isEmpty) "" else "," + field
@@ -482,7 +497,7 @@ object IndexBuilder {
           s""""sha256Agg":"${s.sha256Agg}","buildMs":${s.buildMs}$extra}""")
     }
     java.nio.file.Files.writeString(batchMarkerPath(outDir, tag), s"""{"batch":"$tag",$detail}""")
-    handed.foreach(holders.extend(tag, _))
+    for (w <- handed; h <- holders) h.addHanded(w, adopted)
     true
   }
 
@@ -605,16 +620,18 @@ object IndexBuilder {
       .mapPartitions(it => new Reporting(new SegmentEmitter(it, taskCfg), share, written))
       .write.mode(SaveMode.Overwrite).partitionBy("kind")
       .parquet(stage.dir)
-    written.value.asScala.toSeq.flatMap(_.stats)
+    stage.writtenStats
   }
 
   /** Passes one write task's rows through and reports them once, after
     * the last (the write's result stage, where Spark applies a task's
     * accumulator update once per partition): the stat rows, and with a
     * `share`, the fnorm rows and doc keys, charged as the key collect
-    * charges them (InvertedIndex.keyBytes), until they pass it. */
-  private final class Reporting(rows: Iterator[BuildRow], share: Option[Long],
-                                written: CollectionAccumulator[Written]) extends Iterator[BuildRow] {
+    * charges them (InvertedIndex.keyBytes), until they pass it. The
+    * build, the live append and the merge (with no share) all report
+    * through it. */
+  private[index] final class Reporting(rows: Iterator[BuildRow], share: Option[Long],
+                                       written: CollectionAccumulator[Written]) extends Iterator[BuildRow] {
     private val stats = Seq.newBuilder[SegStatRow]
     private val fnorms = Seq.newBuilder[FnormRow]
     private val keys = Seq.newBuilder[DocKeyRow]

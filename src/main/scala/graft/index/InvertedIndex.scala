@@ -47,13 +47,13 @@ import graft.core._
   * reader costs a file listing and never a schema-inference job. The
   * first calls on a fresh instance add one job each for what they
   * collect once: the stat rows (`stats`) and, when resident, the
-  * fieldnorms and the doc keys, unless an earlier instance in this
-  * session holds them for the same stat rows and files: a reopen of an
-  * unchanged dir so collects only its stat rows, and one after an append
-  * only its stat rows when this session held the generation it appends
-  * to (the append's commit hands the holder its new segments; see
-  * InvertedIndex.Holders). The residency gate is free unless numDocs x 3
-  * fnorm fields exceeds the cap.
+  * fieldnorms and the doc keys, unless this session's segment holder
+  * holds them under the same stat rows and file names
+  * (InvertedIndex.SegmentHolder). A reopen of an unchanged dir so
+  * collects only its stat rows, and so does one after a commit made in
+  * this JVM, which forgets the ids it rewrites in every session's holder
+  * and adds the segments it wrote. The residency gate is free unless
+  * numDocs x 3 fnorm fields exceeds the cap.
   *
   * Collection statistics (N, total tokens -> avg fieldnorm) are summed
   * on the driver from the per-segment stat rows; per-term df is summed
@@ -91,10 +91,15 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
   // took 70-150 ms per table on a 28-segment live index, local[4]), but
   // opening a reader still lists the files and resolves its plan
   // (10-30 ms there), and a single search touches the
-  // posting/fnorm/doc tables several times. The
-  // instance already snapshots the directory via its lazy
-  // stats/fieldnorm caches (consumers build a fresh InvertedIndex after
-  // an append), so caching the readers adds no new staleness class.
+  // posting/fnorm/doc tables several times. Consumers build a fresh
+  // InvertedIndex after an append. One window stays open: the stat rows
+  // are collected on the first `stats`, while each reader lists its
+  // files on its own first use, so an instance whose stats predate an
+  // append and whose posting reader does not scores the new segments'
+  // rows under the old collection size (Bm25.idf's docCount >= docFreq
+  // `require` then fails the query). Opening all four readers at `stats`
+  // would add their listings to every reopen; the integrity check at
+  // open (ROADMAP direction 3, step 1) is where the snapshot gets fixed.
   @transient private lazy val dataFrames: ConcurrentHashMap[String, DataFrame] =
     origin.fold(new ConcurrentHashMap[String, DataFrame]())(_.dataFrames)
 
@@ -162,21 +167,22 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
     if (fnormsResident) Some(spark.sparkContext.broadcast(residentFnormsLocal)) else None
 
   /** This dir's segment holder in this session: what an earlier instance
-    * collected (see InvertedIndex.SegmentHolder). */
+    * collected, or a commit handed over (see InvertedIndex.SegmentHolder). */
   @transient private lazy val held: InvertedIndex.SegmentHolder = InvertedIndex.holder(spark, dir)
 
-  /** What a held collect of the `kind` table is valid for: the stat rows
-    * and the table's files. A file added or removed outside a commit
-    * (a damaged dir) so never matches, and the collect that follows
-    * checks it again. */
+  /** What a held collect of the `kind` table is valid for: the stat rows,
+    * id for id, and the names of the table's files. A file added or
+    * removed outside a commit (a damaged dir) so never matches, and the
+    * collect that follows checks it again. */
   private def heldKey(kind: String): InvertedIndex.HeldKey =
-    (segStatRows.toSet, data(kind).inputFiles.toSet)
+    (segStatRows.map(s => s.segment -> s).toMap,
+      data(kind).inputFiles.iterator.map(f => new org.apache.hadoop.fs.Path(f).getName).toSet)
 
   /** All fieldnorm arrays, held locally once per instance and its
     * resident views: the broadcast above and the resident executor share
-    * them. An earlier instance's arrays in this session are reused (no
-    * job) when the stat rows and the fnorm files are the same; otherwise
-    * they are collected and replace the held ones. */
+    * them. The arrays this session holds are reused (no job) when the
+    * stat rows and the fnorm files are the same; otherwise they are
+    * collected and replace the held ones. */
   @transient lazy val residentFnormsLocal: Map[Int, Map[Int, Array[Byte]]] =
     origin.fold {
       val key = heldKey("fnorm")
@@ -184,7 +190,7 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
         val fn = fnorms.collect().groupBy(_.segment).map { case (seg, chunks) =>
           seg -> InvertedIndex.assembleFnorms(chunks)
         }
-        held.fnorms.publish(key, fn)
+        held.fnorms.publish(key, Some(fn))
         fn
       }
     }(_.residentFnormsLocal)
@@ -193,44 +199,40 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
     * views, the way the reference reads a hit's keys from memory-mapped
     * column fields: per segment, repo, path, sortKey, commit and simhash
     * columns indexed by docId, filled by one projected doc-table collect
-    * on the first `docsOf`, or reused with no job from an earlier
-    * instance in this session when the stat rows and the doc files are
-    * the same. They are resident only when the fieldnorms are, and only
-    * while both fit the residency cap together. The cap holds during the
-    * collect too: each scan task returns an overflow marker instead of
-    * rows once its rows pass its share of the room the fieldnorms leave,
-    * and one marker leaves the keys out (None: `docsOf` scans). An index
-    * too large even at the smallest key size pays no job to find that
-    * out, nor does one whose held keys exceed the room. */
+    * on the first `docsOf`, or reused with no job from this session's
+    * holder when the stat rows and the doc files are the same. They are
+    * resident only when the fieldnorms are, and only while both fit the
+    * residency cap together. The cap holds during the collect too: each
+    * scan task returns an overflow marker instead of rows once its rows
+    * pass its share of the room the fieldnorms leave, and one marker
+    * leaves the keys out (None: `docsOf` scans) and the holder without
+    * keys. An index too large even at the smallest key size pays no job
+    * to find that out, nor does one whose held keys exceed the room. */
   @transient private lazy val residentDocKeys: Option[Map[Int, InvertedIndex.DocKeyColumns]] =
     origin.fold {
       if (!fnormsResident) None
       else {
-        val room = maxResidentFnormBytes -
-          residentFnormsLocal.valuesIterator.flatMap(_.valuesIterator).map(_.length.toLong).sum
+        val room = maxResidentFnormBytes - InvertedIndex.fnormBytes(residentFnormsLocal)
         val key = heldKey("doc")
         held.keys.get(key).fold {
-          if (stats.numDocs * InvertedIndex.MinKeyBytes > room) None else {
+          val cols = if (stats.numDocs * InvertedIndex.MinKeyBytes > room) None else {
             val scan = docKeys.rdd
             val share = room / math.max(1, scan.getNumPartitions)
             val parts = scan.mapPartitions(rows => Iterator.single(InvertedIndex.keysWithin(rows, share)))
               .collect()
             if (parts.contains(None)) None
-            else {
-              val cols = InvertedIndex.keyColumns(parts.flatMap(_.get), segStatRows, dir)
-              held.keys.publish(key, cols)
-              Some(cols)
-            }
+            else Some(InvertedIndex.keyColumns(parts.flatMap(_.get), segStatRows, dir))
           }
-        }(cols => Some(cols).filter(_.valuesIterator.map(_.bytes).sum <= room))
+          held.keys.publish(key, cols)
+          cols
+        }(cols => Some(cols).filter(InvertedIndex.columnBytes(_) <= room))
       }
     }(_.residentDocKeys)
 
   /** Bytes the resident doc keys hold (charged as `keyBytes` counts
     * them), 0 when they are not resident. Collects them if no lookup
     * has yet. */
-  private[graft] def residentKeyBytes: Long =
-    residentDocKeys.fold(0L)(_.valuesIterator.map(_.bytes).sum)
+  private[graft] def residentKeyBytes: Long = residentDocKeys.fold(0L)(InvertedIndex.columnBytes)
 
   /** The doc table's key projection. */
   private def docKeys: Dataset[DocKeyRow] =
@@ -408,9 +410,9 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
 
   /** The doc keys of (segment, docId) pairs. The resident keys answer
     * with no job; without them, one doc-table scan with `segment IN` and
-    * `docId IN` (≤ tieSlack values) pushed to parquet, so row-group
-    * min/max stats skip non-hit doc ranges. A pair with no doc row
-    * fails, naming it. */
+    * `docId IN` (≤ candidateBudget(k) values) pushed to parquet, so
+    * row-group min/max stats skip non-hit doc ranges. A pair with no doc
+    * row fails, naming it. */
   private[graft] def docsOf(keys: Iterable[(Int, Int)]): Map[(Int, Int), DocKeyRow] = {
     val wanted = keys.toSet
     val found = residentDocKeys match {
@@ -1473,69 +1475,98 @@ object InvertedIndex {
   }
 
   /** SessionMemo name of a dir's segment holder. */
-  private val HolderName = "residentSegments"
+  private[index] val HolderName = "residentSegments"
 
-  /** What a held collect is valid for: the stat rows and the file names
-    * of the table it read. */
-  private type HeldKey = (Set[SegStatRow], Set[String])
+  /** What a held collect is valid for: the stat rows by segment id and
+    * the names of the files of the table it read. */
+  private[index] type HeldKey = (Map[Int, SegStatRow], Set[String])
 
   private type Fnorms = Map[Int, Map[Int, Array[Byte]]]
   private type Keys = Map[Int, DocKeyColumns]
 
-  /** One collect's value and the key it is valid for, behind a
-    * SoftReference: memory pressure may take it, and the next instance
-    * then collects as a first one does. */
-  private final class Held[V] {
-    private var gen = new SoftReference[(HeldKey, V)](null)
+  private def fnormBytes(fn: Fnorms): Long =
+    fn.valuesIterator.flatMap(_.valuesIterator).map(_.length.toLong).sum
 
-    def get(key: HeldKey): Option[V] = synchronized(Option(gen.get).collect { case (k, v) if k == key => v })
+  private def columnBytes(keys: Keys): Long = keys.valuesIterator.map(_.bytes).sum
 
-    def publish(key: HeldKey, v: V): Unit = synchronized { gen = new SoftReference((key, v)) }
+  /** One table's resident values by segment and the key they are valid
+    * for, behind a SoftReference: memory pressure may take them, and the
+    * next instance then collects as a first one does. */
+  private[index] final class Held[V] {
+    private var gen = new SoftReference[(HeldKey, Map[Int, V])](null)
 
-    /** The held key and value, if any. */
-    def peek: Option[(HeldKey, V)] = synchronized(Option(gen.get))
+    def get(key: HeldKey): Option[Map[Int, V]] =
+      synchronized(Option(gen.get).collect { case (k, v) if k == key => v })
 
-    /** The held key and value, leaving nothing held. */
-    def take(): Option[(HeldKey, V)] = synchronized {
-      val e = Option(gen.get)
-      gen = new SoftReference(null)
-      e
+    /** A collect's values replace the held ones; None leaves nothing held. */
+    def publish(key: HeldKey, v: Option[Map[Int, V]]): Unit =
+      synchronized { gen = new SoftReference(v.map(key -> _).orNull) }
+
+    def values: Option[Map[Int, V]] = synchronized(Option(gen.get).map(_._2))
+
+    /** Replaces the held key and values, if any, by `f` of them. */
+    def update(f: (HeldKey, Map[Int, V]) => (HeldKey, Map[Int, V])): Unit = synchronized {
+      Option(gen.get).foreach { case (k, v) => gen = new SoftReference(f(k, v)) }
     }
 
-    /** Publishes unless something was published since the last take. */
-    def offer(key: HeldKey, v: V): Unit = synchronized { if (gen.get == null) publish(key, v) }
-
     /** The segment ids of the held key's stat rows. */
-    def segments: Set[Int] = synchronized(Option(gen.get).fold(Set.empty[Int])(_._1._1.map(_.segment)))
+    def segments: Set[Int] = synchronized(Option(gen.get).fold(Set.empty[Int])(_._1._1.keySet))
   }
 
   /** One dir's resident state in one session, kept across instances so
-    * a reopen collects nothing but its stat rows: the latest fieldnorm
-    * arrays and doc-key columns. A committed segment id is immutable, so
-    * equal stat rows and file names mean equal rows. IndexBuilder.commit
-    * empties the holder before it adopts, so a rewrite never matches an
-    * old entry, even under equal stat rows and file names, and after its
-    * marker extends what held exactly the generation it appended to
-    * (Holders). */
-  private final class SegmentHolder {
-    val fnorms = new Held[Fnorms]
-    val keys = new Held[Keys]
+    * a reopen collects nothing but its stat rows: fieldnorm arrays and
+    * doc-key columns by segment, each held under the stat rows and the
+    * table's file names it is valid for. A committed segment id is
+    * immutable, so equal stat rows and file names mean equal rows. A
+    * reader takes what is held only under its own key, and otherwise
+    * collects and replaces it. IndexBuilder.commit, the one committer,
+    * keeps the key true to the dir: before it adopts it forgets the ids
+    * it rewrites and its tag's file names, so a rewrite never matches an
+    * old entry, and after its marker it adds the segments its write
+    * handed over, with the names the adoption gave them. A holder that
+    * held the dir's generation then holds the next one; any other (a
+    * stale or overflowed one, or one a merge handed nothing) keeps a key
+    * no reader has, so the next reader collects. */
+  private[index] final class SegmentHolder(session: SparkSession) {
+    val fnorms = new Held[Map[Int, Array[Byte]]]
+    val keys = new Held[DocKeyColumns]
+
+    /** The bytes its session's cap leaves beside what it holds. */
+    private def left: Long =
+      residentCap(session) - fnorms.values.fold(0L)(fnormBytes) - keys.values.fold(0L)(columnBytes)
+
+    /** The bytes this holder may still take; None while it holds nothing. */
+    def room: Option[Long] = if (fnorms.values.isEmpty && keys.values.isEmpty) None else Some(left)
+
+    /** Before a commit of `tag` adopts: forgets the segment ids it
+      * manifests and the file names it adopts under (`<tag>-*`). */
+    def forget(ids: Set[Int], tag: String): Unit = {
+      def in[V](h: Held[V]): Unit = h.update { case ((stats, files), v) =>
+        ((stats -- ids, files.filterNot(IndexBuilder.adoptedFor(tag, _))), v -- ids)
+      }
+      in(fnorms)
+      in(keys)
+    }
+
+    /** After a commit's marker: adds the segments its write handed over
+      * and the file names `adopted` (per kind) to each held table, while
+      * they fit what the session's cap leaves. */
+    def addHanded(w: Handed, adopted: Map[String, Seq[String]]): Unit = {
+      def add[V](h: Held[V], kind: String, v: Map[Int, V], size: Long): Unit =
+        if (size <= left) h.update { case ((stats, files), held) =>
+          ((stats ++ w.stats.map(s => s.segment -> s), files ++ adopted.getOrElse(kind, Nil)), held ++ v)
+        }
+      add(fnorms, "fnorm", w.fnorms, fnormBytes(w.fnorms))
+      add(keys, "doc", w.keys, columnBytes(w.keys))
+    }
   }
 
   /** A local dir's one name, however a caller spells it. */
-  private def holderDir(dir: String): String =
+  private[index] def holderDir(dir: String): String =
     java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString
 
   private def holder(spark: SparkSession, dir: String): SegmentHolder =
-    SessionMemo(spark, holderDir(dir), HolderName)(new SegmentHolder)
-
-  /** The names of the files of `dir`'s `kind` table, as its reader lists
-    * them. */
-  private def tableFiles(dir: String, kind: String): Set[String] =
-    Option(new java.io.File(s"${IndexBuilder.dataDir(dir)}/kind=$kind").list()).fold(Set.empty[String])(
-      _.iterator.filter(n => n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")).toSet)
-
-  private def fileName(path: String): String = path.substring(path.lastIndexOf('/') + 1)
+    SessionMemo(spark, holderDir(dir), HolderName)(new SegmentHolder(spark))
 
   /** The fieldnorms and doc keys of a write's segments, assembled from
     * the rows its tasks reported as a collect assembles them, with the
@@ -1547,68 +1578,6 @@ object InvertedIndex {
       seg -> assembleFnorms(chunks)
     }
     val keys: Keys = keyColumns(keyRows.toArray, stats, dir)
-  }
-
-  /** What the sessions hold of `dir` when a commit into it starts: the
-    * entries that hold its current generation, whose files are the
-    * table's files now. An entry of an older generation lists fewer: one
-    * left stale by a write from another process, or filled by a reader
-    * whose table readers predate the last commit. */
-  private[index] final class Holders(spark: SparkSession, dir: String) {
-    private val all = SessionMemo.everySession[SegmentHolder](spark, holderDir(dir), HolderName)
-    private val listed = Seq("fnorm", "doc").map(k => k -> tableFiles(dir, k)).toMap
-
-    private def current[V](e: Option[(HeldKey, V)], kind: String): Option[(HeldKey, V)] =
-      e.filter { case ((_, files), _) => files.nonEmpty && files.map(fileName) == listed(kind) }
-
-    /** Per session that holds the current generation, its holder and
-      * current entries, and the bytes its cap leaves beside them. */
-    private val holding = all.flatMap { case (s, h) =>
-      val (fn, ks) = (current(h.fnorms.peek, "fnorm"), current(h.keys.peek, "doc"))
-      val bytes = fn.fold(0L)(_._2.valuesIterator.flatMap(_.valuesIterator).map(_.length.toLong).sum) +
-        ks.fold(0L)(_._2.valuesIterator.map(_.bytes).sum)
-      if (fn.isEmpty && ks.isEmpty) None else Some((h, fn, ks, residentCap(s) - bytes))
-    }
-
-    /** The bytes every session that holds the current generation may
-      * still take; None when none holds it, or one has no room left. */
-    val room: Option[Long] = holding.map(_._4).minOption.filter(_ > 0)
-
-    /** The holders of the current generation that still held the same
-      * entries when `take` emptied them. */
-    private var kept = Seq.empty[(SegmentHolder, Option[(HeldKey, Fnorms)], Option[(HeldKey, Keys)])]
-
-    /** Empties every session's holder of `dir`; the commit calls this
-      * before it adopts. */
-    def take(): Unit = {
-      val taken = all.map { case (_, h) => h -> ((h.fnorms.take(), h.keys.take())) }
-      kept = holding.collect { case (h, fn, ks, _) if taken.exists { case (t, (tf, tk)) =>
-          (t eq h) && fn.forall(e => tf.exists(_ eq e)) && ks.forall(e => tk.exists(_ eq e))
-        } => (h, fn, ks)
-      }
-    }
-
-    /** After the marker of `tag`: each holder `take` kept holds the new
-      * generation, its entries extended by the write's segments, when
-      * the commit added only `tag`'s files (`<tag>-<j>.parquet`) and none
-      * of the held segment ids. A holder a reader filled since the take
-      * keeps what the reader put there. */
-    def extend(tag: String, w: Handed): Unit = {
-      val own = s"${java.util.regex.Pattern.quote(tag)}-\\d+\\.parquet"
-      val added = listed.map { case (k, before) => k -> (tableFiles(dir, k) -- before) }
-      val ids = w.stats.map(_.segment).toSet
-      def next[V](e: Option[(HeldKey, V)], kind: String, more: V => V)(put: (HeldKey, V) => Unit): Unit =
-        e.foreach { case ((stats, files), v) =>
-          if (added(kind).forall(_.matches(own)) && !stats.exists(s => ids(s.segment))) {
-            val parent = files.head.substring(0, files.head.lastIndexOf('/') + 1)
-            put((stats ++ w.stats, files ++ added(kind).map(parent + _)), more(v))
-          }
-        }
-      kept.foreach { case (h, fn, ks) =>
-        next(fn, "fnorm", (v: Fnorms) => v ++ w.fnorms)(h.fnorms.offer)
-        next(ks, "doc", (v: Keys) => v ++ w.keys)(h.keys.offer)
-      }
-    }
   }
 
   /** The segment ids this session holds for `dir`: (fieldnorms, doc
@@ -1694,6 +1663,7 @@ object InvertedIndex {
     * each segment a heap of this size and the driver merge cuts the
     * union back to it, so per-segment work and the rows shipped per
     * segment stay O(k) as the corpus (and its segment count) grows
-    * 100x. The slack floor matches the driver faces' tieSlack shape. */
+    * 100x. The driver faces fetch the same budget for their tie-stable
+    * cut (SparkEntry.canonicalTopK). */
   def candidateBudget(k: Int): Int = k + math.max(80, 4 * k)
 }

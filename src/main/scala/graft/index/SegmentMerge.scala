@@ -1,10 +1,7 @@
 package graft.index
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.util.CollectionAccumulator
 
 import graft.core.{Fnv1a, PostingListData}
 
@@ -48,9 +45,11 @@ import graft.core.{Fnv1a, PostingListData}
   * write. The merge commits through IndexBuilder.commit like a build
   * batch. Its driver-side table of merged segments (one SegStatRow
   * each: summed docs, tokens and posting counts, XOR-ed sha256) feeds
-  * the emitter. The stat rows the write emits come back through an
-  * accumulator and become the manifests, so the commit reads nothing
-  * back and starts no job.
+  * the emitter. The stat rows the write emits come back through
+  * IndexBuilder.Reporting, as a build's do, and become the manifests, so
+  * the commit reads nothing back and starts no job. The merge reports no
+  * fnorm rows or doc keys: it hands the open readers nothing, and their
+  * next reopen collects.
   *
   * Task memory per merged segment is `remap` plus the fieldnorm arrays;
   * doc rows stream through. Skew: the shuffled unit is a *compressed
@@ -129,7 +128,7 @@ object SegmentMerge {
       val bMerged = spark.sparkContext.broadcast(merged)
       // the stat rows the write emits are the manifests' rows: reading
       // them back off the staged table would be one more job
-      val written = spark.sparkContext.collectionAccumulator[SegStatRow]("merged stat rows")
+      val written = stage.written
       val taskCfg = cfg.copy(centrality = Map.empty)
 
       // one shuffle per merged segment: doc rows (kindOrder -1) sort first
@@ -151,11 +150,12 @@ object SegmentMerge {
           col("doc.sortKey").desc, col("doc.repo"), col("doc.path"),
           col("doc.commit"), col("oldSeg"), col("shard"))
         .mapPartitions { it =>
-          new MergeEmitter(it, bBase.value, bMerged.value, written, taskCfg)
+          new IndexBuilder.Reporting(
+            new MergeEmitter(it, bBase.value, bMerged.value, taskCfg), None, written)
         }
         .write.mode(SaveMode.Overwrite).partitionBy("kind")
         .parquet(stage.dir) // Overwrite clears a crashed prior staging
-      written.value.asScala.toSeq
+      stage.writtenStats
     }
     // derived data, refreshed after the marker: a committed re-run heals
     // a table lost to a crash between the two
@@ -167,7 +167,6 @@ object SegmentMerge {
   private final class MergeEmitter(it: Iterator[MergeRow],
                                    bases: Map[Int, Int],
                                    merged: Map[Int, SegStatRow],
-                                   written: CollectionAccumulator[SegStatRow],
                                    cfg: IndexBuilder.Config)
       extends Iterator[IndexBuilder.BuildRow] {
     private val buf = it.buffered
@@ -266,11 +265,7 @@ object SegmentMerge {
       // aggregates XOR) so a second-generation merge and the fidelity
       // witness keep working; `++` takes its operand by name, so the
       // stat row is made once the posting rows have drained
-      rows.fnormRows ++ postRows ++ Iterator.single {
-        val stat = rows.statRow(m.numPostings, m.sha256Agg, 0L)
-        written.add(stat.stat.get)
-        stat
-      }
+      rows.fnormRows ++ postRows ++ Iterator.single(rows.statRow(m.numPostings, m.sha256Agg, 0L))
     }
 
     /** k-way merge of the next term's sublists, which arrive ordered by

@@ -40,13 +40,14 @@ object LiveIndex {
     *
     * Two jobs: the shuffle-map stage and the write. The write's tasks
     * report the stat rows they wrote, so commit reads nothing back.
-    * While a session's InvertedIndex holds the dir's current generation
-    * (the reader of the previous append, in any session of the
-    * context), they also report their fnorm rows and doc keys, within
-    * the room that session's residency cap leaves, and commit hands
-    * them to its holder: the next reopen there collects only its stat
-    * rows, the way Lucene's near-real-time reader takes new segments
-    * from the writer instead of reading them back. */
+    * While an InvertedIndex in any session of the context holds segments
+    * of the dir, they also report their fnorm rows and doc keys, within
+    * the most room any such session's residency cap leaves, and commit
+    * adds them to each holder they fit (InvertedIndex.SegmentHolder): a
+    * holder of the previous generation then holds this one, and the next
+    * reopen there collects only its stat rows, the way Lucene's
+    * near-real-time reader takes new segments from the writer instead of
+    * reading them back. */
   def appendBatch(batch: Dataset[SourceDoc], batchId: Long, dir: String,
                   cfg: IndexBuilder.Config = IndexBuilder.Config(),
                   grankRefreshEvery: Int = 8): Unit = {

@@ -350,10 +350,9 @@ class IndexPipelineSpec extends AnyFunSuite {
     assert(new InvertedIndex(spark, d).storedGlobalRanks.nonEmpty)
   }
 
-  test("one committer: no commit step or manifest name outside IndexBuilder.commit (source scan)") {
-    // a call of adoptStaged / commitBatch / batchCommitted or a "seg-
-    // manifest name in code (comments blanked) is a commit step; in
-    // src/main only IndexBuilder.commit takes them
+  /** Each match of `pattern` in src/main/scala with comments blanked, as
+    * (File.def, line): the file's name and the last `def` before it. */
+  private def mainMatches(pattern: scala.util.matching.Regex): Seq[(String, Int)] = {
     def scalaFiles(d: java.io.File): Seq[java.io.File] =
       Option(d.listFiles()).getOrElse(Array.empty).toSeq.flatMap { f =>
         if (f.isDirectory) scalaFiles(f) else Seq(f).filter(_.getName.endsWith(".scala"))
@@ -361,20 +360,39 @@ class IndexPipelineSpec extends AnyFunSuite {
     val files = scalaFiles(new java.io.File("src/main/scala"))
     assert(files.size > 10, "src/main/scala not found")
     val comment = """(?s)/\*.*?\*/|//[^\n]*""".r
-    val step = """(?<!def )\b(?:adoptStaged|commitBatch|batchCommitted)\(|"seg-""".r
-    val hits = files.flatMap { f =>
+    files.flatMap { f =>
       val src = comment.replaceAllIn(
         new String(java.nio.file.Files.readAllBytes(f.toPath), "ISO-8859-1"),
         m => "\n" * m.matched.count(_ == '\n'))
-      step.findAllMatchIn(src).map { m =>
+      pattern.findAllMatchIn(src).map { m =>
         val before = src.substring(0, m.start)
         val owner = """def\s+(\w+)""".r.findAllMatchIn(before).toSeq.lastOption
           .map(_.group(1)).getOrElse("")
         (s"${f.getName.stripSuffix(".scala")}.$owner", before.count(_ == '\n') + 1)
       }.toSeq
     }
+  }
+
+  private def show(hits: Seq[(String, Int)]): String = hits.map { case (o, l) => s"$o (line $l)" }.mkString("; ")
+
+  test("one committer: no commit step or manifest name outside IndexBuilder.commit (source scan)") {
+    // a call of adoptStaged / commitBatch / batchCommitted or a "seg-
+    // manifest name in code (comments blanked) is a commit step; in
+    // src/main only IndexBuilder.commit takes them
+    val hits = mainMatches("""(?<!def )\b(?:adoptStaged|commitBatch|batchCommitted)\(|"seg-""".r)
     assert(hits.nonEmpty, "the scan found not even IndexBuilder.commit")
-    assert(hits.map(_._1).distinct == Seq("IndexBuilder.commit"),
-      hits.map { case (o, l) => s"$o (line $l)" }.mkString("; "))
+    assert(hits.map(_._1).distinct == Seq("IndexBuilder.commit"), show(hits))
+  }
+
+  test("one holder rule: only IndexBuilder.commit forgets, adds to and lists every session's segment holders, and only IndexBuilder makes an accumulator (source scan)") {
+    // the segment holder's forget and addHanded hooks and
+    // SessionMemo.everySession are called by the commit alone
+    val hooks = mainMatches("""(?<!def )\b(?:forget|addHanded|everySession)[\[(]""".r)
+    assert(hooks.map(_._1).distinct == Seq("IndexBuilder.commit"), show(hooks))
+    assert(hooks.size == 3, show(hooks))
+    // a write reports what it wrote through IndexBuilder's Stage and
+    // Reporting; no other accumulator carries rows to the driver
+    val accumulators = mainMatches("""\bcollectionAccumulator\b|\bnew\s+CollectionAccumulator\b""".r)
+    assert(accumulators.nonEmpty && accumulators.forall(_._1.startsWith("IndexBuilder.")), show(accumulators))
   }
 }

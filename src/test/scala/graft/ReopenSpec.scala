@@ -9,13 +9,14 @@ import graft.core.Tokenizers
 import graft.index._
 import graft.streaming.LiveIndex
 
-/** A reopen reuses the fieldnorms and doc keys that an earlier instance
-  * in the same session holds when its stat rows and files are the same,
-  * and collects them otherwise (InvertedIndex's segment holder). An
-  * append's commit hands its segments to every session that held the
-  * generation it appends to, and to no other. Either way, a reopened
-  * instance and a Searcher over it answer bit for bit as a first open
-  * does (an instance in a new session, which holds nothing), the
+/** A reopen reuses the fieldnorms and doc keys that its session's
+  * segment holder holds when its stat rows and files are the same, and
+  * collects them otherwise (InvertedIndex's segment holder). Every
+  * commit forgets the segment ids it rewrites in every session's holder
+  * and adds the segments its write handed over, so a holder of the
+  * generation a commit appends to holds the next one. Either way, a
+  * reopened instance and a Searcher over it answer bit for bit as a first
+  * open does (an instance in a new session, which holds nothing), the
   * residency cap still bounds what it holds, and a rewritten segment id
   * is never matched against the old segment's entries. */
 class ReopenSpec extends AnyFunSuite {
@@ -137,8 +138,6 @@ class ReopenSpec extends AnyFunSuite {
     (dir, s)
   }
 
-  private val nothing = (Set.empty[Int], Set.empty[Int])
-
   /** A reopen in `s` after a commit that handed it nothing: it collects
     * the fieldnorms and doc keys, and equals a first open. */
   private def collectsAgain(tag: String, s: SparkSession, dir: String, i: Long): InvertedIndex = {
@@ -156,7 +155,6 @@ class ReopenSpec extends AnyFunSuite {
     // room for about half of the next batch's rows
     val cap = bytes + bytes / 4
     withCap(s, cap)(LiveIndex.appendBatch(batch(2L), 2L, dir, cfg))
-    assert(InvertedIndex.heldSegments(s, dir) == nothing)
     val reopened = withCap(s, cap)(collectsAgain("overflowed", s, dir, 2 * perBatch + 7))
     assert(fnormBytes(reopened) + reopened.residentKeyBytes <= cap)
     // the keys did not fit beside the fieldnorms: only these are held
@@ -164,7 +162,7 @@ class ReopenSpec extends AnyFunSuite {
     assert(InvertedIndex.heldSegments(s, dir) == ((segments(reopened), Set.empty[Int])))
   }
 
-  test("a holder left stale by a reader of an older generation is not handed the next append") {
+  test("a holder left stale by a reader of an older generation: the reopen after the next append collects and equals a first open") {
     val dir = TestDirs("graftreopenstale")
     LiveIndex.appendBatch(batch(0L), 0L, dir, cfg)
     val s = spark.newSession()
@@ -174,13 +172,29 @@ class ReopenSpec extends AnyFunSuite {
     // appended from a session that never opened the dir: nothing holds
     // the dir yet, so nothing is handed
     LiveIndex.appendBatch(batch(1L, spark.newSession()), 1L, dir, cfg)
-    assert(InvertedIndex.heldSegments(s, dir) == nothing)
-    // the old reader now fills the holder with batch 0 alone
+    // the old reader now fills the holder with batch 0 alone; the next
+    // append adds batch 2 to it, which leaves it holding no generation
+    // of the dir
     warm(old)
     assert(InvertedIndex.heldSegments(s, dir)._2.size == 4)
     LiveIndex.appendBatch(batch(2L), 2L, dir, cfg)
-    assert(InvertedIndex.heldSegments(s, dir) == nothing)
     collectsAgain("stale", s, dir, 2 * perBatch + 7)
+  }
+
+  test("a commit adds its segments to each session only while they fit that session's cap") {
+    val (dir, tight) = held("graftreopentwocaps", Seq(0L, 1L))
+    val roomy = spark.newSession()
+    warm(new InvertedIndex(roomy, dir))
+    val reader = new InvertedIndex(tight, dir)
+    // a cap that leaves `tight` no room beside what it holds
+    val cap = fnormBytes(reader) + reader.residentKeyBytes
+    withCap(tight, cap)(LiveIndex.appendBatch(batch(2L), 2L, dir, cfg))
+    // the write reported its rows within `roomy`'s room, and only `roomy`
+    // took them
+    takesHanded("roomy", roomy, dir, 2 * perBatch + 7)
+    val before = segments(reader)
+    assert(InvertedIndex.heldSegments(tight, dir) == ((before, before)))
+    withCap(tight, cap)(collectsAgain("tight", tight, dir, 2 * perBatch + 7))
   }
 
   test("a committed replay of a batch id hands nothing twice") {
@@ -197,7 +211,18 @@ class ReopenSpec extends AnyFunSuite {
     sameAnswers("replayed", reopened, firstOpen(dir), queries(perBatch + 7))
   }
 
-  test("an append that crashed after adopting and re-ran hands nothing, and each doc key is held once") {
+  /** A reopen in `s` after a commit that handed it its segments: it
+    * collects nothing, holds each doc key once, and equals a first open. */
+  private def takesHanded(tag: String, s: SparkSession, dir: String, i: Long): Unit = {
+    val reopened = new InvertedIndex(s, dir)
+    reopened.stats
+    assert(jobsOf(reopened.residentFnormsLocal) == 0 && jobsOf(reopened.residentKeyBytes) == 0, tag)
+    val first = firstOpen(dir)
+    assert(reopened.residentKeyBytes == first.residentKeyBytes, tag)
+    sameAnswers(tag, reopened, first, queries(i))
+  }
+
+  test("an append that crashed after adopting and re-ran hands its segments over: the reopen collects nothing, and each doc key is held once") {
     val (dir, s) = held("graftreopencrash", Seq(0L))
     LiveIndex.appendBatch(batch(1L), 1L, dir, cfg)
     // the crash: the rows are adopted and manifested, the marker is not;
@@ -206,9 +231,8 @@ class ReopenSpec extends AnyFunSuite {
     warm(new InvertedIndex(s, dir))
     LiveIndex.appendBatch(batch(1L), 1L, dir, cfg)
     assert(IndexBuilder.batchCommitted(dir, "live1"))
-    assert(InvertedIndex.heldSegments(s, dir) == nothing)
-    val reopened = collectsAgain("re-run", s, dir, perBatch + 7)
-    assert(reopened.docsOf(allKeys(reopened)).size == 2 * perBatch)
+    takesHanded("re-run", s, dir, perBatch + 7)
+    assert(new InvertedIndex(s, dir).docsOf(allKeys(firstOpen(dir))).size == 2 * perBatch)
   }
 
   test("a SegmentMerge into a held dir hands it nothing") {
@@ -216,7 +240,6 @@ class ReopenSpec extends AnyFunSuite {
     val other = TestDirs("graftreopenmergein")
     (1L to 2L).foreach(b => LiveIndex.appendBatch(batch(b), b, other, cfg))
     SegmentMerge.merge(spark, other, dir, fanIn = 4, cfg)
-    assert(InvertedIndex.heldSegments(s, dir) == nothing)
     collectsAgain("merged into", s, dir, 2 * perBatch + 7)
   }
 
@@ -273,13 +296,14 @@ class ReopenSpec extends AnyFunSuite {
     assert(tight.fnormsResident && tight.residentKeyBytes == 0 && fnormBytes(tight) <= fn + keys - 1)
 
     // an append under that cap finds no room beside what `s` holds, so
-    // it hands `s` nothing: the keys are collected again and do not fit,
-    // so the collect's tasks return overflow markers
+    // it hands `s` nothing: the reopen collects the fieldnorms, and the
+    // keys do not fit, so the key collect's tasks return overflow markers
     withCap(s, fn + keys - 1)(LiveIndex.appendBatch(batch(2L), 2L, dir, cfg))
-    assert(InvertedIndex.heldSegments(s, dir) == ((Set.empty[Int], Set.empty[Int])))
     val first = firstOpen(dir)
     val (fn2, keys2) = (fnormBytes(first), first.residentKeyBytes)
     val over = withCap(s, fn2 + keys2 - 1)(new InvertedIndex(s, dir))
+    over.stats
+    assert(jobsOf(over.residentFnormsLocal) == 1)
     assert(fnormBytes(over) == fn2)
     assert(jobsOf(over.residentKeyBytes) == 1)
     assert(over.residentKeyBytes == 0)
@@ -307,10 +331,9 @@ class ReopenSpec extends AnyFunSuite {
     val repos = docs.select("repo").distinct().collect().map(_.getString(0)).sorted
     val centrality = repos.zipWithIndex.map { case (r, j) => r -> (j % 7 + 1).toLong }.toMap
     IndexBuilder.build(spark, docs, dir, IndexBuilder.Config(numSegments = 4, centrality = centrality))
-    // the commit cleared the holder before adopting, in every session
-    // that held the dir
-    Seq(spark, other).foreach(s =>
-      assert(InvertedIndex.heldSegments(s, dir) == ((Set.empty[Int], Set.empty[Int]))))
+    // the commit forgot the rewritten ids before adopting, in every
+    // session that held the dir, and then handed both the new segments
+    Seq(spark, other).foreach(s => takesHanded("rebuilt, handed", s, dir, 7))
 
     val reopened = new InvertedIndex(spark, dir)
     val first = firstOpen(dir)
@@ -319,5 +342,74 @@ class ReopenSpec extends AnyFunSuite {
     assert(content(first.segStats.collect().toSeq) == content(oldStats))
     assert(first.docsOf(allKeys(first)) != oldKeys)
     sameAnswers("rebuilt", reopened, first, queries(7))
+  }
+
+  test("property: after random appends in two sessions and from a fresh one, merges and crashed re-runs, a reopen in each session equals a first open; a doc file added outside a commit fails it, naming the segment") {
+    val rnd = new scala.util.Random(73L)
+    (0 until 2).foreach { run =>
+      val dir = TestDirs(s"graftreopenrandom$run")
+      val (a, b) = (spark.newSession(), spark.newSession())
+      def either: SparkSession = if (rnd.nextBoolean()) a else b
+      var batches = 0L
+      def append(in: SparkSession): Long = {
+        val id = batches
+        batches += 1
+        LiveIndex.appendBatch(batch(id, in), id, dir, cfg)
+        id
+      }
+      var merges = 0L
+      val steps: Seq[(String, () => Unit)] = Seq(
+        "append in A" -> (() => append(a)),
+        "append in B" -> (() => append(b)),
+        "append from a fresh session" -> (() => append(spark.newSession())),
+        // another dir's batch, merged into one segment whose id no other
+        // step writes
+        "merge of another dir" -> { () =>
+          val other = TestDirs(s"graftreopenrandomin$run")
+          LiveIndex.appendBatch(batch(1000L + merges), 1000L + merges, other, cfg)
+          merges += 1
+          SegmentMerge.merge(spark, other, dir, fanIn = 4, cfg)
+        },
+        // the rows are adopted and manifested, the marker is not; a reader
+        // may open the crashed dir before the re-run
+        "crash after adopting, then a re-run" -> { () =>
+          val id = append(either)
+          java.nio.file.Files.delete(IndexBuilder.batchMarkerPath(dir, s"live$id"))
+          if (rnd.nextBoolean()) warm(new InvertedIndex(either, dir))
+          LiveIndex.appendBatch(batch(id, either), id, dir, cfg)
+        })
+      def reopens = Seq("A" -> a, "B" -> b).map { case (n, s) => n -> new InvertedIndex(s, dir) }
+      append(a)
+      reopens.foreach { case (_, r) => warm(r) }
+      // every step once per run, in a random order
+      rnd.shuffle(steps).zipWithIndex.foreach { case ((name, step), i) =>
+        step()
+        val first = firstOpen(dir)
+        reopens.foreach { case (n, r) =>
+          val tag = s"run $run, step $i ($name), reopen in $n"
+          // both sessions held the dir before the step: a merge hands
+          // them nothing, every other commit its segments
+          val reads = if (name.startsWith("merge")) 1 else 0
+          r.stats
+          assert(jobsOf(r.residentFnormsLocal) == reads && jobsOf(r.residentKeyBytes) == reads, tag)
+          sameAnswers(tag, r, first, queries(7).take(2))
+        }
+      }
+      // a doc file added outside a commit: a copy of one already there
+      val docDir = new java.io.File(s"${IndexBuilder.dataDir(dir)}/kind=doc")
+      val src = docDir.listFiles().filter(_.getName.endsWith(".parquet")).minBy(_.getName)
+      val copied = TestDirs(s"graftreopenrandomcopy$run")
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(copied, "kind=doc"))
+      java.nio.file.Files.copy(src.toPath, java.nio.file.Paths.get(copied, "kind=doc", "extra-0.parquet"))
+      java.nio.file.Files.copy(src.toPath, docDir.toPath.resolve("extra-0.parquet"))
+      val inCopy = IndexBuilder.readKind(spark, copied, "doc").select("doc.segment").distinct()
+        .collect().map(_.getInt(0)).toSet
+      assert(inCopy.nonEmpty)
+      reopens.foreach { case (n, r) =>
+        val e = intercept[IllegalStateException](r.residentKeyBytes)
+        val named = raw"segment (\d+): docId \d+ has more than one doc row".r.findFirstMatchIn(e.getMessage)
+        assert(named.exists(m => inCopy(m.group(1).toInt)), s"run $run, reopen in $n: ${e.getMessage}")
+      }
+    }
   }
 }
