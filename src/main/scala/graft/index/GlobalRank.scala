@@ -46,7 +46,7 @@ object GlobalRank {
     * the index's segment stats: the one refresh after a build or a merge
     * (a merge renumbers docids, so a table from before it is refused).
     * A committed re-run thus heals a table lost to a crash between the
-    * batch marker and the write, and otherwise writes nothing. */
+    * generation and the write, and otherwise writes nothing. */
   def refresh(spark: SparkSession, indexDir: String, stats: Seq[SegStatRow]): Unit =
     if (stats.exists(_.numDocs > 0) && load(spark, indexDir, stats).isEmpty)
       write(spark, indexDir)
@@ -55,7 +55,7 @@ object GlobalRank {
     * recompute is idempotent). */
   def write(spark: SparkSession, indexDir: String): Unit = {
     import spark.implicits._
-    val docs = IndexBuilder.readKind(spark, IndexBuilder.dataDir(indexDir), "doc")
+    val docs = IndexBuilder.readKind(spark, indexDir, Generation.latest(indexDir), "doc")
       .select("doc.*").as[DocRow]
     val keyed = docs
       .select($"segment", $"docId", $"sortKey", $"repo", $"path", $"commit")

@@ -2,9 +2,12 @@ package graft.index
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import org.apache.spark.util.CollectionAccumulator
 
 import graft.SessionMemo
@@ -38,8 +41,9 @@ import graft.core.{BlockCodec, Bm25Weight, FieldNorm, Fnv1a, PostingListData, To
   *    row, bounding both row size and query-task memory per term.
   *  - checkpoint/resume at segment granularity: segments are built in
   *    batches; each batch commits through `commit` (a manifest JSON per
-  *    segment, then the batch marker); a restarted job skips committed
-  *    batches (north rule: "restarts at segment granularity").
+  *    segment, then the next Generation); a restarted job skips the
+  *    batches the newest generation lists (north rule: "restarts at
+  *    segment granularity").
   */
 object IndexBuilder {
 
@@ -334,36 +338,54 @@ object IndexBuilder {
 
   private lazy val buildRowSchema: StructType = Encoders.product[BuildRow].schema
 
-  /** The table of one row kind under `root` (a data dir, or a staging
-    * dir before adoption): one column, the kind's struct, read with the
-    * schema the writer's BuildRow encoder gave it. */
-  def readKind(spark: SparkSession, root: String, kind: String): DataFrame =
-    readTable(spark, s"$root/kind=$kind", StructType(Seq(buildRowSchema(kind))))
+  /** The schema of one row kind's table: one column, the kind's struct,
+    * as the writer's BuildRow encoder gave it. */
+  def kindSchema(kind: String): StructType = StructType(Seq(buildRowSchema(kind)))
 
-  /** The one reader of index tables. A declared schema leaves Spark
-    * only the file listing; `spark.read.parquet` without one starts a
-    * footer-merge job on every call to infer the schema the writer
-    * already fixed. */
+  /** The `kind` table of generation `gen` of the index at `dir`: the
+    * files `gen` lists, read with the schema their writer declared. */
+  def readKind(spark: SparkSession, dir: String, gen: Generation, kind: String): DataFrame =
+    readTable(spark, gen.fileIndex(dir, kind), kindSchema(kind))
+
+  /** The readers of index tables, both with the schema the writer
+    * declared: `spark.read.parquet` without one starts a footer-merge
+    * job on every call to infer the schema the writer already fixed.
+    * A table read by path still lists its directory. */
   def readTable(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(schema).parquet(path)
 
-  /** Batch commit marker: written last, checked first — the unit of
-    * exactly-once. A batch whose marker exists is fully committed (data
-    * adopted + manifests written); one without is re-staged from
-    * scratch, and `commit` first deletes any partially-adopted files
-    * of the same batch, so replay after a PROCESS crash at any
-    * point (mid-stage, mid-adopt, mid-manifest) converges to exactly
-    * one copy of the batch's rows. Durability caveat: the marker and
-    * the adopted files are not fsynced, so an OS crash / power loss
-    * can leave a durable marker over non-durable data — a filesystem-
-    * level hazard shared with most local-FS commit protocols; on a
-    * real deployment the data dir lives on a durable object store /
-    * HDFS whose rename+close semantics provide the sync. */
-  def batchMarkerPath(outDir: String, tag: String): java.nio.file.Path =
-    java.nio.file.Paths.get(manifestDir(outDir), s"batch-$tag.done")
+  /** A table read from a fixed file list: Spark plans the scan from
+    * `files` and lists nothing, whatever the file count
+    * (`spark.read.parquet(paths: _*)` starts a listing job above 32
+    * paths). */
+  def readTable(spark: SparkSession, files: FileIndex, schema: StructType): DataFrame =
+    spark.baseRelationToDataFrame(HadoopFsRelation(files, new StructType(),
+      nullable(schema).asInstanceOf[StructType], None, new ParquetFileFormat(), Map.empty)(spark))
 
+  /** `t` with every field, array element and map value nullable: the
+    * schema DataFrameReader gives a file table read with `t`. */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
+  /** Whether the newest generation of `outDir` lists batch `tag`: the
+    * unit of exactly-once. A batch it lists is fully committed (data
+    * adopted, manifests written, generation renamed into place); one it
+    * does not is re-staged from scratch, and `commit` first deletes any
+    * files a crashed run of the same batch adopted, so replay after a
+    * PROCESS crash at any point (mid-stage, mid-adopt, mid-manifest,
+    * before the rename) converges to exactly one copy of the batch's
+    * rows. Durability caveat: the generation and the adopted files are
+    * not fsynced, so an OS crash / power loss can leave a durable
+    * generation over non-durable data — a filesystem-level hazard
+    * shared with most local-FS commit protocols; on a real deployment
+    * the data dir lives on a durable object store / HDFS whose
+    * rename+close semantics provide the sync. */
   def batchCommitted(outDir: String, tag: String): Boolean =
-    java.nio.file.Files.exists(batchMarkerPath(outDir, tag))
+    Generation.latest(outDir).committed(tag)
 
   /** Whether the data file `name` is one that adoptStaged names for
     * `prefix` (`<prefix>-<j>.parquet`). */
@@ -383,26 +405,28 @@ object IndexBuilder {
   }
 
   /** Move staged parquet files into the live data dir under
-    * deterministic names `<prefix>-<j>.parquet`, and return those names
-    * per row kind. Local-FS rename here; a real cluster deploy uses the
-    * same protocol through its object-store committer. */
-  def adoptStaged(staged: String, outDir: String, prefix: String): Map[String, Seq[String]] = {
-    val stagedDir = new java.io.File(staged)
-    val kinds = Option(stagedDir.listFiles()).getOrElse(Array.empty)
+    * deterministic names `<prefix>-<j>.parquet`, and return them per row
+    * kind with their byte lengths and, by `segmentsIn`, the segments
+    * whose rows each staged file holds. The staging dir stays: the
+    * commit deletes it once its generation is written. Local-FS rename
+    * here; a real cluster deploy uses the same protocol through its
+    * object-store committer. */
+  def adoptStaged(staged: String, outDir: String, prefix: String,
+                  segmentsIn: String => Seq[Int]): Map[String, Seq[Generation.DataFile]] = {
+    val kinds = Option(new java.io.File(staged).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("kind="))
-    val adopted = kinds.map { kd =>
+    kinds.map { kd =>
       val target = java.nio.file.Paths.get(dataDir(outDir), kd.getName)
       java.nio.file.Files.createDirectories(target)
       val parts = kd.listFiles().filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
       kd.getName.stripPrefix("kind=") -> parts.toSeq.zipWithIndex.map { case (f, j) =>
         val name = s"$prefix-$j.parquet"
+        val bytes = f.length()
         java.nio.file.Files.move(f.toPath, target.resolve(name),
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        name
+        Generation.DataFile(name, bytes, segmentsIn(f.getName))
       }
     }.toMap
-    deleteRecursively(stagedDir)
-    adopted
   }
 
   def deleteRecursively(f: java.io.File): Unit = {
@@ -423,6 +447,15 @@ object IndexBuilder {
     /** The stat rows the write's tasks reported. */
     private[index] def writtenStats: Seq[SegStatRow] = written.value.asScala.toSeq.flatMap(_.stats)
 
+    /** The segments whose rows the staged file `name` holds: those of the
+      * task that wrote it, whose partition id is the file's part number
+      * (`part-<id>-...`). */
+    private[index] def segmentsIn(name: String): Seq[Int] = {
+      val part = """part-(\d+)-""".r.findPrefixMatchOf(name).map(_.group(1).toInt)
+      written.value.asScala.toSeq.filter(w => part.contains(w.partition))
+        .flatMap(_.stats.map(_.segment)).sorted
+    }
+
     /** The segments of `stats` as the open readers hold them, when this
       * stage had a room and no task of the write overflowed it. */
     private[index] def handed(outDir: String, stats: Seq[SegStatRow]): Option[InvertedIndex.Handed] = {
@@ -436,26 +469,34 @@ object IndexBuilder {
   }
 
   /** One task of writeSegments, reported once after its last row: its
-    * stat rows and, when its stage has a room, its fnorm rows and doc
-    * keys, or None (the overflow marker) once they pass the task's share
-    * of the room. */
-  final case class Written(stats: Seq[SegStatRow],
+    * partition id, its stat rows and, when its stage has a room, its
+    * fnorm rows and doc keys, or None (the overflow marker) once they
+    * pass the task's share of the room. */
+  final case class Written(partition: Int, stats: Seq[SegStatRow],
                            resident: Option[(Seq[FnormRow], Seq[DocKeyRow])])
 
   /** The one commit of an index write: a build batch, a live append and
-    * a merge all stage, adopt, manifest and mark through it (the
-    * exactly-once protocol; IndexPipelineSpec's source scan fails on
-    * any other committer in src/main).
-    *  1. Make the manifest dir. A committed `tag` is a no-op; an
-    *     uncommitted one first loses what a crashed run of it adopted,
-    *     so `write` sees the data dir without this batch's rows.
+    * a merge all stage, adopt, manifest and publish a generation through
+    * it (the exactly-once protocol; IndexPipelineSpec's source scan fails
+    * on any other committer in src/main). Commits to one dir run one at
+    * a time in this JVM: each writes the generation after the one it
+    * read, like tantivy's single IndexWriter.
+    *  1. Make the manifest dir and read the newest Generation. A `tag` it
+    *     lists is a no-op (a staging dir a crash left after the
+    *     generation goes); an unlisted one first loses what a crashed run
+    *     of it adopted, so `write` sees the data dir without this batch's
+    *     rows.
     *  2. `write` fills the Stage it is given and returns the stat rows it
     *     wrote, which it already holds on the driver.
     *  3. Every session's segment holder of `outDir` forgets the segment
     *     ids this commit manifests and the file names `<tag>-*` (a
     *     rewritten id must not match its old fieldnorms or doc keys);
     *     then the staged files are adopted, each segment's manifest
-    *     written, then the batch marker `{"batch":tag,detail}`.
+    *     written, and the next generation, which adds this batch's stat
+    *     rows and files, renamed into place: the commit point. All but
+    *     the newest two generations go, and then `staging/<tag>`, which
+    *     until then tells a reader that the unlisted `<tag>-*` files
+    *     beside the generation it opens are in flight (Generation.verify).
     *  4. When the write reported its fnorm rows and doc keys within the
     *     stage's room, every holder adds them with the adopted file names,
     *     while they fit its session's cap (InvertedIndex.SegmentHolder).
@@ -463,43 +504,57 @@ object IndexBuilder {
     *     holds the next one; any other holds a key no reader has, and its
     *     next reader collects.
     * `segments` are manifested with zero rows when the write left them
-    * no stat row (a build batch's empty segments). A write that leaves
+    * no stat row (a build batch's empty segments); the generation lists
+    * only the written stat rows, the stat table's. A write that leaves
     * nothing to manifest (an empty live batch) is dropped with its
     * staging and commits nothing. A manifest `seg-<id>.json` is its
     * segment's stat row plus `lineage(segment)`: one JSON field, or
-    * nothing. Returns whether this call committed. */
-  def commit(spark: SparkSession, outDir: String, tag: String, detail: String,
+    * nothing; no reader reads it. Returns whether this call committed. */
+  def commit(spark: SparkSession, outDir: String, tag: String,
              segments: Seq[Int] = Nil, lineage: Int => String = _ => "")
-            (write: Stage => Seq[SegStatRow]): Boolean = {
-    new java.io.File(manifestDir(outDir)).mkdirs()
-    if (batchCommitted(outDir, tag)) return false
-    clearAdopted(outDir, tag)
-    val holders = SessionMemo.everySession[InvertedIndex.SegmentHolder](spark,
-      InvertedIndex.holderDir(outDir), InvertedIndex.HolderName)
-    val stage = new Stage(spark, s"${stagingDir(outDir)}/$tag", holders.flatMap(_.room).maxOption.filter(_ > 0))
-    val stats = write(stage)
-    val seen = stats.map(_.segment).toSet
-    val rows = stats ++ segments.filterNot(seen).map(SegStatRow(_, 0, 0, 0, 0, "0" * 64, 0))
-    if (rows.isEmpty) {
-      deleteRecursively(new java.io.File(stage.dir))
-      return false
+            (write: Stage => Seq[SegStatRow]): Boolean =
+    commitLocks.computeIfAbsent(InvertedIndex.holderDir(outDir), _ => new Object).synchronized {
+      new java.io.File(manifestDir(outDir)).mkdirs()
+      val staging = new java.io.File(s"${stagingDir(outDir)}/$tag")
+      val prev = Generation.latest(outDir)
+      if (prev.committed(tag)) {
+        deleteRecursively(staging)
+        return false
+      }
+      clearAdopted(outDir, tag)
+      val holders = SessionMemo.everySession[InvertedIndex.SegmentHolder](spark,
+        InvertedIndex.holderDir(outDir), InvertedIndex.HolderName)
+      val stage = new Stage(spark, staging.getPath, holders.flatMap(_.room).maxOption.filter(_ > 0))
+      val stats = write(stage)
+      val seen = stats.map(_.segment).toSet
+      val rows = stats ++ segments.filterNot(seen).map(SegStatRow(_, 0, 0, 0, 0, "0" * 64, 0))
+      if (rows.isEmpty) {
+        deleteRecursively(staging)
+        return false
+      }
+      val handed = stage.handed(outDir, stats)
+      holders.foreach(_.forget(rows.map(_.segment).toSet, tag))
+      val adopted = adoptStaged(stage.dir, outDir, tag, stage.segmentsIn)
+      val manifests = java.nio.file.Paths.get(manifestDir(outDir))
+      rows.foreach { s =>
+        val field = lineage(s.segment)
+        val extra = if (field.isEmpty) "" else "," + field
+        java.nio.file.Files.writeString(manifests.resolve(f"seg-${s.segment}%05d.json"),
+          s"""{"segment":${s.segment},"numDocs":${s.numDocs},"numTokens":${s.numTokens},""" +
+            s""""numTerms":${s.numTerms},"numPostings":${s.numPostings},""" +
+            s""""sha256Agg":"${s.sha256Agg}","buildMs":${s.buildMs}$extra}""")
+      }
+      val next = prev.next(tag, stats, adopted)
+      val tmp = java.nio.file.Files.createTempFile(manifests, "gen", ".tmp")
+      java.nio.file.Files.writeString(tmp, next.json)
+      java.nio.file.Files.move(tmp, Generation.file(outDir, next.number), java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      Generation.numbers(outDir).drop(2).foreach(n => java.nio.file.Files.deleteIfExists(Generation.file(outDir, n)))
+      deleteRecursively(staging)
+      for (w <- handed; h <- holders) h.addHanded(w, adopted.map { case (k, fs) => k -> fs.map(_.name) })
+      true
     }
-    val handed = stage.handed(outDir, stats)
-    holders.foreach(_.forget(rows.map(_.segment).toSet, tag))
-    val adopted = adoptStaged(stage.dir, outDir, tag)
-    rows.foreach { s =>
-      val field = lineage(s.segment)
-      val extra = if (field.isEmpty) "" else "," + field
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(manifestDir(outDir), f"seg-${s.segment}%05d.json"),
-        s"""{"segment":${s.segment},"numDocs":${s.numDocs},"numTokens":${s.numTokens},""" +
-          s""""numTerms":${s.numTerms},"numPostings":${s.numPostings},""" +
-          s""""sha256Agg":"${s.sha256Agg}","buildMs":${s.buildMs}$extra}""")
-    }
-    java.nio.file.Files.writeString(batchMarkerPath(outDir, tag), s"""{"batch":"$tag",$detail}""")
-    for (w <- handed; h <- holders) h.addHanded(w, adopted)
-    true
-  }
+
+  private val commitLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   /** The one tagging of source docs for a segment build (the batch build
     * and the live append): segment `firstSegment + segmentOf(repo, path,
@@ -532,12 +587,15 @@ object IndexBuilder {
   def build(spark: SparkSession, input: Dataset[SourceDoc], outDir: String,
             cfg: Config = Config()): BuildReport = {
     val t0 = System.nanoTime()
+    // a resume starts from whole committed files: a missing or truncated
+    // one fails here, naming its segments and batch
+    Generation.latest(outDir).verify(outDir)
     val S = cfg.numSegments
     val tagged = tag(input, 0, S, cfg.centrality)
 
     // batches are a STABLE grouping of all segments (independent of what
-    // is already done) so the batch commit marker names stay meaningful
-    // across resumes; an uncommitted batch is re-staged wholesale and
+    // is already done) so the batch tags a generation lists stay
+    // meaningful across resumes; an uncommitted batch is re-staged wholesale and
     // commit clears its partial files, so a crash between the data
     // append and the manifest write can never duplicate rows.
     // Each batch re-scans the input and filters to its segments — a
@@ -549,8 +607,7 @@ object IndexBuilder {
     var built = 0
     var skipped = 0
     (0 until S).grouped(cfg.segmentsPerBatch).zipWithIndex.foreach { case (batch, bi) =>
-      val committed = commit(spark, outDir, s"b$bi", s""""segments":${batch.size}""",
-          segments = batch) { stage =>
+      val committed = commit(spark, outDir, s"b$bi", segments = batch) { stage =>
         val batchSet = batch.toSet
         val slice =
           if (batch.size == S) tagged
@@ -571,29 +628,20 @@ object IndexBuilder {
       if (committed) built += batch.size else skipped += batch.size
     }
 
-    val allStats = readStats(spark, dataDir(outDir))
+    // the stat rows of the newest generation, read on the driver: an
+    // empty build commits a generation of zero rows, a valid
+    // BuildReport(0, 0, ...)
+    val allStats = Generation.latest(outDir).stats
     // serving-tier global static-rank ordinal: derived data computed
-    // AFTER the batch markers (a crash here just loses the derived
-    // table; the index itself is already committed, and rankSignals
-    // degrades to its counting pass until a re-run re-derives it)
+    // AFTER the commits (a crash here just loses the derived table; the
+    // index itself is already committed, and rankSignals degrades to its
+    // counting pass until a re-run re-derives it)
     if (cfg.storeGlobalRank) GlobalRank.refresh(spark, outDir, allStats)
-    // skipped counts batch-marker skips only: segment manifests without
-    // a batch marker (a crashed pre-marker run) are REBUILT, so they
-    // must not report as skipped
+    // skipped counts the batches the generation listed only: segment
+    // manifests of a batch it does not list (a run that crashed before
+    // its generation) are REBUILT, so they must not report as skipped
     BuildReport(allStats.map(_.numDocs).sum, allStats.map(_.numTokens).sum,
       built, skipped, (System.nanoTime() - t0) / 1000000)
-  }
-
-  /** The stat rows under `root`, a data dir. A build of no rows leaves
-    * no kind= dirs (partitionBy creates none), so the missing table
-    * reads as zero rows, with no job, instead of an AnalysisException —
-    * an empty build is a valid BuildReport(0, 0, ...), and its batch
-    * markers commit like any other (the resume contract assumes a
-    * stable input across retries). */
-  private[index] def readStats(spark: SparkSession, root: String): Seq[SegStatRow] = {
-    import spark.implicits._
-    if (!new java.io.File(s"$root/kind=stat").exists()) Nil
-    else readKind(spark, root, "stat").select("stat.*").as[SegStatRow].collect().toSeq
   }
 
   /** Shared segment-build stage: shuffle to segments, sort, accumulate,
@@ -642,7 +690,7 @@ object IndexBuilder {
     def hasNext: Boolean = rows.hasNext || {
       if (!reported) {
         reported = true
-        written.add(Written(stats.result(),
+        written.add(Written(TaskContext.getPartitionId(), stats.result(),
           if (within) Some((fnorms.result(), keys.result())) else None))
       }
       false

@@ -42,18 +42,22 @@ import graft.core._
   * executors hand the scorers the same rows, fieldnorms and df, so a
   * caller's answer does not depend on where it ran.
   *
-  * Opening starts no job: every table is read through
-  * IndexBuilder.readKind with the schema its writer declared, so a
-  * reader costs a file listing and never a schema-inference job. The
-  * first calls on a fresh instance add one job each for what they
-  * collect once: the stat rows (`stats`) and, when resident, the
-  * fieldnorms and the doc keys, unless this session's segment holder
-  * holds them under the same stat rows and file names
+  * Opening reads the dir's newest Generation once, on the driver, and
+  * starts no job: the stat rows (`stats`) come from it, and each file
+  * it lists is checked against the file system (a missing, truncated or
+  * unlisted file fails the open, see Generation.verify). The instance
+  * stays pinned to that generation: every table is read through
+  * IndexBuilder.readKind over the generation's fixed file list, with the
+  * schema its writer declared, so a reader lists no directory and
+  * infers no schema, and a commit made after the open changes none of
+  * its answers. When resident, the first calls collect the fieldnorms
+  * and the doc keys in one job each, unless this session's segment
+  * holder holds them under the same stat rows and file names
   * (InvertedIndex.SegmentHolder). A reopen of an unchanged dir so
-  * collects only its stat rows, and so does one after a commit made in
-  * this JVM, which forgets the ids it rewrites in every session's holder
-  * and adds the segments it wrote. The residency gate is free unless
-  * numDocs x 3 fnorm fields exceeds the cap.
+  * starts no job, and so does one after a commit made in this JVM,
+  * which forgets the ids it rewrites in every session's holder and adds
+  * the segments it wrote. The residency gate is free unless numDocs x 3
+  * fnorm fields exceeds the cap.
   *
   * Collection statistics (N, total tokens -> avg fieldnorm) are summed
   * on the driver from the per-segment stat rows; per-term df is summed
@@ -86,26 +90,22 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
   // doc at build time)
   private val queryStem: String => String = Stemmers.forLanguage(queryLang)
 
-  // one DataFrame handle per row kind, made on first use. The declared
-  // schema (IndexBuilder.readKind) starts no Spark job (inferring it
-  // took 70-150 ms per table on a 28-segment live index, local[4]), but
-  // opening a reader still lists the files and resolves its plan
-  // (10-30 ms there), and a single search touches the
-  // posting/fnorm/doc tables several times. Consumers build a fresh
-  // InvertedIndex after an append. One window stays open: the stat rows
-  // are collected on the first `stats`, while each reader lists its
-  // files on its own first use, so an instance whose stats predate an
-  // append and whose posting reader does not scores the new segments'
-  // rows under the old collection size (Bm25.idf's docCount >= docFreq
-  // `require` then fails the query). Opening all four readers at `stats`
-  // would add their listings to every reopen; the integrity check at
-  // open (ROADMAP direction 3, step 1) is where the snapshot gets fixed.
+  /** The generation this instance reads, fixed when it opens (checked
+    * against the files then) and shared with its resident views.
+    * Consumers build a fresh InvertedIndex after an append. */
+  @transient private[index] val generation: Generation =
+    origin.fold(Generation.open(dir))(_.generation)
+
+  // one DataFrame handle per row kind, made on first use over the
+  // generation's files: a reader lists nothing and its declared schema
+  // (IndexBuilder.readKind) starts no Spark job, but resolving its plan
+  // still costs a few ms, and a single search touches the
+  // posting/fnorm/doc tables several times
   @transient private lazy val dataFrames: ConcurrentHashMap[String, DataFrame] =
     origin.fold(new ConcurrentHashMap[String, DataFrame]())(_.dataFrames)
 
   private def data(kind: String): DataFrame =
-    dataFrames.computeIfAbsent(kind, k =>
-      IndexBuilder.readKind(spark, IndexBuilder.dataDir(dir), k))
+    dataFrames.computeIfAbsent(kind, k => IndexBuilder.readKind(spark, dir, generation, k))
 
   def docs: Dataset[DocRow] = data("doc").select("doc.*").as[DocRow]
   def postings: Dataset[PostingRow] = data("posting").select("posting.*").as[PostingRow]
@@ -122,14 +122,12 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
   /** The validated stored ordinal table, if this index has one. */
   def storedGlobalRanks: Option[Dataset[GrankRow]] = grankTable
 
-  /** The per-segment stat rows, collected once for `stats` and
+  /** The per-segment stat rows of the generation, for `stats` and
     * `grankTable`. */
-  @transient private lazy val segStatRows: Seq[SegStatRow] =
-    origin.fold(segStats.collect().toSeq)(_.segStatRows)
+  private[index] def segStatRows: Seq[SegStatRow] = generation.stats
 
-  lazy val stats: CollectionStats = origin.fold(
-    CollectionStats(segStatRows.map(_.numDocs).sum, segStatRows.map(_.numTokens).sum,
-      segStatRows.length))(_.stats)
+  lazy val stats: CollectionStats =
+    CollectionStats(segStatRows.map(_.numDocs).sum, segStatRows.map(_.numTokens).sum, segStatRows.length)
 
   /** Tokenize + dedup (the reference's clause deduplication,
     * plan/node.rs:276-305) + 32-term cap (parser/mod.rs:17). */
@@ -170,13 +168,11 @@ class InvertedIndex private (private val spark: SparkSession, private val dir: S
     * collected, or a commit handed over (see InvertedIndex.SegmentHolder). */
   @transient private lazy val held: InvertedIndex.SegmentHolder = InvertedIndex.holder(spark, dir)
 
-  /** What a held collect of the `kind` table is valid for: the stat rows,
-    * id for id, and the names of the table's files. A file added or
-    * removed outside a commit (a damaged dir) so never matches, and the
-    * collect that follows checks it again. */
+  /** What a held collect of the `kind` table is valid for: the
+    * generation's stat rows, id for id, and the names of the table's
+    * files it lists. */
   private def heldKey(kind: String): InvertedIndex.HeldKey =
-    (segStatRows.map(s => s.segment -> s).toMap,
-      data(kind).inputFiles.iterator.map(f => new org.apache.hadoop.fs.Path(f).getName).toSet)
+    (segStatRows.map(s => s.segment -> s).toMap, generation.filesOf(kind).map(_.name).toSet)
 
   /** All fieldnorm arrays, held locally once per instance and its
     * resident views: the broadcast above and the resident executor share
@@ -1522,7 +1518,7 @@ object InvertedIndex {
     * collects and replaces it. IndexBuilder.commit, the one committer,
     * keeps the key true to the dir: before it adopts it forgets the ids
     * it rewrites and its tag's file names, so a rewrite never matches an
-    * old entry, and after its marker it adds the segments its write
+    * old entry, and after its generation it adds the segments its write
     * handed over, with the names the adoption gave them. A holder that
     * held the dir's generation then holds the next one; any other (a
     * stale or overflowed one, or one a merge handed nothing) keeps a key
@@ -1548,7 +1544,7 @@ object InvertedIndex {
       in(keys)
     }
 
-    /** After a commit's marker: adds the segments its write handed over
+    /** After a commit's generation: adds the segments its write handed over
       * and the file names `adopted` (per kind) to each held table, while
       * they fit what the session's cap leaves. */
     def addHanded(w: Handed, adopted: Map[String, Seq[String]]): Unit = {

@@ -41,15 +41,16 @@ import graft.core.{Fnv1a, PostingListData}
   *    reference recomputes block-max metadata the same way at merge
   *    time), so merged rows equal a fresh build's.
   *
-  * Jobs: three — the input stat collect, the shuffle-map stage and the
-  * write. The merge commits through IndexBuilder.commit like a build
-  * batch. Its driver-side table of merged segments (one SegStatRow
-  * each: summed docs, tokens and posting counts, XOR-ed sha256) feeds
-  * the emitter. The stat rows the write emits come back through
-  * IndexBuilder.Reporting, as a build's do, and become the manifests, so
-  * the commit reads nothing back and starts no job. The merge reports no
-  * fnorm rows or doc keys: it hands the open readers nothing, and their
-  * next reopen collects.
+  * Jobs: two — the shuffle-map stage and the write; the input stat
+  * rows come from its generation. The merge commits through
+  * IndexBuilder.commit like a build batch. Its driver-side table of
+  * merged segments (one SegStatRow each: summed docs, tokens and
+  * posting counts, XOR-ed sha256) feeds the emitter. The stat rows the
+  * write emits come back through IndexBuilder.Reporting, as a build's
+  * do, and become the manifests and the generation's, so the commit
+  * reads nothing back and starts no job. The merge reports no fnorm
+  * rows or doc keys: it hands the open readers nothing, and their next
+  * reopen collects.
   *
   * Task memory per merged segment is `remap` plus the fieldnorm arrays;
   * doc rows stream through. Skew: the shuffled unit is a *compressed
@@ -71,16 +72,16 @@ object SegmentMerge {
     import spark.implicits._
     val in = new InvertedIndex(spark, inDir)
 
-    // bases + merged stats from the stat table (driver-side, tiny);
-    // segFilter drops expired segments (live-index TTL compaction)
-    val stats = in.segStats.collect().filter(s => segFilter(s.segment))
-      .sortBy(_.segment)
+    // bases + merged stats from the input's generation (driver-side,
+    // tiny, no job); segFilter drops expired segments (live-index TTL
+    // compaction)
+    val stats = in.segStatRows.filter(s => segFilter(s.segment)).sortBy(_.segment)
     if (stats.isEmpty) return
     // the tag folds the FULL filtered input set and its sha256 lineage,
     // not just the endpoint segment ids: two merges into the same
     // outDir that share endpoints but differ in membership or content
     // (a TTL filter dropping only middle segments; re-compacting the
-    // same range after new data) must commit under DISTINCT markers —
+    // same range after new data) must commit under DISTINCT tags —
     // an endpoint-only tag silently skipped them as already done
     val lineage = Fnv1a(
       stats.map(s => s"${s.segment}:${s.sha256Agg}").mkString(","))
@@ -105,14 +106,13 @@ object SegmentMerge {
     // a crashed merge re-run re-stages wholesale, a committed one is a
     // no-op — bare Append into the data dir would duplicate every row
     // on retry
-    IndexBuilder.commit(spark, outDir, tag, s""""mergedSegments":${stats.length}""",
-        lineage = ns => s""""mergedFrom":[${grouped(ns).map(_.segment).mkString(",")}]""") {
-        stage =>
+    IndexBuilder.commit(spark, outDir, tag,
+        lineage = ns => s""""mergedFrom":[${grouped(ns).map(_.segment).mkString(",")}]""") { stage =>
       // a merged id the out dir already holds would become a second copy
       // of that segment (a re-run of this same merge never gets here: its
-      // marker makes the commit a no-op, and a crashed run's adopted rows
-      // are gone before the write)
-      val held = IndexBuilder.readStats(spark, IndexBuilder.dataDir(outDir)).map(_.segment)
+      // generation makes the commit a no-op, and a crashed run's adopted
+      // rows are gone before the write)
+      val held = Generation.latest(outDir).stats.map(_.segment)
         .filter(merged.contains).distinct.sorted.mkString(", ")
       require(held.isEmpty,
         s"merge into $outDir refused: it already holds segment(s) $held, which this merge would write")
@@ -157,7 +157,7 @@ object SegmentMerge {
         .parquet(stage.dir) // Overwrite clears a crashed prior staging
       stage.writtenStats
     }
-    // derived data, refreshed after the marker: a committed re-run heals
+    // derived data, refreshed after the commit: a committed re-run heals
     // a table lost to a crash between the two
     if (cfg.storeGlobalRank) GlobalRank.refresh(spark, outDir, merged.values.toSeq)
   }

@@ -29,12 +29,12 @@ object LiveIndex {
     * idempotent on replay: it commits through IndexBuilder.commit
     * (staged write, adoption under deterministic per-batch file names
     * that replaces any partial earlier adoption, manifests, then the
-    * batch marker), so a replay of a committed batch is a no-op and a
+    * next generation), so a replay of a committed batch is a no-op and a
     * crash at any earlier point converges to exactly one copy (the
     * reference's WAL replay gives the same guarantee,
     * live_index/index.rs:109-151). Every non-empty segment writes a
     * stat row, so an empty batch stages none and commit leaves no data
-    * and no marker: emptiness is read off the write, because a probe
+    * and no generation: emptiness is read off the write, because a probe
     * before it would be one more job evaluating the micro-batch a
     * second time.
     *
@@ -54,8 +54,7 @@ object LiveIndex {
     val spark = batch.sparkSession
     val base = LiveBase + (batchId * SegsPerBatch).toInt
     val lineage = s""""batchId":$batchId"""
-    val committed = IndexBuilder.commit(spark, dir, s"live$batchId", lineage,
-        lineage = _ => lineage) { stage =>
+    val committed = IndexBuilder.commit(spark, dir, s"live$batchId", lineage = _ => lineage) { stage =>
       IndexBuilder.writeSegments(IndexBuilder.tag(batch, base, SegsPerBatch, cfg.centrality),
         SegsPerBatch * 2, stage, cfg)
     }

@@ -76,7 +76,7 @@ class IndexPipelineSpec extends AnyFunSuite {
         s"alpha beta doc$i content")) :+
       IndexBuilder.Tagged(1, 1L, "r", "solo", "c", "en", "solo gamma text")
     val out = tmpDir()
-    IndexBuilder.commit(spark, out, "b0", "") { stage =>
+    IndexBuilder.commit(spark, out, "b0") { stage =>
       IndexBuilder.writeSegments(spark.createDataset(rows), 1, stage,
         IndexBuilder.Config(numSegments = 2))
     }
@@ -313,17 +313,17 @@ class IndexPipelineSpec extends AnyFunSuite {
   }
 
   test("multi-batch build resumes at segment granularity after a crash past adoption") {
-    // 5 segments, 2 per batch: b0 = {0, 1}, b1 = {2, 3}, b2 = {4}
-    val cfg = IndexBuilder.Config(numSegments = 5, segmentsPerBatch = 2)
+    // 5 segments, 3 per batch: b0 = {0, 1, 2}, b1 = {3, 4}
+    val cfg = IndexBuilder.Config(numSegments = 5, segmentsPerBatch = 3)
     val d = tmpDir()
     val first = IndexBuilder.build(spark, corpus, d, cfg)
     assert(first.segmentsBuilt == 5 && first.segmentsSkipped == 0)
     // a crash after b1's adoption: its rows are in, its manifests and
-    // marker are not
+    // generation are not
     val manifest = (seg: Int) =>
       java.nio.file.Paths.get(IndexBuilder.manifestDir(d), f"seg-$seg%05d.json")
-    java.nio.file.Files.delete(IndexBuilder.batchMarkerPath(d, "b1"))
-    Seq(2, 3).foreach(seg => java.nio.file.Files.delete(manifest(seg)))
+    Crashes.beforeGeneration(d, "b1")
+    Seq(3, 4).foreach(seg => java.nio.file.Files.delete(manifest(seg)))
     val again = IndexBuilder.build(spark, corpus, d, cfg)
     assert(again.segmentsSkipped == 3 && again.segmentsBuilt == 2)
     assert(again.numDocs == 800)
@@ -336,17 +336,17 @@ class IndexPipelineSpec extends AnyFunSuite {
 
   test("build job counts: fresh single-batch builds, and a committed re-run only reads its stats") {
     // a computed input, so that any extra pass over it shows as a job;
-    // 3 = shuffle-map stage, write and the report's stat read (the write
-    // hands the commit its stat rows)
+    // 2 = shuffle-map stage and write (the write hands the commit its
+    // stat rows, and the report reads them from the generation)
     val input = Corpus.generate(spark, 200, seed = 29L, partitions = 3)
     assert(SparkJobs.count(spark)(
-      IndexBuilder.build(spark, input, tmpDir(), IndexBuilder.Config(numSegments = 4))) == 3)
+      IndexBuilder.build(spark, input, tmpDir(), IndexBuilder.Config(numSegments = 4))) == 2)
     // + 7 for writing the rank table
     val d = tmpDir()
     val cfg = IndexBuilder.Config(numSegments = 4, storeGlobalRank = true)
-    assert(SparkJobs.count(spark)(IndexBuilder.build(spark, input, d, cfg)) == 10)
+    assert(SparkJobs.count(spark)(IndexBuilder.build(spark, input, d, cfg)) == 9)
     // the stored rank table still validates, so the re-run leaves it be
-    assert(SparkJobs.count(spark)(IndexBuilder.build(spark, input, d, cfg)) == 1)
+    assert(SparkJobs.count(spark)(IndexBuilder.build(spark, input, d, cfg)) == 0)
     assert(new InvertedIndex(spark, d).storedGlobalRanks.nonEmpty)
   }
 
@@ -382,6 +382,13 @@ class IndexPipelineSpec extends AnyFunSuite {
     val hits = mainMatches("""(?<!def )\b(?:adoptStaged|commitBatch|batchCommitted)\(|"seg-""".r)
     assert(hits.nonEmpty, "the scan found not even IndexBuilder.commit")
     assert(hits.map(_._1).distinct == Seq("IndexBuilder.commit"), show(hits))
+    // so is a write, move or delete of a generation file: a file call that
+    // names one (Generation.file or a "gen- literal) on the same line
+    val genWrites = mainMatches(
+      """(?:Files\.(?:write\w*|move|copy|delete\w*|new\w*Stream|newBufferedWriter|createFile)|\.delete|renameTo|FileOutputStream|FileWriter)\([^\n]*(?:Generation\.file\(|"gen-)""".r)
+    assert(genWrites.map(_._1) == Seq("IndexBuilder.commit", "IndexBuilder.commit"), show(genWrites))
+    assert(mainMatches(""""gen-""".r).map(_._1).forall(_.startsWith("Generation.")),
+      "a generation file name outside Generation")
   }
 
   test("one holder rule: only IndexBuilder.commit forgets, adds to and lists every session's segment holders, and only IndexBuilder makes an accumulator (source scan)") {

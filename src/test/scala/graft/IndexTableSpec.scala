@@ -78,9 +78,11 @@ class IndexTableSpec extends AnyFunSuite {
 
   test("no reader of an index directory outside IndexBuilder.readTable") {
     // a `.read` ... `.parquet(` / `.load(` chain in code (comments
-    // blanked) is a read. Under index/ and streaming/ the only readers
-    // are readTable and Ingest.sourceDocs, which reads the build's input
-    // table, not an index.
+    // blanked) is a read, and so is a relation made into a DataFrame
+    // (`baseRelationToDataFrame(`). Under index/ and streaming/ the only
+    // readers are readTable (by path, and over a generation's file list)
+    // and Ingest.sourceDocs, which reads the build's input table, not an
+    // index.
     val roots = Seq("src/main/scala/graft/index", "src/main/scala/graft/streaming")
     val files = roots.flatMap { r =>
       val d = new java.io.File(r)
@@ -88,7 +90,7 @@ class IndexTableSpec extends AnyFunSuite {
       d.listFiles().filter(_.getName.endsWith(".scala")).toSeq
     }
     val comment = """(?s)/\*.*?\*/|//[^\n]*""".r
-    val call = """\.(read|write|readStream|writeStream)\b|\.(parquet|load)\(""".r
+    val call = """\.(read|write|readStream|writeStream)\b|\.(parquet|load|baseRelationToDataFrame)\(""".r
     val reads = files.flatMap { f =>
       val src = comment.replaceAllIn(
         new String(java.nio.file.Files.readAllBytes(f.toPath), "ISO-8859-1"),
@@ -96,7 +98,7 @@ class IndexTableSpec extends AnyFunSuite {
       var chain = ""
       call.findAllMatchIn(src).flatMap { m =>
         if (m.group(1) != null) { chain = m.group(1); None }
-        else if (chain == "read") {
+        else if (chain == "read" || m.group(2) == "baseRelationToDataFrame") {
           chain = ""
           val before = src.substring(0, m.start)
           val owner = """def\s+(\w+)""".r.findAllMatchIn(before).toSeq.lastOption
@@ -105,7 +107,7 @@ class IndexTableSpec extends AnyFunSuite {
         } else None
       }.toSeq
     }
-    assert(reads.map(_._1).sorted == Seq("IndexBuilder.readTable", "Ingest.sourceDocs"),
+    assert(reads.map(_._1).sorted == Seq("IndexBuilder.readTable", "IndexBuilder.readTable", "Ingest.sourceDocs"),
       reads.map { case (o, l) => s"$o (line $l)" }.mkString("; "))
   }
 }

@@ -20,12 +20,12 @@ class LiveIndexSpec extends AnyFunSuite {
     val ds = spark.createDataset(docs)
     LiveIndex.appendBatch(ds, 0L, dir)
     assert(new InvertedIndex(spark, dir).stats.numDocs == 50)
-    // full replay (marker present) -> no-op
+    // full replay (the generation lists the batch) -> no-op
     LiveIndex.appendBatch(ds, 0L, dir)
     assert(new InvertedIndex(spark, dir).stats.numDocs == 50)
-    // crash-before-marker replay (data adopted, marker missing) -> the
-    // re-adoption replaces the earlier files instead of duplicating
-    java.nio.file.Files.delete(IndexBuilder.batchMarkerPath(dir, "live0"))
+    // crash-before-generation replay (data adopted, generation missing)
+    // -> the re-adoption replaces the earlier files instead of duplicating
+    Crashes.beforeGeneration(dir, "live0")
     LiveIndex.appendBatch(ds, 0L, dir)
     assert(new InvertedIndex(spark, dir).stats.numDocs == 50)
   }

@@ -60,13 +60,14 @@ class PerSegmentSpec extends AnyFunSuite {
     }
   }
 
-  test("a fresh instance reads its tables with no schema job: stats 1, first searchRaw 2, first resolve 1, Searcher open 2") {
+  test("a fresh instance opens and reads its stats with no job: open 0, stats 0, first searchRaw 2, first resolve 1, Searcher open 1") {
     // a new session holds no earlier instance's segments, so each
     // instance below opens as the first over `dir`
-    Seq(new InvertedIndex(spark.newSession(), dir), capped(spark.newSession())).zip(Seq(true, false))
-        .foreach { case (idx, resident) =>
+    var opened = Seq.empty[InvertedIndex]
+    assert(jobsOf { opened = Seq(new InvertedIndex(spark.newSession(), dir), capped(spark.newSession())) } == 0)
+    opened.zip(Seq(true, false)).foreach { case (idx, resident) =>
       val tag = if (resident) "resident" else "capped at 1 byte"
-      assert(jobsOf(idx.stats) == 1, tag) // the stat-row collect
+      assert(jobsOf(idx.stats) == 0, tag) // read from the generation
       var raw = Array.empty[(Int, Int, Float)]
       // resident: the fieldnorm collect + the query; capped: the exact
       // residency count (numDocs x 3 exceeds the cap) + the query
@@ -76,22 +77,22 @@ class PerSegmentSpec extends AnyFunSuite {
       assert(jobsOf(idx.resolve(raw, 10)) == 1, tag)
     }
     val fresh = new InvertedIndex(spark.newSession(), dir)
-    assert(jobsOf(new Searcher(fresh)) == 2) // stats + the fieldnorm collect
+    assert(jobsOf(new Searcher(fresh)) == 1) // the fieldnorm collect
     // the broadcast reuses the fieldnorms the Searcher collected
     assert(jobsOf(fresh.searchRaw("query engine table", 10)) == 1)
   }
 
-  test("a reopen of an unchanged dir collects only its stat rows: stats 1, first searchRaw 1, first resolve 0, Searcher open 1") {
+  test("a reopen of an unchanged dir starts no job to open: stats 0, first searchRaw 1, first resolve 0, Searcher open 0") {
     val s = spark.newSession()
     val first = new InvertedIndex(s, dir)
     first.resolve(first.searchRaw("query engine table", 10), 10) // fieldnorms and doc keys held
     val idx = new InvertedIndex(s, dir)
-    assert(jobsOf(idx.stats) == 1) // the stat-row collect
+    assert(jobsOf(idx.stats) == 0)
     var raw = Array.empty[(Int, Int, Float)]
     assert(jobsOf { raw = idx.searchRaw("query engine table", 10) } == 1) // the query
     assert(raw.nonEmpty && idx.fnormsResident)
     assert(jobsOf(idx.resolve(raw, 10)) == 0)
-    assert(jobsOf(new Searcher(new InvertedIndex(s, dir))) == 1) // stats
+    assert(jobsOf(new Searcher(new InvertedIndex(s, dir))) == 0)
   }
 
   test("a reopen after an append from another session takes the new segments from the commit: first searchRaw 1, first resolve 0") {
@@ -108,7 +109,7 @@ class PerSegmentSpec extends AnyFunSuite {
     warm(new InvertedIndex(s, live))
     append(2L)
     val idx = new InvertedIndex(s, live)
-    assert(jobsOf(idx.stats) == 1) // the stat-row collect
+    assert(jobsOf(idx.stats) == 0)
     var raw = Array.empty[(Int, Int, Float)]
     assert(jobsOf { raw = idx.searchRaw("query engine table", 10) } == 1) // the query
     assert(raw.nonEmpty && idx.fnormsResident)

@@ -225,9 +225,9 @@ class ReopenSpec extends AnyFunSuite {
   test("an append that crashed after adopting and re-ran hands its segments over: the reopen collects nothing, and each doc key is held once") {
     val (dir, s) = held("graftreopencrash", Seq(0L))
     LiveIndex.appendBatch(batch(1L), 1L, dir, cfg)
-    // the crash: the rows are adopted and manifested, the marker is not;
-    // a reader in `s` then holds them
-    java.nio.file.Files.delete(IndexBuilder.batchMarkerPath(dir, "live1"))
+    // the crash: the rows are adopted and manifested, the generation is
+    // not; a reader in `s` then holds the generation before it
+    Crashes.beforeGeneration(dir, "live1")
     warm(new InvertedIndex(s, dir))
     LiveIndex.appendBatch(batch(1L), 1L, dir, cfg)
     assert(IndexBuilder.batchCommitted(dir, "live1"))
@@ -344,7 +344,7 @@ class ReopenSpec extends AnyFunSuite {
     sameAnswers("rebuilt", reopened, first, queries(7))
   }
 
-  test("property: after random appends in two sessions and from a fresh one, merges and crashed re-runs, a reopen in each session equals a first open; a doc file added outside a commit fails it, naming the segment") {
+  test("property: after random appends in two sessions and from a fresh one, merges and crashed re-runs, a reopen in each session equals a first open; a doc file added outside a commit fails a fresh open, naming the file, and leaves an open instance as it was") {
     val rnd = new scala.util.Random(73L)
     (0 until 2).foreach { run =>
       val dir = TestDirs(s"graftreopenrandom$run")
@@ -370,11 +370,11 @@ class ReopenSpec extends AnyFunSuite {
           merges += 1
           SegmentMerge.merge(spark, other, dir, fanIn = 4, cfg)
         },
-        // the rows are adopted and manifested, the marker is not; a reader
-        // may open the crashed dir before the re-run
+        // the rows are adopted and manifested, the generation is not; a
+        // reader may open the crashed dir before the re-run
         "crash after adopting, then a re-run" -> { () =>
           val id = append(either)
-          java.nio.file.Files.delete(IndexBuilder.batchMarkerPath(dir, s"live$id"))
+          Crashes.beforeGeneration(dir, s"live$id")
           if (rnd.nextBoolean()) warm(new InvertedIndex(either, dir))
           LiveIndex.appendBatch(batch(id, either), id, dir, cfg)
         })
@@ -395,21 +395,21 @@ class ReopenSpec extends AnyFunSuite {
           sameAnswers(tag, r, first, queries(7).take(2))
         }
       }
-      // a doc file added outside a commit: a copy of one already there
+      // a doc file added outside a commit: a copy of one already there.
+      // A fresh open in either session fails, naming it; instances opened
+      // before read their generation's files, and answer as they did
+      val before = firstOpen(dir) +: reopens.map(_._2)
+      before.foreach(warm)
       val docDir = new java.io.File(s"${IndexBuilder.dataDir(dir)}/kind=doc")
       val src = docDir.listFiles().filter(_.getName.endsWith(".parquet")).minBy(_.getName)
-      val copied = TestDirs(s"graftreopenrandomcopy$run")
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(copied, "kind=doc"))
-      java.nio.file.Files.copy(src.toPath, java.nio.file.Paths.get(copied, "kind=doc", "extra-0.parquet"))
       java.nio.file.Files.copy(src.toPath, docDir.toPath.resolve("extra-0.parquet"))
-      val inCopy = IndexBuilder.readKind(spark, copied, "doc").select("doc.segment").distinct()
-        .collect().map(_.getInt(0)).toSet
-      assert(inCopy.nonEmpty)
-      reopens.foreach { case (n, r) =>
-        val e = intercept[IllegalStateException](r.residentKeyBytes)
-        val named = raw"segment (\d+): docId \d+ has more than one doc row".r.findFirstMatchIn(e.getMessage)
-        assert(named.exists(m => inCopy(m.group(1).toInt)), s"run $run, reopen in $n: ${e.getMessage}")
+      Seq("A" -> a, "B" -> b).foreach { case (n, s) =>
+        val e = intercept[IllegalStateException](new InvertedIndex(s, dir))
+        assert(e.getMessage.contains("data file kind=doc/extra-0.parquet is in no committed generation"),
+          s"run $run, fresh open in $n: ${e.getMessage}")
       }
+      before.tail.foreach(r => sameAnswers(s"run $run, opened before the copy", r, before.head, queries(7).take(2)))
+      before.foreach(r => assert(r.docs.count() == r.stats.numDocs, s"run $run: the copy was read"))
     }
   }
 }

@@ -158,8 +158,7 @@ class ResidentKeysSpec extends AnyFunSuite {
 
   /** The segments whose `kind` rows `file` holds. */
   private def segmentsIn(dir: String, file: Path, kind: String = "doc"): Set[Int] = {
-    val schema = IndexBuilder.readKind(spark, IndexBuilder.dataDir(dir), kind).schema
-    IndexBuilder.readTable(spark, file.toString, schema).select(s"$kind.segment").collect()
+    IndexBuilder.readTable(spark, file.toString, IndexBuilder.kindSchema(kind)).select(s"$kind.segment").collect()
       .map(_.getInt(0)).toSet
   }
 
@@ -179,16 +178,22 @@ class ResidentKeysSpec extends AnyFunSuite {
     namesSegment(intercept[IllegalStateException](idx.resolve(raw, 5)), segs, what)
   }
 
+  // Each damage below fails the open against the generation
+  // (GenerationSpec); relisted, as by a generation written over it, the
+  // key collect still catches it
+
   test("a missing, duplicated or truncated doc file fails the key collect, naming the segment") {
     val missing = copyDir(liveDir, "graftkeysmissing")
     val gone = docFiles(missing).head
     val goneSegs = segmentsIn(missing, gone)
     Files.delete(gone)
+    relist(spark, missing)
     failsNaming(missing, goneSegs, "have no doc row")
 
     val duplicated = copyDir(liveDir, "graftkeysdup")
     val twice = docFiles(duplicated).head
     Files.copy(twice, twice.resolveSibling("dup-0.parquet"))
+    relist(spark, duplicated)
     failsNaming(duplicated, segmentsIn(duplicated, twice), "more than one doc row")
 
     // a segment's last doc row dropped: its ids stop short of numDocs
@@ -196,13 +201,14 @@ class ResidentKeysSpec extends AnyFunSuite {
     val stat = new InvertedIndex(spark, truncated).segStats.collect().head
     val data = IndexBuilder.dataDir(truncated)
     val rewritten = s"$truncated/rewritten"
-    IndexBuilder.readKind(spark, data, "doc")
+    IndexBuilder.readTable(spark, s"$data/kind=doc", IndexBuilder.kindSchema("doc"))
       .filter(!(org.apache.spark.sql.functions.col("doc.segment") === stat.segment &&
         org.apache.spark.sql.functions.col("doc.docId") === stat.numDocs.toInt - 1))
       .coalesce(1).write.parquet(rewritten)
     docFiles(truncated).foreach(f => Files.delete(f))
     Files.list(Paths.get(rewritten)).iterator.asScala.filter(_.toString.endsWith(".parquet"))
       .foreach(f => Files.move(f, Paths.get(data, "kind=doc", f.getFileName.toString)))
+    relist(spark, truncated)
     failsNaming(truncated, Set(stat.segment), "1 of its")
   }
 
@@ -214,6 +220,7 @@ class ResidentKeysSpec extends AnyFunSuite {
     val gone = docFiles(orphaned, "stat").last
     val orphans = segmentsIn(orphaned, gone, "stat")
     Files.delete(gone)
+    relist(spark, orphaned)
     namesSegment(intercept[IllegalStateException](new InvertedIndex(spark, orphaned).residentKeyBytes),
       orphans, "doc rows but no stat row")
 
@@ -223,6 +230,7 @@ class ResidentKeysSpec extends AnyFunSuite {
     assert(new InvertedIndex(spark, duplicated).residentKeyBytes > 0)
     val twice = docFiles(duplicated).head
     Files.copy(twice, twice.resolveSibling("dup-0.parquet"))
+    relist(spark, duplicated)
     failsNaming(duplicated, segmentsIn(duplicated, twice), "more than one doc row")
   }
 }
@@ -242,5 +250,22 @@ object ResidentKeysSpec {
 
   def signalBits(hs: Array[(Hit, Map[String, Double])]) = hs.toSeq.map { case (h, v) =>
     (hitBits(Array(h)), v.toSeq.sorted.map { case (n, x) => (n, doubleToRawLongBits(x)) })
+  }
+
+  /** Commits `dir` as its files stand, outside IndexBuilder.commit: the
+    * next generation lists every data file with its length, and the stat
+    * rows the stat files hold, as a reader of the directories saw it. */
+  def relist(spark: SparkSession, dir: String): Unit = {
+    import spark.implicits._
+    val g = Generation.latest(dir)
+    val files = Generation.Kinds.map { k =>
+      k -> Option(new java.io.File(s"${IndexBuilder.dataDir(dir)}/kind=$k").listFiles()).getOrElse(Array.empty)
+        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+        .map(f => Generation.DataFile(f.getName, f.length(), Nil)).toSeq
+    }.toMap
+    val stats = IndexBuilder.readTable(spark, s"${IndexBuilder.dataDir(dir)}/kind=stat",
+      IndexBuilder.kindSchema("stat")).select("stat.*").as[SegStatRow].collect().toSeq
+    Files.writeString(Generation.file(dir, g.number + 1),
+      g.copy(number = g.number + 1, stats = stats, files = files).json)
   }
 }

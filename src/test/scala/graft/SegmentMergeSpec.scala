@@ -96,7 +96,7 @@ class SegmentMergeSpec extends AnyFunSuite {
     val merged = new InvertedIndex(spark, out)
     val docsBefore = merged.docs.count()
     val hitsBefore = merged.search("spark session", 10, "or").toSeq
-    // re-running the same merge must hit the batch marker and change
+    // re-running the same merge must find its tag committed and change
     // NOTHING (bare Append would double every row)
     SegmentMerge.merge(spark, srcDir, out, fanIn = 3)
     val again = new InvertedIndex(spark, out)
@@ -108,7 +108,7 @@ class SegmentMergeSpec extends AnyFunSuite {
   test("a merge that crashed after adopting its rows re-runs to one copy, not a refusal") {
     val out = tmpDir()
     SegmentMerge.merge(spark, srcDir, out, fanIn = 3)
-    // the crash: the rows are adopted, the manifests and marker are not
+    // the crash: the rows are adopted, the manifests and generation are not
     new java.io.File(IndexBuilder.manifestDir(out)).listFiles().foreach(_.delete())
     SegmentMerge.merge(spark, srcDir, out, fanIn = 3)
     val merged = new InvertedIndex(spark, out)
@@ -117,25 +117,22 @@ class SegmentMergeSpec extends AnyFunSuite {
     import spark.implicits._
     assert(merged.docs.map(d => (d.segment, d.repo, d.path)).distinct().count() == 600)
     assert(merged.docs.count() == 600)
-    assert(new java.io.File(IndexBuilder.manifestDir(out)).listFiles()
-      .count(_.getName.startsWith("batch-merge")) == 1)
+    assert(Generation.latest(out).batches.count(_.startsWith("merge")) == 1)
   }
 
   test("merge identity covers the full input set, not just endpoints") {
     // two filtered merges sharing first/last segment ids but differing
     // in membership are DIFFERENT merges: the endpoint-only tag used to
-    // satisfy the second from the first's marker, silently skipping it
+    // satisfy the second from the first's commit, silently skipping it
     // (ADVICE r04). Lineage-hashed tags commit each set separately,
     // while a true re-run of the same set stays a no-op.
     val out = tmpDir()
-    def markers(): Seq[String] =
-      Option(new java.io.File(IndexBuilder.manifestDir(out)).listFiles())
-        .getOrElse(Array.empty).map(_.getName).filter(_.startsWith("batch-merge")).toSeq
+    def mergeTags(): Seq[String] = Generation.latest(out).batches.filter(_.startsWith("merge"))
     SegmentMerge.merge(spark, srcDir, out, fanIn = 6, segFilter = _ != 2)
-    assert(markers().size == 1)
+    assert(mergeTags().size == 1)
     // exact re-run of the same filtered set: idempotent no-op
     SegmentMerge.merge(spark, srcDir, out, fanIn = 6, segFilter = _ != 2)
-    assert(markers().size == 1)
+    assert(mergeTags().size == 1)
     // same endpoints (0..5), different middle: a different merge, so it
     // must NOT be skipped as done. Its merged segment 0 is already in
     // `out`, so it is refused before staging and the dir stays as it was
@@ -150,15 +147,14 @@ class SegmentMergeSpec extends AnyFunSuite {
       SegmentMerge.merge(spark, srcDir, out, fanIn = 6, segFilter = _ != 3)
     }
     assert(e.getMessage.contains(out) && e.getMessage.contains("segment(s) 0,"), e.getMessage)
-    assert(markers().size == 1)
+    assert(mergeTags().size == 1)
     assert(state() == before)
-    // into a fresh dir the different set commits under its own marker
+    // into a fresh dir the different set commits under its own tag
     val other = tmpDir()
     SegmentMerge.merge(spark, srcDir, other, fanIn = 6, segFilter = _ != 3)
-    val otherMarkers = new java.io.File(IndexBuilder.manifestDir(other)).listFiles()
-      .map(_.getName).filter(_.startsWith("batch-merge")).toSeq
-    assert(otherMarkers.size == 1 && !markers().contains(otherMarkers.head),
-      "a different input set must commit its own marker")
+    val otherTags = Generation.latest(other).batches.filter(_.startsWith("merge"))
+    assert(otherTags.size == 1 && !mergeTags().contains(otherTags.head),
+      "a different input set must commit its own tag")
   }
 
   test("merged segments preserve exact per-doc numTokens (end-anchor contract)") {
@@ -193,7 +189,7 @@ class SegmentMergeSpec extends AnyFunSuite {
     all.take(50).foreach { r =>
       assert(g((r.segment, r.docId)) == all.count(o => precedes(o, r)).toLong)
     }
-    // crash-between-marker-and-refresh: delete the table, re-run the
+    // crash-between-commit-and-refresh: delete the table, re-run the
     // committed merge — the early-return path must heal it
     IndexBuilder.deleteRecursively(new java.io.File(GlobalRank.dirOf(out)))
     assert(GlobalRank.load(spark, out, stats).isEmpty)
@@ -268,12 +264,13 @@ class SegmentMergeSpec extends AnyFunSuite {
     dir
   }
 
-  test("live compaction starts 3 Spark jobs: stat collect, shuffle-map stage, write") {
+  test("live compaction starts 2 Spark jobs: shuffle-map stage, write") {
     val live = liveIndexOf((0L until 3L).map(b =>
       (b * 60L until b * 60L + 60L).map(i => Corpus.mkDoc(i, 11L, skew = false))),
       IndexBuilder.Config())
     val out = tmpDir()
-    assert(SparkJobs.count(spark)(graft.streaming.LiveIndex.compact(spark, live, out)) == 3)
+    // the input stat rows and the out dir's come from their generations
+    assert(SparkJobs.count(spark)(graft.streaming.LiveIndex.compact(spark, live, out)) == 2)
     assert(new InvertedIndex(spark, out).stats.numDocs == 180)
   }
 
